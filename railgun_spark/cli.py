@@ -176,51 +176,35 @@ def cmd_ingest(args) -> int:
         if args.wide and args.modality != "image":
             print("--wide applies to --modality image only", file=sys.stderr)
             return 2
-        if args.offset_tolerant and args.modality not in ("video", "audio"):
-            print("--offset-tolerant applies to --modality video or audio only",
-                  file=sys.stderr)
-            return 2
         if args.chunked and args.modality != "audio":
             print("--chunked applies to --modality audio only", file=sys.stderr)
             return 2
-        if args.offset_tolerant and args.modality == "audio" and not args.chunked:
-            print("--offset-tolerant audio ingest requires --chunked",
-                  file=sys.stderr)
+        from railgun_spark.operators.phash import FAMILIES
+
+        family = FAMILIES[
+            "image-wide" if args.wide
+            else "audio-chunk" if args.chunked
+            else args.modality
+        ]
+        if args.offset_tolerant and not family.positional:
+            print("--offset-tolerant applies to --modality video or "
+                  "--modality audio --chunked only", file=sys.stderr)
             return 2
-        batch_fn, stream_fn = {
-            "image": (_ing.ingest_images_batch,
-                      _ing.stream_ingest_images_availablenow),
-            "audio": (_ing.ingest_audio_batch,
-                      _ing.stream_ingest_audio_availablenow),
-            "video": (_ing.ingest_videos_batch,
-                      _ing.stream_ingest_videos_availablenow),
-        }[args.modality]
-        if args.wide:
-            batch_fn, stream_fn = (_ing.ingest_images_wide_batch,
-                                   _ing.stream_ingest_images_wide_availablenow)
-        extra = {}
-        if args.modality == "video":
-            extra["every_n"] = args.every_n
-            if args.offset_tolerant:
-                extra["offset_tolerant"] = True
-        if args.modality == "audio" and args.chunked:
-            extra["chunked"] = True
-            if args.offset_tolerant:
-                extra["offset_tolerant"] = True
+        # every_n only affects the video family's frame sampling
+        knobs = {"id_col": args.id_col, "every_n": args.every_n,
+                 "offset_tolerant": args.offset_tolerant}
         spark = get_spark("railgun_ingest")
         if args.stream:
-            admitted = stream_fn(
+            admitted = _ing.stream_ingest_media_availablenow(
                 spark, args.input_dir,
                 index_path=args.index, sink_path=args.sink,
                 checkpoint_dir=args.checkpoint or args.sink.rstrip("/") + "_checkpoint",
-                id_col=args.id_col,
-                **extra,
+                family=family, **knobs,
             )
         else:
-            admitted = batch_fn(
+            admitted = _ing.ingest_media_batch(
                 spark.read.parquet(args.input_dir), args.index, args.sink,
-                id_col=args.id_col,
-                **extra,
+                family, **knobs,
             )
         print(json.dumps({"admitted": admitted}))
         return 0

@@ -88,16 +88,6 @@ def bbox_filter(lon: Column, lat: Column, bbox: tuple[float, float, float, float
     )
 
 
-def tag_tiles(df: DataFrame, lon: Column, lat: Column, z: int) -> DataFrame:
-    """Add _tile_z/_tile_x/_tile_y columns (examples/athena.dfl:11-17);
-    callers then write.partitionBy the three columns (geonames.sh:49)."""
-    return (
-        df.withColumn("_tile_z", F.lit(z).cast("bigint"))
-        .withColumn("_tile_x", tile_x(lon, z))
-        .withColumn("_tile_y", tile_y(lat, z))
-    )
-
-
 # --------------------------------------------------------------------------
 # Suite queries. The TPC-H tables carry no coordinates, so lon/lat are
 # derived deterministically from integer keys (exact in both engines); the
@@ -194,26 +184,6 @@ def geo_bbox_agg(spark, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-
-
-def mask_grid(df: DataFrame, bbox: tuple[float, float, float, float], z_delta: int, threshold: int):
-    """Tile-mask rasterization (handlers/LayerMaskHandler.go:176-214):
-    group points by finer-zoom tile within a bbox, return a dict
-    {(x, y): 1} for cells with >= threshold points. The groupBy runs
-    distributed; only the <= 4^z_delta counts reach the driver."""
-    side = 2**z_delta
-    w, s, e, n = bbox
-    lon, lat = F.col("lon"), F.col("lat")
-    cx = F.floor((lon - F.lit(w)) / F.lit((e - w)) * side).cast("int")
-    cy = F.floor((F.lit(n) - lat) / F.lit((n - s)) * side).cast("int")
-    counts = (
-        df.filter(bbox_filter(lon, lat, bbox))
-        .select(F.least(cx, F.lit(side - 1)).alias("cx"), F.least(cy, F.lit(side - 1)).alias("cy"))
-        .groupBy("cx", "cy")
-        .count()
-        .collect()
-    )
-    return {(r["cx"], r["cy"]): 1 for r in counts if r["count"] >= threshold}
 
 
 # --------------------------------------------------------------------------

@@ -291,11 +291,6 @@ def _huff_decode(bits: _Bits, table) -> int:
 # --------------------------------------------------------------------------
 # Header / side info
 # --------------------------------------------------------------------------
-class _Frame:
-    __slots__ = ("sample_rate", "bitrate", "n_channels", "mode", "mode_ext",
-                 "frame_len", "side", "main_data", "crc")
-
-
 def _parse_header(b: bytes, i: int) -> tuple:
     """Parse the 4-byte header at offset i; returns (sample_rate, bitrate,
     mode, mode_ext, protection, frame_len, lsf) or raises with the

@@ -161,22 +161,6 @@ def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
     )
 
 
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize stub: passes content through and records the target
-    size in metadata — the zero-decode twin of `resize_images` for
-    pipelines that only need the bookkeeping (e.g. planning a resize
-    stage before the bytes are fetched)."""
-    return df.withColumn(
-        "meta",
-        F.map_concat(
-            F.col("meta"),
-            F.create_map(
-                F.lit("resize_w"), F.lit(str(width)), F.lit("resize_h"), F.lit(str(height))
-            ),
-        ),
-    )
-
-
 def _resize_bilinear(arr, out_w: int, out_h: int):
     """Separable bilinear resample (pixel-center convention, edges
     clamped) of an (h, w, c) float64 raster — pure vectorized numpy; the

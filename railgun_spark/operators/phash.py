@@ -38,7 +38,8 @@ bytes per admitted image regardless of image size.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -217,231 +218,6 @@ def phash_near_dup_pairs(
         )
         .distinct()
     )
-
-
-# --------------------------------------------------------------------------
-# Incremental ingest gate: the image twin of dedup.near_dup_against_index,
-# with one crucial difference. The index stores (band_key = band_idx <<
-# 16 | chunk, dhash) per (band, admitted image). A 16-bit chunk space
-# SATURATES (by ~50k admitted images nearly every value of every band is
-# occupied), so — unlike the high-entropy text MinHash band keys —
-# collision alone CANNOT reject: it would false-reject ~everything (the
-# r13 ingest grid measured 89% false rejects at a 50k index before this
-# verify step existed). A band collision is therefore only the candidate
-# probe; rejection requires bit_count(xor) <= PHASH_MAX_HAMMING against
-# the stored hash — exact near-dup semantics (lossless by pigeonhole AND
-# zero false rejects), matching phash_near_dup_pairs. Decode-refused
-# rows pass through (they can never match) and are NOT indexed. Geometry
-# rows are tagged (bits) so an index built under a different chunking —
-# or the pre-verify layout without the dhash column — refuses loudly.
-# --------------------------------------------------------------------------
-def _band_rows_of(hashes: DataFrame, hash_col: str) -> DataFrame:
-    """(media_id, <hash_col>) -> (__id, band_key, __h): PHASH_BANDS rows
-    per hashed row. Shared by the image and audio gates — both are
-    64-bit perceptual hashes feeding the identical chunk algebra."""
-    keys = F.transform(
-        phash_chunks(F.col(hash_col)),
-        lambda cv, ci: (ci.cast("bigint") * F.lit(1 << PHASH_BAND_BITS)) + cv,
-    )
-    return hashes.select(
-        F.col("media_id").alias("__id"),
-        F.col(hash_col).alias("__h"),
-        F.explode(keys).alias("band_key"),
-    ).select("__id", "band_key", "__h")
-
-
-def _phash_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """(__id, band_key, __h) — PHASH_BANDS rows per decodable image."""
-    hashes = image_perceptual_hashes(df, id_col=id_col).filter(
-        F.col("refused").isNull()
-    )
-    return _band_rows_of(hashes, "dhash")
-
-
-def _audio_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """(__id, band_key, __h) — PHASH_BANDS rows per decodable audio clip
-    (72-window energy-delta fingerprints)."""
-    hashes = audio_perceptual_hashes(df, id_col=id_col).filter(
-        F.col("refused").isNull()
-    )
-    return _band_rows_of(hashes, "fhash")
-
-
-def _verified_gate(
-    df: DataFrame, bands: DataFrame, index_path: str, modality: str,
-    id_col: str,
-) -> DataFrame:
-    """Shared verified-hamming gate body: drop rows of `df` whose bands
-    candidate-collide AND verify within PHASH_MAX_HAMMING against a
-    smaller-id batch row or the persisted index."""
-    from railgun_spark.operators.dedup import _read_index_or_none
-
-    spark = df.sparkSession
-    a, b = bands.alias("a"), bands.alias("b")
-    ham_ab = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    intra_hits = (
-        a.join(
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("b.__id") < F.col("a.__id")),
-        )
-        .filter(ham_ab <= PHASH_MAX_HAMMING)
-        .select(F.col("a.__id").alias("__id"))
-        .distinct()
-    )
-    drops = intra_hits
-    seen = _read_index_or_none(spark, index_path, merge_schema=True)
-    if seen is not None:
-        _check_index_geometry(seen, index_path, modality)
-        ham_idx = F.bit_count(F.col("__h").bitwiseXOR(F.col("__ih")))
-        index_hits = (
-            bands.join(
-                seen.select("band_key", F.col("dhash").alias("__ih")),
-                "band_key",
-            )
-            .filter(ham_idx <= PHASH_MAX_HAMMING)
-            .select("__id")
-        )
-        drops = drops.union(index_hits).distinct()
-    return df.join(drops, df[id_col] == drops["__id"], "left_anti")
-
-
-def image_dedup_against_index(
-    df: DataFrame, index_path: str, id_col: str = "media_id"
-) -> DataFrame:
-    """Rows of `df` with no VERIFIED perceptual near-dup (band-candidate
-    + hamming <= PHASH_MAX_HAMMING) against the index nor against a
-    smaller-id row of this batch (non-image and decode-refused rows
-    always survive). Commit survivors with
-    `append_image_bands_to_index`."""
-    # three plan branches consume the bands (both intra-batch sides + the
-    # index join): materialize once instead of re-decoding per branch
-    bands = _phash_band_rows(df, id_col=id_col).localCheckpoint()
-    return _verified_gate(df, bands, index_path, "image", id_col)
-
-
-def _survivor_bands(bands: DataFrame, survivors: DataFrame, id_col: str) -> DataFrame:
-    """The band rows an append should commit for `survivors` — a
-    semi-join against the already-materialized batch bands, so the
-    ingest loop never decodes pixels twice."""
-    return bands.join(
-        survivors.select(F.col(id_col).alias("__id")), "__id", "semi"
-    )
-
-
-def image_gate_with_bands(
-    df: DataFrame, index_path: str, id_col: str = "media_id"
-) -> tuple[DataFrame, DataFrame]:
-    """(survivors, survivor_band_rows) in ONE decode pass — the ingest
-    loop's shape: the band rows both feed the index append (via
-    `_append_bands`) and tell replay detection whether any GATE-ABLE row
-    survived (pass-through rows never band)."""
-    bands = _phash_band_rows(df, id_col=id_col).localCheckpoint()
-    survivors = _verified_gate(
-        df, bands, index_path, "image", id_col
-    ).localCheckpoint()
-    return survivors, _survivor_bands(bands, survivors, id_col)
-
-
-def audio_dedup_against_index(
-    df: DataFrame, index_path: str, id_col: str = "media_id"
-) -> DataFrame:
-    """Audio twin of `image_dedup_against_index`: energy-delta
-    fingerprints through the same verified-hamming band gate. Use a
-    SEPARATE index path per modality — the modality tag refuses a mixed
-    index loudly. Commit survivors with `append_audio_bands_to_index`."""
-    bands = _audio_band_rows(df, id_col=id_col).localCheckpoint()
-    return _verified_gate(df, bands, index_path, "audio", id_col)
-
-
-def audio_gate_with_bands(
-    df: DataFrame, index_path: str, id_col: str = "media_id"
-) -> tuple[DataFrame, DataFrame]:
-    """Audio twin of `image_gate_with_bands`."""
-    bands = _audio_band_rows(df, id_col=id_col).localCheckpoint()
-    survivors = _verified_gate(
-        df, bands, index_path, "audio", id_col
-    ).localCheckpoint()
-    return survivors, _survivor_bands(bands, survivors, id_col)
-
-
-# successful geometry validations, keyed by (index location, modality).
-# An index only ever GROWS with constant bits/mod values written by this
-# module's append helpers, so a once-valid index stays valid for the
-# session — re-scanning it per micro-batch (the pre-r14 behavior: two
-# full-index jobs per gate call) bought nothing. External writers that
-# corrupt a validated index mid-session are out of contract; clear this
-# set to force re-validation.
-_GEOMETRY_OK: set[tuple[str, str]] = set()
-
-
-def _check_index_geometry(
-    seen: DataFrame, where: str, modality: str,
-    hash_cols: tuple[str, ...] = ("dhash",),
-) -> None:
-    """Fail closed on an index from another chunking geometry, the
-    pre-verify layout (no stored hash), or another MODALITY: its rows
-    cannot be verified against this session's signatures, and treating
-    them as history would silently admit (or falsely reject)
-    duplicates. One aggregation scan, memoized per (index, modality)
-    for the session (appends preserve geometry by construction)."""
-    memo_key = (str(where), modality)
-    if memo_key in _GEOMETRY_OK:
-        return
-    cols = set(seen.columns)
-    if not ({"bits", "mod"} | set(hash_cols)) <= cols:
-        raise ValueError(
-            f"perceptual band index {where} predates the verified-hamming "
-            f"geometry (band_key, {', '.join(hash_cols)}, bits, mod); "
-            f"rebuild it under the current "
-            f"{PHASH_BANDS}x{PHASH_BAND_BITS}-bit chunking"
-        )
-    bad = seen.select(
-        F.sum(
-            (F.col("bits").isNull() | (F.col("bits") != PHASH_BAND_BITS))
-            .cast("int")
-        ).alias("bad_bits"),
-        F.sum(
-            (F.col("mod").isNull() | (F.col("mod") != modality)).cast("int")
-        ).alias("bad_mod"),
-    ).first()
-    if bad["bad_bits"]:
-        raise ValueError(
-            f"perceptual band index {where} contains rows from a different "
-            f"chunking geometry; rebuild it under the current "
-            f"{PHASH_BANDS}x{PHASH_BAND_BITS}-bit chunking"
-        )
-    if bad["bad_mod"]:
-        raise ValueError(
-            f"perceptual band index {where} holds fingerprints of another "
-            f"modality (expected {modality!r}); image/audio gates must not "
-            "share an index path — their hashes live in unrelated spaces"
-        )
-    _GEOMETRY_OK.add(memo_key)
-
-
-def _append_bands(bands: DataFrame, index_path: str, modality: str) -> None:
-    bands.select(
-        "band_key",
-        F.col("__h").alias("dhash"),
-        F.lit(PHASH_BAND_BITS).alias("bits"),
-        F.lit(modality).alias("mod"),
-    ).write.mode("append").parquet(index_path)
-
-
-def append_image_bands_to_index(
-    survivors: DataFrame, index_path: str, id_col: str = "media_id"
-) -> None:
-    """Append the survivors' (band_key, dhash) rows (recomputed map-only;
-    the index grows PHASH_BANDS ~17-byte rows per admitted image)."""
-    _append_bands(_phash_band_rows(survivors, id_col=id_col), index_path, "image")
-
-
-def append_audio_bands_to_index(
-    survivors: DataFrame, index_path: str, id_col: str = "media_id"
-) -> None:
-    """Audio twin of `append_image_bands_to_index`."""
-    _append_bands(_audio_band_rows(survivors, id_col=id_col), index_path, "audio")
 
 
 # --------------------------------------------------------------------------
@@ -1018,451 +794,13 @@ def audio_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Bucketed image band index: the PB-scale layout (dedup.bucketize_index's
-# image twin). A parquet band index re-shuffles on every batch's
-# semi-join; a table bucketed by band_key has HashPartitioning(band_key)
-# as its native layout, so the gate's index side scans in place — only
-# the (small) incoming batch shuffles into the bucket scheme.
-# --------------------------------------------------------------------------
-def bucketize_image_index(
-    spark: SparkSession, index_path: str, table: str, n_buckets: int = 64
-) -> int:
-    """Materialize a parquet image band index as a managed table bucketed
-    by band_key (one-time migration; thereafter append with
-    `append_image_bands_to_bucketed_index`). Refuses an index built under
-    a different chunk geometry. Returns the distinct row count."""
-    from railgun_spark.operators.dedup import _local_index_path, _recover_index
-
-    local = _local_index_path(index_path)
-    _recover_index(local)
-    idx = spark.read.option("mergeSchema", "true").parquet(local)
-    _check_index_geometry(idx, index_path, "image")
-    distinct = idx.select("band_key", "dhash", "bits", "mod").distinct()
-    distinct.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, "band_key"
-    ).saveAsTable(table)
-    return spark.table(table).count()
-
-
-def image_dedup_against_bucketed_index(
-    df: DataFrame, table: str, id_col: str = "media_id"
-) -> DataFrame:
-    """`image_dedup_against_index` against a bucketed band table: same
-    admitted set, but the index side of the semi-join scans in place
-    (no Exchange) — verify with .explain()."""
-    spark = df.sparkSession
-    bands = _phash_band_rows(df, id_col=id_col).localCheckpoint()
-    a, b = bands.alias("a"), bands.alias("b")
-    ham_ab = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    intra_hits = (
-        a.join(
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("b.__id") < F.col("a.__id")),
-        )
-        .filter(ham_ab <= PHASH_MAX_HAMMING)
-        .select(F.col("a.__id").alias("__id"))
-        .distinct()
-    )
-    seen = spark.table(table)
-    ham_idx = F.bit_count(F.col("__h").bitwiseXOR(F.col("__ih")))
-    index_hits = (
-        bands.join(seen.select("band_key", F.col("dhash").alias("__ih")), "band_key")
-        .filter(ham_idx <= PHASH_MAX_HAMMING)
-        .select("__id")
-    )
-    drops = intra_hits.union(index_hits).distinct()
-    return df.join(drops, df[id_col] == drops["__id"], "left_anti")
-
-
-def append_image_bands_to_bucketed_index(
-    survivors: DataFrame, table: str, id_col: str = "media_id"
-) -> None:
-    """Append survivors' (band_key, dhash) rows preserving the table's
-    bucket spec."""
-    _phash_band_rows(survivors, id_col=id_col).select(
-        "band_key",
-        F.col("__h").alias("dhash"),
-        F.lit(PHASH_BAND_BITS).alias("bits"),
-        F.lit("image").alias("mod"),
-    ).write.mode("append").insertInto(table)
-
-
-# --------------------------------------------------------------------------
-# Video ingest gate: completes gate symmetry across every modality
-# (text content/span/MinHash, embeddings, image, audio, video). The
-# index stores (vid, n_frames, frame_idx, band_key, dhash, bits,
-# mod='video') — PHASH_BANDS rows per SAMPLED frame. A new video joins
-# on (frame_idx, band_key) (temporally-aligned candidates), verifies
-# hamming per frame, counts verified frames per (new, indexed) video
-# pair, and rejects when the match fraction clears VIDEO_MATCH_FRAC of
-# the LARGER signature — the same semantics as
-# video_phash_near_dup_pairs, incremental.
-# --------------------------------------------------------------------------
-def _video_band_rows(
-    df: DataFrame, every_n: int = 10, id_col: str = "media_id"
-) -> DataFrame:
-    """(__id, __n, frame_idx, band_key, __h) — PHASH_BANDS rows per
-    sampled frame, with the video's sampled-frame count denormalized on
-    every row (the match-fraction denominator)."""
-    fh = video_perceptual_hashes(df, every_n=every_n, id_col=id_col).filter(
-        F.col("fhash").isNotNull()
-    )
-    n = fh.groupBy("media_id").agg(F.count(F.lit(1)).alias("__n"))
-    # temporal alignment is ENCODED IN THE KEY (frame_idx in the high
-    # bits): every gate join is then a true single-key equi-join, which
-    # a table bucketed by band_key serves with an in-place scan — a
-    # two-key (frame_idx, band_key) join would defeat the bucketed
-    # strategy (and Catalyst folds a residual frame equality back into
-    # the join keys, so a filter can't preserve it either)
-    keys = F.transform(
-        phash_chunks(F.col("fhash")),
-        lambda cv, ci: (
-            F.col("frame_idx").cast("bigint") * F.lit(1 << 18)
-            + ci.cast("bigint") * F.lit(1 << PHASH_BAND_BITS)
-            + cv
-        ),
-    )
-    return (
-        fh.join(n, "media_id")
-        .select(
-            F.col("media_id").alias("__id"),
-            "__n",
-            "frame_idx",
-            F.col("fhash").alias("__h"),
-            F.explode(keys).alias("band_key"),
-        )
-        .select("__id", "__n", "frame_idx", "band_key", "__h")
-    )
-
-
-def _video_pair_rejects(cand: DataFrame, min_match_frac: float) -> DataFrame:
-    """(new_id, old_id, frame_idx, n_new, n_old) verified-candidate frame
-    rows -> the new ids whose match count clears the fraction of the
-    LARGER signature."""
-    nf = F.greatest(F.col("n_new"), F.col("n_old"))
-    return (
-        cand.distinct()
-        .groupBy("new_id", "old_id", "n_new", "n_old")
-        .agg(F.count(F.lit(1)).alias("n_match"))
-        .filter(F.col("n_match") >= F.ceil(F.lit(min_match_frac) * nf))
-        .select(F.col("new_id").alias("__id"))
-        .distinct()
-    )
-
-
-def video_dedup_against_index(
-    df: DataFrame,
-    index_path: str,
-    every_n: int = 10,
-    id_col: str = "media_id",
-    min_match_frac: float = VIDEO_MATCH_FRAC,
-) -> DataFrame:
-    """Rows of `df` that are not a VERIFIED video near-dup (frame-aligned
-    band candidates, per-frame hamming <= PHASH_MAX_HAMMING, match
-    fraction >= min_match_frac of the larger signature) of the index nor
-    of a smaller-id video in this batch. Non-video and decode-refused
-    rows always survive. Commit with `append_video_bands_to_index`.
-    `every_n` must match the value the index was built with — the frame
-    alignment is on SAMPLED indexes."""
-    bands = _video_band_rows(df, every_n=every_n, id_col=id_col).localCheckpoint()
-    return _video_verified_gate(df, bands, index_path, id_col, min_match_frac)
-
-
-def video_gate_with_bands(
-    df: DataFrame,
-    index_path: str,
-    every_n: int = 10,
-    id_col: str = "media_id",
-    min_match_frac: float = VIDEO_MATCH_FRAC,
-    offset_tolerant: bool = False,
-    coarse: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Video twin of `image_gate_with_bands` (survivor band rows keep the
-    per-frame columns `append_video_bands_to_index` persists). With
-    `offset_tolerant`, rejection uses the per-offset temporal vote
-    (trimmed/padded copies of history reject too) — the index layout and
-    appends are IDENTICAL, so a sink can switch modes batch to batch.
-    `coarse` (offset mode only) joins on the 2x32 chunk keys — the
-    candidate-headroom geometry for large indexes, per-frame budget
-    hamming <= 1."""
-    if coarse and not offset_tolerant:
-        raise ValueError(
-            "coarse=True only applies to the offset-tolerant gate (the "
-            "aligned gate's band keys already carry frame alignment)"
-        )
-    bands = _video_band_rows(df, every_n=every_n, id_col=id_col).localCheckpoint()
-    if offset_tolerant:
-        survivors = _video_verified_gate_offset(
-            df, bands, index_path, id_col, min_match_frac, coarse=coarse
-        ).localCheckpoint()
-    else:
-        survivors = _video_verified_gate(
-            df, bands, index_path, id_col, min_match_frac
-        ).localCheckpoint()
-    return survivors, _survivor_bands(bands, survivors, id_col)
-
-
-def _video_verified_gate(
-    df: DataFrame,
-    bands: DataFrame,
-    index_path: str,
-    id_col: str,
-    min_match_frac: float,
-    modality: str = "video",
-) -> DataFrame:
-    from railgun_spark.operators.dedup import _read_index_or_none
-
-    spark = df.sparkSession
-    a, b = bands.alias("a"), bands.alias("b")
-    ham_ab = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    intra_cand = (
-        a.join(  # frame alignment is encoded in band_key
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("b.__id") < F.col("a.__id")),
-        )
-        .filter(ham_ab <= PHASH_MAX_HAMMING)
-        .select(
-            F.col("a.__id").alias("new_id"), F.col("b.__id").alias("old_id"),
-            F.col("a.frame_idx").alias("frame_idx"),
-            F.col("a.__n").alias("n_new"), F.col("b.__n").alias("n_old"),
-        )
-    )
-    drops = _video_pair_rejects(intra_cand, min_match_frac)
-    seen = _read_index_or_none(spark, index_path, merge_schema=True)
-    if seen is not None:
-        _check_index_geometry(seen, index_path, modality)
-        ham_idx = F.bit_count(F.col("__h").bitwiseXOR(F.col("__ih")))
-        idx_cand = (
-            bands.join(
-                seen.select(
-                    F.col("vid").alias("old_id"),
-                    F.col("n_frames").alias("n_old"),
-                    "band_key",
-                    F.col("dhash").alias("__ih"),
-                ),
-                "band_key",
-            )
-            .filter(ham_idx <= PHASH_MAX_HAMMING)
-            .select(
-                F.col("__id").alias("new_id"), "old_id", "frame_idx",
-                F.col("__n").alias("n_new"), "n_old",
-            )
-        )
-        drops = drops.union(_video_pair_rejects(idx_cand, min_match_frac)).distinct()
-    return df.join(drops, df[id_col] == drops["__id"], "left_anti")
-
-
-def append_video_bands_to_index(
-    survivors: DataFrame,
-    index_path: str,
-    every_n: int = 10,
-    id_col: str = "media_id",
-) -> None:
-    """Append the survivors' per-frame band rows (recomputed map-only;
-    the index grows PHASH_BANDS rows per SAMPLED frame per admitted
-    video)."""
-    _append_video_band_rows(
-        _video_band_rows(survivors, every_n=every_n, id_col=id_col), index_path
-    )
-
-
-def _append_video_band_rows(
-    band_rows: DataFrame, index_path: str, modality: str = "video"
-) -> None:
-    """Append already-computed video band rows (the ingest loop's path —
-    no second decode)."""
-    band_rows.select(
-        F.col("__id").alias("vid"),
-        F.col("__n").alias("n_frames"),
-        "frame_idx",
-        "band_key",
-        F.col("__h").alias("dhash"),
-        F.lit(PHASH_BAND_BITS).alias("bits"),
-        F.lit(modality).alias("mod"),
-    ).write.mode("append").parquet(index_path)
-
-
-# --------------------------------------------------------------------------
-# Bucketed band tables for the audio and video gates (the image variant
-# above came first; these reuse the same layout discipline). Bucketing
-# on band_key satisfies the clustered distribution of every gate join —
-# including the video gate's (frame_idx, band_key) keys, since equal
-# band_key already co-locates the rows — so the index side scans in
-# place with no Exchange.
-# --------------------------------------------------------------------------
-def _bucketize_media_index(
-    spark: SparkSession, index_path: str, table: str, modality: str,
-    cols: list, n_buckets: int,
-) -> int:
-    from railgun_spark.operators.dedup import _local_index_path, _recover_index
-
-    local = _local_index_path(index_path)
-    _recover_index(local)
-    idx = spark.read.option("mergeSchema", "true").parquet(local)
-    _check_index_geometry(idx, index_path, modality)
-    idx.select(*cols).distinct().write.mode("overwrite").format(
-        "parquet"
-    ).bucketBy(n_buckets, "band_key").saveAsTable(table)
-    return spark.table(table).count()
-
-
-def bucketize_audio_index(
-    spark: SparkSession, index_path: str, table: str, n_buckets: int = 64
-) -> int:
-    """Audio twin of `bucketize_image_index`."""
-    return _bucketize_media_index(
-        spark, index_path, table, "audio",
-        ["band_key", "dhash", "bits", "mod"], n_buckets,
-    )
-
-
-def audio_dedup_against_bucketed_index(
-    df: DataFrame, table: str, id_col: str = "media_id"
-) -> DataFrame:
-    """`audio_dedup_against_index` against a bucketed band table: same
-    admitted set, index side scans in place (no Exchange)."""
-    spark = df.sparkSession
-    bands = _audio_band_rows(df, id_col=id_col).localCheckpoint()
-    a, b = bands.alias("a"), bands.alias("b")
-    ham_ab = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    intra_hits = (
-        a.join(
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("b.__id") < F.col("a.__id")),
-        )
-        .filter(ham_ab <= PHASH_MAX_HAMMING)
-        .select(F.col("a.__id").alias("__id"))
-        .distinct()
-    )
-    seen = spark.table(table)
-    ham_idx = F.bit_count(F.col("__h").bitwiseXOR(F.col("__ih")))
-    index_hits = (
-        bands.join(seen.select("band_key", F.col("dhash").alias("__ih")), "band_key")
-        .filter(ham_idx <= PHASH_MAX_HAMMING)
-        .select("__id")
-    )
-    drops = intra_hits.union(index_hits).distinct()
-    return df.join(drops, df[id_col] == drops["__id"], "left_anti")
-
-
-def append_audio_bands_to_bucketed_index(
-    survivors: DataFrame, table: str, id_col: str = "media_id"
-) -> None:
-    """Append survivors' fingerprints preserving the table's bucket spec."""
-    _audio_band_rows(survivors, id_col=id_col).select(
-        "band_key",
-        F.col("__h").alias("dhash"),
-        F.lit(PHASH_BAND_BITS).alias("bits"),
-        F.lit("audio").alias("mod"),
-    ).write.mode("append").insertInto(table)
-
-
-def bucketize_video_index(
-    spark: SparkSession, index_path: str, table: str, n_buckets: int = 64
-) -> int:
-    """Video twin of `bucketize_image_index` — keeps the per-frame
-    signature columns (vid, n_frames, frame_idx)."""
-    return _bucketize_media_index(
-        spark, index_path, table, "video",
-        ["vid", "n_frames", "frame_idx", "band_key", "dhash", "bits", "mod"],
-        n_buckets,
-    )
-
-
-def video_dedup_against_bucketed_index(
-    df: DataFrame,
-    table: str,
-    every_n: int = 10,
-    id_col: str = "media_id",
-    min_match_frac: float = VIDEO_MATCH_FRAC,
-) -> DataFrame:
-    """`video_dedup_against_index` against a bucketed band table: same
-    admitted set; frame alignment is encoded in band_key, so the join is
-    a true single-key equi-join and the table's
-    HashPartitioning(band_key) lets the index side scan in place."""
-    bands = _video_band_rows(df, every_n=every_n, id_col=id_col).localCheckpoint()
-    return _banded_dedup_against_bucketed_table(
-        df, bands, table, id_col, min_match_frac
-    )
-
-
-def _banded_dedup_against_bucketed_table(
-    df: DataFrame,
-    bands: DataFrame,
-    table: str,
-    id_col: str,
-    min_match_frac: float,
-) -> DataFrame:
-    """Position-aligned gate body over already-computed band rows in the
-    video shape (__id, __n, frame_idx, band_key, __h) — shared by the
-    video and audio-chunk bucketed gates."""
-    spark = df.sparkSession
-    a, b = bands.alias("a"), bands.alias("b")
-    ham_ab = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    intra_cand = (
-        a.join(  # frame alignment is encoded in band_key
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("b.__id") < F.col("a.__id")),
-        )
-        .filter(ham_ab <= PHASH_MAX_HAMMING)
-        .select(
-            F.col("a.__id").alias("new_id"), F.col("b.__id").alias("old_id"),
-            F.col("a.frame_idx").alias("frame_idx"),
-            F.col("a.__n").alias("n_new"), F.col("b.__n").alias("n_old"),
-        )
-    )
-    drops = _video_pair_rejects(intra_cand, min_match_frac)
-    seen = spark.table(table)
-    ham_idx = F.bit_count(F.col("__h").bitwiseXOR(F.col("__ih")))
-    idx_cand = (
-        bands.join(
-            seen.select(
-                F.col("vid").alias("old_id"),
-                F.col("n_frames").alias("n_old"),
-                "band_key",
-                F.col("dhash").alias("__ih"),
-            ),
-            "band_key",
-        )
-        .filter(ham_idx <= PHASH_MAX_HAMMING)
-        .select(
-            F.col("__id").alias("new_id"), "old_id", "frame_idx",
-            F.col("__n").alias("n_new"), "n_old",
-        )
-    )
-    drops = drops.union(_video_pair_rejects(idx_cand, min_match_frac)).distinct()
-    return df.join(drops, df[id_col] == drops["__id"], "left_anti")
-
-
-def append_video_bands_to_bucketed_index(
-    survivors: DataFrame, table: str,
-    every_n: int = 10, id_col: str = "media_id",
-) -> None:
-    """Append survivors' per-frame rows preserving the table's bucket
-    spec."""
-    _video_band_rows(survivors, every_n=every_n, id_col=id_col).select(
-        F.col("__id").alias("vid"),
-        F.col("__n").alias("n_frames"),
-        "frame_idx",
-        "band_key",
-        F.col("__h").alias("dhash"),
-        F.lit(PHASH_BAND_BITS).alias("bits"),
-        F.lit("video").alias("mod"),
-    ).write.mode("append").insertInto(table)
-
-
-# --------------------------------------------------------------------------
 # Wide geometry: 256-bit block dHash (r13 VERDICT #2 — scale headroom).
 # The 4x16-bit pigeonhole over a 64-bit hash carries a ~B*N^2/2^16
 # candidate term: flat at every measured scale, but at ~10^9 images per
 # index the saturated 16-bit chunks pour out a quadratic (small-constant)
 # candidate stream. The 256-bit hash buys headroom on two axes, and the
-# probe (tools/phash_probe.py, PHASH_CANDIDATE_PROBE_r14.json) separates
-# them honestly:
+# candidate probe (PHASH_CANDIDATE_PROBE_r14.json) separates them
+# honestly:
 #
 # - 16 bands x 16-bit keys (budget hamming <= 15 — the same 3-per-64-bit
 #   RELATIVE tolerance as the narrow geometry) does NOT reduce
@@ -1581,13 +919,6 @@ def phash_wide_chunks(word_cols, n_bands: int = PHASH_WIDE_BANDS) -> Column:
     return F.array(*out)
 
 
-def _wide_hamming(a: str, b: str) -> Column:
-    out = F.lit(0)
-    for c in _WIDE_HASH_COLS:
-        out = out + F.bit_count(F.col(f"{a}.{c}").bitwiseXOR(F.col(f"{b}.{c}")))
-    return out
-
-
 def phash_wide_near_dup_pairs(
     hashes: DataFrame,
     max_hamming: int = PHASH_WIDE_MAX_HAMMING,
@@ -1598,7 +929,8 @@ def phash_wide_near_dup_pairs(
     bits — pigeonhole over `n_bands` bands (lossless for
     hamming <= n_bands - 1). n_bands=8 trades the hamming budget down to
     7 for 32-bit band keys whose candidate stream tracks true pairs, not
-    N^2 (tools/phash_probe.py measures both). Refused rows never pair."""
+    N^2 (PHASH_CANDIDATE_PROBE_r14.json measures both). Refused rows
+    never pair."""
     if max_hamming > n_bands - 1:
         raise ValueError(
             f"pigeonhole blocking with {n_bands} bands is lossless "
@@ -1617,7 +949,10 @@ def phash_wide_near_dup_pairs(
         ).alias("ci", "cv"),
     )
     a, b = ex.alias("a"), ex.alias("b")
-    ham = _wide_hamming("a", "b")
+    ham = _hamming(
+        [F.col(f"a.{c}") for c in _WIDE_HASH_COLS],
+        [F.col(f"b.{c}") for c in _WIDE_HASH_COLS],
+    )
     return (
         a.join(
             b,
@@ -1633,106 +968,6 @@ def phash_wide_near_dup_pairs(
         )
         .distinct()
     )
-
-
-# ---- wide ingest gate: same verified-hamming discipline, 256-bit verify ----
-def _wide_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """(__id, band_key, h0..h3) — PHASH_WIDE_BANDS rows per decodable
-    image (band_key = band_idx << 16 | chunk, band_idx 0..15)."""
-    hashes = image_perceptual_hashes_wide(df, id_col=id_col).filter(
-        F.col("refused").isNull()
-    )
-    keys = F.transform(
-        phash_wide_chunks([F.col(c) for c in _WIDE_HASH_COLS]),
-        lambda cv, ci: (ci.cast("bigint") * F.lit(1 << PHASH_BAND_BITS)) + cv,
-    )
-    return hashes.select(
-        F.col("media_id").alias("__id"),
-        *_WIDE_HASH_COLS,
-        F.explode(keys).alias("band_key"),
-    ).select("__id", "band_key", *_WIDE_HASH_COLS)
-
-
-def image_wide_dedup_against_index(
-    df: DataFrame, index_path: str, id_col: str = "media_id"
-) -> DataFrame:
-    """Wide-geometry twin of `image_dedup_against_index`: rejection
-    requires a verified 256-bit hamming <= PHASH_WIDE_MAX_HAMMING
-    against the stored words. Use a separate index path — the mod tag
-    ('image-wide') refuses a narrow index loudly."""
-    bands = _wide_band_rows(df, id_col=id_col).localCheckpoint()
-    return _wide_verified_gate(df, bands, index_path, id_col)
-
-
-def image_wide_gate_with_bands(
-    df: DataFrame, index_path: str, id_col: str = "media_id"
-) -> tuple[DataFrame, DataFrame]:
-    """(survivors, survivor_band_rows) for the wide gate — one decode
-    pass, same contract as `image_gate_with_bands`."""
-    bands = _wide_band_rows(df, id_col=id_col).localCheckpoint()
-    survivors = _wide_verified_gate(
-        df, bands, index_path, id_col
-    ).localCheckpoint()
-    return survivors, _survivor_bands(bands, survivors, id_col)
-
-
-def _wide_verified_gate(
-    df: DataFrame, bands: DataFrame, index_path: str, id_col: str
-) -> DataFrame:
-    from railgun_spark.operators.dedup import _read_index_or_none
-
-    spark = df.sparkSession
-    a, b = bands.alias("a"), bands.alias("b")
-    intra_hits = (
-        a.join(
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("b.__id") < F.col("a.__id")),
-        )
-        .filter(_wide_hamming("a", "b") <= PHASH_WIDE_MAX_HAMMING)
-        .select(F.col("a.__id").alias("__id"))
-        .distinct()
-    )
-    drops = intra_hits
-    seen = _read_index_or_none(spark, index_path, merge_schema=True)
-    if seen is not None:
-        _check_index_geometry(seen, index_path, "image-wide",
-                              hash_cols=_WIDE_HASH_COLS)
-        ham_idx = F.lit(0)
-        for c in _WIDE_HASH_COLS:
-            ham_idx = ham_idx + F.bit_count(
-                F.col(c).bitwiseXOR(F.col(f"__i{c}"))
-            )
-        index_hits = (
-            bands.join(
-                seen.select(
-                    "band_key",
-                    *[F.col(c).alias(f"__i{c}") for c in _WIDE_HASH_COLS],
-                ),
-                "band_key",
-            )
-            .filter(ham_idx <= PHASH_WIDE_MAX_HAMMING)
-            .select("__id")
-        )
-        drops = drops.union(index_hits).distinct()
-    return df.join(drops, df[id_col] == drops["__id"], "left_anti")
-
-
-def append_image_wide_bands_to_index(
-    survivors: DataFrame, index_path: str, id_col: str = "media_id"
-) -> None:
-    """Append the survivors' wide band rows (PHASH_WIDE_BANDS ~40-byte
-    rows per admitted image)."""
-    _append_wide_band_rows(_wide_band_rows(survivors, id_col=id_col), index_path)
-
-
-def _append_wide_band_rows(band_rows: DataFrame, index_path: str) -> None:
-    band_rows.select(
-        "band_key",
-        *_WIDE_HASH_COLS,
-        F.lit(PHASH_BAND_BITS).alias("bits"),
-        F.lit("image-wide").alias("mod"),
-    ).write.mode("append").parquet(index_path)
 
 
 PHASH_WIDE_SAMPLE_MOD = 11
@@ -1999,150 +1234,6 @@ def video_phash_near_dup_pairs_offset(
 
 # the gate's per-frame band keys encode frame_idx in bits >= 18; the
 # offset mode strips it back out to join across temporal positions
-_FRAME_KEY_SHIFT = 18
-_FRAME_KEY_MASK = (1 << _FRAME_KEY_SHIFT) - 1
-
-
-def _video_pair_rejects_offset(cand: DataFrame, min_match_frac: float) -> DataFrame:
-    """(new_id, old_id, off, fi, n_new, n_old) verified candidate frame
-    rows -> new ids where SOME offset's match count clears the fraction
-    of the SMALLER signature."""
-    nf = F.least(F.col("n_new"), F.col("n_old"))
-    return (
-        cand.distinct()
-        .groupBy("new_id", "old_id", "off", "n_new", "n_old")
-        .agg(F.count(F.lit(1)).alias("n_match"))
-        .filter(F.col("n_match") >= F.ceil(F.lit(min_match_frac) * nf))
-        .select(F.col("new_id").alias("__id"))
-        .distinct()
-    )
-
-
-def video_dedup_against_index_offset(
-    df: DataFrame,
-    index_path: str,
-    every_n: int = 10,
-    id_col: str = "media_id",
-    min_match_frac: float = VIDEO_MATCH_FRAC,
-    coarse: bool = False,
-) -> DataFrame:
-    """Offset-tolerant twin of `video_dedup_against_index`: a new video
-    is rejected when ANY constant temporal shift aligns >= min_match_frac
-    of the SMALLER signature with an indexed (or smaller-id batch) video
-    within the hamming budget — so trimmed/padded re-uploads of indexed
-    footage are caught. Reads the SAME index layout (frame_idx is
-    decoded back out of the band key), so one index serves both modes;
-    the chunk-key join is a derived-key join (both sides shuffle — the
-    documented cost of the offset pass; the aligned gate stays the
-    bucketed-scan default).
-
-    `coarse` joins on 2x32-bit chunk keys derived from the stored frame
-    hashes instead of the 16-bit band chunks — the candidate-headroom
-    mode for large indexes (PHASH_OFFSET_PROBE_r15: 16-bit offset keys'
-    cand/true grows 64 -> 1773 at 20k -> 624k chunk rows, coarse stays
-    ~8) at the documented per-frame hamming <= 1 budget. Same index, no
-    migration."""
-    bands = _video_band_rows(df, every_n=every_n, id_col=id_col).localCheckpoint()
-    return _video_verified_gate_offset(
-        df, bands, index_path, id_col, min_match_frac, coarse=coarse
-    )
-
-
-def _coarse_chunk_rows(frames: DataFrame, hash_col: str) -> DataFrame:
-    """Per-frame 2x32-bit chunk keys derived from the stored frame hash:
-    __ck = (chunk_index << 32) | chunk_value (disjoint from nothing —
-    it's a standalone key space). The input must already be ONE row per
-    frame (band rows dedupe to frames first, or every hit would count
-    PHASH_BANDS times)."""
-    return frames.select(
-        *frames.columns,
-        F.posexplode(phash_chunks_coarse(F.col(hash_col))).alias("__ci2", "__cv2"),
-    ).select(
-        *frames.columns,
-        (F.shiftleft(F.col("__ci2").cast("long"), 32)
-         .bitwiseOR(F.col("__cv2"))).alias("__ck"),
-    )
-
-
-def _video_verified_gate_offset(
-    df: DataFrame,
-    bands: DataFrame,
-    index_path: str,
-    id_col: str,
-    min_match_frac: float,
-    modality: str = "video",
-    coarse: bool = False,
-) -> DataFrame:
-    from railgun_spark.operators.dedup import _read_index_or_none
-
-    spark = df.sparkSession
-    budget = PHASH_COARSE_MAX_HAMMING if coarse else PHASH_MAX_HAMMING
-    if coarse:
-        # the SAME index layout serves the coarse gate: both sides dedupe
-        # band rows back to frames and derive 2x32 chunk keys from the
-        # stored frame hash (PHASH_OFFSET_PROBE_r15 — the 16-bit chunk
-        # key's random-collision candidates grow ~N^2/2^16 while coarse
-        # tracks true pairs; trade: per-frame hamming budget <= 1)
-        nb = _coarse_chunk_rows(
-            bands.select("__id", "__n", "frame_idx", "__h").distinct(), "__h"
-        )
-    else:
-        ck = F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK))
-        nb = bands.select(
-            "__id", "__n", "frame_idx", "__h", ck.alias("__ck")
-        )
-    a, b = nb.alias("a"), nb.alias("b")
-    ham_ab = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    intra_cand = (
-        a.join(
-            b,
-            (F.col("a.__ck") == F.col("b.__ck"))
-            & (F.col("b.__id") < F.col("a.__id")),
-        )
-        .filter(ham_ab <= budget)
-        .select(
-            F.col("a.__id").alias("new_id"), F.col("b.__id").alias("old_id"),
-            (F.col("a.frame_idx") - F.col("b.frame_idx")).alias("off"),
-            F.col("a.frame_idx").alias("fi"),
-            F.col("a.__n").alias("n_new"), F.col("b.__n").alias("n_old"),
-        )
-    )
-    drops = _video_pair_rejects_offset(intra_cand, min_match_frac)
-    seen = _read_index_or_none(spark, index_path, merge_schema=True)
-    if seen is not None:
-        _check_index_geometry(seen, index_path, modality)
-        ham_idx = F.bit_count(F.col("__h").bitwiseXOR(F.col("__ih")))
-        idx_frames = seen.select(
-            F.col("vid").alias("old_id"),
-            F.col("n_frames").alias("n_old"),
-            F.shiftright(F.col("band_key"), _FRAME_KEY_SHIFT)
-            .cast("int").alias("__of"),
-            F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias("__fk"),
-            F.col("dhash").alias("__ih"),
-        )
-        if coarse:
-            idx_side = _coarse_chunk_rows(
-                idx_frames.select("old_id", "n_old", "__of", "__ih").distinct(),
-                "__ih",
-            )
-        else:
-            idx_side = idx_frames.select(
-                "old_id", "n_old", "__of", "__ih", F.col("__fk").alias("__ck")
-            )
-        idx_cand = (
-            nb.join(idx_side, "__ck")
-            .filter(ham_idx <= budget)
-            .select(
-                F.col("__id").alias("new_id"), "old_id",
-                (F.col("frame_idx") - F.col("__of")).alias("off"),
-                F.col("frame_idx").alias("fi"),
-                F.col("__n").alias("n_new"), "n_old",
-            )
-        )
-        drops = drops.union(
-            _video_pair_rejects_offset(idx_cand, min_match_frac)
-        ).distinct()
-    return df.join(drops, df[id_col] == drops["__id"], "left_anti")
 
 
 VIDEO_OFFSET_SAMPLE_MOD = 23
@@ -2263,10 +1354,10 @@ def video_phash_offset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    # r15 flagship; r18: restored to the driver gate (VERDICT r17 #1) —
-    # the r17 rotation shrank driver-verified coverage 50 -> 49 and the
-    # dropped-query rule is absolute; promotions must not demote.
+@extra_query(
+    # EXTRA-certified: the coarse 2x32 join it certifies stays in the
+    # REGISTRY gate through video_offset_coarse_recall, which runs the same
+    # coarse offset join against the lossless fine one
     "video_phash_offset_coarse_pairs",
     # The coarse twin of video_phash_offset_pairs: identical crafted
     # fixture and per-offset vote, but the join runs on the 2x32-bit
@@ -2542,328 +1633,6 @@ def video_offset_coarse_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Bucketed wide band table — completes bucket-layout parity across every
-# media gate (narrow image / audio / video / wide image).
-# --------------------------------------------------------------------------
-def bucketize_image_wide_index(
-    spark: SparkSession, index_path: str, table: str, n_buckets: int = 64
-) -> int:
-    """Materialize a parquet WIDE image band index as a managed table
-    bucketed by band_key (then append with
-    `append_image_wide_bands_to_bucketed_index`). Refuses an index of
-    another geometry/modality. Returns the distinct row count."""
-    from railgun_spark.operators.dedup import _local_index_path, _recover_index
-
-    local = _local_index_path(index_path)
-    _recover_index(local)
-    idx = spark.read.option("mergeSchema", "true").parquet(local)
-    _check_index_geometry(idx, index_path, "image-wide", hash_cols=_WIDE_HASH_COLS)
-    idx.select("band_key", *_WIDE_HASH_COLS, "bits", "mod").distinct().write.mode(
-        "overwrite"
-    ).format("parquet").bucketBy(n_buckets, "band_key").saveAsTable(table)
-    return spark.table(table).count()
-
-
-def image_wide_dedup_against_bucketed_index(
-    df: DataFrame, table: str, id_col: str = "media_id"
-) -> DataFrame:
-    """`image_wide_dedup_against_index` against a bucketed band table:
-    same admitted set, index side scans in place (no Exchange)."""
-    spark = df.sparkSession
-    bands = _wide_band_rows(df, id_col=id_col).localCheckpoint()
-    a, b = bands.alias("a"), bands.alias("b")
-    intra_hits = (
-        a.join(
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("b.__id") < F.col("a.__id")),
-        )
-        .filter(_wide_hamming("a", "b") <= PHASH_WIDE_MAX_HAMMING)
-        .select(F.col("a.__id").alias("__id"))
-        .distinct()
-    )
-    seen = spark.table(table)
-    ham_idx = F.lit(0)
-    for c in _WIDE_HASH_COLS:
-        ham_idx = ham_idx + F.bit_count(F.col(c).bitwiseXOR(F.col(f"__i{c}")))
-    index_hits = (
-        bands.join(
-            seen.select(
-                "band_key",
-                *[F.col(c).alias(f"__i{c}") for c in _WIDE_HASH_COLS],
-            ),
-            "band_key",
-        )
-        .filter(ham_idx <= PHASH_WIDE_MAX_HAMMING)
-        .select("__id")
-    )
-    drops = intra_hits.union(index_hits).distinct()
-    return df.join(drops, df[id_col] == drops["__id"], "left_anti")
-
-
-def append_image_wide_bands_to_bucketed_index(
-    survivors: DataFrame, table: str, id_col: str = "media_id"
-) -> None:
-    """Append survivors' wide band rows preserving the table's bucket
-    spec."""
-    _wide_band_rows(survivors, id_col=id_col).select(
-        "band_key",
-        *_WIDE_HASH_COLS,
-        F.lit(PHASH_BAND_BITS).alias("bits"),
-        F.lit("image-wide").alias("mod"),
-    ).write.mode("append").insertInto(table)
-
-
-# --------------------------------------------------------------------------
-# Bucketed OFFSET-mode video band table. The offset gate joins on the
-# DERIVED chunk key (band_key % 2^18), which a table bucketed by
-# band_key cannot serve in place — the index side re-shuffles every
-# batch. For a standing offset-mode deployment, materialize the chunk
-# key as its own column and bucket by IT: the offset gate's index side
-# then scans in place, the same discipline as every aligned gate.
-# --------------------------------------------------------------------------
-def bucketize_video_index_offset(
-    spark: SparkSession, index_path: str, table: str, n_buckets: int = 64,
-    modality: str = "video",
-    coarse: bool = False,
-) -> int:
-    """Materialize a parquet video band index as a managed table with the
-    frame-stripped chunk key as an explicit bucketed column (chunk_key =
-    band_key % 2^18; frame_idx stays as its own column). One-time
-    migration per offset-mode deployment; thereafter append with
-    `append_video_bands_to_bucketed_index_offset`. Returns the distinct
-    row count.
-
-    `coarse` buckets by the 2x32-bit chunk key derived from the stored
-    frame hash instead (2 rows per frame, bits=32 recorded so the gate
-    refuses a geometry-mismatched table) — the standing-deployment
-    layout for the coarse offset gate."""
-    from railgun_spark.operators.dedup import _local_index_path, _recover_index
-
-    local = _local_index_path(index_path)
-    _recover_index(local)
-    idx = spark.read.option("mergeSchema", "true").parquet(local)
-    _check_index_geometry(idx, index_path, modality)
-    if coarse:
-        frames = idx.select("vid", "n_frames", "frame_idx", "dhash", "mod").distinct()
-        rows = frames.select(
-            "vid", "n_frames", "frame_idx",
-            F.posexplode(phash_chunks_coarse(F.col("dhash"))).alias("__ci2", "__cv2"),
-            "dhash", "mod",
-        ).select(
-            "vid", "n_frames", "frame_idx",
-            (F.shiftleft(F.col("__ci2").cast("long"), 32)
-             .bitwiseOR(F.col("__cv2"))).alias("chunk_key"),
-            "dhash", F.lit(32).alias("bits"), "mod",
-        )
-    else:
-        rows = idx.select(
-            "vid", "n_frames", "frame_idx",
-            F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias("chunk_key"),
-            "dhash", "bits", "mod",
-        ).distinct()
-    (
-        rows.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, "chunk_key")
-        .saveAsTable(table)
-    )
-    # declare the chunk-key geometry ONCE as a table property so gates
-    # and appends verify it in O(1) instead of scanning the bits column
-    _stamp_bucketed_offset_bits(spark, table, 32 if coarse else PHASH_BAND_BITS)
-    return spark.table(table).count()
-
-
-_BITS_TBLPROP = "railgun.chunk_bits"
-
-
-def _stamp_bucketed_offset_bits(
-    spark: SparkSession, table: str, bits: int
-) -> None:
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES ('{_BITS_TBLPROP}'='{int(bits)}')"
-    )
-
-
-def video_dedup_against_bucketed_index_offset(
-    df: DataFrame,
-    table: str,
-    every_n: int = 10,
-    id_col: str = "media_id",
-    min_match_frac: float = VIDEO_MATCH_FRAC,
-    coarse: bool = False,
-) -> DataFrame:
-    """`video_dedup_against_index_offset` against a chunk_key-bucketed
-    band table: same admitted set, index side scans in place (only the
-    small batch shuffles into the bucket scheme). `coarse` = the 2x32
-    geometry against a bucketize_video_index_offset(coarse=True) table
-    (geometry mismatch refused loudly via the bits marker)."""
-    bands = _video_band_rows(df, every_n=every_n, id_col=id_col).localCheckpoint()
-    return _banded_dedup_against_bucketed_table_offset(
-        df, bands, table, id_col, min_match_frac, coarse=coarse
-    )
-
-
-def _check_bucketed_offset_bits(
-    spark: SparkSession, table: str, coarse: bool
-) -> None:
-    """Refuse a bucketed offset table whose chunk-key geometry doesn't
-    match `coarse` — shared by the gates AND the append functions, so a
-    wrong-flag append can never write 16-bit keys into a 32-bit table
-    (those rows would never join and their duplicates would be silently
-    admitted).
-
-    The geometry is a TABLE-level property: bucketize_* declares it
-    once in TBLPROPERTIES and this check reads it in O(1) — no per-call
-    scan of the per-row bits column. Tables bucketized before the
-    marker existed fall back ONCE to a min==max homogeneity scan
-    (deterministic — a mixed legacy table is always refused, never
-    sampled) and are stamped on passing so the scan never repeats. An
-    empty unstamped table passes — its first append establishes the
-    geometry the bucketize_* call intended."""
-    want_bits = 32 if coarse else PHASH_BAND_BITS
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    }
-    declared = props.get(_BITS_TBLPROP)
-    if declared is None:
-        probe = (
-            spark.table(table)
-            .agg(F.min("bits").alias("lo"), F.max("bits").alias("hi"))
-            .collect()[0]
-        )
-        if probe["lo"] is None:
-            return
-        lo, hi = int(probe["lo"]), int(probe["hi"])
-        if lo != hi:
-            raise ValueError(
-                f"bucketed table {table!r} carries MIXED chunk-key "
-                f"geometries ({lo}- and {hi}-bit rows) — it must be "
-                "rebuilt with one bucketize_*(coarse=...) geometry "
-                "before any gate or append can use it"
-            )
-        _stamp_bucketed_offset_bits(spark, table, lo)
-        declared = str(lo)
-    if int(declared) != want_bits:
-        raise ValueError(
-            f"bucketed table {table!r} carries {int(declared)}-bit chunk "
-            f"keys but this operation uses {want_bits}-bit keys — pass "
-            "the matching coarse= flag or rebuild the table with the "
-            "matching bucketize_*(coarse=...) geometry"
-        )
-
-
-def _banded_dedup_against_bucketed_table_offset(
-    df: DataFrame,
-    bands: DataFrame,
-    table: str,
-    id_col: str,
-    min_match_frac: float,
-    coarse: bool = False,
-) -> DataFrame:
-    """Per-offset vote gate body over already-computed band rows in the
-    video shape — shared by the video and audio-chunk bucketed offset
-    gates. `coarse` joins on the 2x32 chunk keys (table must be
-    bucketized with coarse=True; bits column is the geometry marker)."""
-    spark = df.sparkSession
-    _check_bucketed_offset_bits(spark, table, coarse)
-    if coarse:
-        nb = _coarse_chunk_rows(
-            bands.select("__id", "__n", "frame_idx", "__h").distinct(), "__h"
-        ).withColumnRenamed("__ck", "chunk_key")
-    else:
-        nb = bands.select(
-            "__id", "__n", "frame_idx", "__h",
-            F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias("chunk_key"),
-        )
-    a, b = nb.alias("a"), nb.alias("b")
-    ham_ab = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    intra_cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_key") == F.col("b.chunk_key"))
-            & (F.col("b.__id") < F.col("a.__id")),
-        )
-        .filter(ham_ab <= (PHASH_COARSE_MAX_HAMMING if coarse
-                           else PHASH_MAX_HAMMING))
-        .select(
-            F.col("a.__id").alias("new_id"), F.col("b.__id").alias("old_id"),
-            (F.col("a.frame_idx") - F.col("b.frame_idx")).alias("off"),
-            F.col("a.frame_idx").alias("fi"),
-            F.col("a.__n").alias("n_new"), F.col("b.__n").alias("n_old"),
-        )
-    )
-    drops = _video_pair_rejects_offset(intra_cand, min_match_frac)
-    seen = spark.table(table)
-    ham_idx = F.bit_count(F.col("__h").bitwiseXOR(F.col("__ih")))
-    idx_cand = (
-        nb.join(
-            seen.select(
-                F.col("vid").alias("old_id"),
-                F.col("n_frames").alias("n_old"),
-                F.col("frame_idx").alias("__of"),
-                "chunk_key",
-                F.col("dhash").alias("__ih"),
-            ),
-            "chunk_key",
-        )
-        .filter(ham_idx <= (PHASH_COARSE_MAX_HAMMING if coarse
-                            else PHASH_MAX_HAMMING))
-        .select(
-            F.col("__id").alias("new_id"), "old_id",
-            (F.col("frame_idx") - F.col("__of")).alias("off"),
-            F.col("frame_idx").alias("fi"),
-            F.col("__n").alias("n_new"), "n_old",
-        )
-    )
-    drops = drops.union(_video_pair_rejects_offset(idx_cand, min_match_frac)).distinct()
-    return df.join(drops, df[id_col] == drops["__id"], "left_anti")
-
-
-def _coarse_bucket_append_rows(bands: DataFrame, mod: str) -> DataFrame:
-    """Survivor band rows -> coarse (2x32-key) bucketed-table rows: one
-    frame row per band group, exploded to its 2 coarse chunk keys,
-    bits=32 geometry marker."""
-    frames = bands.select("__id", "__n", "frame_idx", "__h").distinct()
-    return _coarse_chunk_rows(frames, "__h").select(
-        F.col("__id").alias("vid"),
-        F.col("__n").alias("n_frames"),
-        "frame_idx",
-        F.col("__ck").alias("chunk_key"),
-        F.col("__h").alias("dhash"),
-        F.lit(32).alias("bits"),
-        F.lit(mod).alias("mod"),
-    )
-
-
-def append_video_bands_to_bucketed_index_offset(
-    survivors: DataFrame, table: str,
-    every_n: int = 10, id_col: str = "media_id",
-    coarse: bool = False,
-) -> None:
-    """Append survivors' per-frame rows preserving the chunk_key bucket
-    spec (`coarse` writes the 2x32-key rows for a coarse table; the
-    stored bits geometry is verified first — a wrong-flag append would
-    write rows that never join, silently admitting their duplicates)."""
-    _check_bucketed_offset_bits(survivors.sparkSession, table, coarse)
-    bands = _video_band_rows(survivors, every_n=every_n, id_col=id_col)
-    if coarse:
-        rows = _coarse_bucket_append_rows(bands, "video")
-    else:
-        rows = bands.select(
-            F.col("__id").alias("vid"),
-            F.col("__n").alias("n_frames"),
-            "frame_idx",
-            F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias("chunk_key"),
-            F.col("__h").alias("dhash"),
-            F.lit(PHASH_BAND_BITS).alias("bits"),
-            F.lit("video").alias("mod"),
-        )
-    rows.write.mode("append").insertInto(table)
-
-
-# --------------------------------------------------------------------------
 # Chunked audio fingerprints — offset tolerance for the audio modality.
 # The global 72-window fingerprint (audio_fingerprint64 over the whole
 # clip) normalizes its window grid to the CLIP length, so a front-trim
@@ -2967,123 +1736,6 @@ def audio_phash_near_dup_pairs_offset(
     return video_phash_near_dup_pairs_offset(
         fh, max_hamming, min_match_frac
     ).withColumnRenamed("frame_offset", "chunk_offset")
-
-
-def _audio_chunk_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """(__id, __n, frame_idx, band_key, __h) — the video band-row shape
-    verbatim (chunk_idx in the frame_idx slot, encoded into band_key
-    bits >= _FRAME_KEY_SHIFT) so `_video_verified_gate` /
-    `_video_verified_gate_offset` and the bucketed layouts serve
-    audio-chunk indexes unchanged."""
-    fh = audio_chunk_fingerprints(df, id_col=id_col).filter(
-        F.col("fhash").isNotNull()
-    )
-    n = fh.groupBy("media_id").agg(F.count(F.lit(1)).alias("__n"))
-    keys = F.transform(
-        phash_chunks(F.col("fhash")),
-        lambda cv, ci: (
-            F.col("chunk_idx").cast("bigint") * F.lit(1 << _FRAME_KEY_SHIFT)
-            + ci.cast("bigint") * F.lit(1 << PHASH_BAND_BITS)
-            + cv
-        ),
-    )
-    return (
-        fh.join(n, "media_id")
-        .select(
-            F.col("media_id").alias("__id"),
-            "__n",
-            F.col("chunk_idx").alias("frame_idx"),
-            F.col("fhash").alias("__h"),
-            F.explode(keys).alias("band_key"),
-        )
-        .select("__id", "__n", "frame_idx", "band_key", "__h")
-    )
-
-
-def audio_chunk_dedup_against_index(
-    df: DataFrame,
-    index_path: str,
-    id_col: str = "media_id",
-    min_match_frac: float = AUDIO_CHUNK_MATCH_FRAC,
-) -> DataFrame:
-    """Chunk-ALIGNED audio gate: a new clip is rejected when
-    >= min_match_frac of the LARGER signature's chunks match an indexed
-    (or smaller-id batch) clip at the SAME chunk position within the
-    hamming budget — catches re-encodes and level-preserving transcodes
-    of same-length audio; a trimmed copy needs the offset twin below.
-    Non-audio and decode-refused rows always survive. Commit survivors
-    with `append_audio_chunk_bands_to_index`. The index keeps the video
-    column layout (vid/n_frames/frame_idx) under mod='audio-chunk' —
-    never share a path with a video index."""
-    bands = _audio_chunk_band_rows(df, id_col=id_col).localCheckpoint()
-    return _video_verified_gate(
-        df, bands, index_path, id_col, min_match_frac, modality=AUDIO_CHUNK_MOD
-    )
-
-
-def audio_chunk_dedup_against_index_offset(
-    df: DataFrame,
-    index_path: str,
-    id_col: str = "media_id",
-    min_match_frac: float = AUDIO_CHUNK_MATCH_FRAC,
-    coarse: bool = False,
-) -> DataFrame:
-    """Offset-tolerant twin of `audio_chunk_dedup_against_index`: a new
-    clip is rejected when ANY constant chunk shift aligns
-    >= min_match_frac of the SMALLER signature — trimmed/padded
-    re-uploads of indexed audio are caught. Reads the SAME index layout
-    (chunk_idx decoded back out of the band key), so one index serves
-    both modes; the chunk-key join is a derived-key join (both sides
-    shuffle — the documented cost of the offset pass, as for video).
-    `coarse` = the 2x32-key candidate-headroom mode (see
-    video_dedup_against_index_offset; per-chunk hamming <= 1)."""
-    bands = _audio_chunk_band_rows(df, id_col=id_col).localCheckpoint()
-    return _video_verified_gate_offset(
-        df, bands, index_path, id_col, min_match_frac,
-        modality=AUDIO_CHUNK_MOD, coarse=coarse,
-    )
-
-
-def audio_chunk_gate_with_bands(
-    df: DataFrame,
-    index_path: str,
-    id_col: str = "media_id",
-    min_match_frac: float = AUDIO_CHUNK_MATCH_FRAC,
-    offset_tolerant: bool = False,
-    coarse: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Audio-chunk twin of `video_gate_with_bands` — one decode pass
-    yields both the survivors and the band rows an append commits.
-    `coarse` as in video_gate_with_bands (offset mode only)."""
-    if coarse and not offset_tolerant:
-        raise ValueError(
-            "coarse=True only applies to the offset-tolerant gate (the "
-            "aligned gate's band keys already carry chunk alignment)"
-        )
-    bands = _audio_chunk_band_rows(df, id_col=id_col).localCheckpoint()
-    if offset_tolerant:
-        survivors = _video_verified_gate_offset(
-            df, bands, index_path, id_col, min_match_frac,
-            modality=AUDIO_CHUNK_MOD, coarse=coarse,
-        ).localCheckpoint()
-    else:
-        survivors = _video_verified_gate(
-            df, bands, index_path, id_col, min_match_frac,
-            modality=AUDIO_CHUNK_MOD,
-        ).localCheckpoint()
-    return survivors, _survivor_bands(bands, survivors, id_col)
-
-
-def append_audio_chunk_bands_to_index(
-    survivors: DataFrame, index_path: str, id_col: str = "media_id"
-) -> None:
-    """Append the survivors' per-chunk band rows (recomputed map-only;
-    the index grows PHASH_BANDS rows per full chunk per admitted clip)."""
-    _append_video_band_rows(
-        _audio_chunk_band_rows(survivors, id_col=id_col),
-        index_path,
-        modality=AUDIO_CHUNK_MOD,
-    )
 
 
 def _phash_wav_chunks(hs: list) -> bytes:
@@ -3204,103 +1856,699 @@ def audio_phash_offset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Bucketed band tables for the audio-chunk gates — layout parity with the
-# video gates (the band rows share the video shape, so the table layouts
-# and gate bodies are the same code): band_key-bucketed for the aligned
-# mode, chunk_key-bucketed for a standing offset-mode deployment.
+# Incremental ingest gates: ONE implementation for every media modality.
+#
+# A gate admits the rows of a batch that have no VERIFIED perceptual
+# near-dup in the persisted band index nor among the smaller-id rows of
+# the batch itself. Each admitted medium stores one row per
+# (band, hash) in the index: band_key = band_idx << 16 | 16-bit chunk
+# (positional families add frame_idx << 18), the stored hash word(s),
+# bits and a mod tag. A 16-bit chunk space SATURATES (by ~50k admitted
+# images nearly every value of every band is occupied), so — unlike the
+# high-entropy text MinHash band keys — collision alone CANNOT reject: it
+# would false-reject ~everything (the r13 ingest grid measured 89% false
+# rejects at a 50k index before the verify step existed). A band
+# collision is only the candidate probe; rejection requires
+# bit_count(xor) <= the family's hamming budget against the stored hash —
+# lossless by pigeonhole AND zero false rejects, matching the *_pairs
+# queries. Decode-refused and other-kind rows pass through (they never
+# band) and are not indexed.
+#
+# Positional families (video frames, fixed-duration audio chunks) vote:
+# verified frame matches are counted per (new, indexed) medium and the
+# new one rejects when the count clears min_match_frac — of the LARGER
+# signature in aligned mode (the position rides in band_key), or of the
+# SMALLER one per constant temporal shift in offset mode (trimmed and
+# padded copies reject too). Offset mode reads the SAME index: the
+# frame-stripped chunk key (band_key & _FRAME_KEY_MASK, or with `coarse`
+# the 2x32-bit chunks of the stored hash, per-frame budget <= 1 —
+# PHASH_OFFSET_PROBE_r15.json measured the 16-bit offset key's candidates
+# growing ~N^2/2^16 while the coarse key tracks true pairs) is derived on
+# both sides, so the index side shuffles every batch.
+#
+# Every index form has a bucketed-table twin whose join key is the
+# bucketing column, so the index side scans in place and only the small
+# batch shuffles: band_key for aligned gates, an explicit chunk_key
+# column (its geometry declared once in TBLPROPERTIES) for offset gates.
 # --------------------------------------------------------------------------
-def bucketize_audio_chunk_index(
-    spark: SparkSession, index_path: str, table: str, n_buckets: int = 64
-) -> int:
-    """Audio-chunk twin of `bucketize_video_index` (same columns; chunk
-    position is encoded in band_key, so bucketing by band_key serves the
-    aligned gate's single-key join in place)."""
-    return _bucketize_media_index(
-        spark, index_path, table, AUDIO_CHUNK_MOD,
-        ["vid", "n_frames", "frame_idx", "band_key", "dhash", "bits", "mod"],
-        n_buckets,
+def _band_rows_of(hashes: DataFrame, hash_col: str) -> DataFrame:
+    """(media_id, <hash_col>) -> (__id, band_key, __h): PHASH_BANDS rows
+    per hashed row (the image and audio families' shared chunk
+    algebra)."""
+    keys = F.transform(
+        phash_chunks(F.col(hash_col)),
+        lambda cv, ci: (ci.cast("bigint") * F.lit(1 << PHASH_BAND_BITS)) + cv,
+    )
+    return hashes.select(
+        F.col("media_id").alias("__id"),
+        F.col(hash_col).alias("__h"),
+        F.explode(keys).alias("band_key"),
+    ).select("__id", "band_key", "__h")
+
+
+def _phash_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+    """(__id, band_key, __h) — PHASH_BANDS rows per decodable image."""
+    hashes = image_perceptual_hashes(df, id_col=id_col).filter(
+        F.col("refused").isNull()
+    )
+    return _band_rows_of(hashes, "dhash")
+
+
+def _audio_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+    """(__id, band_key, __h) — PHASH_BANDS rows per decodable audio clip
+    (72-window energy-delta fingerprints)."""
+    hashes = audio_perceptual_hashes(df, id_col=id_col).filter(
+        F.col("refused").isNull()
+    )
+    return _band_rows_of(hashes, "fhash")
+
+
+def _wide_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+    """(__id, band_key, h0..h3) — PHASH_WIDE_BANDS rows per decodable
+    image (band_key = band_idx << 16 | chunk, band_idx 0..15)."""
+    hashes = image_perceptual_hashes_wide(df, id_col=id_col).filter(
+        F.col("refused").isNull()
+    )
+    keys = F.transform(
+        phash_wide_chunks([F.col(c) for c in _WIDE_HASH_COLS]),
+        lambda cv, ci: (ci.cast("bigint") * F.lit(1 << PHASH_BAND_BITS)) + cv,
+    )
+    return hashes.select(
+        F.col("media_id").alias("__id"),
+        *_WIDE_HASH_COLS,
+        F.explode(keys).alias("band_key"),
+    ).select("__id", "band_key", *_WIDE_HASH_COLS)
+
+
+# positional band keys encode the frame (or chunk) index in bits >= 18;
+# offset mode strips it back out to join across temporal positions
+_FRAME_KEY_SHIFT = 18
+_FRAME_KEY_MASK = (1 << _FRAME_KEY_SHIFT) - 1
+
+
+def _positional_band_rows(fh: DataFrame, pos_col: str) -> DataFrame:
+    """(media_id, <pos_col>, fhash) -> (__id, __n, frame_idx, band_key,
+    __h): PHASH_BANDS rows per frame, the medium's frame count
+    denormalized on every row (the vote's denominator). The position is
+    ENCODED IN THE KEY: every gate join is then a single-key equi-join
+    that a table bucketed by band_key serves in place (a two-key join
+    would defeat the bucketed strategy, and Catalyst folds a residual
+    frame equality back into the join keys)."""
+    n = fh.groupBy("media_id").agg(F.count(F.lit(1)).alias("__n"))
+    keys = F.transform(
+        phash_chunks(F.col("fhash")),
+        lambda cv, ci: (
+            F.col(pos_col).cast("bigint") * F.lit(1 << _FRAME_KEY_SHIFT)
+            + ci.cast("bigint") * F.lit(1 << PHASH_BAND_BITS)
+            + cv
+        ),
+    )
+    pos = "frame_idx" if pos_col == "frame_idx" else F.col(pos_col).alias("frame_idx")
+    return (
+        fh.join(n, "media_id")
+        .select(
+            F.col("media_id").alias("__id"),
+            "__n",
+            pos,
+            F.col("fhash").alias("__h"),
+            F.explode(keys).alias("band_key"),
+        )
+        .select("__id", "__n", "frame_idx", "band_key", "__h")
     )
 
 
-def audio_chunk_dedup_against_bucketed_index(
+def _video_band_rows(
+    df: DataFrame, every_n: int = 10, id_col: str = "media_id"
+) -> DataFrame:
+    """Per-SAMPLED-frame band rows; `every_n` must stay constant for one
+    index's lifetime (the alignment is on sampled indexes)."""
+    fh = video_perceptual_hashes(df, every_n=every_n, id_col=id_col).filter(
+        F.col("fhash").isNotNull()
+    )
+    return _positional_band_rows(fh, "frame_idx")
+
+
+def _audio_chunk_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+    """Per-chunk band rows in the video shape (chunk_idx rides in the
+    frame_idx slot)."""
+    fh = audio_chunk_fingerprints(df, id_col=id_col).filter(
+        F.col("fhash").isNotNull()
+    )
+    return _positional_band_rows(fh, "chunk_idx")
+
+
+@dataclass(frozen=True)
+class SignatureFamily:
+    """Everything that differs between the media gates. `band_rows(df,
+    every_n, id_col)` extracts the batch's band rows; `hash_cols` are the
+    stored hash columns the gate verifies against; `max_hamming` is the
+    verify budget; `positional` families have a frame or chunk axis and
+    reject by match-fraction vote (and alone support offset mode)."""
+
+    mod: str
+    band_rows: Callable[[DataFrame, int, str], DataFrame]
+    hash_cols: tuple[str, ...]
+    max_hamming: int
+    positional: bool
+
+    @property
+    def row_cols(self) -> tuple[str, ...]:
+        """The hash columns as band rows carry them (a lone 64-bit hash
+        rides as __h)."""
+        return ("__h",) if len(self.hash_cols) == 1 else self.hash_cols
+
+    @property
+    def index_cols(self) -> tuple[str, ...]:
+        """The stored hash columns renamed apart from `row_cols` for the
+        gate's index join."""
+        return tuple("__i" + c.lstrip("_") for c in self.row_cols)
+
+
+IMAGE = SignatureFamily(
+    "image", lambda df, every_n, id_col: _phash_band_rows(df, id_col),
+    ("dhash",), PHASH_MAX_HAMMING, positional=False,
+)
+IMAGE_WIDE = SignatureFamily(
+    "image-wide", lambda df, every_n, id_col: _wide_band_rows(df, id_col),
+    _WIDE_HASH_COLS, PHASH_WIDE_MAX_HAMMING, positional=False,
+)
+AUDIO = SignatureFamily(
+    "audio", lambda df, every_n, id_col: _audio_band_rows(df, id_col),
+    ("dhash",), PHASH_MAX_HAMMING, positional=False,
+)
+VIDEO = SignatureFamily(
+    "video", _video_band_rows, ("dhash",), PHASH_MAX_HAMMING, positional=True,
+)
+AUDIO_CHUNK = SignatureFamily(
+    AUDIO_CHUNK_MOD,
+    lambda df, every_n, id_col: _audio_chunk_band_rows(df, id_col),
+    ("dhash",), PHASH_MAX_HAMMING, positional=True,
+)
+FAMILIES = {f.mod: f for f in (IMAGE, IMAGE_WIDE, AUDIO, VIDEO, AUDIO_CHUNK)}
+
+
+def _hamming(xs: list[Column], ys: list[Column]) -> Column:
+    """Hamming distance between two hashes held as equal-length lists of
+    64-bit word columns."""
+    if len(xs) == 1:
+        return F.bit_count(xs[0].bitwiseXOR(ys[0]))
+    out = F.lit(0)
+    for x, y in zip(xs, ys):
+        out = out + F.bit_count(x.bitwiseXOR(y))
+    return out
+
+
+def _check_mode(fam: SignatureFamily, offset_tolerant: bool, coarse: bool) -> None:
+    if coarse and not offset_tolerant:
+        raise ValueError(
+            "coarse=True only applies to the offset-tolerant gate (the "
+            "aligned gate's band keys already carry frame alignment)"
+        )
+    if offset_tolerant and not fam.positional:
+        raise ValueError(
+            f"offset_tolerant needs a positional family (video, "
+            f"{AUDIO_CHUNK_MOD}): {fam.mod!r} signatures have no frame or "
+            "chunk axis to shift"
+        )
+
+
+# successful geometry validations, keyed by (index location, mod). An
+# index only ever GROWS with constant bits/mod values written by this
+# module's appends, so a once-valid index stays valid for the session —
+# re-scanning it per micro-batch (two full-index jobs per gate call)
+# bought nothing. External writers that corrupt a validated index
+# mid-session are out of contract; clear this set to force
+# re-validation.
+_GEOMETRY_OK: set[tuple[str, str]] = set()
+
+
+def _check_index_geometry(seen: DataFrame, where: str, fam: SignatureFamily) -> None:
+    """Fail closed on an index from another chunking geometry, the
+    pre-verify layout (no stored hash), or another MODALITY: its rows
+    cannot be verified against this session's signatures, and treating
+    them as history would silently admit (or falsely reject)
+    duplicates. One aggregation scan, memoized per (index, mod) for the
+    session (appends preserve geometry by construction)."""
+    memo_key = (str(where), fam.mod)
+    if memo_key in _GEOMETRY_OK:
+        return
+    if not ({"bits", "mod"} | set(fam.hash_cols)) <= set(seen.columns):
+        raise ValueError(
+            f"perceptual band index {where} predates the verified-hamming "
+            f"geometry (band_key, {', '.join(fam.hash_cols)}, bits, mod); "
+            f"rebuild it under the current "
+            f"{PHASH_BANDS}x{PHASH_BAND_BITS}-bit chunking"
+        )
+    bad = seen.select(
+        F.sum(
+            (F.col("bits").isNull() | (F.col("bits") != PHASH_BAND_BITS))
+            .cast("int")
+        ).alias("bad_bits"),
+        F.sum(
+            (F.col("mod").isNull() | (F.col("mod") != fam.mod)).cast("int")
+        ).alias("bad_mod"),
+    ).first()
+    if bad["bad_bits"]:
+        raise ValueError(
+            f"perceptual band index {where} contains rows from a different "
+            f"chunking geometry; rebuild it under the current "
+            f"{PHASH_BANDS}x{PHASH_BAND_BITS}-bit chunking"
+        )
+    if bad["bad_mod"]:
+        raise ValueError(
+            f"perceptual band index {where} holds fingerprints of another "
+            f"modality (expected {fam.mod!r}); media gates must not share "
+            "an index path — their hashes live in unrelated spaces"
+        )
+    _GEOMETRY_OK.add(memo_key)
+
+
+_BITS_TBLPROP = "railgun.chunk_bits"
+
+
+def _stamp_bucketed_offset_bits(
+    spark: SparkSession, table: str, bits: int
+) -> None:
+    spark.sql(
+        f"ALTER TABLE {table} SET TBLPROPERTIES ('{_BITS_TBLPROP}'='{int(bits)}')"
+    )
+
+
+def _check_bucketed_offset_bits(
+    spark: SparkSession, table: str, coarse: bool
+) -> None:
+    """Refuse a bucketed offset table whose chunk-key geometry doesn't
+    match `coarse` — checked by the gate AND the append, so a wrong-flag
+    append can never write 16-bit keys into a 32-bit table (those rows
+    would never join and their duplicates would be silently admitted).
+
+    The geometry is a TABLE-level property: bucketize_media_index
+    declares it once in TBLPROPERTIES and this check reads it in O(1).
+    Tables bucketized before the marker existed fall back ONCE to a
+    min==max homogeneity scan of the per-row bits column (a mixed legacy
+    table is always refused, never sampled) and are stamped on passing.
+    An empty unstamped table passes — its first append establishes the
+    geometry."""
+    want_bits = 32 if coarse else PHASH_BAND_BITS
+    props = {
+        r["key"]: r["value"]
+        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
+    }
+    declared = props.get(_BITS_TBLPROP)
+    if declared is None:
+        probe = (
+            spark.table(table)
+            .agg(F.min("bits").alias("lo"), F.max("bits").alias("hi"))
+            .collect()[0]
+        )
+        if probe["lo"] is None:
+            return
+        lo, hi = int(probe["lo"]), int(probe["hi"])
+        if lo != hi:
+            raise ValueError(
+                f"bucketed table {table!r} carries MIXED chunk-key "
+                f"geometries ({lo}- and {hi}-bit rows) — it must be "
+                "rebuilt with one bucketize_media_index(coarse=...) "
+                "geometry before any gate or append can use it"
+            )
+        _stamp_bucketed_offset_bits(spark, table, lo)
+        declared = str(lo)
+    if int(declared) != want_bits:
+        raise ValueError(
+            f"bucketed table {table!r} carries {int(declared)}-bit chunk "
+            f"keys but this operation uses {want_bits}-bit keys — pass "
+            "the matching coarse= flag or rebuild the table with the "
+            "matching bucketize_media_index(coarse=...) geometry"
+        )
+
+
+def _coarse_chunk_rows(frames: DataFrame, hash_col: str, key: str = "__ck") -> DataFrame:
+    """Per-frame 2x32-bit chunk keys derived from the stored frame hash:
+    key = (chunk_index << 32) | chunk_value. The input must already be
+    ONE row per frame (band rows dedupe to frames first, or every hit
+    would count PHASH_BANDS times)."""
+    return frames.select(
+        *frames.columns,
+        F.posexplode(phash_chunks_coarse(F.col(hash_col))).alias("__ci2", "__cv2"),
+    ).select(
+        *frames.columns,
+        (F.shiftleft(F.col("__ci2").cast("long"), 32)
+         .bitwiseOR(F.col("__cv2"))).alias(key),
+    )
+
+
+def _offset_rows(bands: DataFrame, coarse: bool, key: str) -> DataFrame:
+    """Positional band rows -> (__id, __n, frame_idx, __h, <key>) with the
+    frame-stripped chunk key the offset vote joins on."""
+    if coarse:
+        return _coarse_chunk_rows(
+            bands.select("__id", "__n", "frame_idx", "__h").distinct(), "__h", key
+        )
+    return bands.select(
+        "__id", "__n", "frame_idx", "__h",
+        F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias(key),
+    )
+
+
+def _index_side(
+    seen: DataFrame, fam: SignatureFamily, offset_tolerant: bool, coarse: bool,
+    table: bool,
+) -> DataFrame:
+    """The stored rows as the gate joins them: the verify hash(es)
+    renamed __i*, plus — for positional families — the indexed medium
+    (old_id), its frame count (n_old) and, in offset mode, the frame
+    position (__of) and chunk key."""
+    hashes = [F.col(s).alias(i) for s, i in zip(fam.hash_cols, fam.index_cols)]
+    if not fam.positional:
+        return seen.select("band_key", *hashes)
+    owner = [F.col("vid").alias("old_id"), F.col("n_frames").alias("n_old")]
+    if not offset_tolerant:
+        return seen.select(*owner, "band_key", *hashes)
+    if table:
+        return seen.select(
+            *owner, F.col("frame_idx").alias("__of"), "chunk_key", *hashes
+        )
+    frames = seen.select(
+        *owner,
+        F.shiftright(F.col("band_key"), _FRAME_KEY_SHIFT).cast("int").alias("__of"),
+        F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias("__fk"),
+        *hashes,
+    )
+    if coarse:
+        return _coarse_chunk_rows(
+            frames.select("old_id", "n_old", "__of", "__ih").distinct(), "__ih"
+        )
+    return frames.select("old_id", "n_old", "__of", "__ih", F.col("__fk").alias("__ck"))
+
+
+def _vote(cand: DataFrame, offset_tolerant: bool, min_match_frac: float) -> DataFrame:
+    """Verified candidate frame rows -> the new ids to reject: matched
+    frames per (new, old) pair — per constant shift `off` in offset mode
+    — must clear min_match_frac of the LARGER signature (aligned) or the
+    SMALLER one (offset: a clip cut from a longer indexed one rejects)."""
+    group = ["new_id", "old_id", "off"] if offset_tolerant else ["new_id", "old_id"]
+    nf = (F.least if offset_tolerant else F.greatest)(F.col("n_new"), F.col("n_old"))
+    return (
+        cand.distinct()
+        .groupBy(*group, "n_new", "n_old")
+        .agg(F.count(F.lit(1)).alias("n_match"))
+        .filter(F.col("n_match") >= F.ceil(F.lit(min_match_frac) * nf))
+        .select(F.col("new_id").alias("__id"))
+        .distinct()
+    )
+
+
+def _gate(
+    df: DataFrame,
+    bands: DataFrame,
+    fam: SignatureFamily,
+    seen: DataFrame | None,
+    id_col: str,
+    min_match_frac: float,
+    offset_tolerant: bool,
+    coarse: bool,
+    table: bool,
+) -> DataFrame:
+    """The one gate body: drop rows of `df` whose already-pinned `bands`
+    verify against a smaller-id batch row or against `seen` (the parquet
+    index, the bucketed table, or None for an empty index)."""
+    budget = PHASH_COARSE_MAX_HAMMING if coarse else fam.max_hamming
+    key, probe = "band_key", bands
+    if offset_tolerant:
+        key = "chunk_key" if table else "__ck"
+        probe = _offset_rows(bands, coarse, key)
+    a, b = probe.alias("a"), probe.alias("b")
+    intra = a.join(
+        b,
+        (F.col(f"a.{key}") == F.col(f"b.{key}"))
+        & (F.col("b.__id") < F.col("a.__id")),
+    ).filter(
+        _hamming([F.col(f"a.{c}") for c in fam.row_cols],
+                 [F.col(f"b.{c}") for c in fam.row_cols]) <= budget
+    )
+    if fam.positional:
+        pos = (
+            [(F.col("a.frame_idx") - F.col("b.frame_idx")).alias("off"),
+             F.col("a.frame_idx").alias("fi")]
+            if offset_tolerant else [F.col("a.frame_idx").alias("frame_idx")]
+        )
+        drops = _vote(
+            intra.select(
+                F.col("a.__id").alias("new_id"), F.col("b.__id").alias("old_id"),
+                *pos,
+                F.col("a.__n").alias("n_new"), F.col("b.__n").alias("n_old"),
+            ),
+            offset_tolerant, min_match_frac,
+        )
+    else:
+        drops = intra.select(F.col("a.__id").alias("__id")).distinct()
+    if seen is not None:
+        hits = probe.join(
+            _index_side(seen, fam, offset_tolerant, coarse, table), key
+        ).filter(
+            _hamming([F.col(c) for c in fam.row_cols],
+                     [F.col(c) for c in fam.index_cols]) <= budget
+        )
+        if fam.positional:
+            pos = (
+                [(F.col("frame_idx") - F.col("__of")).alias("off"),
+                 F.col("frame_idx").alias("fi")]
+                if offset_tolerant else ["frame_idx"]
+            )
+            hits = _vote(
+                hits.select(
+                    F.col("__id").alias("new_id"), "old_id", *pos,
+                    F.col("__n").alias("n_new"), "n_old",
+                ),
+                offset_tolerant, min_match_frac,
+            )
+        else:
+            hits = hits.select("__id")
+        drops = drops.union(hits).distinct()
+    return df.join(drops, df[id_col] == drops["__id"], "left_anti")
+
+
+def _pinned_bands(
+    df: DataFrame, fam: SignatureFamily, every_n: int, id_col: str
+) -> DataFrame:
+    # three plan branches consume the bands (both intra-batch sides + the
+    # index join): materialize once instead of re-decoding per branch
+    return fam.band_rows(df, every_n, id_col).localCheckpoint()
+
+
+def _read_seen(spark: SparkSession, index_path: str, fam: SignatureFamily):
+    from railgun_spark.operators.dedup import _read_index_or_none
+
+    seen = _read_index_or_none(spark, index_path, merge_schema=True)
+    if seen is not None:
+        _check_index_geometry(seen, index_path, fam)
+    return seen
+
+
+def media_dedup_against_index(
+    df: DataFrame,
+    index_path: str,
+    family: SignatureFamily,
+    every_n: int = 10,
+    id_col: str = "media_id",
+    min_match_frac: float = VIDEO_MATCH_FRAC,
+    offset_tolerant: bool = False,
+    coarse: bool = False,
+) -> DataFrame:
+    """Rows of `df` with no VERIFIED `family` near-dup in the parquet
+    band index at `index_path` nor among the smaller-id rows of `df`
+    (other-kind and decode-refused rows always survive). Use one index
+    path per family — the mod tag refuses a mixed index loudly. Commit
+    survivors with `append_media_to_index`.
+
+    `every_n` (video) and `min_match_frac` apply to positional families
+    only. `offset_tolerant` (positional only) switches to the per-shift
+    vote over the SAME index; `coarse` (offset only) joins on the 2x32
+    chunk keys, per-frame budget hamming <= 1."""
+    _check_mode(family, offset_tolerant, coarse)
+    bands = _pinned_bands(df, family, every_n, id_col)
+    return _gate(
+        df, bands, family, _read_seen(df.sparkSession, index_path, family),
+        id_col, min_match_frac, offset_tolerant, coarse, table=False,
+    )
+
+
+def _survivor_bands(bands: DataFrame, survivors: DataFrame, id_col: str) -> DataFrame:
+    """The band rows an append should commit for `survivors` — a
+    semi-join against the already-materialized batch bands, so the
+    ingest loop never decodes twice."""
+    return bands.join(
+        survivors.select(F.col(id_col).alias("__id")), "__id", "semi"
+    )
+
+
+def media_gate_with_bands(
+    df: DataFrame,
+    index_path: str,
+    family: SignatureFamily,
+    every_n: int = 10,
+    id_col: str = "media_id",
+    min_match_frac: float = VIDEO_MATCH_FRAC,
+    offset_tolerant: bool = False,
+    coarse: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """(survivors, survivor_band_rows) of `media_dedup_against_index` in
+    ONE decode pass — the ingest loop's shape: the band rows both feed
+    the index append and tell replay detection whether any GATE-ABLE row
+    survived (pass-through rows never band)."""
+    _check_mode(family, offset_tolerant, coarse)
+    bands = _pinned_bands(df, family, every_n, id_col)
+    survivors = _gate(
+        df, bands, family, _read_seen(df.sparkSession, index_path, family),
+        id_col, min_match_frac, offset_tolerant, coarse, table=False,
+    ).localCheckpoint()
+    return survivors, _survivor_bands(bands, survivors, id_col)
+
+
+def media_dedup_against_table(
     df: DataFrame,
     table: str,
+    family: SignatureFamily,
+    every_n: int = 10,
     id_col: str = "media_id",
-    min_match_frac: float = AUDIO_CHUNK_MATCH_FRAC,
+    min_match_frac: float = VIDEO_MATCH_FRAC,
+    offset_tolerant: bool = False,
+    coarse: bool = False,
 ) -> DataFrame:
-    """`audio_chunk_dedup_against_index` against a bucketed band table:
-    same admitted set, index side scans in place."""
-    bands = _audio_chunk_band_rows(df, id_col=id_col).localCheckpoint()
-    return _banded_dedup_against_bucketed_table(
-        df, bands, table, id_col, min_match_frac
+    """`media_dedup_against_index` against a table built by
+    `bucketize_media_index` with the same `offset_tolerant`/`coarse`:
+    same admitted set, but the index side scans in place (no Exchange)
+    — verify with .explain(). An offset table's chunk-key geometry is
+    checked against `coarse` first."""
+    _check_mode(family, offset_tolerant, coarse)
+    spark = df.sparkSession
+    bands = _pinned_bands(df, family, every_n, id_col)
+    if offset_tolerant:
+        _check_bucketed_offset_bits(spark, table, coarse)
+    return _gate(
+        df, bands, family, spark.table(table), id_col, min_match_frac,
+        offset_tolerant, coarse, table=True,
     )
 
 
-def append_audio_chunk_bands_to_bucketed_index(
-    survivors: DataFrame, table: str, id_col: str = "media_id"
+def _stored_rows(bands: DataFrame, fam: SignatureFamily) -> DataFrame:
+    """Band rows -> the parquet index / aligned table layout."""
+    hashes = [F.col(r).alias(s) for r, s in zip(fam.row_cols, fam.hash_cols)]
+    owner = (
+        [F.col("__id").alias("vid"), F.col("__n").alias("n_frames"), "frame_idx"]
+        if fam.positional else []
+    )
+    return bands.select(
+        *owner, "band_key", *hashes,
+        F.lit(PHASH_BAND_BITS).alias("bits"), F.lit(fam.mod).alias("mod"),
+    )
+
+
+def _append_band_rows(bands: DataFrame, index_path: str, fam: SignatureFamily) -> None:
+    """Append already-computed band rows (the ingest loop's path — no
+    second decode)."""
+    _stored_rows(bands, fam).write.mode("append").parquet(index_path)
+
+
+def append_media_to_index(
+    survivors: DataFrame,
+    index_path: str,
+    family: SignatureFamily,
+    every_n: int = 10,
+    id_col: str = "media_id",
 ) -> None:
-    """Append survivors' per-chunk rows preserving the table's bucket
-    spec."""
-    _audio_chunk_band_rows(survivors, id_col=id_col).select(
+    """Append the survivors' band rows (recomputed map-only; the index
+    grows one row per band per admitted medium — or per SAMPLED frame —
+    of ~17 bytes, ~40 for the wide family). One layout serves both the
+    aligned and the offset gates."""
+    _append_band_rows(family.band_rows(survivors, every_n, id_col), index_path, family)
+
+
+def _offset_table_rows(bands: DataFrame, fam: SignatureFamily, coarse: bool) -> DataFrame:
+    """Band rows -> the chunk_key-bucketed offset table layout (`coarse`:
+    one row per frame and 32-bit chunk, bits=32)."""
+    return _offset_rows(bands, coarse, "chunk_key").select(
         F.col("__id").alias("vid"),
         F.col("__n").alias("n_frames"),
         "frame_idx",
-        "band_key",
+        "chunk_key",
         F.col("__h").alias("dhash"),
-        F.lit(PHASH_BAND_BITS).alias("bits"),
-        F.lit(AUDIO_CHUNK_MOD).alias("mod"),
-    ).write.mode("append").insertInto(table)
-
-
-def bucketize_audio_chunk_index_offset(
-    spark: SparkSession, index_path: str, table: str, n_buckets: int = 64,
-    coarse: bool = False,
-) -> int:
-    """Audio-chunk twin of `bucketize_video_index_offset`: materialize
-    the chunk-stripped key as an explicit bucketed column so the offset
-    gate's index side scans in place too."""
-    return bucketize_video_index_offset(
-        spark, index_path, table, n_buckets, modality=AUDIO_CHUNK_MOD,
-        coarse=coarse,
+        F.lit(32 if coarse else PHASH_BAND_BITS).alias("bits"),
+        F.lit(fam.mod).alias("mod"),
     )
 
 
-def audio_chunk_dedup_against_bucketed_index_offset(
-    df: DataFrame,
+def append_media_to_table(
+    survivors: DataFrame,
     table: str,
+    family: SignatureFamily,
+    every_n: int = 10,
     id_col: str = "media_id",
-    min_match_frac: float = AUDIO_CHUNK_MATCH_FRAC,
-    coarse: bool = False,
-) -> DataFrame:
-    """`audio_chunk_dedup_against_index_offset` against a
-    chunk_key-bucketed band table: same admitted set, index side scans
-    in place (only the small batch shuffles into the bucket scheme).
-    `coarse` as in video_dedup_against_bucketed_index_offset."""
-    bands = _audio_chunk_band_rows(df, id_col=id_col).localCheckpoint()
-    return _banded_dedup_against_bucketed_table_offset(
-        df, bands, table, id_col, min_match_frac, coarse=coarse
-    )
-
-
-def append_audio_chunk_bands_to_bucketed_index_offset(
-    survivors: DataFrame, table: str, id_col: str = "media_id",
+    offset_tolerant: bool = False,
     coarse: bool = False,
 ) -> None:
-    """Append survivors' per-chunk rows preserving the chunk_key bucket
-    spec (`coarse` writes the 2x32-key rows for a coarse table; the
-    stored bits geometry is verified first, as in the video twin)."""
-    _check_bucketed_offset_bits(survivors.sparkSession, table, coarse)
-    bands = _audio_chunk_band_rows(survivors, id_col=id_col)
-    if coarse:
-        rows = _coarse_bucket_append_rows(bands, AUDIO_CHUNK_MOD)
-    else:
-        rows = bands.select(
-            F.col("__id").alias("vid"),
-            F.col("__n").alias("n_frames"),
-            "frame_idx",
-            F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias("chunk_key"),
-            F.col("__h").alias("dhash"),
-            F.lit(PHASH_BAND_BITS).alias("bits"),
-            F.lit(AUDIO_CHUNK_MOD).alias("mod"),
-        )
+    """Append the survivors' rows preserving the bucket spec of a table
+    built by `bucketize_media_index` with the same
+    `offset_tolerant`/`coarse` (an offset table's chunk-key geometry is
+    verified first — a wrong-flag append would write rows that never
+    join, silently admitting their duplicates)."""
+    _check_mode(family, offset_tolerant, coarse)
+    if offset_tolerant:
+        _check_bucketed_offset_bits(survivors.sparkSession, table, coarse)
+    bands = family.band_rows(survivors, every_n, id_col)
+    rows = (
+        _offset_table_rows(bands, family, coarse) if offset_tolerant
+        else _stored_rows(bands, family)
+    )
     rows.write.mode("append").insertInto(table)
+
+
+def bucketize_media_index(
+    spark: SparkSession,
+    index_path: str,
+    table: str,
+    family: SignatureFamily,
+    n_buckets: int = 64,
+    offset_tolerant: bool = False,
+    coarse: bool = False,
+) -> int:
+    """Materialize a parquet band index as a managed table for
+    `media_dedup_against_table` (one-time migration; thereafter append
+    with `append_media_to_table`). Refuses an index of another geometry
+    or family. Returns the distinct row count.
+
+    Aligned tables keep the index layout bucketed by band_key. With
+    `offset_tolerant` the frame-stripped chunk key becomes an explicit
+    bucketed column (chunk_key = band_key % 2^18; with `coarse`, the 2x32
+    chunks of the stored hash, 2 rows per frame), so the offset gate's
+    index side scans in place too; its bits geometry is declared in
+    TBLPROPERTIES for the gates and appends to check."""
+    from railgun_spark.operators.dedup import _local_index_path, _recover_index
+
+    _check_mode(family, offset_tolerant, coarse)
+    local = _local_index_path(index_path)
+    _recover_index(local)
+    idx = spark.read.option("mergeSchema", "true").parquet(local)
+    _check_index_geometry(idx, index_path, family)
+    owner = ["vid", "n_frames", "frame_idx"] if family.positional else []
+    key = "chunk_key" if offset_tolerant else "band_key"
+    if not offset_tolerant:
+        rows = idx.select(
+            *owner, "band_key", *family.hash_cols, "bits", "mod"
+        ).distinct()
+    elif coarse:
+        rows = _coarse_chunk_rows(
+            idx.select(*owner, "dhash", "mod").distinct(), "dhash", key
+        ).select(*owner, key, "dhash", F.lit(32).alias("bits"), "mod")
+    else:
+        rows = idx.select(
+            *owner,
+            F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias(key),
+            "dhash", "bits", "mod",
+        ).distinct()
+    rows.write.mode("overwrite").format("parquet").bucketBy(
+        n_buckets, key
+    ).saveAsTable(table)
+    if offset_tolerant:
+        _stamp_bucketed_offset_bits(spark, table, 32 if coarse else PHASH_BAND_BITS)
+    return spark.table(table).count()

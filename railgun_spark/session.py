@@ -22,6 +22,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+_EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+_BUILTIN_EXCLUDED_RULES = (
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+)
+
+
+def _excluded_rules(extra: str | None = None) -> str:
+    """The session's optimizer exclusions: the built-in ones plus a
+    caller's comma-separated list, comma-joined and de-duplicated in
+    order."""
+    rules = [*_BUILTIN_EXCLUDED_RULES, *(extra or "").split(",")]
+    return ",".join(dict.fromkeys(r.strip() for r in rules if r.strip()))
+
+
 def get_spark(app_name: str = "railgun_spark", extra_conf: dict | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -51,9 +65,11 @@ def get_spark(app_name: str = "railgun_spark", extra_conf: dict | None = None) -
         # drops empty arrays in the same stage), and array-size
         # predicates cannot push into parquet scans. Scale-independent:
         # the duplicated work is per-row CPU, which only grows at 100 TB.
+        # a caller's extra_conf exclusions MERGE with this one (see
+        # _excluded_rules) instead of silently re-enabling the rule
         .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+            _EXCLUDED_RULES,
+            _excluded_rules((extra_conf or {}).get(_EXCLUDED_RULES)),
         )
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -61,7 +77,8 @@ def get_spark(app_name: str = "railgun_spark", extra_conf: dict | None = None) -
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
+        if k != _EXCLUDED_RULES:
+            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -135,33 +152,3 @@ def local_df(spark: SparkSession, rows: list, schema: str):
     One slice makes the same evaluation ~0.3 s. Only for quantizer/
     codebook/weights/metadata-sized data, never corpus rows."""
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-
-
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES) -> dict:
-    """Read the driver's parquet tables and register them as temp views.
-
-    Parquet scans get predicate pushdown + column pruning from Catalyst for
-    free; registering views lets callers mix DataFrame and SQL freely.
-    """
-    from railgun_spark.sources.tables import load_table
-
-    out = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -26,9 +26,14 @@ batch's survivor set so sink-write and index-append see the same rows
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession
 
 from railgun_spark.operators.dedup import append_to_index, dedup_against_index
+
+if TYPE_CHECKING:
+    from railgun_spark.operators.phash import SignatureFamily
 
 
 def _write_sink(survivors: DataFrame, sink_path: str, batch_id: int | None) -> int:
@@ -237,230 +242,63 @@ def ingest_embeddings_batch(
     return n
 
 
-def ingest_images_batch(
+def ingest_media_batch(
     batch_df: DataFrame,
     index_path: str,
     sink_path: str,
-    id_col: str = "media_id",
-    batch_id: int | None = None,
-) -> int:
-    """Image-modality twin of `ingest_batch`: gate one MEDIA_SCHEMA batch
-    of images through the perceptual-hash band index
-    (phash.image_gate_with_bands — dHash over the REAL decode, banded by
-    16-bit chunks), write survivors, commit their bands. Same
-    exactly-once-per-near-dup-class discipline and the same crash-window
-    degradation as the other gates: a crash between sink write and index
-    append replays to the identical survivor set (overwriting the same
-    partition); a crash after the append replays to a batch whose only
-    survivors are PASS-THROUGH rows (non-image / decode-refused — they
-    survive every gate), which `_write_media_sink` detects (no survivor
-    band rows + partition already committed) and skips, so the admitted
-    decodable rows stay in the sink. Decode-refused rows always survive
-    and are never indexed (they can never band-collide). The index grows
-    PHASH_BANDS longs per admitted image; hashes are decoded ONCE per
-    batch (the append reuses the gate's band rows)."""
-    from railgun_spark.operators.phash import _append_bands, image_gate_with_bands
-
-    survivors, surv_bands = image_gate_with_bands(
-        batch_df, index_path, id_col=id_col
-    )
-    has_gateable = bool(surv_bands.limit(1).count())
-    n = _write_media_sink(survivors, has_gateable, sink_path, batch_id)
-    if has_gateable and n > 0:
-        _append_bands(surv_bands, index_path, "image")
-    return n
-
-
-def ingest_images_wide_batch(
-    batch_df: DataFrame,
-    index_path: str,
-    sink_path: str,
-    id_col: str = "media_id",
-    batch_id: int | None = None,
-) -> int:
-    """Wide-geometry (256-bit block dHash) twin of `ingest_images_batch`
-    — the scale-headroom gate for ~10^9-image indexes. Same crash-window
-    discipline including the mixed-batch replay skip. Use a separate
-    index path — the 'image-wide' mod tag refuses a narrow index."""
-    from railgun_spark.operators.phash import (
-        _append_wide_band_rows,
-        image_wide_gate_with_bands,
-    )
-
-    survivors, surv_bands = image_wide_gate_with_bands(
-        batch_df, index_path, id_col=id_col
-    )
-    has_gateable = bool(surv_bands.limit(1).count())
-    n = _write_media_sink(survivors, has_gateable, sink_path, batch_id)
-    if has_gateable and n > 0:
-        _append_wide_band_rows(surv_bands, index_path)
-    return n
-
-
-def stream_ingest_images_wide_availablenow(
-    spark: SparkSession,
-    source_dir: str,
-    index_path: str,
-    sink_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    id_col: str = "media_id",
-) -> int:
-    """Drain `source_dir` of MEDIA_SCHEMA image shards through the WIDE
-    (256-bit block dHash) band gate (availableNow); returns total images
-    admitted."""
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
-
-    return _drain_availablenow(
-        spark,
-        source_dir,
-        MEDIA_SCHEMA,
-        checkpoint_dir,
-        max_files_per_trigger,
-        lambda batch_df, batch_id: ingest_images_wide_batch(
-            batch_df, index_path, sink_path, id_col=id_col, batch_id=batch_id
-        ),
-    )
-
-
-def ingest_audio_batch(
-    batch_df: DataFrame,
-    index_path: str,
-    sink_path: str,
-    id_col: str = "media_id",
-    batch_id: int | None = None,
-    chunked: bool = False,
-    offset_tolerant: bool = False,
-    coarse: bool = False,
-) -> int:
-    """Audio twin of `ingest_images_batch`: gate one MEDIA_SCHEMA batch
-    of clips through the energy-delta fingerprint band index
-    (phash.audio_gate_with_bands — verified hamming, zero false rejects),
-    write survivors, commit their bands. Same crash-window discipline,
-    including the mixed-batch replay skip (`_write_media_sink`).
-    Decode-refused rows (MP3) always survive and are never indexed. Use
-    a separate index path from the image gate — the modality tag refuses
-    a mixed index loudly. `chunked` switches to per-chunk fingerprints
-    (phash.audio_chunk_gate_with_bands, mod='audio-chunk' index layout —
-    must stay constant for one index's lifetime); `offset_tolerant`
-    additionally rejects trimmed/padded copies of indexed audio via the
-    per-offset vote and requires `chunked` (the whole-clip fingerprint
-    has no temporal axis to shift)."""
-    from railgun_spark.operators.phash import (
-        AUDIO_CHUNK_MOD,
-        _append_bands,
-        _append_video_band_rows,
-        audio_chunk_gate_with_bands,
-        audio_gate_with_bands,
-    )
-
-    if offset_tolerant and not chunked:
-        raise ValueError(
-            "offset_tolerant audio ingest requires chunked=True — the "
-            "whole-clip fingerprint has no chunk axis to shift"
-        )
-    if chunked:
-        survivors, surv_bands = audio_chunk_gate_with_bands(
-            batch_df, index_path, id_col=id_col,
-            offset_tolerant=offset_tolerant, coarse=coarse,
-        )
-    else:
-        survivors, surv_bands = audio_gate_with_bands(
-            batch_df, index_path, id_col=id_col
-        )
-    has_gateable = bool(surv_bands.limit(1).count())
-    n = _write_media_sink(survivors, has_gateable, sink_path, batch_id)
-    if has_gateable and n > 0:
-        if chunked:
-            _append_video_band_rows(
-                surv_bands, index_path, modality=AUDIO_CHUNK_MOD
-            )
-        else:
-            _append_bands(surv_bands, index_path, "audio")
-    return n
-
-
-def stream_ingest_audio_availablenow(
-    spark: SparkSession,
-    source_dir: str,
-    index_path: str,
-    sink_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    id_col: str = "media_id",
-    chunked: bool = False,
-    offset_tolerant: bool = False,
-) -> int:
-    """Drain `source_dir` of MEDIA_SCHEMA audio shards through the
-    fingerprint band gate (availableNow); returns total clips admitted.
-    `chunked`/`offset_tolerant` select the per-chunk (trim-robust)
-    fingerprint gate for every micro-batch."""
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
-
-    return _drain_availablenow(
-        spark,
-        source_dir,
-        MEDIA_SCHEMA,
-        checkpoint_dir,
-        max_files_per_trigger,
-        lambda batch_df, batch_id: ingest_audio_batch(
-            batch_df, index_path, sink_path, id_col=id_col, batch_id=batch_id,
-            chunked=chunked, offset_tolerant=offset_tolerant,
-        ),
-    )
-
-
-def ingest_videos_batch(
-    batch_df: DataFrame,
-    index_path: str,
-    sink_path: str,
+    family: SignatureFamily,
     id_col: str = "media_id",
     batch_id: int | None = None,
     every_n: int = 10,
     offset_tolerant: bool = False,
     coarse: bool = False,
 ) -> int:
-    """Video twin of `ingest_images_batch`: gate one MEDIA_SCHEMA batch
-    through the per-sampled-frame signature index
-    (phash.video_gate_with_bands — frame-aligned candidates, verified
-    per-frame hamming, match-fraction rejection; with `offset_tolerant`
-    the per-offset temporal vote also rejects trimmed/padded copies of
-    indexed footage — same index layout, so the knob can change batch to
-    batch). Same crash-window discipline, including the mixed-batch
-    replay skip (`_write_media_sink`); decode-refused rows always
-    survive and are never indexed. `every_n` must stay constant for one
-    index's lifetime."""
-    from railgun_spark.operators.phash import (
-        _append_video_band_rows,
-        video_gate_with_bands,
-    )
+    """Media twin of `ingest_batch`: gate one MEDIA_SCHEMA batch through
+    the `family`'s perceptual band index (phash.media_gate_with_bands —
+    verified hamming, zero false rejects; positional families vote over
+    frames or chunks, and `offset_tolerant` also rejects trimmed/padded
+    copies against the same index), write survivors, commit their bands.
+    Hashes are decoded ONCE per batch (the append reuses the gate's band
+    rows). Use one index path per family — the mod tag refuses a mixed
+    index loudly; `every_n` (video) must stay constant for one index's
+    lifetime.
 
-    survivors, surv_bands = video_gate_with_bands(
-        batch_df, index_path, every_n=every_n, id_col=id_col,
+    Same crash-window discipline as the other gates: a crash between
+    sink write and index append replays to the identical survivor set
+    (overwriting the same partition); a crash after the append replays
+    to a batch whose only survivors are PASS-THROUGH rows (other kind /
+    decode-refused — they survive every gate and are never indexed),
+    which `_write_media_sink` detects (no survivor band rows + partition
+    already committed) and skips, so the admitted decodable rows stay in
+    the sink."""
+    from railgun_spark.operators.phash import _append_band_rows, media_gate_with_bands
+
+    survivors, surv_bands = media_gate_with_bands(
+        batch_df, index_path, family, every_n=every_n, id_col=id_col,
         offset_tolerant=offset_tolerant, coarse=coarse,
     )
     has_gateable = bool(surv_bands.limit(1).count())
     n = _write_media_sink(survivors, has_gateable, sink_path, batch_id)
     if has_gateable and n > 0:
-        _append_video_band_rows(surv_bands, index_path)
+        _append_band_rows(surv_bands, index_path, family)
     return n
 
 
-def stream_ingest_videos_availablenow(
+def stream_ingest_media_availablenow(
     spark: SparkSession,
     source_dir: str,
     index_path: str,
     sink_path: str,
     checkpoint_dir: str,
+    family: SignatureFamily,
     max_files_per_trigger: int = 1,
     id_col: str = "media_id",
     every_n: int = 10,
     offset_tolerant: bool = False,
 ) -> int:
-    """Drain `source_dir` of MEDIA_SCHEMA video shards through the
-    frame-signature gate (availableNow); returns total videos admitted.
-    `offset_tolerant` switches every micro-batch to the per-offset
-    temporal vote (trimmed copies reject too)."""
+    """Drain `source_dir` of MEDIA_SCHEMA shards through the `family`'s
+    band gate (availableNow, `ingest_media_batch` per micro-batch);
+    returns the total media admitted."""
     from railgun_spark.operators.multimodal import MEDIA_SCHEMA
 
     return _drain_availablenow(
@@ -469,36 +307,10 @@ def stream_ingest_videos_availablenow(
         MEDIA_SCHEMA,
         checkpoint_dir,
         max_files_per_trigger,
-        lambda batch_df, batch_id: ingest_videos_batch(
-            batch_df, index_path, sink_path,
+        lambda batch_df, batch_id: ingest_media_batch(
+            batch_df, index_path, sink_path, family,
             id_col=id_col, batch_id=batch_id, every_n=every_n,
             offset_tolerant=offset_tolerant,
-        ),
-    )
-
-
-def stream_ingest_images_availablenow(
-    spark: SparkSession,
-    source_dir: str,
-    index_path: str,
-    sink_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    id_col: str = "media_id",
-) -> int:
-    """Drain `source_dir` of MEDIA_SCHEMA image shards through the
-    perceptual-hash band gate (availableNow); returns total images
-    admitted."""
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
-
-    return _drain_availablenow(
-        spark,
-        source_dir,
-        MEDIA_SCHEMA,
-        checkpoint_dir,
-        max_files_per_trigger,
-        lambda batch_df, batch_id: ingest_images_batch(
-            batch_df, index_path, sink_path, id_col=id_col, batch_id=batch_id
         ),
     )
 

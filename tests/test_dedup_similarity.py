@@ -76,7 +76,35 @@ def test_shingle_pipeline_single_evaluation(spark, tmp_path):
         "doc_id", F.explode("sh").alias("g")
     )
     plan = tok._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("zip_with") == 2, plan
+    assert plan.count("zip_with") == 2, (
+        "zip_with count depends on (1) get_spark's InferFiltersFromGenerate "
+        "exclusion in spark.sql.optimizer.excludedRules and (2) the "
+        "executedPlan().toString() format printing each chain once:\n" + plan
+    )
+
+
+def test_excluded_rules_merge_with_extra_conf(spark):
+    """A caller's spark.sql.optimizer.excludedRules in extra_conf merges
+    with the built-in InferFiltersFromGenerate exclusion (comma-joined,
+    de-duplicated) instead of overwriting it and silently re-enabling
+    the duplicated shingle-chain work pinned above."""
+    from railgun_spark.session import _excluded_rules, get_spark
+
+    key = "spark.sql.optimizer.excludedRules"
+    infer = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    prune = "org.apache.spark.sql.catalyst.optimizer.PruneFilters"
+    assert _excluded_rules() == infer
+    assert _excluded_rules(f" {prune} ,{infer},{prune}") == f"{infer},{prune}"
+
+    before = spark.conf.get(key)
+    assert infer in before.split(",")
+    try:
+        # same app name: getOrCreate applies the builder conf to the live
+        # session, exactly what a caller's extra_conf does
+        s = get_spark("railgun_spark_tests", extra_conf={key: prune})
+        assert s.conf.get(key).split(",") == [infer, prune]
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_minhash_identical_texts_share_signature(spark):

@@ -11,15 +11,28 @@ from pyspark.sql import functions as F
 
 from railgun_spark.operators.multimodal import MEDIA_SCHEMA
 from railgun_spark.operators.phash import (
+    AUDIO,
+    AUDIO_CHUNK,
+    IMAGE,
+    IMAGE_WIDE,
     PHASH_BANDS,
     PHASH_MAX_HAMMING,
+    VIDEO,
     _phash_pgm,
     _phash_target,
     ahash64,
+    append_media_to_index,
+    append_media_to_table,
+    bucketize_media_index,
     dhash64,
-    image_dedup_against_index,
     image_perceptual_hashes,
+    media_dedup_against_index,
+    media_dedup_against_table,
     phash_near_dup_pairs,
+)
+from railgun_spark.streaming.ingest import (
+    ingest_media_batch,
+    stream_ingest_media_availablenow,
 )
 
 
@@ -133,7 +146,6 @@ def _media_rows(ids_and_hashes):
 def test_image_dedup_against_index_gate(spark, tmp_path):
     """Intra-batch greedy-by-id rejection, index rejection across
     batches, refused rows always surviving, and the geometry guard."""
-    from railgun_spark.operators.phash import append_image_bands_to_index
 
     idx = str(tmp_path / "phash_bands")
     h_a = _phash_target(5, 0)
@@ -143,9 +155,9 @@ def test_image_dedup_against_index_gate(spark, tmp_path):
     batch1 = spark.createDataFrame(
         _media_rows([(1, h_a), (2, h_a1), (3, h_b)]), MEDIA_SCHEMA
     )
-    s1 = image_dedup_against_index(batch1, idx)
+    s1 = media_dedup_against_index(batch1, idx, IMAGE)
     assert sorted(r["media_id"] for r in s1.collect()) == [1, 3]  # 2 intra-rejected
-    append_image_bands_to_index(s1, idx)
+    append_media_to_index(s1, idx, IMAGE)
 
     # second batch: near-dup of an admitted image rejects; new one admits;
     # a decode-refused row survives and is not indexed
@@ -155,9 +167,9 @@ def test_image_dedup_against_index_gate(spark, tmp_path):
         + [(12, "image", bytearray(b"JUNK"), {})],
         MEDIA_SCHEMA,
     )
-    s2 = image_dedup_against_index(batch2, idx)
+    s2 = media_dedup_against_index(batch2, idx, IMAGE)
     assert sorted(r["media_id"] for r in s2.collect()) == [11, 12]
-    append_image_bands_to_index(s2, idx)
+    append_media_to_index(s2, idx, IMAGE)
     bands = spark.read.parquet(idx)
     n_imgs = 3  # ids 1, 3, 11 indexed; 12 contributed nothing
     assert bands.count() == PHASH_BANDS * n_imgs
@@ -166,14 +178,42 @@ def test_image_dedup_against_index_gate(spark, tmp_path):
     legacy = str(tmp_path / "legacy_bands")
     spark.createDataFrame([(1,)], "band_key: long").write.parquet(legacy)
     with pytest.raises(ValueError, match="geometry"):
-        image_dedup_against_index(batch1, legacy).collect()
+        media_dedup_against_index(batch1, legacy, IMAGE).collect()
     # and a foreign chunk width too
     foreign = str(tmp_path / "foreign_bands")
     spark.createDataFrame([(1, 8)], "band_key: long, bits: int").write.parquet(
         foreign
     )
     with pytest.raises(ValueError, match="geometry"):
-        image_dedup_against_index(batch1, foreign).collect()
+        media_dedup_against_index(batch1, foreign, IMAGE).collect()
+
+
+def test_family_mode_refusals(spark, tmp_path):
+    """Every gate, append and bucketize entry point refuses, before any
+    decode or index read, `coarse` without offset mode and offset mode on
+    a family with no frame or chunk axis."""
+    from railgun_spark.operators.phash import FAMILIES, media_gate_with_bands
+
+    assert [f.mod for f in FAMILIES.values() if f.positional] == [
+        "video", "audio-chunk",
+    ]
+    df = spark.createDataFrame([], MEDIA_SCHEMA)
+    idx, table = str(tmp_path / "idx"), "phash_mode_guard"
+    calls = [
+        lambda fam, **kw: media_dedup_against_index(df, idx, fam, **kw),
+        lambda fam, **kw: media_dedup_against_table(df, table, fam, **kw),
+        lambda fam, **kw: media_gate_with_bands(df, idx, fam, **kw),
+        lambda fam, **kw: append_media_to_table(df, table, fam, **kw),
+        lambda fam, **kw: bucketize_media_index(spark, idx, table, fam, **kw),
+        lambda fam, **kw: ingest_media_batch(df, idx, str(tmp_path / "s"), fam, **kw),
+    ]
+    for call in calls:
+        for fam in (VIDEO, AUDIO_CHUNK):
+            with pytest.raises(ValueError, match="coarse=True only applies"):
+                call(fam, coarse=True)
+        for fam in (IMAGE, IMAGE_WIDE, AUDIO):
+            with pytest.raises(ValueError, match="positional family"):
+                call(fam, offset_tolerant=True)
 
 
 def test_stream_ingest_images_gate_with_replay_windows(spark, tmp_path):
@@ -184,11 +224,7 @@ def test_stream_ingest_images_gate_with_replay_windows(spark, tmp_path):
     nothing — the ingest_batch crash discipline on the image gate."""
     import shutil
 
-    from railgun_spark.streaming.ingest import (
-        _write_sink,
-        ingest_images_batch,
-        stream_ingest_images_availablenow,
-    )
+    from railgun_spark.streaming.ingest import _write_sink
 
     h0, h1 = _phash_target(0, 0), _phash_target(50, 0)
     shards = [
@@ -212,31 +248,31 @@ def test_stream_ingest_images_gate_with_replay_windows(spark, tmp_path):
     # CRASH WINDOW: a crashed attempt at batch 0 wrote the sink partition
     # but died before the index append — simulate it directly, then let
     # the stream replay batch 0 from scratch.
-    crashed = image_dedup_against_index(
-        spark.createDataFrame(shards[0], MEDIA_SCHEMA), idx
+    crashed = media_dedup_against_index(
+        spark.createDataFrame(shards[0], MEDIA_SCHEMA), idx, IMAGE,
     )
     _write_sink(crashed, sink, batch_id=0)
 
-    admitted = stream_ingest_images_availablenow(
+    admitted = stream_ingest_media_availablenow(
         spark, str(src), index_path=idx, sink_path=sink,
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        checkpoint_dir=str(tmp_path / "ckpt"), family=IMAGE,
     )
     assert admitted == 2  # ids 1 and 10
     got = spark.read.option("basePath", sink).parquet(sink)
     assert sorted(r["media_id"] for r in got.collect()) == [1, 10]
 
     # full restart over the same shards + index: everything already admitted
-    admitted2 = stream_ingest_images_availablenow(
+    admitted2 = stream_ingest_media_availablenow(
         spark, str(src), index_path=idx, sink_path=str(tmp_path / "imgs2"),
-        checkpoint_dir=str(tmp_path / "ckpt2"),
+        checkpoint_dir=str(tmp_path / "ckpt2"), family=IMAGE,
     )
     assert admitted2 == 0
 
     # CRASH WINDOW (b): index committed but checkpoint lost — a direct
     # replay of an already-committed batch admits 0 and must NOT clobber
     # the written partition
-    n = ingest_images_batch(
-        spark.createDataFrame(shards[0], MEDIA_SCHEMA), idx, sink, batch_id=0
+    n = ingest_media_batch(
+        spark.createDataFrame(shards[0], MEDIA_SCHEMA), idx, sink, IMAGE, batch_id=0,
     )
     assert n == 0
     still = spark.read.option("basePath", sink).parquet(sink)
@@ -282,7 +318,6 @@ def test_stream_ingest_soak_image_gate(spark, tmp_path):
     from railgun_spark.streaming.ingest import (
         _drain_availablenow,
         _write_sink,
-        ingest_images_batch,
     )
 
     n_shards = 16
@@ -319,7 +354,7 @@ def test_stream_ingest_soak_image_gate(spark, tmp_path):
 
     def gate(batch_df, batch_id):
         t0 = time.time()
-        n = ingest_images_batch(batch_df, idx, sink, batch_id=batch_id)
+        n = ingest_media_batch(batch_df, idx, sink, IMAGE, batch_id=batch_id)
         walls.append(time.time() - t0)
         return n
 
@@ -335,8 +370,8 @@ def test_stream_ingest_soak_image_gate(spark, tmp_path):
 
     # CRASH WINDOW 1 at boundary 6: sink partition written, index lost
     ship(6)
-    crashed = image_dedup_against_index(
-        spark.read.parquet(str(src / "shard06.parquet")), idx
+    crashed = media_dedup_against_index(
+        spark.read.parquet(str(src / "shard06.parquet")), idx, IMAGE,
     )
     _write_sink(crashed, sink, batch_id=6)
     for k in range(7, 11):
@@ -345,8 +380,8 @@ def test_stream_ingest_soak_image_gate(spark, tmp_path):
 
     # CRASH WINDOW 2 at boundary 11: index committed, checkpoint lost
     ship(11)
-    n11 = ingest_images_batch(
-        spark.read.parquet(str(src / "shard11.parquet")), idx, sink, batch_id=11
+    n11 = ingest_media_batch(
+        spark.read.parquet(str(src / "shard11.parquet")), idx, sink, IMAGE, batch_id=11,
     )
     assert n11 == 2
     for k in range(12, n_shards):
@@ -367,8 +402,8 @@ def test_stream_ingest_soak_image_gate(spark, tmp_path):
     # batch-backfill ground truth: same shards, direct gate calls
     b_idx, b_sink = str(tmp_path / "b_idx"), str(tmp_path / "b_imgs")
     for k in range(n_shards):
-        ingest_images_batch(
-            spark.createDataFrame(shard_rows(k), MEDIA_SCHEMA), b_idx, b_sink,
+        ingest_media_batch(
+            spark.createDataFrame(shard_rows(k), MEDIA_SCHEMA), b_idx, b_sink, IMAGE,
             batch_id=None,
         )
     backfill = sorted(
@@ -397,35 +432,28 @@ def test_mixed_batch_replay_after_index_append(spark, tmp_path, modality):
         _phash_wav_chunks,
         _phash_y4m,
     )
-    from railgun_spark.streaming.ingest import (
-        ingest_audio_batch,
-        ingest_images_batch,
-        ingest_videos_batch,
-    )
 
     h = _phash_target(123, 0)
     kind = "audio" if modality == "audio_chunk" else modality
     if modality == "image":
         payload, junk, other_kind = _phash_pgm(h), b"JUNK", "audio"
-        ingest = ingest_images_batch
+        family, knobs = IMAGE, {}
     elif modality == "audio":
         payload, junk, other_kind = _phash_wav(h), b"ID3\x04", "video"
-        ingest = ingest_audio_batch
+        family, knobs = AUDIO, {}
     elif modality == "audio_chunk":
         payload, junk, other_kind = (
             _phash_wav_chunks([h, h ^ 1]), b"ID3\x05", "video",
         )
-        ingest = lambda df, idx, sink, batch_id: ingest_audio_batch(  # noqa: E731
-            df, idx, sink, batch_id=batch_id,
-            chunked=True, offset_tolerant=True,
-        )
+        family, knobs = AUDIO_CHUNK, {"offset_tolerant": True}
     else:
         payload, junk, other_kind = (
             _phash_y4m([h, h ^ 1]), b"RIFF....AVI JUNK", "image",
         )
-        ingest = lambda df, idx, sink, batch_id: ingest_videos_batch(  # noqa: E731
-            df, idx, sink, batch_id=batch_id, every_n=1
-        )
+        family, knobs = VIDEO, {"every_n": 1}
+
+    def ingest(df, idx, sink, batch_id):
+        return ingest_media_batch(df, idx, sink, family, batch_id=batch_id, **knobs)
 
     rows = [
         (1, kind, bytearray(payload), {}),              # decodable: admits
@@ -590,24 +618,20 @@ def test_bucketed_image_index_same_result_fewer_shuffles(spark, tmp_path):
     """The bucketed image band table must admit exactly the same rows as
     the parquet index, with FEWER exchanges in the gate plan (the index
     side scans in place thanks to its bucket layout); geometry-guarded."""
-    from railgun_spark.operators.phash import (
-        append_image_bands_to_bucketed_index,
-        append_image_bands_to_index,
-        bucketize_image_index,
-        image_dedup_against_bucketed_index,
-    )
 
     idx = str(tmp_path / "pb")
     h = _phash_target(42, 0)
     b1 = spark.createDataFrame(
         _media_rows([(1, h), (2, _phash_target(77, 3))]), MEDIA_SCHEMA
     )
-    s1 = image_dedup_against_index(b1, idx)
-    append_image_bands_to_index(s1, idx)
+    s1 = media_dedup_against_index(b1, idx, IMAGE)
+    append_media_to_index(s1, idx, IMAGE)
 
     table = "phash_bucketed_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    assert bucketize_image_index(spark, idx, table, n_buckets=8) == 2 * PHASH_BANDS
+    assert bucketize_media_index(
+        spark, idx, table, IMAGE, n_buckets=8,
+    ) == 2 * PHASH_BANDS
 
     b2 = spark.createDataFrame(
         _media_rows([(10, h ^ 1), (11, _phash_target(500, 0))]), MEDIA_SCHEMA
@@ -615,8 +639,8 @@ def test_bucketed_image_index_same_result_fewer_shuffles(spark, tmp_path):
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        via_parquet = image_dedup_against_index(b2, idx)
-        via_table = image_dedup_against_bucketed_index(b2, table)
+        via_parquet = media_dedup_against_index(b2, idx, IMAGE)
+        via_table = media_dedup_against_table(b2, table, IMAGE)
         assert sorted(r["media_id"] for r in via_table.collect()) == \
                sorted(r["media_id"] for r in via_parquet.collect()) == [11]
 
@@ -626,11 +650,11 @@ def test_bucketed_image_index_same_result_fewer_shuffles(spark, tmp_path):
         assert plan_table.count("Exchange") < plan_parquet.count("Exchange")
 
         # appends preserve the bucket spec and stay visible to the gate
-        append_image_bands_to_bucketed_index(via_table, table)
+        append_media_to_table(via_table, table, IMAGE)
         b3 = spark.createDataFrame(
             _media_rows([(20, _phash_target(500, 0) ^ 4)]), MEDIA_SCHEMA
         )
-        assert image_dedup_against_bucketed_index(b3, table).count() == 0
+        assert media_dedup_against_table(b3, table, IMAGE).count() == 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -639,7 +663,7 @@ def test_bucketed_image_index_same_result_fewer_shuffles(spark, tmp_path):
     legacy = str(tmp_path / "legacy")
     spark.createDataFrame([(1,)], "band_key: long").write.parquet(legacy)
     with pytest.raises(ValueError, match="geometry"):
-        bucketize_image_index(spark, legacy, "phash_bucketed_guard")
+        bucketize_media_index(spark, legacy, "phash_bucketed_guard", IMAGE)
 
 
 def test_audio_gate_and_modality_guard(spark, tmp_path):
@@ -647,12 +671,7 @@ def test_audio_gate_and_modality_guard(spark, tmp_path):
     band-saturation false rejects), MP3 refusals survive unindexed, and
     an image-modality index refuses loudly when passed to the audio
     gate (and vice versa)."""
-    from railgun_spark.operators.phash import (
-        _phash_wav,
-        append_audio_bands_to_index,
-        append_image_bands_to_index,
-        audio_dedup_against_index,
-    )
+    from railgun_spark.operators.phash import _phash_wav
 
     idx = str(tmp_path / "audio_bands")
     h = _phash_target(7, 0)
@@ -663,9 +682,9 @@ def test_audio_gate_and_modality_guard(spark, tmp_path):
          (4, "audio", bytearray(b"ID3\x04"), {})],  # MP3: refusal survives
         MEDIA_SCHEMA,
     )
-    s1 = audio_dedup_against_index(b1, idx)
+    s1 = media_dedup_against_index(b1, idx, AUDIO)
     assert sorted(r["media_id"] for r in s1.collect()) == [1, 3, 4]
-    append_audio_bands_to_index(s1, idx)
+    append_media_to_index(s1, idx, AUDIO)
     assert spark.read.parquet(idx).count() == 2 * 4  # clip 4 not indexed
 
     b2 = spark.createDataFrame(
@@ -673,7 +692,7 @@ def test_audio_gate_and_modality_guard(spark, tmp_path):
          (11, "audio", bytearray(_phash_wav(_phash_target(61, 0))), {})],
         MEDIA_SCHEMA,
     )
-    s2 = audio_dedup_against_index(b2, idx)
+    s2 = media_dedup_against_index(b2, idx, AUDIO)
     assert sorted(r["media_id"] for r in s2.collect()) == [11]
 
     # modality guard both ways
@@ -681,32 +700,30 @@ def test_audio_gate_and_modality_guard(spark, tmp_path):
     imgs = spark.createDataFrame(
         _media_rows([(50, _phash_target(80, 0))]), MEDIA_SCHEMA
     )
-    append_image_bands_to_index(image_dedup_against_index(imgs, img_idx), img_idx)
+    append_media_to_index(
+        media_dedup_against_index(imgs, img_idx, IMAGE), img_idx, IMAGE,
+    )
     with pytest.raises(ValueError, match="modality"):
-        audio_dedup_against_index(b2, img_idx).collect()
+        media_dedup_against_index(b2, img_idx, AUDIO).collect()
     with pytest.raises(ValueError, match="modality"):
-        image_dedup_against_index(imgs, idx).collect()
+        media_dedup_against_index(imgs, idx, IMAGE).collect()
 
 
 def test_ingest_audio_batch_and_stream(spark, tmp_path):
-    """ingest_audio_batch admits one clip per fingerprint near-dup class;
+    """ingest_media_batch(AUDIO) admits one clip per fingerprint near-dup class;
     the streaming drain over the same index admits nothing new; the
     batch replay after a committed index skips the write."""
     import shutil
 
     from railgun_spark.operators.phash import _phash_wav
-    from railgun_spark.streaming.ingest import (
-        ingest_audio_batch,
-        stream_ingest_audio_availablenow,
-    )
 
     h = _phash_target(33, 0)
     rows = [(1, "audio", bytearray(_phash_wav(h)), {}),
             (2, "audio", bytearray(_phash_wav(h ^ 1)), {}),
             (3, "audio", bytearray(_phash_wav(_phash_target(44, 0))), {})]
     idx, sink = str(tmp_path / "idx"), str(tmp_path / "clips")
-    n = ingest_audio_batch(
-        spark.createDataFrame(rows, MEDIA_SCHEMA), idx, sink, batch_id=0
+    n = ingest_media_batch(
+        spark.createDataFrame(rows, MEDIA_SCHEMA), idx, sink, AUDIO, batch_id=0,
     )
     assert n == 2
 
@@ -715,9 +732,9 @@ def test_ingest_audio_batch_and_stream(spark, tmp_path):
     stage = tmp_path / "stage"
     spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1).write.parquet(str(stage))
     shutil.move(str(next(stage.glob("part-*.parquet"))), str(src / "s0.parquet"))
-    admitted = stream_ingest_audio_availablenow(
+    admitted = stream_ingest_media_availablenow(
         spark, str(src), index_path=idx, sink_path=str(tmp_path / "clips2"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        checkpoint_dir=str(tmp_path / "ckpt"), family=AUDIO,
     )
     assert admitted == 0  # everything already in the index
 
@@ -727,14 +744,13 @@ def test_phash_index_compaction_preserves_gate(spark, tmp_path):
     (multi-column layout: band_key, dhash, bits, mod) without changing
     gate decisions."""
     from railgun_spark.operators.dedup import compact_index
-    from railgun_spark.operators.phash import append_image_bands_to_index
 
     idx = str(tmp_path / "bands")
     h = _phash_target(11, 0)
     batch = spark.createDataFrame(_media_rows([(1, h)]), MEDIA_SCHEMA)
-    s = image_dedup_against_index(batch, idx)
-    append_image_bands_to_index(s, idx)
-    append_image_bands_to_index(s, idx)  # replayed append: physical dups
+    s = media_dedup_against_index(batch, idx, IMAGE)
+    append_media_to_index(s, idx, IMAGE)
+    append_media_to_index(s, idx, IMAGE)  # replayed append: physical dups
     assert spark.read.parquet(idx).count() == 2 * PHASH_BANDS
 
     assert compact_index(spark, idx) == PHASH_BANDS  # distinct rows only
@@ -747,7 +763,7 @@ def test_phash_index_compaction_preserves_gate(spark, tmp_path):
         _media_rows([(9, h ^ 1), (10, _phash_target(90, 0))]), MEDIA_SCHEMA
     )
     assert sorted(
-        r["media_id"] for r in image_dedup_against_index(probe, idx).collect()
+        r["media_id"] for r in media_dedup_against_index(probe, idx, IMAGE).collect()
     ) == [10]
 
 
@@ -759,15 +775,7 @@ def test_video_gate_and_ingest(spark, tmp_path):
     a committed index admits nothing."""
     import shutil
 
-    from railgun_spark.operators.phash import (
-        _phash_y4m,
-        append_video_bands_to_index,
-        video_dedup_against_index,
-    )
-    from railgun_spark.streaming.ingest import (
-        ingest_videos_batch,
-        stream_ingest_videos_availablenow,
-    )
+    from railgun_spark.operators.phash import _phash_y4m
 
     base = [_phash_target(400 + f, 0) for f in range(3)]
     near = [h ^ (1 << (5 * f + 2)) for f, h in enumerate(base)]
@@ -781,8 +789,8 @@ def test_video_gate_and_ingest(spark, tmp_path):
         MEDIA_SCHEMA,
     )
     idx, sink = str(tmp_path / "vidx"), str(tmp_path / "vids")
-    n = ingest_videos_batch(
-        spark.createDataFrame(b1.collect(), MEDIA_SCHEMA), idx, sink,
+    n = ingest_media_batch(
+        spark.createDataFrame(b1.collect(), MEDIA_SCHEMA), idx, sink, VIDEO,
         batch_id=0, every_n=1,
     )
     assert n == 3  # 1, 3, 4 admitted; 2 rejected intra-batch
@@ -794,20 +802,21 @@ def test_video_gate_and_ingest(spark, tmp_path):
          (11, "video", bytearray(_phash_y4m(clip)), {})],
         MEDIA_SCHEMA,
     )
-    s2 = video_dedup_against_index(b2, idx, every_n=1)
+    s2 = media_dedup_against_index(b2, idx, VIDEO, every_n=1)
     assert sorted(r["media_id"] for r in s2.collect()) == [11]
-    append_video_bands_to_index(s2, idx, every_n=1)
+    append_media_to_index(s2, idx, VIDEO, every_n=1)
 
     # modality guard: the video gate refuses an image index
     img_idx = str(tmp_path / "iidx")
     imgs = spark.createDataFrame(
         _media_rows([(50, _phash_target(85, 0))]), MEDIA_SCHEMA
     )
-    from railgun_spark.operators.phash import append_image_bands_to_index
 
-    append_image_bands_to_index(image_dedup_against_index(imgs, img_idx), img_idx)
+    append_media_to_index(
+        media_dedup_against_index(imgs, img_idx, IMAGE), img_idx, IMAGE,
+    )
     with pytest.raises(ValueError, match="modality"):
-        video_dedup_against_index(b2, img_idx, every_n=1).collect()
+        media_dedup_against_index(b2, img_idx, VIDEO, every_n=1).collect()
 
     # streaming drain over the committed index: everything already seen
     src = tmp_path / "arriving"
@@ -818,9 +827,9 @@ def test_video_gate_and_ingest(spark, tmp_path):
         MEDIA_SCHEMA,
     ).coalesce(1).write.parquet(str(stage))
     shutil.move(str(next(stage.glob("part-*.parquet"))), str(src / "s0.parquet"))
-    admitted = stream_ingest_videos_availablenow(
+    admitted = stream_ingest_media_availablenow(
         spark, str(src), index_path=idx, sink_path=str(tmp_path / "vids2"),
-        checkpoint_dir=str(tmp_path / "ckpt"), every_n=1,
+        checkpoint_dir=str(tmp_path / "ckpt"), every_n=1, family=VIDEO,
     )
     assert admitted == 0
 
@@ -833,16 +842,6 @@ def test_bucketed_audio_and_video_indexes(spark, tmp_path):
     from railgun_spark.operators.phash import (
         _phash_wav,
         _phash_y4m,
-        append_audio_bands_to_bucketed_index,
-        append_audio_bands_to_index,
-        append_video_bands_to_bucketed_index,
-        append_video_bands_to_index,
-        audio_dedup_against_bucketed_index,
-        audio_dedup_against_index,
-        bucketize_audio_index,
-        bucketize_video_index,
-        video_dedup_against_bucketed_index,
-        video_dedup_against_index,
     )
 
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -856,32 +855,34 @@ def test_bucketed_audio_and_video_indexes(spark, tmp_path):
              (2, "audio", bytearray(_phash_wav(_phash_target(70, 3))), {})],
             MEDIA_SCHEMA,
         )
-        append_audio_bands_to_index(audio_dedup_against_index(a1, aidx), aidx)
+        append_media_to_index(media_dedup_against_index(a1, aidx, AUDIO), aidx, AUDIO)
         import shutil
 
         atable = "phash_audio_bucketed_test"
         spark.sql(f"DROP TABLE IF EXISTS {atable}")
         shutil.rmtree(f"spark-warehouse/{atable}", ignore_errors=True)
-        assert bucketize_audio_index(spark, aidx, atable, n_buckets=8) == 2 * PHASH_BANDS
+        assert bucketize_media_index(
+            spark, aidx, atable, AUDIO, n_buckets=8,
+        ) == 2 * PHASH_BANDS
         a2 = spark.createDataFrame(
             [(10, "audio", bytearray(_phash_wav(h ^ 2)), {}),
              (11, "audio", bytearray(_phash_wav(_phash_target(71, 0))), {})],
             MEDIA_SCHEMA,
         )
-        via_p = audio_dedup_against_index(a2, aidx)
-        via_t = audio_dedup_against_bucketed_index(a2, atable)
+        via_p = media_dedup_against_index(a2, aidx, AUDIO)
+        via_t = media_dedup_against_table(a2, atable, AUDIO)
         assert sorted(r["media_id"] for r in via_t.collect()) == \
                sorted(r["media_id"] for r in via_p.collect()) == [11]
         plan_t = via_t._jdf.queryExecution().executedPlan().toString()
         assert "Bucketed: true" in plan_t
         assert plan_t.count("Exchange") < via_p._jdf.queryExecution(
         ).executedPlan().toString().count("Exchange")
-        append_audio_bands_to_bucketed_index(via_t, atable)
+        append_media_to_table(via_t, atable, AUDIO)
         a3 = spark.createDataFrame(
             [(20, "audio", bytearray(_phash_wav(_phash_target(71, 0) ^ 1)), {})],
             MEDIA_SCHEMA,
         )
-        assert audio_dedup_against_bucketed_index(a3, atable).count() == 0
+        assert media_dedup_against_table(a3, atable, AUDIO).count() == 0
         spark.sql(f"DROP TABLE IF EXISTS {atable}")
 
         # ---- video ----
@@ -890,34 +891,37 @@ def test_bucketed_audio_and_video_indexes(spark, tmp_path):
         v1 = spark.createDataFrame(
             [(1, "video", bytearray(_phash_y4m(base)), {})], MEDIA_SCHEMA
         )
-        append_video_bands_to_index(
-            video_dedup_against_index(v1, vidx, every_n=1), vidx, every_n=1
+        append_media_to_index(
+            media_dedup_against_index(v1, vidx, VIDEO, every_n=1), vidx, VIDEO,
+            every_n=1,
         )
         vtable = "phash_video_bucketed_test"
         spark.sql(f"DROP TABLE IF EXISTS {vtable}")
         shutil.rmtree(f"spark-warehouse/{vtable}", ignore_errors=True)
-        assert bucketize_video_index(spark, vidx, vtable, n_buckets=8) == 3 * PHASH_BANDS
+        assert bucketize_media_index(
+            spark, vidx, vtable, VIDEO, n_buckets=8,
+        ) == 3 * PHASH_BANDS
         v2 = spark.createDataFrame(
             [(10, "video", bytearray(_phash_y4m([x ^ 4 for x in base])), {}),
              (11, "video", bytearray(
                  _phash_y4m([_phash_target(600 + f, 0) for f in range(3)])), {})],
             MEDIA_SCHEMA,
         )
-        via_p = video_dedup_against_index(v2, vidx, every_n=1)
-        via_t = video_dedup_against_bucketed_index(v2, vtable, every_n=1)
+        via_p = media_dedup_against_index(v2, vidx, VIDEO, every_n=1)
+        via_t = media_dedup_against_table(v2, vtable, VIDEO, every_n=1)
         assert sorted(r["media_id"] for r in via_t.collect()) == \
                sorted(r["media_id"] for r in via_p.collect()) == [11]
         plan_t = via_t._jdf.queryExecution().executedPlan().toString()
         assert "Bucketed: true" in plan_t
         assert plan_t.count("Exchange") < via_p._jdf.queryExecution(
         ).executedPlan().toString().count("Exchange")
-        append_video_bands_to_bucketed_index(via_t, vtable, every_n=1)
+        append_media_to_table(via_t, vtable, VIDEO, every_n=1)
         v3 = spark.createDataFrame(
             [(20, "video", bytearray(
                 _phash_y4m([_phash_target(600 + f, 0) ^ 8 for f in range(3)])), {})],
             MEDIA_SCHEMA,
         )
-        assert video_dedup_against_bucketed_index(v3, vtable, every_n=1).count() == 0
+        assert media_dedup_against_table(v3, vtable, VIDEO, every_n=1).count() == 0
         spark.sql(f"DROP TABLE IF EXISTS {vtable}")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
@@ -1019,11 +1023,7 @@ def test_wide_gate_and_geometry_guard(spark, tmp_path):
     from railgun_spark.operators.phash import (
         _phash_wide_pgm,
         _phash_wide_target,
-        append_image_bands_to_index,
-        append_image_wide_bands_to_index,
-        image_wide_dedup_against_index,
     )
-    from railgun_spark.streaming.ingest import ingest_images_wide_batch
 
     def wrows(ids_gv):
         return [
@@ -1037,9 +1037,9 @@ def test_wide_gate_and_geometry_guard(spark, tmp_path):
         + [(4, "image", bytearray(b"JUNK"), {})][0:1],
         MEDIA_SCHEMA,
     )
-    s1 = image_wide_dedup_against_index(b1, idx)
+    s1 = media_dedup_against_index(b1, idx, IMAGE_WIDE)
     assert sorted(r["media_id"] for r in s1.collect()) == [1, 3, 4]
-    append_image_wide_bands_to_index(s1, idx)
+    append_media_to_index(s1, idx, IMAGE_WIDE)
     from railgun_spark.operators.phash import PHASH_WIDE_BANDS
 
     assert spark.read.parquet(idx).count() == 2 * PHASH_WIDE_BANDS
@@ -1048,7 +1048,7 @@ def test_wide_gate_and_geometry_guard(spark, tmp_path):
     b2 = spark.createDataFrame(
         wrows([(10, 5, 1), (11, 40, 3)]), MEDIA_SCHEMA
     )
-    s2 = image_wide_dedup_against_index(b2, idx)
+    s2 = media_dedup_against_index(b2, idx, IMAGE_WIDE)
     assert sorted(r["media_id"] for r in s2.collect()) == [11]
 
     # ingest twin: mixed-batch replay discipline holds for the wide gate
@@ -1057,8 +1057,8 @@ def test_wide_gate_and_geometry_guard(spark, tmp_path):
         wrows([(20, 77, 0)]) + [(21, "image", bytearray(b"JUNK"), {})],
         MEDIA_SCHEMA,
     )
-    assert ingest_images_wide_batch(batch, idx, sink, batch_id=0) == 2
-    assert ingest_images_wide_batch(batch, idx, sink, batch_id=0) == 0
+    assert ingest_media_batch(batch, idx, sink, IMAGE_WIDE, batch_id=0) == 2
+    assert ingest_media_batch(batch, idx, sink, IMAGE_WIDE, batch_id=0) == 0
     kept = sorted(
         r["media_id"]
         for r in spark.read.option("basePath", sink).parquet(sink).collect()
@@ -1071,11 +1071,13 @@ def test_wide_gate_and_geometry_guard(spark, tmp_path):
     # the wide index lacks the narrow layout's dhash column, so the narrow
     # gate fails closed on geometry before it can reach the modality check
     with pytest.raises(ValueError, match="geometry|modality"):
-        image_dedup_against_index(imgs, idx).collect()
+        media_dedup_against_index(imgs, idx, IMAGE).collect()
     narrow_idx = str(tmp_path / "narrow_bands")
-    append_image_bands_to_index(image_dedup_against_index(imgs, narrow_idx), narrow_idx)
+    append_media_to_index(
+        media_dedup_against_index(imgs, narrow_idx, IMAGE), narrow_idx, IMAGE,
+    )
     with pytest.raises(ValueError, match="geometry|modality"):
-        image_wide_dedup_against_index(b2, narrow_idx).collect()
+        media_dedup_against_index(b2, narrow_idx, IMAGE_WIDE).collect()
 
 
 def test_video_offset_pairs_and_gate(spark, tmp_path):
@@ -1085,9 +1087,6 @@ def test_video_offset_pairs_and_gate(spark, tmp_path):
     an indexed video against the SAME index the aligned gate writes."""
     from railgun_spark.operators.phash import (
         _phash_y4m,
-        append_video_bands_to_index,
-        video_dedup_against_index,
-        video_dedup_against_index_offset,
         video_perceptual_hashes,
         video_phash_near_dup_pairs,
         video_phash_near_dup_pairs_offset,
@@ -1122,17 +1121,17 @@ def test_video_offset_pairs_and_gate(spark, tmp_path):
     # half-noise clip; the aligned gate admits both (documented miss)
     idx = str(tmp_path / "vidx")
     b1 = spark.createDataFrame(rows[:1], MEDIA_SCHEMA)
-    s1 = video_dedup_against_index(b1, idx, every_n=1)
-    append_video_bands_to_index(s1, idx, every_n=1)
+    s1 = media_dedup_against_index(b1, idx, VIDEO, every_n=1)
+    append_media_to_index(s1, idx, VIDEO, every_n=1)
     b2 = spark.createDataFrame(
         [(10, "video", bytearray(_phash_y4m(trimmed)), {}),
          (11, "video", bytearray(_phash_y4m(noise)), {}),
          (12, "video", bytearray(b"RIFF....AVI JUNK"), {})],  # refusal survives
         MEDIA_SCHEMA,
     )
-    off_s = video_dedup_against_index_offset(b2, idx, every_n=1)
+    off_s = media_dedup_against_index(b2, idx, VIDEO, every_n=1, offset_tolerant=True)
     assert sorted(r["media_id"] for r in off_s.collect()) == [11, 12]
-    aligned_s = video_dedup_against_index(b2, idx, every_n=1)
+    aligned_s = media_dedup_against_index(b2, idx, VIDEO, every_n=1)
     assert sorted(r["media_id"] for r in aligned_s.collect()) == [10, 11, 12]
 
     # intra-batch: a trimmed copy of a smaller-id batch video rejects
@@ -1141,7 +1140,9 @@ def test_video_offset_pairs_and_gate(spark, tmp_path):
          (21, "video", bytearray(_phash_y4m([_phash_target(881 + f, 0) ^ 2 for f in range(3)])), {})],
         MEDIA_SCHEMA,
     )
-    s3 = video_dedup_against_index_offset(b3, str(tmp_path / "fresh"), every_n=1)
+    s3 = media_dedup_against_index(
+        b3, str(tmp_path / "fresh"), VIDEO, every_n=1, offset_tolerant=True,
+    )
     assert sorted(r["media_id"] for r in s3.collect()) == [20]
 
 
@@ -1172,9 +1173,6 @@ def test_stream_ingest_soak_media_gate(spark, tmp_path, modality):
     from railgun_spark.streaming.ingest import (
         _drain_availablenow,
         _write_sink,
-        ingest_audio_batch,
-        ingest_images_wide_batch,
-        ingest_videos_batch,
     )
 
     n_shards = 12
@@ -1187,45 +1185,25 @@ def test_stream_ingest_soak_media_gate(spark, tmp_path, modality):
         # offset-tolerant chunked mode: two-chunk clips, trim-robust gate
         payload = lambda h: _phash_wav_chunks([h, h ^ 2])  # noqa: E731
         refuse = lambda k: b"ID3\x05" + bytes([k])  # noqa: E731
-
-        def ingest(df, batch_id):
-            return ingest_audio_batch(
-                df, idx, sink, batch_id=batch_id,
-                chunked=True, offset_tolerant=True,
-            )
-
-        def gate_direct(df, b_idx, b_sink):
-            return ingest_audio_batch(
-                df, b_idx, b_sink, batch_id=None,
-                chunked=True, offset_tolerant=True,
-            )
+        family, knobs = AUDIO_CHUNK, {"offset_tolerant": True}
     elif modality == "audio":
         payload = lambda h: _phash_wav(h)  # noqa: E731
         refuse = lambda k: b"ID3\x04" + bytes([k])  # noqa: E731
-
-        def ingest(df, batch_id):
-            return ingest_audio_batch(df, idx, sink, batch_id=batch_id)
-
-        def gate_direct(df, b_idx, b_sink):
-            return ingest_audio_batch(df, b_idx, b_sink, batch_id=None)
+        family, knobs = AUDIO, {}
     elif modality == "video":
         payload = lambda h: _phash_y4m([h, h ^ 2])  # noqa: E731
         refuse = lambda k: b"RIFF....AVI " + bytes([k])  # noqa: E731
-
-        def ingest(df, batch_id):
-            return ingest_videos_batch(df, idx, sink, batch_id=batch_id, every_n=1)
-
-        def gate_direct(df, b_idx, b_sink):
-            return ingest_videos_batch(df, b_idx, b_sink, batch_id=None, every_n=1)
+        family, knobs = VIDEO, {"every_n": 1}
     else:  # image_wide: 64-bit targets widen to 4 words (word 0 = h)
         payload = lambda h: _phash_wide_pgm([h, h ^ 3, h ^ 5, h ^ 9])  # noqa: E731
         refuse = lambda k: b"JUNK" + bytes([k])  # noqa: E731
+        family, knobs = IMAGE_WIDE, {}
 
-        def ingest(df, batch_id):
-            return ingest_images_wide_batch(df, idx, sink, batch_id=batch_id)
+    def ingest(df, batch_id):
+        return ingest_media_batch(df, idx, sink, family, batch_id=batch_id, **knobs)
 
-        def gate_direct(df, b_idx, b_sink):
-            return ingest_images_wide_batch(df, b_idx, b_sink, batch_id=None)
+    def gate_direct(df, b_idx, b_sink):
+        return ingest_media_batch(df, b_idx, b_sink, family, batch_id=None, **knobs)
 
     def shard_rows(k: int):
         rows = [
@@ -1273,24 +1251,9 @@ def test_stream_ingest_soak_media_gate(spark, tmp_path, modality):
 
     # CRASH WINDOW 1 at boundary 5: sink partition written, index lost
     ship(5)
-    if modality == "audio_chunk":
-        from railgun_spark.operators.phash import (
-            audio_chunk_dedup_against_index_offset as g5c,
-        )
-        crashed = g5c(spark.read.parquet(str(src / "shard05.parquet")), idx)
-    elif modality == "audio":
-        from railgun_spark.operators.phash import audio_dedup_against_index as g5
-        crashed = g5(spark.read.parquet(str(src / "shard05.parquet")), idx)
-    elif modality == "video":
-        from railgun_spark.operators.phash import video_dedup_against_index
-        crashed = video_dedup_against_index(
-            spark.read.parquet(str(src / "shard05.parquet")), idx, every_n=1
-        )
-    else:
-        from railgun_spark.operators.phash import image_wide_dedup_against_index
-        crashed = image_wide_dedup_against_index(
-            spark.read.parquet(str(src / "shard05.parquet")), idx
-        )
+    crashed = media_dedup_against_index(
+        spark.read.parquet(str(src / "shard05.parquet")), idx, family, **knobs
+    )
     _write_sink(crashed, sink, batch_id=5)
     for k in range(6, 8):
         ship(k)
@@ -1349,14 +1312,6 @@ def test_wide_stream_and_bucketed_index(spark, tmp_path):
         PHASH_WIDE_BANDS,
         _phash_wide_pgm,
         _phash_wide_target,
-        append_image_wide_bands_to_bucketed_index,
-        append_image_wide_bands_to_index,
-        bucketize_image_wide_index,
-        image_wide_dedup_against_bucketed_index,
-        image_wide_dedup_against_index,
-    )
-    from railgun_spark.streaming.ingest import (
-        stream_ingest_images_wide_availablenow,
     )
 
     def wrow(mid, g, v):
@@ -1380,9 +1335,9 @@ def test_wide_stream_and_bucketed_index(spark, tmp_path):
             str(next(stage.glob("part-*.parquet"))), str(src / f"s{i}.parquet")
         )
     idx, sink = str(tmp_path / "widx"), str(tmp_path / "wsink")
-    admitted = stream_ingest_images_wide_availablenow(
+    admitted = stream_ingest_media_availablenow(
         spark, str(src), index_path=idx, sink_path=sink,
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        checkpoint_dir=str(tmp_path / "ckpt"), family=IMAGE_WIDE,
     )
     assert admitted == 2  # ids 1 and 11
     got = spark.read.option("basePath", sink).parquet(sink)
@@ -1392,7 +1347,7 @@ def test_wide_stream_and_bucketed_index(spark, tmp_path):
     table = "phash_wide_bucketed_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(f"spark-warehouse/{table}", ignore_errors=True)
-    assert bucketize_image_wide_index(spark, idx, table, n_buckets=8) == \
+    assert bucketize_media_index(spark, idx, table, IMAGE_WIDE, n_buckets=8) == \
         2 * PHASH_WIDE_BANDS
     probe = spark.createDataFrame(
         [wrow(20, 90, 1), wrow(21, 500, 0)], MEDIA_SCHEMA
@@ -1400,8 +1355,8 @@ def test_wide_stream_and_bucketed_index(spark, tmp_path):
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        via_p = image_wide_dedup_against_index(probe, idx)
-        via_t = image_wide_dedup_against_bucketed_index(probe, table)
+        via_p = media_dedup_against_index(probe, idx, IMAGE_WIDE)
+        via_t = media_dedup_against_table(probe, table, IMAGE_WIDE)
         assert sorted(r["media_id"] for r in via_t.collect()) == \
                sorted(r["media_id"] for r in via_p.collect()) == [21]
         plan_t = via_t._jdf.queryExecution().executedPlan().toString()
@@ -1409,33 +1364,30 @@ def test_wide_stream_and_bucketed_index(spark, tmp_path):
         assert "Bucketed: true" in plan_t
         assert plan_t.count("Exchange") < plan_p.count("Exchange")
         # appends preserve the bucket spec and stay visible
-        append_image_wide_bands_to_bucketed_index(via_t, table)
+        append_media_to_table(via_t, table, IMAGE_WIDE)
         probe2 = spark.createDataFrame([wrow(30, 500, 1)], MEDIA_SCHEMA)
-        assert image_wide_dedup_against_bucketed_index(probe2, table).count() == 0
+        assert media_dedup_against_table(probe2, table, IMAGE_WIDE).count() == 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
     # geometry guard at bucketize time: a NARROW index refuses
     narrow_idx = str(tmp_path / "nidx")
-    from railgun_spark.operators.phash import append_image_bands_to_index
 
     imgs = spark.createDataFrame(_media_rows([(50, _phash_target(81, 0))]), MEDIA_SCHEMA)
-    append_image_bands_to_index(image_dedup_against_index(imgs, narrow_idx), narrow_idx)
+    append_media_to_index(
+        media_dedup_against_index(imgs, narrow_idx, IMAGE), narrow_idx, IMAGE,
+    )
     with pytest.raises(ValueError, match="geometry|modality"):
-        bucketize_image_wide_index(spark, narrow_idx, "phash_wide_guard")
+        bucketize_media_index(spark, narrow_idx, "phash_wide_guard", IMAGE_WIDE)
 
 
 def test_offset_tolerant_video_ingest(spark, tmp_path):
-    """ingest_videos_batch(offset_tolerant=True): a trimmed re-upload of
+    """ingest_media_batch(VIDEO, offset_tolerant=True): a trimmed re-upload of
     an ADMITTED video rejects in the next batch, the replay-after-append
     discipline still holds, and the same index keeps serving the aligned
     mode."""
-    from railgun_spark.operators.phash import (
-        _phash_y4m,
-        video_dedup_against_index,
-    )
-    from railgun_spark.streaming.ingest import ingest_videos_batch
+    from railgun_spark.operators.phash import _phash_y4m
 
     base = [_phash_target(810 + f, 0) for f in range(4)]
     trimmed = [h ^ 4 for h in base[1:]]
@@ -1443,8 +1395,8 @@ def test_offset_tolerant_video_ingest(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(1, "video", bytearray(_phash_y4m(base)), {})], MEDIA_SCHEMA
     )
-    assert ingest_videos_batch(
-        b1, idx, sink, batch_id=0, every_n=1, offset_tolerant=True
+    assert ingest_media_batch(
+        b1, idx, sink, VIDEO, batch_id=0, every_n=1, offset_tolerant=True,
     ) == 1
 
     b2 = spark.createDataFrame(
@@ -1454,13 +1406,13 @@ def test_offset_tolerant_video_ingest(spark, tmp_path):
          (12, "video", bytearray(b"RIFF....AVI JUNK"), {})],  # pass-through
         MEDIA_SCHEMA,
     )
-    assert ingest_videos_batch(
-        b2, idx, sink, batch_id=1, every_n=1, offset_tolerant=True
+    assert ingest_media_batch(
+        b2, idx, sink, VIDEO, batch_id=1, every_n=1, offset_tolerant=True,
     ) == 2  # 11 + the refusal; 10 rejected at offset +1
 
     # replay of batch 1 after its append: mixed-batch skip still holds
-    assert ingest_videos_batch(
-        b2, idx, sink, batch_id=1, every_n=1, offset_tolerant=True
+    assert ingest_media_batch(
+        b2, idx, sink, VIDEO, batch_id=1, every_n=1, offset_tolerant=True,
     ) == 0
     kept = sorted(
         r["media_id"]
@@ -1473,7 +1425,7 @@ def test_offset_tolerant_video_ingest(spark, tmp_path):
         [(20, "video", bytearray(_phash_y4m([h ^ 1 for h in base])), {})],
         MEDIA_SCHEMA,
     )
-    assert video_dedup_against_index(b3, idx, every_n=1).count() == 0
+    assert media_dedup_against_index(b3, idx, VIDEO, every_n=1).count() == 0
 
 
 def test_compaction_preserves_wide_and_video_indexes(spark, tmp_path):
@@ -1487,10 +1439,6 @@ def test_compaction_preserves_wide_and_video_indexes(spark, tmp_path):
         _phash_wide_pgm,
         _phash_wide_target,
         _phash_y4m,
-        append_image_wide_bands_to_index,
-        append_video_bands_to_index,
-        image_wide_dedup_against_index,
-        video_dedup_against_index,
     )
 
     # wide image index
@@ -1499,9 +1447,9 @@ def test_compaction_preserves_wide_and_video_indexes(spark, tmp_path):
         [(1, "image", bytearray(_phash_wide_pgm(_phash_wide_target(3, 0))), {})],
         MEDIA_SCHEMA,
     )
-    ws = image_wide_dedup_against_index(wbatch, widx)
-    append_image_wide_bands_to_index(ws, widx)
-    append_image_wide_bands_to_index(ws, widx)  # replayed append
+    ws = media_dedup_against_index(wbatch, widx, IMAGE_WIDE)
+    append_media_to_index(ws, widx, IMAGE_WIDE)
+    append_media_to_index(ws, widx, IMAGE_WIDE)  # replayed append
     assert spark.read.parquet(widx).count() == 2 * PHASH_WIDE_BANDS
     assert compact_index(spark, widx) == PHASH_WIDE_BANDS
     probe = spark.createDataFrame(
@@ -1511,7 +1459,7 @@ def test_compaction_preserves_wide_and_video_indexes(spark, tmp_path):
     )
     assert sorted(
         r["media_id"]
-        for r in image_wide_dedup_against_index(probe, widx).collect()
+        for r in media_dedup_against_index(probe, widx, IMAGE_WIDE).collect()
     ) == [10]
 
     # video index (per-frame rows)
@@ -1520,9 +1468,9 @@ def test_compaction_preserves_wide_and_video_indexes(spark, tmp_path):
     vbatch = spark.createDataFrame(
         [(1, "video", bytearray(_phash_y4m(base)), {})], MEDIA_SCHEMA
     )
-    vs = video_dedup_against_index(vbatch, vidx, every_n=1)
-    append_video_bands_to_index(vs, vidx, every_n=1)
-    append_video_bands_to_index(vs, vidx, every_n=1)
+    vs = media_dedup_against_index(vbatch, vidx, VIDEO, every_n=1)
+    append_media_to_index(vs, vidx, VIDEO, every_n=1)
+    append_media_to_index(vs, vidx, VIDEO, every_n=1)
     assert spark.read.parquet(vidx).count() == 2 * 3 * PHASH_BANDS
     assert compact_index(spark, vidx) == 3 * PHASH_BANDS
     vprobe = spark.createDataFrame(
@@ -1533,7 +1481,7 @@ def test_compaction_preserves_wide_and_video_indexes(spark, tmp_path):
     )
     assert sorted(
         r["media_id"]
-        for r in video_dedup_against_index(vprobe, vidx, every_n=1).collect()
+        for r in media_dedup_against_index(vprobe, vidx, VIDEO, every_n=1).collect()
     ) == [10]
 
 
@@ -1543,30 +1491,23 @@ def test_bucketed_offset_video_index(spark, tmp_path):
     forces the parquet index to shuffle scans in place here)."""
     import shutil
 
-    from railgun_spark.operators.phash import (
-        _phash_y4m,
-        append_video_bands_to_bucketed_index_offset,
-        append_video_bands_to_index,
-        bucketize_video_index_offset,
-        video_dedup_against_bucketed_index_offset,
-        video_dedup_against_index,
-        video_dedup_against_index_offset,
-    )
+    from railgun_spark.operators.phash import _phash_y4m
 
     base = [_phash_target(1100 + f, 0) for f in range(4)]
     idx = str(tmp_path / "vidx")
     v1 = spark.createDataFrame(
         [(1, "video", bytearray(_phash_y4m(base)), {})], MEDIA_SCHEMA
     )
-    append_video_bands_to_index(
-        video_dedup_against_index(v1, idx, every_n=1), idx, every_n=1
+    append_media_to_index(
+        media_dedup_against_index(v1, idx, VIDEO, every_n=1), idx, VIDEO, every_n=1,
     )
 
     table = "phash_video_offset_bucketed_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(f"spark-warehouse/{table}", ignore_errors=True)
-    assert bucketize_video_index_offset(spark, idx, table, n_buckets=8) == \
-        4 * PHASH_BANDS
+    assert bucketize_media_index(
+        spark, idx, table, VIDEO, n_buckets=8, offset_tolerant=True,
+    ) == 4 * PHASH_BANDS
 
     probe = spark.createDataFrame(
         [(10, "video", bytearray(_phash_y4m([h ^ 2 for h in base[1:]])), {}),
@@ -1577,8 +1518,12 @@ def test_bucketed_offset_video_index(spark, tmp_path):
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        via_p = video_dedup_against_index_offset(probe, idx, every_n=1)
-        via_t = video_dedup_against_bucketed_index_offset(probe, table, every_n=1)
+        via_p = media_dedup_against_index(
+            probe, idx, VIDEO, every_n=1, offset_tolerant=True,
+        )
+        via_t = media_dedup_against_table(
+            probe, table, VIDEO, every_n=1, offset_tolerant=True,
+        )
         assert sorted(r["media_id"] for r in via_t.collect()) == \
                sorted(r["media_id"] for r in via_p.collect()) == [11]
         plan_t = via_t._jdf.queryExecution().executedPlan().toString()
@@ -1586,14 +1531,14 @@ def test_bucketed_offset_video_index(spark, tmp_path):
         assert "Bucketed: true" in plan_t
         assert plan_t.count("Exchange") < plan_p.count("Exchange")
         # appends preserve the bucket spec and stay visible
-        append_video_bands_to_bucketed_index_offset(via_t, table, every_n=1)
+        append_media_to_table(via_t, table, VIDEO, every_n=1, offset_tolerant=True)
         probe2 = spark.createDataFrame(
             [(20, "video", bytearray(
                 _phash_y4m([_phash_target(1201 + f, 0) ^ 1 for f in range(2)])), {})],
             MEDIA_SCHEMA,
         )
-        assert video_dedup_against_bucketed_index_offset(
-            probe2, table, every_n=1
+        assert media_dedup_against_table(
+            probe2, table, VIDEO, every_n=1, offset_tolerant=True,
         ).count() == 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
@@ -1657,9 +1602,6 @@ def test_audio_chunk_offset_pairs_and_gate(spark, tmp_path):
     from railgun_spark.operators.phash import (
         PHASH_MAX_HAMMING,
         _phash_wav_chunks,
-        append_audio_chunk_bands_to_index,
-        audio_chunk_dedup_against_index,
-        audio_chunk_dedup_against_index_offset,
         audio_chunk_fingerprints,
         audio_fingerprint64,
         audio_phash_near_dup_pairs_offset,
@@ -1699,27 +1641,26 @@ def test_audio_chunk_offset_pairs_and_gate(spark, tmp_path):
     # miss — same-position chunks only)
     idx = str(tmp_path / "acidx")
     b1 = spark.createDataFrame(rows[:1], MEDIA_SCHEMA)
-    s1 = audio_chunk_dedup_against_index(b1, idx)
-    append_audio_chunk_bands_to_index(s1, idx)
+    s1 = media_dedup_against_index(b1, idx, AUDIO_CHUNK)
+    append_media_to_index(s1, idx, AUDIO_CHUNK)
     b2 = spark.createDataFrame(
         [(10, "audio", bytearray(_phash_wav_chunks(trimmed)), {}),
          (11, "audio", bytearray(_phash_wav_chunks(noise)), {}),
          (12, "audio", bytearray(b"ID3\x03\x00junk"), {})],  # refusal survives
         MEDIA_SCHEMA,
     )
-    off_s = audio_chunk_dedup_against_index_offset(b2, idx)
+    off_s = media_dedup_against_index(b2, idx, AUDIO_CHUNK, offset_tolerant=True)
     assert sorted(r["media_id"] for r in off_s.collect()) == [11, 12]
-    aligned_s = audio_chunk_dedup_against_index(b2, idx)
+    aligned_s = media_dedup_against_index(b2, idx, AUDIO_CHUNK)
     assert sorted(r["media_id"] for r in aligned_s.collect()) == [10, 11, 12]
 
     # modality guard: the audio-chunk index must refuse a video gate read
-    from railgun_spark.operators.phash import video_dedup_against_index
 
     vprobe = spark.createDataFrame(
         [(20, "video", bytearray(b"YUV4MPEG2 junk"), {})], MEDIA_SCHEMA
     )
     with pytest.raises(ValueError, match="another modality"):
-        video_dedup_against_index(vprobe, idx, every_n=1).collect()
+        media_dedup_against_index(vprobe, idx, VIDEO, every_n=1).collect()
 
     # intra-batch: a trimmed copy of a smaller-id batch clip rejects
     b3 = spark.createDataFrame(
@@ -1729,7 +1670,9 @@ def test_audio_chunk_offset_pairs_and_gate(spark, tmp_path):
             [_phash_target(881 + f, 0) ^ 2 for f in range(3)])), {})],
         MEDIA_SCHEMA,
     )
-    s3 = audio_chunk_dedup_against_index_offset(b3, str(tmp_path / "fresh"))
+    s3 = media_dedup_against_index(
+        b3, str(tmp_path / "fresh"), AUDIO_CHUNK, offset_tolerant=True,
+    )
     assert sorted(r["media_id"] for r in s3.collect()) == [30]
 
 
@@ -1742,14 +1685,6 @@ def test_bucketed_audio_chunk_indexes(spark, tmp_path):
     from railgun_spark.operators.phash import (
         PHASH_BANDS,
         _phash_wav_chunks,
-        append_audio_chunk_bands_to_bucketed_index_offset,
-        append_audio_chunk_bands_to_index,
-        audio_chunk_dedup_against_bucketed_index,
-        audio_chunk_dedup_against_bucketed_index_offset,
-        audio_chunk_dedup_against_index,
-        audio_chunk_dedup_against_index_offset,
-        bucketize_audio_chunk_index,
-        bucketize_audio_chunk_index_offset,
     )
 
     base = [_phash_target(1100 + f, 0) for f in range(4)]
@@ -1757,8 +1692,8 @@ def test_bucketed_audio_chunk_indexes(spark, tmp_path):
     a1 = spark.createDataFrame(
         [(1, "audio", bytearray(_phash_wav_chunks(base)), {})], MEDIA_SCHEMA
     )
-    append_audio_chunk_bands_to_index(
-        audio_chunk_dedup_against_index(a1, idx), idx
+    append_media_to_index(
+        media_dedup_against_index(a1, idx, AUDIO_CHUNK), idx, AUDIO_CHUNK,
     )
 
     probe = spark.createDataFrame(
@@ -1776,22 +1711,24 @@ def test_bucketed_audio_chunk_indexes(spark, tmp_path):
     for t in (t_aligned, t_offset):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    assert bucketize_audio_chunk_index(spark, idx, t_aligned, n_buckets=8) == \
-        4 * PHASH_BANDS
-    assert bucketize_audio_chunk_index_offset(spark, idx, t_offset, n_buckets=8) == \
-        4 * PHASH_BANDS
+    assert bucketize_media_index(spark, idx, t_aligned, AUDIO_CHUNK, n_buckets=8) == 4 * PHASH_BANDS
+    assert bucketize_media_index(
+        spark, idx, t_offset, AUDIO_CHUNK, n_buckets=8, offset_tolerant=True,
+    ) == 4 * PHASH_BANDS
 
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         # aligned: same-position re-encode rejects; trimmed copy admits
-        al_p = audio_chunk_dedup_against_index(aligned_probe, idx)
-        al_t = audio_chunk_dedup_against_bucketed_index(aligned_probe, t_aligned)
+        al_p = media_dedup_against_index(aligned_probe, idx, AUDIO_CHUNK)
+        al_t = media_dedup_against_table(aligned_probe, t_aligned, AUDIO_CHUNK)
         assert al_p.count() == al_t.count() == 0
         # offset: trimmed copy rejects, unrelated admits — parquet and
         # bucketed agree; the bucketed plan scans in place
-        off_p = audio_chunk_dedup_against_index_offset(probe, idx)
-        off_t = audio_chunk_dedup_against_bucketed_index_offset(probe, t_offset)
+        off_p = media_dedup_against_index(probe, idx, AUDIO_CHUNK, offset_tolerant=True)
+        off_t = media_dedup_against_table(
+            probe, t_offset, AUDIO_CHUNK, offset_tolerant=True,
+        )
         assert sorted(r["media_id"] for r in off_t.collect()) == \
                sorted(r["media_id"] for r in off_p.collect()) == [11]
         plan_t = off_t._jdf.queryExecution().executedPlan().toString()
@@ -1799,14 +1736,14 @@ def test_bucketed_audio_chunk_indexes(spark, tmp_path):
         assert "Bucketed: true" in plan_t
         assert plan_t.count("Exchange") < plan_p.count("Exchange")
         # appends preserve the bucket spec and stay visible
-        append_audio_chunk_bands_to_bucketed_index_offset(off_t, t_offset)
+        append_media_to_table(off_t, t_offset, AUDIO_CHUNK, offset_tolerant=True)
         probe2 = spark.createDataFrame(
             [(20, "audio", bytearray(_phash_wav_chunks(
                 [_phash_target(1201 + f, 0) ^ 1 for f in range(2)])), {})],
             MEDIA_SCHEMA,
         )
-        assert audio_chunk_dedup_against_bucketed_index_offset(
-            probe2, t_offset
+        assert media_dedup_against_table(
+            probe2, t_offset, AUDIO_CHUNK, offset_tolerant=True,
         ).count() == 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
@@ -1857,9 +1794,6 @@ def test_compaction_preserves_audio_chunk_index(spark, tmp_path):
     from railgun_spark.operators.phash import (
         PHASH_BANDS,
         _phash_wav_chunks,
-        append_audio_chunk_bands_to_index,
-        audio_chunk_dedup_against_index,
-        audio_chunk_dedup_against_index_offset,
     )
 
     idx = str(tmp_path / "acidx")
@@ -1867,9 +1801,9 @@ def test_compaction_preserves_audio_chunk_index(spark, tmp_path):
     batch = spark.createDataFrame(
         [(1, "audio", bytearray(_phash_wav_chunks(base)), {})], MEDIA_SCHEMA
     )
-    s = audio_chunk_dedup_against_index(batch, idx)
-    append_audio_chunk_bands_to_index(s, idx)
-    append_audio_chunk_bands_to_index(s, idx)  # replay duplicate
+    s = media_dedup_against_index(batch, idx, AUDIO_CHUNK)
+    append_media_to_index(s, idx, AUDIO_CHUNK)
+    append_media_to_index(s, idx, AUDIO_CHUNK)  # replay duplicate
     assert spark.read.parquet(idx).count() == 2 * 3 * PHASH_BANDS
     assert compact_index(spark, idx) == 3 * PHASH_BANDS
     probe = spark.createDataFrame(
@@ -1882,11 +1816,13 @@ def test_compaction_preserves_audio_chunk_index(spark, tmp_path):
     # aligned rejects the same-length re-encode; offset also the trim
     assert sorted(
         r["media_id"]
-        for r in audio_chunk_dedup_against_index(probe, idx).collect()
+        for r in media_dedup_against_index(probe, idx, AUDIO_CHUNK).collect()
     ) == [10, 11]
     assert sorted(
         r["media_id"]
-        for r in audio_chunk_dedup_against_index_offset(probe, idx).collect()
+        for r in media_dedup_against_index(
+            probe, idx, AUDIO_CHUNK, offset_tolerant=True,
+        ).collect()
     ) == [11]
 
 
@@ -1937,12 +1873,7 @@ def test_video_offset_coarse_gate(spark, tmp_path):
     rows survive, and the intra-batch leg catches a trimmed smaller-id
     copy — identical admitted sets to the fine offset gate for
     in-budget inputs, with no index migration."""
-    from railgun_spark.operators.phash import (
-        _phash_y4m,
-        append_video_bands_to_index,
-        video_dedup_against_index,
-        video_dedup_against_index_offset,
-    )
+    from railgun_spark.operators.phash import _phash_y4m
 
     base = [_phash_target(840 + f, 0) for f in range(4)]
     trimmed = [h ^ 1 for h in base[1:]]  # 1 bit per frame: within coarse budget
@@ -1951,8 +1882,8 @@ def test_video_offset_coarse_gate(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(1, "video", bytearray(_phash_y4m(base)), {})], MEDIA_SCHEMA
     )
-    s1 = video_dedup_against_index(b1, idx, every_n=1)
-    append_video_bands_to_index(s1, idx, every_n=1)
+    s1 = media_dedup_against_index(b1, idx, VIDEO, every_n=1)
+    append_media_to_index(s1, idx, VIDEO, every_n=1)
 
     b2 = spark.createDataFrame(
         [(10, "video", bytearray(_phash_y4m(trimmed)), {}),
@@ -1960,9 +1891,11 @@ def test_video_offset_coarse_gate(spark, tmp_path):
          (12, "video", bytearray(b"RIFF....AVI JUNK"), {})],
         MEDIA_SCHEMA,
     )
-    coarse_s = video_dedup_against_index_offset(b2, idx, every_n=1, coarse=True)
+    coarse_s = media_dedup_against_index(
+        b2, idx, VIDEO, every_n=1, offset_tolerant=True, coarse=True,
+    )
     assert sorted(r["media_id"] for r in coarse_s.collect()) == [11, 12]
-    fine_s = video_dedup_against_index_offset(b2, idx, every_n=1)
+    fine_s = media_dedup_against_index(b2, idx, VIDEO, every_n=1, offset_tolerant=True)
     assert sorted(r["media_id"] for r in fine_s.collect()) == [11, 12]
 
     # intra-batch: a 1-bit trimmed copy of a smaller-id batch video rejects
@@ -1973,8 +1906,8 @@ def test_video_offset_coarse_gate(spark, tmp_path):
           bytearray(_phash_y4m([_phash_target(861 + f, 0) ^ 4 for f in range(3)])), {})],
         MEDIA_SCHEMA,
     )
-    s3 = video_dedup_against_index_offset(
-        b3, str(tmp_path / "fresh"), every_n=1, coarse=True
+    s3 = media_dedup_against_index(
+        b3, str(tmp_path / "fresh"), VIDEO, every_n=1, offset_tolerant=True, coarse=True,
     )
     assert sorted(r["media_id"] for r in s3.collect()) == [20]
 
@@ -1982,20 +1915,15 @@ def test_video_offset_coarse_gate(spark, tmp_path):
 def test_audio_chunk_offset_coarse_gate(spark, tmp_path):
     """Audio twin: the coarse offset gate rejects a chunk-shifted 1-bit
     re-upload against the index the aligned chunk gate wrote."""
-    from railgun_spark.operators.phash import (
-        _phash_wav_chunks,
-        append_audio_chunk_bands_to_index,
-        audio_chunk_dedup_against_index,
-        audio_chunk_dedup_against_index_offset,
-    )
+    from railgun_spark.operators.phash import _phash_wav_chunks
 
     hs = [_phash_target(900 + k, 0) for k in range(4)]
     idx = str(tmp_path / "aidx")
     b1 = spark.createDataFrame(
         [(1, "audio", bytearray(_phash_wav_chunks(hs)), {})], MEDIA_SCHEMA
     )
-    s1 = audio_chunk_dedup_against_index(b1, idx)
-    append_audio_chunk_bands_to_index(s1, idx)
+    s1 = media_dedup_against_index(b1, idx, AUDIO_CHUNK)
+    append_media_to_index(s1, idx, AUDIO_CHUNK)
 
     trimmed = [h ^ 8 for h in hs[1:]]  # chunk-shift 1, 1 bit per chunk
     b2 = spark.createDataFrame(
@@ -2004,7 +1932,9 @@ def test_audio_chunk_offset_coarse_gate(spark, tmp_path):
              [_phash_target(970 + k, 0) for k in range(3)])), {})],
         MEDIA_SCHEMA,
     )
-    got = audio_chunk_dedup_against_index_offset(b2, idx, coarse=True)
+    got = media_dedup_against_index(
+        b2, idx, AUDIO_CHUNK, offset_tolerant=True, coarse=True,
+    )
     assert sorted(r["media_id"] for r in got.collect()) == [11]
 
 
@@ -2015,23 +1945,15 @@ def test_bucketed_coarse_offset_video_index(spark, tmp_path):
     appends preserve the bucket spec."""
     import shutil
 
-    from railgun_spark.operators.phash import (
-        _phash_y4m,
-        append_video_bands_to_bucketed_index_offset,
-        append_video_bands_to_index,
-        bucketize_video_index_offset,
-        video_dedup_against_bucketed_index_offset,
-        video_dedup_against_index,
-        video_dedup_against_index_offset,
-    )
+    from railgun_spark.operators.phash import _phash_y4m
 
     base = [_phash_target(1300 + f, 0) for f in range(4)]
     idx = str(tmp_path / "vidx")
     v1 = spark.createDataFrame(
         [(1, "video", bytearray(_phash_y4m(base)), {})], MEDIA_SCHEMA
     )
-    append_video_bands_to_index(
-        video_dedup_against_index(v1, idx, every_n=1), idx, every_n=1
+    append_media_to_index(
+        media_dedup_against_index(v1, idx, VIDEO, every_n=1), idx, VIDEO, every_n=1,
     )
 
     table = "phash_video_offset_coarse_bucketed_test"
@@ -2040,8 +1962,8 @@ def test_bucketed_coarse_offset_video_index(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
     # 2 coarse rows per frame (vs PHASH_BANDS=4 fine rows)
-    assert bucketize_video_index_offset(
-        spark, idx, table, n_buckets=8, coarse=True
+    assert bucketize_media_index(
+        spark, idx, table, VIDEO, n_buckets=8, offset_tolerant=True, coarse=True,
     ) == 4 * 2
 
     probe = spark.createDataFrame(
@@ -2053,11 +1975,11 @@ def test_bucketed_coarse_offset_video_index(spark, tmp_path):
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        via_p = video_dedup_against_index_offset(
-            probe, idx, every_n=1, coarse=True
+        via_p = media_dedup_against_index(
+            probe, idx, VIDEO, every_n=1, offset_tolerant=True, coarse=True,
         )
-        via_t = video_dedup_against_bucketed_index_offset(
-            probe, table, every_n=1, coarse=True
+        via_t = media_dedup_against_table(
+            probe, table, VIDEO, every_n=1, offset_tolerant=True, coarse=True,
         )
         assert sorted(r["media_id"] for r in via_t.collect()) == \
                sorted(r["media_id"] for r in via_p.collect()) == [11]
@@ -2067,26 +1989,28 @@ def test_bucketed_coarse_offset_video_index(spark, tmp_path):
         # geometry marker: a fine gate against the coarse table (and the
         # reverse) fails loudly instead of silently missing pairs
         with pytest.raises(ValueError, match="32-bit"):
-            video_dedup_against_bucketed_index_offset(
-                probe, table, every_n=1
+            media_dedup_against_table(
+                probe, table, VIDEO, every_n=1, offset_tolerant=True,
             ).collect()
-        bucketize_video_index_offset(spark, idx, fine_table, n_buckets=8)
+        bucketize_media_index(
+            spark, idx, fine_table, VIDEO, n_buckets=8, offset_tolerant=True,
+        )
         with pytest.raises(ValueError, match="16-bit"):
-            video_dedup_against_bucketed_index_offset(
-                probe, fine_table, every_n=1, coarse=True
+            media_dedup_against_table(
+                probe, fine_table, VIDEO, every_n=1, offset_tolerant=True, coarse=True,
             ).collect()
 
         # coarse appends preserve the bucket spec and stay visible
-        append_video_bands_to_bucketed_index_offset(
-            via_t, table, every_n=1, coarse=True
+        append_media_to_table(
+            via_t, table, VIDEO, every_n=1, offset_tolerant=True, coarse=True,
         )
         probe2 = spark.createDataFrame(
             [(20, "video", bytearray(
                 _phash_y4m([_phash_target(1401 + f, 0) ^ 1 for f in range(2)])), {})],
             MEDIA_SCHEMA,
         )
-        assert video_dedup_against_bucketed_index_offset(
-            probe2, table, every_n=1, coarse=True
+        assert media_dedup_against_table(
+            probe2, table, VIDEO, every_n=1, offset_tolerant=True, coarse=True,
         ).count() == 0
 
         # APPENDS check the geometry too (ADVICE r15): a wrong-flag
@@ -2094,12 +2018,12 @@ def test_bucketed_coarse_offset_video_index(spark, tmp_path):
         # their duplicates — refused with nothing written
         before = spark.table(table).count()
         with pytest.raises(ValueError, match="32-bit"):
-            append_video_bands_to_bucketed_index_offset(
-                via_t, table, every_n=1
+            append_media_to_table(
+                via_t, table, VIDEO, every_n=1, offset_tolerant=True,
             )
         with pytest.raises(ValueError, match="16-bit"):
-            append_video_bands_to_bucketed_index_offset(
-                via_t, fine_table, every_n=1, coarse=True
+            append_media_to_table(
+                via_t, fine_table, VIDEO, every_n=1, offset_tolerant=True, coarse=True,
             )
         assert spark.table(table).count() == before
 
@@ -2119,18 +2043,18 @@ def test_bucketed_coarse_offset_video_index(spark, tmp_path):
             table
         )
         with pytest.raises(ValueError, match="MIXED"):
-            video_dedup_against_bucketed_index_offset(
-                probe2, table, every_n=1, coarse=True
+            media_dedup_against_table(
+                probe2, table, VIDEO, every_n=1, offset_tolerant=True, coarse=True,
             ).collect()
         with pytest.raises(ValueError, match="MIXED"):
-            append_video_bands_to_bucketed_index_offset(
-                via_t, table, every_n=1, coarse=True
+            append_media_to_table(
+                via_t, table, VIDEO, every_n=1, offset_tolerant=True, coarse=True,
             )
         # homogeneous legacy table: one scan, then stamped
         spark.sql(f"ALTER TABLE {fine_table} "
                   "UNSET TBLPROPERTIES ('railgun.chunk_bits')")
-        assert video_dedup_against_bucketed_index_offset(
-            probe2, fine_table, every_n=1
+        assert media_dedup_against_table(
+            probe2, fine_table, VIDEO, every_n=1, offset_tolerant=True,
         ).count() >= 0
         props = {r["key"]: r["value"] for r in spark.sql(
             f"SHOW TBLPROPERTIES {fine_table}").collect()}

@@ -1,9 +1,9 @@
 """Registry-size regression guard + local oracle gate for EXTRA queries.
 
 The driver's correctness gate checks only the first ``DRIVER_GATE_LIMIT``
-(=50) registered queries, in registration order. If REGISTRY ever grows past
-that, the tail silently loses driver correctness coverage — the guard here
-fails loudly instead. Demoted/verify-only queries live in ``suite.EXTRA``
+(=50) registered queries, in registration order. REGISTRY must hold exactly
+that many: past it, the tail silently loses gate correctness coverage —
+the guard here fails loudly instead. Demoted/verify-only queries live in ``suite.EXTRA``
 and are held to the identical oracle gate locally (sf0.001 in pytest;
 sf0.01 via ``tools/check_correctness.py --extra``).
 """
@@ -177,23 +177,25 @@ EXPECTED_EXTRA = {
     # REGISTRY siblings + this local gate)
     "ann_lsh_topk",  # LSH bucket scan: emb_near_dup_pairs' banded sign-LSH + the IVF/PQ gate rows certify
     "audio_phash_pairs",  # aligned 4x16 pairs: audio_phash_offset_pairs' pipeline supersets craft/decode/banding
-    # round-17 rotation: ann_ivf_pq_residual_topk (the production IVFADC
-    # encoding) promoted to the driver gate. The two capability-twins it
-    # demoted (gif_animation_report, video_phash_offset_coarse_pairs)
-    # were RESTORED to @query in r18 (VERDICT r17 #1): gate coverage must
-    # never shrink across a rotation — a promotion may not demote.
+    # gate made whole at exactly 50: the 51st registration had silently
+    # pushed session_window_counts out of the gate window
+    "video_phash_offset_coarse_pairs",  # coarse 2x32 offset join: video_offset_coarse_recall (REGISTRY) runs it against the lossless fine join
 }
 
 
 def test_registry_fits_driver_gate_window():
-    """A registration past the gate cap must fail this test, not silently
-    lose coverage."""
+    """REGISTRY fills the correctness gate window exactly: a 51st
+    registration fails here instead of silently pushing whichever query
+    imports last out of the gate, and a demotion that leaves a slot empty
+    fails too (coverage must not shrink)."""
     qs = suite.queries()
-    assert len(qs) <= suite.DRIVER_GATE_LIMIT, (
-        f"{len(qs)} registered queries exceed the driver's "
+    assert len(qs) == suite.DRIVER_GATE_LIMIT == 50, (
+        f"{len(qs)} registered queries vs the "
         f"{suite.DRIVER_GATE_LIMIT}-entry CORRECTNESS window; demote "
-        "redundant/verify-only entries to suite.EXTRA (extra_query) instead"
+        "redundant/verify-only entries to suite.EXTRA (extra_query) or "
+        "promote one to fill the window"
     )
+    assert "session_window_counts" in qs
 
 
 def test_registry_and_extra_disjoint():

@@ -89,6 +89,19 @@ def _populate_direct(df, idx: str, span: bool, minhash: bool) -> None:
         append_bands_to_index(df, idx + "_mh")
 
 
+def _media_ingest(mod: str, **knobs):
+    """(batch, idx, sink) -> admitted count through the `mod` family's
+    media ingest gate."""
+
+    def run(batch, idx, sink):
+        from railgun_spark.operators.phash import FAMILIES
+        from railgun_spark.streaming.ingest import ingest_media_batch
+
+        return ingest_media_batch(batch, idx, sink, FAMILIES[mod], **knobs)
+
+    return run
+
+
 def main() -> int:
     from pyspark.sql import functions as F
 
@@ -251,10 +264,7 @@ def main() -> int:
         spark.range(5_000).select(F.col("id").alias("media_id")), "batch"
     )
 
-    def image_ingest(batch, idx, sink):
-        from railgun_spark.streaming.ingest import ingest_images_batch
-
-        return ingest_images_batch(batch, idx, sink)
+    image_ingest = _media_ingest("image")
 
     run_gate(
         "image", img_index_src, img_batch_src,
@@ -299,10 +309,7 @@ def main() -> int:
         spark.range(5_000).select(F.col("id").alias("media_id")), "batch"
     )
 
-    def image_wide_ingest(batch, idx, sink):
-        from railgun_spark.streaming.ingest import ingest_images_wide_batch
-
-        return ingest_images_wide_batch(batch, idx, sink)
+    image_wide_ingest = _media_ingest("image-wide")
 
     run_gate(
         "image_wide", imgw_index_src, imgw_batch_src,
@@ -333,10 +340,7 @@ def main() -> int:
 
         return spread_for_decode(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
 
-    def audio_ingest(batch, idx, sink):
-        from railgun_spark.streaming.ingest import ingest_audio_batch
-
-        return ingest_audio_batch(batch, idx, sink)
+    audio_ingest = _media_ingest("audio")
 
     run_gate(
         "audio",
@@ -379,10 +383,7 @@ def main() -> int:
 
         return spread_for_decode(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
 
-    def video_ingest(batch, idx, sink):
-        from railgun_spark.streaming.ingest import ingest_videos_batch
-
-        return ingest_videos_batch(batch, idx, sink, every_n=1)
+    video_ingest = _media_ingest("video", every_n=1)
 
     run_gate(
         "video",
@@ -402,12 +403,7 @@ def main() -> int:
     # index layout — times the per-offset temporal vote's derived-key
     # join; crafted sources are pairwise non-matching, so every cell
     # still measures the zero-false-reject admit path
-    def video_offset_ingest(batch, idx, sink):
-        from railgun_spark.streaming.ingest import ingest_videos_batch
-
-        return ingest_videos_batch(
-            batch, idx, sink, every_n=1, offset_tolerant=True
-        )
+    video_offset_ingest = _media_ingest("video", every_n=1, offset_tolerant=True)
 
     run_gate(
         "video_offset",
@@ -427,12 +423,9 @@ def main() -> int:
     # derived from the stored frame hashes (the candidate-headroom mode
     # for large offset indexes; PHASH_OFFSET_PROBE_r15); same index
     # layout, so populate reuses the plain offset ingest
-    def video_offset_coarse_ingest(batch, idx, sink):
-        from railgun_spark.streaming.ingest import ingest_videos_batch
-
-        return ingest_videos_batch(
-            batch, idx, sink, every_n=1, offset_tolerant=True, coarse=True
-        )
+    video_offset_coarse_ingest = _media_ingest(
+        "video", every_n=1, offset_tolerant=True, coarse=True
+    )
 
     run_gate(
         "video_offset_coarse",
@@ -479,12 +472,7 @@ def main() -> int:
 
         return spread_for_decode(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
 
-    def audio_chunk_offset_ingest(batch, idx, sink):
-        from railgun_spark.streaming.ingest import ingest_audio_batch
-
-        return ingest_audio_batch(
-            batch, idx, sink, chunked=True, offset_tolerant=True
-        )
+    audio_chunk_offset_ingest = _media_ingest("audio-chunk", offset_tolerant=True)
 
     run_gate(
         "audio_chunk_offset",
@@ -505,12 +493,9 @@ def main() -> int:
 
     # gate 8b (r15): the COARSE offset audio gate — 2x32 chunk keys
     # (candidate-headroom mode); same index layout as gate 8
-    def audio_chunk_offset_coarse_ingest(batch, idx, sink):
-        from railgun_spark.streaming.ingest import ingest_audio_batch
-
-        return ingest_audio_batch(
-            batch, idx, sink, chunked=True, offset_tolerant=True, coarse=True
-        )
+    audio_chunk_offset_coarse_ingest = _media_ingest(
+        "audio-chunk", offset_tolerant=True, coarse=True
+    )
 
     run_gate(
         "audio_chunk_offset_coarse",

@@ -134,50 +134,53 @@ GATE_MATRIX = [
      "ingest.stream_ingest_embeddings_availablenow", None,
      "sign-LSH band ints + (dim, bits) geometry tags",
      "tests/test_streaming.py (restart idempotence)"),
-    ("image / dHash 4x16", "phash.image_dedup_against_index",
-     "ingest.stream_ingest_images_availablenow",
-     "phash.bucketize_image_index",
+    # media: one gate per operation, the family argument picks the
+    # modality (phash.FAMILIES); offset_tolerant/coarse pick the mode
+    ("image / dHash 4x16 — `IMAGE`", "phash.media_dedup_against_index",
+     "ingest.stream_ingest_media_availablenow",
+     "phash.bucketize_media_index",
      "(band_key, dhash, bits, mod) — verified hamming <= 3",
      "tests/test_phash.py 16-batch soak w/ 2 crash windows + "
      "INGEST_GRID_IMAGE_r13.json (zero false rejects)"),
-    ("image / block dHash 256-bit", "phash.image_wide_dedup_against_index",
-     "ingest.stream_ingest_images_wide_availablenow",
-     "phash.bucketize_image_wide_index",
+    ("image / block dHash 256-bit — `IMAGE_WIDE`",
+     "phash.media_dedup_against_index",
+     "ingest.stream_ingest_media_availablenow",
+     "phash.bucketize_media_index",
      "(band_key, h0..h3, bits, mod='image-wide') — verified hamming <= 15",
      "tests/test_phash.py wide gate/stream/bucketed + "
      "INGEST_GRID_IMAGE_WIDE_r14.json (zero false rejects) + "
      "PHASH_CANDIDATE_PROBE_r14.json"),
-    ("audio / energy-delta fp", "phash.audio_dedup_against_index",
-     "ingest.stream_ingest_audio_availablenow",
-     "phash.bucketize_audio_index",
+    ("audio / energy-delta fp — `AUDIO`", "phash.media_dedup_against_index",
+     "ingest.stream_ingest_media_availablenow",
+     "phash.bucketize_media_index",
      "(band_key, dhash, bits, mod='audio')",
      "tests/test_phash.py soak (r14) + INGEST_GRID_AUDIO_r13.json"),
-    ("video / frame-aligned", "phash.video_dedup_against_index",
-     "ingest.stream_ingest_videos_availablenow",
-     "phash.bucketize_video_index",
+    ("video / frame-aligned — `VIDEO`", "phash.media_dedup_against_index",
+     "ingest.stream_ingest_media_availablenow",
+     "phash.bucketize_media_index",
      "(vid, n_frames, frame_idx-encoded band_key, dhash, bits, mod)",
      "tests/test_phash.py soak (r14) + INGEST_GRID_VIDEO_r13.json"),
-    ("audio / chunked fp (aligned)", "phash.audio_chunk_dedup_against_index",
-     "ingest.stream_ingest_audio_availablenow",
-     "phash.bucketize_audio_chunk_index",
+    ("audio / chunked fp (aligned) — `AUDIO_CHUNK`",
+     "phash.media_dedup_against_index",
+     "ingest.stream_ingest_media_availablenow",
+     "phash.bucketize_media_index",
      "(vid, n_frames, chunk_idx-encoded band_key, dhash, bits, "
-     "mod='audio-chunk') — the video layout verbatim; streaming via "
-     "chunked=True",
+     "mod='audio-chunk') — the video layout verbatim",
      "tests/test_phash.py (chunked kernel/gate/bucketed) + CLI --chunked"),
-    ("audio / offset-tolerant", "phash.audio_chunk_dedup_against_index_offset",
-     "ingest.stream_ingest_audio_availablenow",
-     "phash.bucketize_audio_chunk_index_offset",
+    ("audio / offset-tolerant — `AUDIO_CHUNK`, offset_tolerant=True",
+     "phash.media_dedup_against_index",
+     "ingest.stream_ingest_media_availablenow",
+     "phash.bucketize_media_index",
      "reads the chunk-aligned index (chunk_idx decoded from band_key); "
-     "streaming via chunked=True + offset_tolerant=True; standing "
-     "deployments bucket by the materialized chunk_key",
+     "standing deployments bucket by the materialized chunk_key",
      "tests/test_phash.py (trimmed re-upload rejection, 12-batch "
      "crash soak, bucketed exchange pin) + CLI --chunked --offset-tolerant"),
-    ("video / offset-tolerant", "phash.video_dedup_against_index_offset",
-     "ingest.stream_ingest_videos_availablenow",
-     "phash.bucketize_video_index_offset",
+    ("video / offset-tolerant — `VIDEO`, offset_tolerant=True",
+     "phash.media_dedup_against_index",
+     "ingest.stream_ingest_media_availablenow",
+     "phash.bucketize_media_index",
      "reads the frame-aligned index (frame_idx decoded from band_key); "
-     "streaming via offset_tolerant=True; standing deployments bucket by "
-     "the materialized chunk_key",
+     "standing deployments bucket by the materialized chunk_key",
      "tests/test_phash.py (trimmed re-upload rejection, ingest knob, "
      "bucketed exchange pin) + INGEST_GRID_VIDEO_OFFSET_r14.json "
      "(zero false rejects)"),
@@ -213,7 +216,11 @@ def _gate_matrix_lines() -> list[str]:
         "sink writes, replay-after-append skip; see",
         "`railgun_spark/streaming/ingest.py`). Media gates verify hamming",
         "against the stored hash — band collision is only the candidate",
-        "probe — so they provably cannot false-reject.",
+        "probe — so they provably cannot false-reject. All five media",
+        "families share ONE implementation per operation: the",
+        "`phash.SignatureFamily` argument picks the modality, the",
+        "`offset_tolerant`/`coarse` flags pick the vote mode, and every",
+        "parquet-index gate has a `media_dedup_against_table` twin.",
         "",
         "| modality / signal | batch gate | streaming twin | bucketed index | index row | evidence |",
         "|---|---|---|---|---|---|",
