@@ -11,13 +11,15 @@ detector can't silently rot.
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 from audit_plans import flags_for  # noqa: E402
 
 

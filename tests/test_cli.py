@@ -9,6 +9,7 @@ including the reference's bool-expression exit-code convention
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -548,7 +549,7 @@ def test_media_features_subcommand(spark, capsys, tmp_path):
 
     import numpy as np
 
-    _sys.path.insert(0, "/root/repo/tests")
+    _sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from test_flac import encode_flac
     from test_io_catalog import _png_bytes
 

@@ -6,6 +6,9 @@ these exercise the pure codec functions directly."""
 
 from __future__ import annotations
 
+import os
+import sys
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -28,6 +31,8 @@ from railgun_spark.operators.multimodal import (
     decode_wav,
     decode_y4m,
 )
+
+TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def _lzw_decode(data: bytes, min_code_size: int) -> list[int]:
@@ -98,9 +103,7 @@ def test_lzw_eoi_width_regression():
 def test_png_roundtrip_property(w, h, ch, interlace, seed):
     """Random 8-bit images of every color type, sequential and Adam7,
     random per-scanline filters: byte-exact through the decoder."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from test_io_catalog import _png_bytes
 
     rng = np.random.RandomState(seed)
@@ -188,9 +191,7 @@ def test_decoders_reject_deep_truncations_of_valid_streams():
     """Every strict prefix of a small valid file raises ValueError (or
     decodes identically for JPEG prefixes that still contain EOI — which
     cannot happen for strict prefixes, so: always ValueError)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from test_io_catalog import _png_bytes
 
     rng = np.random.RandomState(11)
@@ -206,9 +207,7 @@ def test_decoders_reject_deep_truncations_of_valid_streams():
 
 
 def _mp3_blob():
-    import sys
-
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from test_mp3 import _sine_spec, encode_mp3
 
     return encode_mp3([_sine_spec(4, 6, 11)] * 2)
@@ -221,9 +220,7 @@ def test_decode_media_dispatches_entire_codec_matrix():
     Y4M/AVI — every row decodes to an 8-dim feature without a codec
     library."""
     import struct
-    import sys
-
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, TESTS_DIR)
     from test_flac import encode_flac
     from test_io_catalog import _gif_bytes, _png_bytes, _tiff_bytes
     from test_jpeg import _spectral_scans, encode_jpeg

@@ -10,12 +10,15 @@ sf0.01 via ``tools/check_correctness.py --extra``).
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
 from railgun_spark import suite
+
+TOOLS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 EXPECTED_EXTRA = {
     "revenue_range_filter",  # between+agg: covered by dfl_between_filter + pricing_summary
@@ -218,7 +221,7 @@ def _oracle_rows(sf_dir: str, sql: str):
 def test_extra_queries_pass_local_oracle_gate(spark, sf_dir, name):
     """EXTRA entries are demoted from the driver gate, not from correctness:
     run the same rows/schema/value-hash compare the driver applies."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS_DIR)
     from check_correctness import value_hash
 
     spec = suite.extra_specs()[name]

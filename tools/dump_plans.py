@@ -18,10 +18,11 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 OUT_DIR = os.path.join(
-    "/root/repo", "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r18")
+    REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r18")
 )
 
 

@@ -40,7 +40,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 INDEX_SIZES = (0, 5_000, 50_000)
 BATCH_SIZES = (500, 2_500, 5_000)

@@ -23,9 +23,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _load_json(path: str):
