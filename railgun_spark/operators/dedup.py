@@ -26,6 +26,8 @@ Catalyst expressions (transform/aggregate/array_*), fully codegen'd.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2370,11 +2372,6 @@ def compact_index(spark: SparkSession, index_path: str, n_files: int | None = No
     staleness TTL is broken, so a SIGKILLed compactor cannot wedge the
     index. Readers never take the lock — they see the old or new listing
     across the swap, both of which answer membership identically."""
-    import os
-    import shutil
-    import stat
-    import tempfile
-
     local = _local_index_path(index_path)
     if n_files is not None and n_files < 1:
         raise ValueError(f"n_files must be >= 1, got {n_files}")
@@ -2383,24 +2380,43 @@ def compact_index(spark: SparkSession, index_path: str, n_files: int | None = No
         _recover_index(local)
         idx = spark.read.parquet(local)
         parts = n_files if n_files is not None else max(1, idx.rdd.getNumPartitions() // 8)
-        src_mode = stat.S_IMODE(os.stat(local).st_mode)
-        parent = os.path.dirname(os.path.abspath(local.rstrip("/")))
-        tmp = tempfile.mkdtemp(prefix=".idx_compact_", dir=parent)
-        try:
-            # Eager: this job scans the live index and writes tmp before any
-            # rename touches the live path.
+
+        def write(tmp: str) -> int:
+            # Eager: this job scans the live index and writes tmp before
+            # any rename touches the live path.
             idx.distinct().repartition(parts).write.mode("overwrite").parquet(tmp)
-            os.chmod(tmp, src_mode)  # Spark's overwrite recreated tmp with umask perms
-            n = spark.read.parquet(tmp).count()
-            backup = local.rstrip("/") + _BACKUP_SUFFIX
-            if os.path.exists(backup):
-                shutil.rmtree(backup)
-            os.rename(local, backup)
-            os.rename(tmp, local)
-            shutil.rmtree(backup)
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
+            return spark.read.parquet(tmp).count()
+
+        n = _swap_compacted(local, write)
     finally:
         _release_compact_lock(lock, lock_token)
     return n
+
+
+def _swap_compacted(live: str, write: Callable[[str], int | None]) -> int | None:
+    """Replace the index directory `live` by what `write(tmp)` stages in
+    a sibling temp dir, with the crash-safe swap `compact_index`
+    documents; returns what `write` returns. tmp gets `live`'s mode
+    back (Spark's overwrite recreates it with umask perms). The caller
+    holds the compaction lock."""
+    import os
+    import shutil
+    import stat
+    import tempfile
+
+    src_mode = stat.S_IMODE(os.stat(live).st_mode)
+    parent = os.path.dirname(os.path.abspath(live.rstrip("/")))
+    tmp = tempfile.mkdtemp(prefix=".idx_compact_", dir=parent)
+    try:
+        out = write(tmp)
+        os.chmod(tmp, src_mode)
+        backup = live.rstrip("/") + _BACKUP_SUFFIX
+        if os.path.exists(backup):
+            shutil.rmtree(backup)
+        os.rename(live, backup)
+        os.rename(tmp, live)
+        shutil.rmtree(backup)
+    except Exception:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    return out

@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from railgun_spark.suite import extra_query, query
 
@@ -139,85 +140,21 @@ def image_perceptual_hashes(df: DataFrame, id_col: str = "media_id") -> DataFram
     return df.mapInPandas(batches, PHASH_SCHEMA)
 
 
-def phash_chunks(hash_col: Column) -> Column:
-    """The PHASH_BANDS disjoint 16-bit chunks of a 64-bit hash column —
-    shiftright carries the sign bit into chunk 3's high bits for
-    negative hashes, so mask AFTER the shift (0xFFFF) keeps every chunk
-    in [0, 2^16)."""
+def _chunks(words: list[Column], width: int) -> Column:
+    """The disjoint `width`-bit chunks (16 or 32) of a 64*len(words)-bit
+    hash held as signed-64 word columns, low word and low bits first —
+    shiftright carries the sign bit into a word's top chunk for negative
+    words, so masking AFTER the shift keeps every chunk in
+    [0, 2^width)."""
+    mask = F.lit((1 << width) - 1)
     return F.array(
-        *[
-            F.shiftright(hash_col, i * PHASH_BAND_BITS).bitwiseAND(F.lit(0xFFFF))
-            for i in range(PHASH_BANDS)
-        ]
+        *[F.shiftright(w, off).bitwiseAND(mask)
+          for w in words for off in range(0, 64, width)]
     )
 
 
-PHASH_COARSE_BANDS = 2  # pigeonhole: lossless candidates for hamming <= 1
-PHASH_COARSE_MAX_HAMMING = PHASH_COARSE_BANDS - 1
-
-
-def phash_chunks_coarse(hash_col: Column) -> Column:
-    """The 2 disjoint 32-bit chunks of a 64-bit hash column — the
-    candidate-headroom geometry for the OFFSET gates, whose
-    frame-stripped join key loses frame_idx entropy and saturates the
-    16-bit chunk space as the index grows (measured:
-    PHASH_OFFSET_PROBE). 32-bit keys push the random-collision knee out
-    by 2^16 at the documented trade of a tighter per-frame budget
-    (pigeonhole: lossless only for hamming <= 1; the temporal vote's
-    match fraction still tolerates whole frames missing). Same trade as
-    the image side's coarse 8x32 banding."""
-    return F.array(
-        *[
-            F.shiftright(hash_col, i * 32).bitwiseAND(F.lit(0xFFFFFFFF))
-            for i in range(PHASH_COARSE_BANDS)
-        ]
-    )
-
-
-def phash_near_dup_pairs(
-    hashes: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    id_col: str = "media_id",
-    hash_col: str = "dhash",
-) -> DataFrame:
-    """(id_a, id_b, hamming) for every pair within `max_hamming` bits —
-    pigeonhole-blocked (equi-join on one of PHASH_BANDS chunks), so the
-    candidate set is a LOSSLESS superset for max_hamming <= PHASH_BANDS-1
-    and the plan never goes all-pairs. Refused rows (NULL hash) never
-    pair."""
-    if max_hamming > PHASH_MAX_HAMMING:
-        raise ValueError(
-            f"pigeonhole blocking with {PHASH_BANDS} bands is lossless only "
-            f"for hamming <= {PHASH_MAX_HAMMING}; got {max_hamming}"
-        )
-    # pin the per-media hashes ONCE: the banded self-join otherwise
-    # plans the entire decode+hash pipeline (Arrow decode hop included)
-    # on BOTH sides — one (id, 8-byte hash) row per medium is strictly
-    # cheaper to pin than a second decode pass at any scale
-    ok = hashes.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("__id"), F.col(hash_col).alias("__h")
-    ).localCheckpoint()
-    ex = ok.select(
-        "__id", "__h",
-        F.posexplode(phash_chunks(F.col("__h"))).alias("ci", "cv"),
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    ham = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    return (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .filter(ham <= max_hamming)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .distinct()
-    )
+# 2 x 32-bit chunks of one 64-bit hash: lossless for hamming <= 1
+PHASH_COARSE_MAX_HAMMING = 1
 
 
 # --------------------------------------------------------------------------
@@ -375,7 +312,7 @@ def image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = docs.mapInPandas(synth, MEDIA_SCHEMA)
     hashes = image_perceptual_hashes(media)
-    return phash_near_dup_pairs(hashes).orderBy("id_a", "id_b")
+    return media_pairs(hashes, IMAGE).orderBy("id_a", "id_b")
 
 
 # --------------------------------------------------------------------------
@@ -477,64 +414,6 @@ def video_perceptual_hashes(
 VIDEO_MATCH_FRAC = 0.8
 
 
-def video_phash_near_dup_pairs(
-    frame_hashes: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    min_match_frac: float = VIDEO_MATCH_FRAC,
-) -> DataFrame:
-    """(id_a, id_b, n_match, n_frames) for video pairs where at least
-    `min_match_frac` of temporally-aligned sampled frames sit within
-    `max_hamming` bits (n_frames = the LARGER signature, so a clip
-    matching a strict subset of a longer video does not qualify).
-    Candidates band-join on (frame_idx, chunk) — lossless per matching
-    frame by pigeonhole, never all-pairs."""
-    if max_hamming > PHASH_MAX_HAMMING:
-        raise ValueError(
-            f"pigeonhole blocking with {PHASH_BANDS} bands is lossless only "
-            f"for hamming <= {PHASH_MAX_HAMMING}; got {max_hamming}"
-        )
-    # pin the per-frame hashes ONCE: n_frames (read twice) + both join
-    # sides otherwise plan the decode+hash pipeline FOUR times — the
-    # before-plan carried 4 copies of the Arrow decode subtree
-    fh = frame_hashes.filter(F.col("fhash").isNotNull()).select(
-        F.col("media_id").alias("__id"), "frame_idx", F.col("fhash").alias("__h")
-    ).localCheckpoint()
-    n_frames = fh.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    ex = fh.select(
-        "__id", "frame_idx", "__h",
-        F.posexplode(phash_chunks(F.col("__h"))).alias("ci", "cv"),
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    ham = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    matched = (
-        a.join(
-            b,
-            (F.col("a.frame_idx") == F.col("b.frame_idx"))
-            & (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .filter(ham <= max_hamming)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.col("a.frame_idx").alias("fi"),
-        )
-        .distinct()
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_match"))
-    )
-    na = n_frames.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
-    nb = n_frames.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
-    nf = F.greatest(F.col("__na"), F.col("__nb"))
-    return (
-        matched.join(na, "id_a")
-        .join(nb, "id_b")
-        .filter(F.col("n_match") >= F.ceil(F.lit(min_match_frac) * nf))
-        .select("id_a", "id_b", "n_match", nf.alias("n_frames"))
-    )
-
-
 VIDEO_PHASH_SAMPLE_MOD = 13
 
 
@@ -633,7 +512,7 @@ def video_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = docs.mapInPandas(synth, MEDIA_SCHEMA)
     fh = video_perceptual_hashes(media, every_n=1)
-    return video_phash_near_dup_pairs(fh).orderBy("id_a", "id_b")
+    return media_pairs(fh, VIDEO).orderBy("id_a", "id_b")
 
 
 # --------------------------------------------------------------------------
@@ -644,8 +523,8 @@ def video_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LOUDER than window x. Re-encodes and level-preserving transcodes keep
 # the energy envelope, hence the delta signs; different audio flips
 # ~half the bits. Same downstream algebra as images: the 64-bit
-# fingerprint feeds phash_near_dup_pairs / the band-index machinery
-# unchanged (hash_col='fhash').
+# fingerprint feeds media_pairs / the band-index machinery unchanged
+# (the AUDIO family reads the kernel's fhash column).
 # --------------------------------------------------------------------------
 AUDIO_PHASH_WINDOWS = 72  # 8 groups x 9 windows -> 64 delta bits
 
@@ -790,7 +669,7 @@ def audio_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = docs.mapInPandas(synth, MEDIA_SCHEMA)
     hashes = audio_perceptual_hashes(media)
-    return phash_near_dup_pairs(hashes, hash_col="fhash").orderBy("id_a", "id_b")
+    return media_pairs(hashes, AUDIO).orderBy("id_a", "id_b")
 
 
 # --------------------------------------------------------------------------
@@ -817,8 +696,8 @@ def audio_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   8*N^2/2/2^32 ~ 10^9 — linear in practice.
 #
 # Both bandings are lossless by pigeonhole for their budgets and share
-# the hash pass; phash_wide_near_dup_pairs takes n_bands (16 default, 8
-# coarse), and both are oracle-certified (image_phash_wide_pairs /
+# the hash pass; media_pairs(..., IMAGE_WIDE) picks 16 bands by default
+# and 8 with coarse=True, and both are oracle-certified (image_phash_wide_pairs /
 # image_phash_wide_coarse_pairs).
 #
 # Block dHash: gray -> 17x16 bilinear -> bit (y*16 + x) set iff
@@ -897,77 +776,6 @@ def image_perceptual_hashes_wide(
             )
 
     return df.mapInPandas(batches, PHASH_WIDE_SCHEMA)
-
-
-def phash_wide_chunks(word_cols, n_bands: int = PHASH_WIDE_BANDS) -> Column:
-    """The `n_bands` disjoint chunks of a 256-bit hash held as 4 long
-    columns. n_bands=16 -> 16-bit chunks (max hamming budget 15, the
-    gate/index layout); n_bands=8 -> 32-bit chunks (budget 7 with 2^16x
-    the key entropy — the candidate-headroom geometry: random pairs
-    collide on a band with probability 2^-32 instead of 2^-16, so the
-    ~B*N^2/2^bits candidate term stays pair-tracking out to billions of
-    images)."""
-    if 256 % n_bands or 256 // n_bands > 64:
-        raise ValueError(f"n_bands must divide 256 into <=64-bit chunks: {n_bands}")
-    width = 256 // n_bands
-    mask = (1 << width) - 1
-    out = []
-    for j in range(n_bands):
-        bit0 = j * width
-        w, off = bit0 // 64, bit0 % 64
-        out.append(F.shiftright(word_cols[w], off).bitwiseAND(F.lit(mask)))
-    return F.array(*out)
-
-
-def phash_wide_near_dup_pairs(
-    hashes: DataFrame,
-    max_hamming: int = PHASH_WIDE_MAX_HAMMING,
-    id_col: str = "media_id",
-    n_bands: int = PHASH_WIDE_BANDS,
-) -> DataFrame:
-    """(id_a, id_b, hamming) for every pair within `max_hamming` of 256
-    bits — pigeonhole over `n_bands` bands (lossless for
-    hamming <= n_bands - 1). n_bands=8 trades the hamming budget down to
-    7 for 32-bit band keys whose candidate stream tracks true pairs, not
-    N^2 (PHASH_CANDIDATE_PROBE_r14.json measures both). Refused rows
-    never pair."""
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"pigeonhole blocking with {n_bands} bands is lossless "
-            f"only for hamming <= {n_bands - 1}; got {max_hamming}"
-        )
-    # pinned once: both self-join sides otherwise re-run the wide
-    # decode+hash pipeline (4 x 64-bit words per medium — tiny to pin)
-    ok = hashes.filter(F.col("h0").isNotNull()).select(
-        F.col(id_col).alias("__id"), *_WIDE_HASH_COLS
-    ).localCheckpoint()
-    ex = ok.select(
-        "__id",
-        *_WIDE_HASH_COLS,
-        F.posexplode(
-            phash_wide_chunks([F.col(c) for c in _WIDE_HASH_COLS], n_bands)
-        ).alias("ci", "cv"),
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    ham = _hamming(
-        [F.col(f"a.{c}") for c in _WIDE_HASH_COLS],
-        [F.col(f"b.{c}") for c in _WIDE_HASH_COLS],
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .filter(ham <= max_hamming)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .distinct()
-    )
 
 
 PHASH_WIDE_SAMPLE_MOD = 11
@@ -1074,7 +882,7 @@ def _wide_word_sql(w: int) -> str:
 )
 def image_phash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = image_perceptual_hashes_wide(_wide_craft_media(spark, sf_dir))
-    return phash_wide_near_dup_pairs(hashes).orderBy("id_a", "id_b")
+    return media_pairs(hashes, IMAGE_WIDE).orderBy("id_a", "id_b")
 
 
 def _wide_craft_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,14 +950,12 @@ def _wide_craft_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def image_phash_wide_coarse_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = image_perceptual_hashes_wide(_wide_craft_media(spark, sf_dir))
-    return phash_wide_near_dup_pairs(
-        hashes, max_hamming=7, n_bands=8
-    ).orderBy("id_a", "id_b")
+    return media_pairs(hashes, IMAGE_WIDE, coarse=True).orderBy("id_a", "id_b")
 
 
 # --------------------------------------------------------------------------
 # Offset-tolerant video near-dup (r13 VERDICT #3): frame-ALIGNED matching
-# (video_phash_near_dup_pairs) catches re-encodes but misses trimmed or
+# (media_pairs(fh, VIDEO)) catches re-encodes but misses trimmed or
 # padded copies. The offset mode runs the classic temporal-alignment
 # vote: band-join WITHOUT frame_idx in the key, group candidates by
 # (id_a, id_b, frame_offset = a.frame_idx - b.frame_idx), and apply the
@@ -1162,80 +968,6 @@ def image_phash_wide_coarse_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
 # positions — sampled-frame counts multiply), which is why it is the
 # OPTIONAL second pass, not the default.
 # --------------------------------------------------------------------------
-def video_phash_near_dup_pairs_offset(
-    frame_hashes: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    min_match_frac: float = VIDEO_MATCH_FRAC,
-    coarse: bool = False,
-) -> DataFrame:
-    """(id_a, id_b, frame_offset, n_match, n_small) for every pair and
-    offset where >= `min_match_frac` of the SMALLER signature's frames
-    match within `max_hamming` bits at that constant temporal shift.
-    A pair can qualify at multiple offsets (all are returned — the
-    caller picks or aggregates); refused rows never pair.
-
-    `coarse` joins on the 2x32-bit chunk keys instead of 4x16: the
-    frame-stripped offset key saturates the 16-bit chunk space as the
-    corpus grows (PHASH_OFFSET_PROBE_r15: cand/true 64 -> 1773 at
-    20k -> 624k chunk rows, while coarse stays flat at ~8), at the
-    documented trade of a per-frame budget of hamming <= 1 (pigeonhole
-    over 2 bands; the temporal vote's fraction still tolerates whole
-    frames differing)."""
-    cap = PHASH_COARSE_MAX_HAMMING if coarse else PHASH_MAX_HAMMING
-    nbands = PHASH_COARSE_BANDS if coarse else PHASH_BANDS
-    if max_hamming > cap:
-        raise ValueError(
-            f"pigeonhole blocking with {nbands} bands is lossless only "
-            f"for hamming <= {cap}; got {max_hamming}"
-        )
-    chunk_fn = phash_chunks_coarse if coarse else phash_chunks
-    # pinned once — see video_phash_near_dup_pairs (4 planned copies of
-    # the decode pipeline otherwise: n_frames x2 + both join sides)
-    fh = frame_hashes.filter(F.col("fhash").isNotNull()).select(
-        F.col("media_id").alias("__id"), "frame_idx", F.col("fhash").alias("__h")
-    ).localCheckpoint()
-    n_frames = fh.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    ex = fh.select(
-        "__id", "frame_idx", "__h",
-        F.posexplode(chunk_fn(F.col("__h"))).alias("ci", "cv"),
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    ham = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    matched = (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .filter(ham <= max_hamming)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            (F.col("a.frame_idx") - F.col("b.frame_idx")).alias("frame_offset"),
-            F.col("a.frame_idx").alias("fi"),
-        )
-        # (id_a, id_b, frame_offset, fi) names ONE frame pair — an offset
-        # fixes b's frame given a's — so distinct() dedups multi-chunk hits
-        .distinct()
-        .groupBy("id_a", "id_b", "frame_offset")
-        .agg(F.count(F.lit(1)).alias("n_match"))
-    )
-    na = n_frames.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
-    nb = n_frames.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
-    n_small = F.least(F.col("__na"), F.col("__nb"))
-    return (
-        matched.join(na, "id_a")
-        .join(nb, "id_b")
-        .filter(F.col("n_match") >= F.ceil(F.lit(min_match_frac) * n_small))
-        .select("id_a", "id_b", "frame_offset", "n_match", n_small.alias("n_small"))
-    )
-
-
-# the gate's per-frame band keys encode frame_idx in bits >= 18; the
-# offset mode strips it back out to join across temporal positions
-
-
 VIDEO_OFFSET_SAMPLE_MOD = 23
 
 
@@ -1349,7 +1081,7 @@ def video_phash_offset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = docs.mapInPandas(synth, MEDIA_SCHEMA)
     fh = video_perceptual_hashes(media, every_n=1)
-    return video_phash_near_dup_pairs_offset(fh).orderBy(
+    return media_pairs(fh, VIDEO, offset_tolerant=True).orderBy(
         "id_a", "id_b", "frame_offset"
     )
 
@@ -1438,14 +1170,14 @@ def video_phash_offset_coarse_pairs(spark: SparkSession, sf_dir: str) -> DataFra
 
     media = docs.mapInPandas(synth, MEDIA_SCHEMA)
     fh = video_perceptual_hashes(media, every_n=1)
-    return video_phash_near_dup_pairs_offset(
-        fh, max_hamming=PHASH_COARSE_MAX_HAMMING, coarse=True
-    ).orderBy("id_a", "id_b", "frame_offset")
+    return media_pairs(fh, VIDEO, offset_tolerant=True, coarse=True).orderBy(
+        "id_a", "id_b", "frame_offset"
+    )
 
 
 # --------------------------------------------------------------------------
 # Coarse-offset recall canary — the measured complement of the coarse
-# geometry's documented trade (phash.py PHASH_COARSE_BANDS: pigeonhole
+# geometry's documented trade (PHASH_COARSE_MAX_HAMMING: pigeonhole
 # lossless only for per-frame hamming <= 1; the temporal vote still
 # tolerates whole frames differing). The text and embedding modalities
 # already ship this pattern (dedup.lsh_recall_report,
@@ -1603,13 +1335,11 @@ def video_offset_coarse_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-plan the Y4M synth + decode pipeline — the before-plan carried
     # 32 copies of the scan subtree
     fh = _coarse_canary_frame_hashes(spark, sf_dir).localCheckpoint()
-    exact = video_phash_near_dup_pairs_offset(
-        fh, max_hamming=PHASH_MAX_HAMMING
-    ).select("id_a", "id_b").distinct()
+    exact = media_pairs(fh, VIDEO, offset_tolerant=True).select(
+        "id_a", "id_b"
+    ).distinct()
     coarse = (
-        video_phash_near_dup_pairs_offset(
-            fh, max_hamming=PHASH_COARSE_MAX_HAMMING, coarse=True
-        )
+        media_pairs(fh, VIDEO, offset_tolerant=True, coarse=True)
         .select("id_a", "id_b").distinct()
         .withColumn("__hit", F.lit(1))
     )
@@ -1718,24 +1448,6 @@ def audio_chunk_fingerprints(df: DataFrame, id_col: str = "media_id") -> DataFra
             )
 
     return df.mapInPandas(batches, AUDIO_CHUNK_PHASH_SCHEMA)
-
-
-def audio_phash_near_dup_pairs_offset(
-    chunk_hashes: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    min_match_frac: float = AUDIO_CHUNK_MATCH_FRAC,
-) -> DataFrame:
-    """(id_a, id_b, chunk_offset, n_match, n_small) for audio pairs where
-    >= `min_match_frac` of the SMALLER signature's chunks match within
-    `max_hamming` bits at a constant chunk shift — the video offset vote
-    verbatim over chunk indexes (still lossless: every chunk pair within
-    the budget shares a 16-bit band by pigeonhole)."""
-    fh = chunk_hashes.select(
-        "media_id", F.col("chunk_idx").alias("frame_idx"), "fhash"
-    )
-    return video_phash_near_dup_pairs_offset(
-        fh, max_hamming, min_match_frac
-    ).withColumnRenamed("frame_offset", "chunk_offset")
 
 
 def _phash_wav_chunks(hs: list) -> bytes:
@@ -1850,13 +1562,18 @@ def audio_phash_offset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = docs.mapInPandas(synth, MEDIA_SCHEMA)
     ch = audio_chunk_fingerprints(media)
-    return audio_phash_near_dup_pairs_offset(ch).orderBy(
-        "id_a", "id_b", "chunk_offset"
+    return (
+        media_pairs(ch, AUDIO_CHUNK, offset_tolerant=True)
+        .withColumnRenamed("frame_offset", "chunk_offset")
+        .orderBy("id_a", "id_b", "chunk_offset")
     )
 
 
 # --------------------------------------------------------------------------
-# Incremental ingest gates: ONE implementation for every media modality.
+# Pairs and incremental ingest gates: ONE implementation for every media
+# modality, and one verified band self-join for both. `media_pairs`
+# returns the self-join's pairs; a gate drops the id_b side of the same
+# pairs within its batch, plus the rows that verify against the index.
 #
 # A gate admits the rows of a batch that have no VERIFIED perceptual
 # near-dup in the persisted band index nor among the smaller-id rows of
@@ -1870,8 +1587,7 @@ def audio_phash_offset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rejects at a 50k index before the verify step existed). A band
 # collision is only the candidate probe; rejection requires
 # bit_count(xor) <= the family's hamming budget against the stored hash —
-# lossless by pigeonhole AND zero false rejects, matching the *_pairs
-# queries. Decode-refused and other-kind rows pass through (they never
+# lossless by pigeonhole AND zero false rejects. Decode-refused and other-kind rows pass through (they never
 # band) and are not indexed.
 #
 # Positional families (video frames, fixed-duration audio chunks) vote:
@@ -1891,125 +1607,25 @@ def audio_phash_offset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch shuffles: band_key for aligned gates, an explicit chunk_key
 # column (its geometry declared once in TBLPROPERTIES) for offset gates.
 # --------------------------------------------------------------------------
-def _band_rows_of(hashes: DataFrame, hash_col: str) -> DataFrame:
-    """(media_id, <hash_col>) -> (__id, band_key, __h): PHASH_BANDS rows
-    per hashed row (the image and audio families' shared chunk
-    algebra)."""
-    keys = F.transform(
-        phash_chunks(F.col(hash_col)),
-        lambda cv, ci: (ci.cast("bigint") * F.lit(1 << PHASH_BAND_BITS)) + cv,
-    )
-    return hashes.select(
-        F.col("media_id").alias("__id"),
-        F.col(hash_col).alias("__h"),
-        F.explode(keys).alias("band_key"),
-    ).select("__id", "band_key", "__h")
-
-
-def _phash_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """(__id, band_key, __h) — PHASH_BANDS rows per decodable image."""
-    hashes = image_perceptual_hashes(df, id_col=id_col).filter(
-        F.col("refused").isNull()
-    )
-    return _band_rows_of(hashes, "dhash")
-
-
-def _audio_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """(__id, band_key, __h) — PHASH_BANDS rows per decodable audio clip
-    (72-window energy-delta fingerprints)."""
-    hashes = audio_perceptual_hashes(df, id_col=id_col).filter(
-        F.col("refused").isNull()
-    )
-    return _band_rows_of(hashes, "fhash")
-
-
-def _wide_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """(__id, band_key, h0..h3) — PHASH_WIDE_BANDS rows per decodable
-    image (band_key = band_idx << 16 | chunk, band_idx 0..15)."""
-    hashes = image_perceptual_hashes_wide(df, id_col=id_col).filter(
-        F.col("refused").isNull()
-    )
-    keys = F.transform(
-        phash_wide_chunks([F.col(c) for c in _WIDE_HASH_COLS]),
-        lambda cv, ci: (ci.cast("bigint") * F.lit(1 << PHASH_BAND_BITS)) + cv,
-    )
-    return hashes.select(
-        F.col("media_id").alias("__id"),
-        *_WIDE_HASH_COLS,
-        F.explode(keys).alias("band_key"),
-    ).select("__id", "band_key", *_WIDE_HASH_COLS)
-
-
-# positional band keys encode the frame (or chunk) index in bits >= 18;
-# offset mode strips it back out to join across temporal positions
-_FRAME_KEY_SHIFT = 18
-_FRAME_KEY_MASK = (1 << _FRAME_KEY_SHIFT) - 1
-
-
-def _positional_band_rows(fh: DataFrame, pos_col: str) -> DataFrame:
-    """(media_id, <pos_col>, fhash) -> (__id, __n, frame_idx, band_key,
-    __h): PHASH_BANDS rows per frame, the medium's frame count
-    denormalized on every row (the vote's denominator). The position is
-    ENCODED IN THE KEY: every gate join is then a single-key equi-join
-    that a table bucketed by band_key serves in place (a two-key join
-    would defeat the bucketed strategy, and Catalyst folds a residual
-    frame equality back into the join keys)."""
-    n = fh.groupBy("media_id").agg(F.count(F.lit(1)).alias("__n"))
-    keys = F.transform(
-        phash_chunks(F.col("fhash")),
-        lambda cv, ci: (
-            F.col(pos_col).cast("bigint") * F.lit(1 << _FRAME_KEY_SHIFT)
-            + ci.cast("bigint") * F.lit(1 << PHASH_BAND_BITS)
-            + cv
-        ),
-    )
-    pos = "frame_idx" if pos_col == "frame_idx" else F.col(pos_col).alias("frame_idx")
-    return (
-        fh.join(n, "media_id")
-        .select(
-            F.col("media_id").alias("__id"),
-            "__n",
-            pos,
-            F.col("fhash").alias("__h"),
-            F.explode(keys).alias("band_key"),
-        )
-        .select("__id", "__n", "frame_idx", "band_key", "__h")
-    )
-
-
-def _video_band_rows(
-    df: DataFrame, every_n: int = 10, id_col: str = "media_id"
-) -> DataFrame:
-    """Per-SAMPLED-frame band rows; `every_n` must stay constant for one
-    index's lifetime (the alignment is on sampled indexes)."""
-    fh = video_perceptual_hashes(df, every_n=every_n, id_col=id_col).filter(
-        F.col("fhash").isNotNull()
-    )
-    return _positional_band_rows(fh, "frame_idx")
-
-
-def _audio_chunk_band_rows(df: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Per-chunk band rows in the video shape (chunk_idx rides in the
-    frame_idx slot)."""
-    fh = audio_chunk_fingerprints(df, id_col=id_col).filter(
-        F.col("fhash").isNotNull()
-    )
-    return _positional_band_rows(fh, "chunk_idx")
-
-
 @dataclass(frozen=True)
 class SignatureFamily:
-    """Everything that differs between the media gates. `band_rows(df,
-    every_n, id_col)` extracts the batch's band rows; `hash_cols` are the
-    stored hash columns the gate verifies against; `max_hamming` is the
-    verify budget; `positional` families have a frame or chunk axis and
-    reject by match-fraction vote (and alone support offset mode)."""
+    """Everything that differs between the media signatures.
+    `extract(df, every_n, id_col)` is the family's Arrow hash kernel;
+    `sig_cols` are the hash columns it emits and `pos_col` its frame or
+    chunk axis (None for one signature per medium); `hash_cols` are the
+    hash columns a band index stores. The hamming budget follows from
+    the hash width and the band width (`_budget`). `positional` families
+    reject by match-fraction vote and alone support offset mode."""
 
     mod: str
-    band_rows: Callable[[DataFrame, int, str], DataFrame]
+    extract: Callable[[DataFrame, int, str], DataFrame]
+    sig_cols: tuple[str, ...]
+    pos_col: str | None
     hash_cols: tuple[str, ...]
-    max_hamming: int
-    positional: bool
+
+    @property
+    def positional(self) -> bool:
+        return self.pos_col is not None
 
     @property
     def row_cols(self) -> tuple[str, ...]:
@@ -2025,26 +1641,89 @@ class SignatureFamily:
 
 
 IMAGE = SignatureFamily(
-    "image", lambda df, every_n, id_col: _phash_band_rows(df, id_col),
-    ("dhash",), PHASH_MAX_HAMMING, positional=False,
+    "image", lambda df, every_n, id_col: image_perceptual_hashes(df, id_col),
+    ("dhash",), None, ("dhash",),
 )
 IMAGE_WIDE = SignatureFamily(
-    "image-wide", lambda df, every_n, id_col: _wide_band_rows(df, id_col),
-    _WIDE_HASH_COLS, PHASH_WIDE_MAX_HAMMING, positional=False,
+    "image-wide",
+    lambda df, every_n, id_col: image_perceptual_hashes_wide(df, id_col),
+    _WIDE_HASH_COLS, None, _WIDE_HASH_COLS,
 )
 AUDIO = SignatureFamily(
-    "audio", lambda df, every_n, id_col: _audio_band_rows(df, id_col),
-    ("dhash",), PHASH_MAX_HAMMING, positional=False,
+    "audio", lambda df, every_n, id_col: audio_perceptual_hashes(df, id_col),
+    ("fhash",), None, ("dhash",),
 )
 VIDEO = SignatureFamily(
-    "video", _video_band_rows, ("dhash",), PHASH_MAX_HAMMING, positional=True,
+    "video", video_perceptual_hashes, ("fhash",), "frame_idx", ("dhash",),
 )
 AUDIO_CHUNK = SignatureFamily(
     AUDIO_CHUNK_MOD,
-    lambda df, every_n, id_col: _audio_chunk_band_rows(df, id_col),
-    ("dhash",), PHASH_MAX_HAMMING, positional=True,
+    lambda df, every_n, id_col: audio_chunk_fingerprints(df, id_col),
+    ("fhash",), "chunk_idx", ("dhash",),
 )
 FAMILIES = {f.mod: f for f in (IMAGE, IMAGE_WIDE, AUDIO, VIDEO, AUDIO_CHUNK)}
+
+
+def _width(coarse: bool) -> int:
+    """Band width in bits: coarse means 32-bit chunks for every family."""
+    return 32 if coarse else PHASH_BAND_BITS
+
+
+def _budget(fam: SignatureFamily, width: int, max_hamming: int | None = None) -> int:
+    """The verify budget over `width`-bit bands (`max_hamming`, default
+    the widest): pigeonhole over 64*words/width disjoint bands yields a
+    lossless candidate set only for hamming <= bands - 1."""
+    cap = 64 * len(fam.hash_cols) // width - 1
+    if max_hamming is None:
+        return cap
+    if max_hamming > cap:
+        raise ValueError(
+            f"pigeonhole blocking with {cap + 1} bands is lossless only "
+            f"for hamming <= {cap}; got {max_hamming}"
+        )
+    return max_hamming
+
+
+def _hash_rows(hashes: DataFrame, fam: SignatureFamily) -> DataFrame:
+    """Kernel output -> (__id, [__n, frame_idx,] <row_cols>): refused
+    rows (NULL hash) dropped; positional families carry the medium's
+    frame count on every row (the vote's denominator) — a window count,
+    so the kernel output is read once (a count joined back would plan
+    the decode pipeline twice)."""
+    cols = [F.col("media_id").alias("__id")]
+    if fam.positional:
+        n = F.count(F.lit(1)).over(Window.partitionBy("media_id"))
+        cols += [n.alias("__n"), F.col(fam.pos_col).alias("frame_idx")]
+    cols += [F.col(s).alias(r) for s, r in zip(fam.sig_cols, fam.row_cols)]
+    return hashes.filter(F.col(fam.sig_cols[0]).isNotNull()).select(*cols)
+
+
+# positional band keys encode the frame (or chunk) index in bits >= 18;
+# offset mode strips it back out to join across temporal positions
+_FRAME_KEY_SHIFT = 18
+_FRAME_KEY_MASK = (1 << _FRAME_KEY_SHIFT) - 1
+
+
+def _bands(hashes: DataFrame, fam: SignatureFamily, width: int) -> DataFrame:
+    """Hash rows -> one row per `width`-bit band, adding chunk_key =
+    band_idx << width | chunk (frame-free: the offset and coarse joins'
+    key) and band_key, the index's stored key: chunk_key plus, for
+    positional families, frame_idx << 18. The position is ENCODED IN THE
+    KEY so every aligned join is a single-key equi-join that a table
+    bucketed by band_key serves in place (a two-key join would defeat the
+    bucketed strategy, and Catalyst folds a residual frame equality back
+    into the join keys)."""
+    ex = hashes.select(
+        *hashes.columns,
+        F.posexplode(_chunks([F.col(c) for c in fam.row_cols], width)).alias(
+            "__ci", "__cv"
+        ),
+    )
+    chunk = F.shiftleft(F.col("__ci").cast("long"), width).bitwiseOR(F.col("__cv"))
+    band = chunk
+    if fam.positional:
+        band = chunk + F.col("frame_idx").cast("bigint") * F.lit(1 << _FRAME_KEY_SHIFT)
+    return ex.select(*hashes.columns, band.alias("band_key"), chunk.alias("chunk_key"))
 
 
 def _hamming(xs: list[Column], ys: list[Column]) -> Column:
@@ -2058,8 +1737,13 @@ def _hamming(xs: list[Column], ys: list[Column]) -> Column:
     return out
 
 
-def _check_mode(fam: SignatureFamily, offset_tolerant: bool, coarse: bool) -> None:
-    if coarse and not offset_tolerant:
+def _check_mode(
+    fam: SignatureFamily, offset_tolerant: bool, coarse: bool, index: bool = True
+) -> None:
+    """`index`: the call reads or writes a band index, whose aligned
+    layout stores 16-bit keys only (pairs may band coarse without one
+    unless the frame must ride in the key)."""
+    if coarse and not offset_tolerant and (index or fam.positional):
         raise ValueError(
             "coarse=True only applies to the offset-tolerant gate (the "
             "aligned gate's band keys already carry frame alignment)"
@@ -2182,34 +1866,6 @@ def _check_bucketed_offset_bits(
         )
 
 
-def _coarse_chunk_rows(frames: DataFrame, hash_col: str, key: str = "__ck") -> DataFrame:
-    """Per-frame 2x32-bit chunk keys derived from the stored frame hash:
-    key = (chunk_index << 32) | chunk_value. The input must already be
-    ONE row per frame (band rows dedupe to frames first, or every hit
-    would count PHASH_BANDS times)."""
-    return frames.select(
-        *frames.columns,
-        F.posexplode(phash_chunks_coarse(F.col(hash_col))).alias("__ci2", "__cv2"),
-    ).select(
-        *frames.columns,
-        (F.shiftleft(F.col("__ci2").cast("long"), 32)
-         .bitwiseOR(F.col("__cv2"))).alias(key),
-    )
-
-
-def _offset_rows(bands: DataFrame, coarse: bool, key: str) -> DataFrame:
-    """Positional band rows -> (__id, __n, frame_idx, __h, <key>) with the
-    frame-stripped chunk key the offset vote joins on."""
-    if coarse:
-        return _coarse_chunk_rows(
-            bands.select("__id", "__n", "frame_idx", "__h").distinct(), "__h", key
-        )
-    return bands.select(
-        "__id", "__n", "frame_idx", "__h",
-        F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias(key),
-    )
-
-
 def _index_side(
     seen: DataFrame, fam: SignatureFamily, offset_tolerant: bool, coarse: bool,
     table: bool,
@@ -2217,7 +1873,7 @@ def _index_side(
     """The stored rows as the gate joins them: the verify hash(es)
     renamed __i*, plus — for positional families — the indexed medium
     (old_id), its frame count (n_old) and, in offset mode, the frame
-    position (__of) and chunk key."""
+    position (__of) and chunk_key."""
     hashes = [F.col(s).alias(i) for s, i in zip(fam.hash_cols, fam.index_cols)]
     if not fam.positional:
         return seen.select("band_key", *hashes)
@@ -2228,39 +1884,87 @@ def _index_side(
         return seen.select(
             *owner, F.col("frame_idx").alias("__of"), "chunk_key", *hashes
         )
-    frames = seen.select(
-        *owner,
-        F.shiftright(F.col("band_key"), _FRAME_KEY_SHIFT).cast("int").alias("__of"),
-        F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias("__fk"),
-        *hashes,
-    )
-    if coarse:
-        return _coarse_chunk_rows(
-            frames.select("old_id", "n_old", "__of", "__ih").distinct(), "__ih"
+    frame = F.shiftright(F.col("band_key"), _FRAME_KEY_SHIFT).cast("int")
+    if not coarse:
+        return seen.select(
+            *owner, frame.alias("__of"),
+            F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias("chunk_key"),
+            *hashes,
         )
-    return frames.select("old_id", "n_old", "__of", "__ih", F.col("__fk").alias("__ck"))
+    # coarse keys come from the stored hash, ONE row per frame first (or
+    # every hit would count once per stored 16-bit band)
+    frames = seen.select(
+        F.col("vid").alias("__id"), F.col("n_frames").alias("__n"),
+        frame.alias("frame_idx"), F.col("dhash").alias("__h"),
+    ).distinct()
+    return _bands(frames, fam, 32).select(
+        F.col("__id").alias("old_id"), F.col("__n").alias("n_old"),
+        F.col("frame_idx").alias("__of"), "chunk_key", F.col("__h").alias("__ih"),
+    )
 
 
-def _vote(cand: DataFrame, offset_tolerant: bool, min_match_frac: float) -> DataFrame:
-    """Verified candidate frame rows -> the new ids to reject: matched
-    frames per (new, old) pair — per constant shift `off` in offset mode
-    — must clear min_match_frac of the LARGER signature (aligned) or the
-    SMALLER one (offset: a clip cut from a longer indexed one rejects)."""
-    group = ["new_id", "old_id", "off"] if offset_tolerant else ["new_id", "old_id"]
-    nf = (F.least if offset_tolerant else F.greatest)(F.col("n_new"), F.col("n_old"))
+def _vote(
+    cand: DataFrame, offset_tolerant: bool, min_match_frac: float
+) -> DataFrame:
+    """Verified candidate frame rows (id_a, id_b, [off,] fi, n_a, n_b) ->
+    the pairs whose matched frames — per constant shift `off` in offset
+    mode — clear min_match_frac of the LARGER signature (aligned) or the
+    SMALLER one (offset: a clip cut from a longer one qualifies):
+    (id_a, id_b, n_match, n_frames), or (id_a, id_b, frame_offset,
+    n_match, n_small) in offset mode."""
+    group = ["id_a", "id_b", "off"] if offset_tolerant else ["id_a", "id_b"]
+    nf = (F.least if offset_tolerant else F.greatest)(F.col("n_a"), F.col("n_b"))
+    off = [F.col("off").alias("frame_offset")] if offset_tolerant else []
     return (
         cand.distinct()
-        .groupBy(*group, "n_new", "n_old")
+        .groupBy(*group, "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("n_match"))
         .filter(F.col("n_match") >= F.ceil(F.lit(min_match_frac) * nf))
-        .select(F.col("new_id").alias("__id"))
-        .distinct()
+        .select(
+            "id_a", "id_b", *off, "n_match",
+            nf.alias("n_small" if offset_tolerant else "n_frames"),
+        )
+    )
+
+
+def _self_pairs(
+    probe: DataFrame,
+    key: str,
+    fam: SignatureFamily,
+    budget: int,
+    offset_tolerant: bool,
+    min_match_frac: float,
+) -> DataFrame:
+    """The verified band self-join over `probe` (band rows joined on
+    `key`, id_a < id_b, hamming <= `budget`): (id_a, id_b, hamming) for
+    one signature per medium, else the `_vote` rows."""
+    a, b = probe.alias("a"), probe.alias("b")
+    ham = _hamming([F.col(f"a.{c}") for c in fam.row_cols],
+                   [F.col(f"b.{c}") for c in fam.row_cols])
+    cand = a.join(
+        b,
+        (F.col(f"a.{key}") == F.col(f"b.{key}"))
+        & (F.col("a.__id") < F.col("b.__id")),
+    ).filter(ham <= budget)
+    ids = [F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b")]
+    if not fam.positional:
+        return cand.select(*ids, ham.alias("hamming")).distinct()
+    # (id_a, id_b, off, fi) names ONE frame pair — an offset fixes b's
+    # frame given a's — so the vote's distinct() dedups multi-band hits
+    off = [(F.col("a.frame_idx") - F.col("b.frame_idx")).alias("off")]
+    return _vote(
+        cand.select(
+            *ids, *(off if offset_tolerant else []),
+            F.col("a.frame_idx").alias("fi"),
+            F.col("a.__n").alias("n_a"), F.col("b.__n").alias("n_b"),
+        ),
+        offset_tolerant, min_match_frac,
     )
 
 
 def _gate(
     df: DataFrame,
-    bands: DataFrame,
+    hashes: DataFrame,
     fam: SignatureFamily,
     seen: DataFrame | None,
     id_col: str,
@@ -2269,39 +1973,17 @@ def _gate(
     coarse: bool,
     table: bool,
 ) -> DataFrame:
-    """The one gate body: drop rows of `df` whose already-pinned `bands`
-    verify against a smaller-id batch row or against `seen` (the parquet
-    index, the bucketed table, or None for an empty index)."""
-    budget = PHASH_COARSE_MAX_HAMMING if coarse else fam.max_hamming
-    key, probe = "band_key", bands
-    if offset_tolerant:
-        key = "chunk_key" if table else "__ck"
-        probe = _offset_rows(bands, coarse, key)
-    a, b = probe.alias("a"), probe.alias("b")
-    intra = a.join(
-        b,
-        (F.col(f"a.{key}") == F.col(f"b.{key}"))
-        & (F.col("b.__id") < F.col("a.__id")),
-    ).filter(
-        _hamming([F.col(f"a.{c}") for c in fam.row_cols],
-                 [F.col(f"b.{c}") for c in fam.row_cols]) <= budget
-    )
-    if fam.positional:
-        pos = (
-            [(F.col("a.frame_idx") - F.col("b.frame_idx")).alias("off"),
-             F.col("a.frame_idx").alias("fi")]
-            if offset_tolerant else [F.col("a.frame_idx").alias("frame_idx")]
-        )
-        drops = _vote(
-            intra.select(
-                F.col("a.__id").alias("new_id"), F.col("b.__id").alias("old_id"),
-                *pos,
-                F.col("a.__n").alias("n_new"), F.col("b.__n").alias("n_old"),
-            ),
-            offset_tolerant, min_match_frac,
-        )
-    else:
-        drops = intra.select(F.col("a.__id").alias("__id")).distinct()
+    """The one gate body: drop rows of `df` whose already-pinned hash
+    rows verify against a smaller-id batch row (the `_self_pairs` id_b
+    side) or against `seen` (the parquet index, the bucketed table, or
+    None for an empty index)."""
+    width = _width(coarse)
+    budget = _budget(fam, width)
+    key = "chunk_key" if offset_tolerant else "band_key"
+    probe = _bands(hashes, fam, width)
+    drops = _self_pairs(
+        probe, key, fam, budget, offset_tolerant, min_match_frac
+    ).select(F.col("id_b").alias("__id")).distinct()
     if seen is not None:
         hits = probe.join(
             _index_side(seen, fam, offset_tolerant, coarse, table), key
@@ -2310,30 +1992,70 @@ def _gate(
                      [F.col(c) for c in fam.index_cols]) <= budget
         )
         if fam.positional:
-            pos = (
-                [(F.col("frame_idx") - F.col("__of")).alias("off"),
-                 F.col("frame_idx").alias("fi")]
-                if offset_tolerant else ["frame_idx"]
-            )
+            off = [(F.col("__of") - F.col("frame_idx")).alias("off")]
             hits = _vote(
                 hits.select(
-                    F.col("__id").alias("new_id"), "old_id", *pos,
-                    F.col("__n").alias("n_new"), "n_old",
+                    F.col("old_id").alias("id_a"), F.col("__id").alias("id_b"),
+                    *(off if offset_tolerant else []),
+                    F.col("frame_idx").alias("fi"),
+                    F.col("n_old").alias("n_a"), F.col("__n").alias("n_b"),
                 ),
                 offset_tolerant, min_match_frac,
-            )
+            ).select(F.col("id_b").alias("__id"))
         else:
             hits = hits.select("__id")
         drops = drops.union(hits).distinct()
     return df.join(drops, df[id_col] == drops["__id"], "left_anti")
 
 
-def _pinned_bands(
+def _pinned_hashes(
     df: DataFrame, fam: SignatureFamily, every_n: int, id_col: str
 ) -> DataFrame:
-    # three plan branches consume the bands (both intra-batch sides + the
-    # index join): materialize once instead of re-decoding per branch
-    return fam.band_rows(df, every_n, id_col).localCheckpoint()
+    # three plan branches consume the batch's bands (both intra-batch
+    # sides + the index join): materialize the hash rows once instead of
+    # re-decoding per branch
+    return _hash_rows(fam.extract(df, every_n, id_col), fam).localCheckpoint()
+
+
+def media_pairs(
+    hashes: DataFrame,
+    family: SignatureFamily,
+    *,
+    max_hamming: int | None = None,
+    min_match_frac: float = VIDEO_MATCH_FRAC,
+    offset_tolerant: bool = False,
+    coarse: bool = False,
+) -> DataFrame:
+    """Every verified near-dup pair among the `family` kernel's output
+    `hashes` — the gates' intra-batch self-join, returned instead of
+    applied. Candidates are pigeonhole-banded (an equi-join on one band,
+    never all-pairs), so the result is exact for any `max_hamming` up to
+    bands - 1 (default: that budget) and refused rows never pair:
+      - (id_a, id_b, hamming) for image, image-wide and audio;
+      - (id_a, id_b, n_match, n_frames) for positional families: at
+        least `min_match_frac` of the LARGER signature's frames match at
+        the same position;
+      - (id_a, id_b, frame_offset, n_match, n_small) with
+        `offset_tolerant`: per constant shift, of the SMALLER signature
+        (trimmed and padded copies qualify; a pair may qualify at
+        several offsets).
+    id_a < id_b always. `coarse` bands on 32-bit chunks (wide: 8x32,
+    budget <= 7; one 64-bit hash: 2x32, budget <= 1): random band
+    collisions cost 2^-32 instead of 2^-16, so the candidate stream keeps
+    tracking true pairs as the corpus grows (PHASH_CANDIDATE_PROBE_r14,
+    PHASH_OFFSET_PROBE_r15)."""
+    _check_mode(family, offset_tolerant, coarse, index=False)
+    width = _width(coarse)
+    budget = _budget(family, width, max_hamming)
+    # pin the hash rows ONCE: both self-join sides otherwise plan the
+    # whole decode+hash pipeline again — one row per medium or frame is
+    # strictly cheaper to pin than a second decode pass at any scale
+    rows = _hash_rows(hashes, family).localCheckpoint()
+    key = "chunk_key" if offset_tolerant else "band_key"
+    return _self_pairs(
+        _bands(rows, family, width), key, family, budget, offset_tolerant,
+        min_match_frac,
+    )
 
 
 def _read_seen(spark: SparkSession, index_path: str, fam: SignatureFamily):
@@ -2366,19 +2088,10 @@ def media_dedup_against_index(
     vote over the SAME index; `coarse` (offset only) joins on the 2x32
     chunk keys, per-frame budget hamming <= 1."""
     _check_mode(family, offset_tolerant, coarse)
-    bands = _pinned_bands(df, family, every_n, id_col)
+    hashes = _pinned_hashes(df, family, every_n, id_col)
     return _gate(
-        df, bands, family, _read_seen(df.sparkSession, index_path, family),
+        df, hashes, family, _read_seen(df.sparkSession, index_path, family),
         id_col, min_match_frac, offset_tolerant, coarse, table=False,
-    )
-
-
-def _survivor_bands(bands: DataFrame, survivors: DataFrame, id_col: str) -> DataFrame:
-    """The band rows an append should commit for `survivors` — a
-    semi-join against the already-materialized batch bands, so the
-    ingest loop never decodes twice."""
-    return bands.join(
-        survivors.select(F.col(id_col).alias("__id")), "__id", "semi"
     )
 
 
@@ -2397,12 +2110,15 @@ def media_gate_with_bands(
     the index append and tell replay detection whether any GATE-ABLE row
     survived (pass-through rows never band)."""
     _check_mode(family, offset_tolerant, coarse)
-    bands = _pinned_bands(df, family, every_n, id_col)
+    hashes = _pinned_hashes(df, family, every_n, id_col)
     survivors = _gate(
-        df, bands, family, _read_seen(df.sparkSession, index_path, family),
+        df, hashes, family, _read_seen(df.sparkSession, index_path, family),
         id_col, min_match_frac, offset_tolerant, coarse, table=False,
     ).localCheckpoint()
-    return survivors, _survivor_bands(bands, survivors, id_col)
+    # a semi-join against the already-materialized batch hashes, so the
+    # ingest loop never decodes twice
+    kept = hashes.join(survivors.select(F.col(id_col).alias("__id")), "__id", "semi")
+    return survivors, _bands(kept, family, PHASH_BAND_BITS)
 
 
 def media_dedup_against_table(
@@ -2422,11 +2138,11 @@ def media_dedup_against_table(
     checked against `coarse` first."""
     _check_mode(family, offset_tolerant, coarse)
     spark = df.sparkSession
-    bands = _pinned_bands(df, family, every_n, id_col)
+    hashes = _pinned_hashes(df, family, every_n, id_col)
     if offset_tolerant:
         _check_bucketed_offset_bits(spark, table, coarse)
     return _gate(
-        df, bands, family, spark.table(table), id_col, min_match_frac,
+        df, hashes, family, spark.table(table), id_col, min_match_frac,
         offset_tolerant, coarse, table=True,
     )
 
@@ -2461,19 +2177,22 @@ def append_media_to_index(
     grows one row per band per admitted medium — or per SAMPLED frame —
     of ~17 bytes, ~40 for the wide family). One layout serves both the
     aligned and the offset gates."""
-    _append_band_rows(family.band_rows(survivors, every_n, id_col), index_path, family)
+    hashes = _hash_rows(family.extract(survivors, every_n, id_col), family)
+    _append_band_rows(_bands(hashes, family, PHASH_BAND_BITS), index_path, family)
 
 
-def _offset_table_rows(bands: DataFrame, fam: SignatureFamily, coarse: bool) -> DataFrame:
-    """Band rows -> the chunk_key-bucketed offset table layout (`coarse`:
-    one row per frame and 32-bit chunk, bits=32)."""
-    return _offset_rows(bands, coarse, "chunk_key").select(
+def _offset_table_rows(hashes: DataFrame, fam: SignatureFamily, coarse: bool) -> DataFrame:
+    """Positional hash rows -> the chunk_key-bucketed offset table
+    layout: one row per frame and frame-free chunk (`coarse`: 32-bit
+    chunks, bits=32)."""
+    width = _width(coarse)
+    return _bands(hashes, fam, width).select(
         F.col("__id").alias("vid"),
         F.col("__n").alias("n_frames"),
         "frame_idx",
         "chunk_key",
         F.col("__h").alias("dhash"),
-        F.lit(32 if coarse else PHASH_BAND_BITS).alias("bits"),
+        F.lit(width).alias("bits"),
         F.lit(fam.mod).alias("mod"),
     )
 
@@ -2495,10 +2214,10 @@ def append_media_to_table(
     _check_mode(family, offset_tolerant, coarse)
     if offset_tolerant:
         _check_bucketed_offset_bits(survivors.sparkSession, table, coarse)
-    bands = family.band_rows(survivors, every_n, id_col)
+    hashes = _hash_rows(family.extract(survivors, every_n, id_col), family)
     rows = (
-        _offset_table_rows(bands, family, coarse) if offset_tolerant
-        else _stored_rows(bands, family)
+        _offset_table_rows(hashes, family, coarse) if offset_tolerant
+        else _stored_rows(_bands(hashes, family, PHASH_BAND_BITS), family)
     )
     rows.write.mode("append").insertInto(table)
 
@@ -2530,25 +2249,22 @@ def bucketize_media_index(
     _recover_index(local)
     idx = spark.read.option("mergeSchema", "true").parquet(local)
     _check_index_geometry(idx, index_path, family)
-    owner = ["vid", "n_frames", "frame_idx"] if family.positional else []
-    key = "chunk_key" if offset_tolerant else "band_key"
-    if not offset_tolerant:
+    if offset_tolerant:
+        key = "chunk_key"
+        frames = idx.select(
+            F.col("vid").alias("__id"), F.col("n_frames").alias("__n"),
+            "frame_idx", F.col("dhash").alias("__h"),
+        ).distinct()
+        rows = _offset_table_rows(frames, family, coarse)
+    else:
+        key = "band_key"
+        owner = ["vid", "n_frames", "frame_idx"] if family.positional else []
         rows = idx.select(
             *owner, "band_key", *family.hash_cols, "bits", "mod"
-        ).distinct()
-    elif coarse:
-        rows = _coarse_chunk_rows(
-            idx.select(*owner, "dhash", "mod").distinct(), "dhash", key
-        ).select(*owner, key, "dhash", F.lit(32).alias("bits"), "mod")
-    else:
-        rows = idx.select(
-            *owner,
-            F.col("band_key").bitwiseAND(F.lit(_FRAME_KEY_MASK)).alias(key),
-            "dhash", "bits", "mod",
         ).distinct()
     rows.write.mode("overwrite").format("parquet").bucketBy(
         n_buckets, key
     ).saveAsTable(table)
     if offset_tolerant:
-        _stamp_bucketed_offset_bits(spark, table, 32 if coarse else PHASH_BAND_BITS)
+        _stamp_bucketed_offset_bits(spark, table, _width(coarse))
     return spark.table(table).count()

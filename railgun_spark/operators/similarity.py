@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from railgun_spark.session import local_df
 from railgun_spark.suite import extra_query, query
 
 
@@ -409,7 +410,7 @@ def exact_cosine_candidate_pairs(
         "vn",
         F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int").alias("bid"),
     )
-    tasks = _local_df(
+    tasks = local_df(
         spark,
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "ti: int, tj: int",
@@ -1787,7 +1788,7 @@ def build_ivf_index(
         )
 
     def _write_cents():
-        _local_df(
+        local_df(
             spark, [(cid, cv) for cid, cv in cents],
             "cid: int, cv: array<double>",
         ).write.mode("overwrite").parquet(f"{index_path}/centroids")
@@ -2280,14 +2281,6 @@ def _pq_luts_pandas(books: dict):
     return luts
 
 
-def _local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """session.local_df — single-partition tiny frames (a plain
-    createDataFrame costs a 32-task Python job PER evaluation)."""
-    from railgun_spark.session import local_df
-
-    return local_df(spark, rows, schema)
-
-
 def _centroid_vec_col(cents: list) -> Column:
     """The assigned centroid's vector as a Column, looked up from a
     K-entry map literal on the row's cid — the residual subtraction's
@@ -2390,7 +2383,7 @@ def _write_raw_store(rows: DataFrame, target: str, mode: str) -> None:
 
 def _write_ivf_pq_meta(spark: SparkSession, index_path: str,
                        residual: bool) -> None:
-    _local_df(
+    local_df(
         spark, [("encoding", "residual" if residual else "raw")],
         "key: string, value: string",
     ).write.mode("overwrite").parquet(f"{index_path}/meta")
@@ -2514,11 +2507,11 @@ def build_ivf_pq_index(
 
     jobs = [
         _write_codes,
-        lambda: _local_df(
+        lambda: local_df(
             spark, [(cid, cv) for cid, cv in cents],
             "cid: int, cv: array<double>",
         ).write.mode("overwrite").parquet(f"{index_path}/centroids"),
-        lambda: _local_df(
+        lambda: local_df(
             spark,
             [(m, j, cv) for m, entries in books.items() for j, cv in entries],
             "m: int, j: int, cv: array<double>",
@@ -3264,14 +3257,12 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> int:
     serialized by the same O_EXCL-style lockfile, so a concurrent
     append+compact fails loudly instead of racing the swap."""
     import os
-    import shutil
-    import stat
-    import tempfile
 
     from railgun_spark.operators.dedup import (
         _acquire_compact_lock,
         _recover_index,
         _release_compact_lock,
+        _swap_compacted,
     )
 
     vecs = _ivf_vecs_local(index_path)
@@ -3287,10 +3278,8 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> int:
             distinct = spark.read.parquet(live).distinct().localCheckpoint()
             if n is None:
                 n = distinct.count()
-            src_mode = stat.S_IMODE(os.stat(live).st_mode)
-            parent = os.path.dirname(os.path.abspath(live.rstrip("/")))
-            tmp = tempfile.mkdtemp(prefix=".ivf_compact_", dir=parent)
-            try:
+
+            def write(tmp: str) -> None:
                 if live == raw:
                     # preserve the refine store's point-lookup layout
                     # (vec_id sort + small row groups)
@@ -3299,16 +3288,8 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> int:
                     distinct.repartition(F.col("cid")).write.mode(
                         "overwrite"
                     ).partitionBy("cid").parquet(tmp)
-                os.chmod(tmp, src_mode)
-                backup = live.rstrip("/") + ".compact_backup"
-                if os.path.exists(backup):
-                    shutil.rmtree(backup)
-                os.rename(live, backup)
-                os.rename(tmp, live)
-                shutil.rmtree(backup)
-            except Exception:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
+
+            _swap_compacted(live, write)
     finally:
         _release_compact_lock(lock, lock_token)
     return n

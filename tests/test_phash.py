@@ -28,7 +28,7 @@ from railgun_spark.operators.phash import (
     image_perceptual_hashes,
     media_dedup_against_index,
     media_dedup_against_table,
-    phash_near_dup_pairs,
+    media_pairs,
 )
 from railgun_spark.streaming.ingest import (
     ingest_media_batch,
@@ -122,7 +122,7 @@ def test_phash_pairs_lossless_vs_brute_force(spark):
     )
     got = sorted(
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in phash_near_dup_pairs(df).collect()
+        for r in media_pairs(df, IMAGE).collect()
     )
     vals = {mid: h & ((1 << 64) - 1) for mid, h in hashes}
     want = sorted(
@@ -134,7 +134,7 @@ def test_phash_pairs_lossless_vs_brute_force(spark):
     assert got == want and len(want) >= len(base_vals)
 
     with pytest.raises(ValueError, match="lossless"):
-        phash_near_dup_pairs(df, max_hamming=PHASH_BANDS)
+        media_pairs(df, IMAGE, max_hamming=PHASH_BANDS)
 
 
 def _media_rows(ids_and_hashes):
@@ -545,7 +545,6 @@ def test_video_phash_pairs_semantics(spark):
     from railgun_spark.operators.phash import (
         _phash_y4m,
         video_perceptual_hashes,
-        video_phash_near_dup_pairs,
     )
 
     base = [_phash_target(300 + f, 0) for f in range(3)]
@@ -562,7 +561,7 @@ def test_video_phash_pairs_semantics(spark):
         spark.createDataFrame(rows, MEDIA_SCHEMA), every_n=1
     )
     got = {(r["id_a"], r["id_b"]): (r["n_match"], r["n_frames"])
-           for r in video_phash_near_dup_pairs(fh).collect()}
+           for r in media_pairs(fh, VIDEO).collect()}
     assert got == {(1, 2): (3, 3)}
 
 
@@ -965,12 +964,9 @@ def test_wide_block_dhash_kernel_and_craft():
 def test_wide_pairs_lossless_vs_brute_force(spark):
     """The 16-band pigeonhole join equals the brute-force 256-bit
     hamming <= 15 definition on adversarial word sets (band-boundary
-    flips, sign bits, cross-word spreads)."""
-    from railgun_spark.operators.phash import (
-        PHASH_WIDE_BANDS,
-        PHASH_WIDE_MAX_HAMMING,
-        phash_wide_near_dup_pairs,
-    )
+    flips, sign bits, cross-word spreads); the coarse 8x32 banding equals
+    it at hamming <= 7 and refuses 8."""
+    from railgun_spark.operators.phash import PHASH_WIDE_MAX_HAMMING
 
     rng = _rng(29)
     quads = []
@@ -997,23 +993,24 @@ def test_wide_pairs_lossless_vs_brute_force(spark):
     df = spark.createDataFrame(
         rows, "media_id: long, h0: long, h1: long, h2: long, h3: long, refused: string"
     )
-    got = sorted(
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in phash_wide_near_dup_pairs(df).collect()
-    )
 
     def ham(a, b):
         return sum(bin(x ^ y).count("1") for x, y in zip(vals[a], vals[b]))
 
-    want = sorted(
-        (a, b, ham(a, b))
-        for a in vals for b in vals
-        if a < b and ham(a, b) <= PHASH_WIDE_MAX_HAMMING
-    )
-    assert got == want and len(want) >= len(quads)
+    for coarse, budget in ((False, PHASH_WIDE_MAX_HAMMING), (True, 7)):
+        got = sorted(
+            (r["id_a"], r["id_b"], r["hamming"])
+            for r in media_pairs(df, IMAGE_WIDE, coarse=coarse).collect()
+        )
+        want = sorted(
+            (a, b, ham(a, b))
+            for a in vals for b in vals
+            if a < b and ham(a, b) <= budget
+        )
+        assert got == want and len(want) >= len(quads)
 
-    with pytest.raises(ValueError, match="lossless"):
-        phash_wide_near_dup_pairs(df, max_hamming=PHASH_WIDE_BANDS)
+        with pytest.raises(ValueError, match="lossless"):
+            media_pairs(df, IMAGE_WIDE, max_hamming=budget + 1, coarse=coarse)
 
 
 def test_wide_gate_and_geometry_guard(spark, tmp_path):
@@ -1088,8 +1085,6 @@ def test_video_offset_pairs_and_gate(spark, tmp_path):
     from railgun_spark.operators.phash import (
         _phash_y4m,
         video_perceptual_hashes,
-        video_phash_near_dup_pairs,
-        video_phash_near_dup_pairs_offset,
     )
 
     base = [_phash_target(700 + f, 0) for f in range(4)]
@@ -1105,16 +1100,16 @@ def test_video_offset_pairs_and_gate(spark, tmp_path):
     )
     got = {
         (r["id_a"], r["id_b"]): (r["frame_offset"], r["n_match"], r["n_small"])
-        for r in video_phash_near_dup_pairs_offset(fh).collect()
+        for r in media_pairs(fh, VIDEO, offset_tolerant=True).collect()
     }
     # pair (1,2): video 1's frame f+1 matches video 2's frame f -> off +1,
     # all 3 of the smaller signature's frames
     assert got == {(1, 2): (1, 3, 3)}
     # the aligned mode misses the trimmed copy entirely
-    assert video_phash_near_dup_pairs(fh).count() == 0
+    assert media_pairs(fh, VIDEO).count() == 0
 
     with pytest.raises(ValueError, match="lossless"):
-        video_phash_near_dup_pairs_offset(fh, max_hamming=PHASH_BANDS)
+        media_pairs(fh, VIDEO, max_hamming=PHASH_BANDS, offset_tolerant=True)
 
     # gate: index video 1 through the ALIGNED gate's append, then an
     # offset-gated batch must reject the trimmed re-upload and admit the
@@ -1604,7 +1599,6 @@ def test_audio_chunk_offset_pairs_and_gate(spark, tmp_path):
         _phash_wav_chunks,
         audio_chunk_fingerprints,
         audio_fingerprint64,
-        audio_phash_near_dup_pairs_offset,
     )
     from railgun_spark.operators.multimodal import _audio_pcm_frames
 
@@ -1619,7 +1613,8 @@ def test_audio_chunk_offset_pairs_and_gate(spark, tmp_path):
     ch = audio_chunk_fingerprints(spark.createDataFrame(rows, MEDIA_SCHEMA))
     got = {
         (r["id_a"], r["id_b"]): (r["chunk_offset"], r["n_match"], r["n_small"])
-        for r in audio_phash_near_dup_pairs_offset(ch).collect()
+        for r in media_pairs(ch, AUDIO_CHUNK, offset_tolerant=True)
+        .withColumnRenamed("frame_offset", "chunk_offset").collect()
     }
     assert got == {(1, 2): (1, 3, 3)}
 
@@ -1633,7 +1628,7 @@ def test_audio_chunk_offset_pairs_and_gate(spark, tmp_path):
     assert bin(gb ^ gt).count("1") > PHASH_MAX_HAMMING
 
     with pytest.raises(ValueError, match="lossless"):
-        audio_phash_near_dup_pairs_offset(ch, max_hamming=PHASH_BANDS)
+        media_pairs(ch, AUDIO_CHUNK, max_hamming=PHASH_BANDS, offset_tolerant=True)
 
     # gate: index clip 1 through the aligned chunked gate's append; an
     # offset-gated batch must reject the trimmed re-upload and admit the
@@ -1835,7 +1830,6 @@ def test_video_offset_coarse_pairs(spark):
         PHASH_COARSE_MAX_HAMMING,
         _phash_y4m,
         video_perceptual_hashes,
-        video_phash_near_dup_pairs_offset,
     )
 
     base = [_phash_target(760 + f, 0) for f in range(4)]
@@ -1849,21 +1843,22 @@ def test_video_offset_coarse_pairs(spark):
     )
     fine = {
         (r["id_a"], r["id_b"]): (r["frame_offset"], r["n_match"], r["n_small"])
-        for r in video_phash_near_dup_pairs_offset(
-            fh, max_hamming=1
+        for r in media_pairs(
+            fh, VIDEO, max_hamming=1, offset_tolerant=True
         ).collect()
     }
     coarse = {
         (r["id_a"], r["id_b"]): (r["frame_offset"], r["n_match"], r["n_small"])
-        for r in video_phash_near_dup_pairs_offset(
-            fh, max_hamming=PHASH_COARSE_MAX_HAMMING, coarse=True
+        for r in media_pairs(
+            fh, VIDEO, max_hamming=PHASH_COARSE_MAX_HAMMING,
+            offset_tolerant=True, coarse=True,
         ).collect()
     }
     assert coarse == fine == {(1, 2): (1, 3, 3)}
 
     # budget guard: coarse pigeonhole is lossless only for hamming <= 1
     with pytest.raises(ValueError, match="lossless"):
-        video_phash_near_dup_pairs_offset(fh, max_hamming=2, coarse=True)
+        media_pairs(fh, VIDEO, max_hamming=2, offset_tolerant=True, coarse=True)
 
 
 def test_video_offset_coarse_gate(spark, tmp_path):
@@ -2063,3 +2058,181 @@ def test_bucketed_coarse_offset_video_index(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         for t in (table, fine_table):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+# On-disk band rows for one fixed crafted medium per family / table
+# layout, recorded from the writer before the pair and gate bodies were
+# unified: {non-key columns: sorted band_key or chunk_key values}. Any
+# drift in the stored key encoding, column names or bits/mod tags breaks
+# every index already on disk, so these are literals, not re-derivations.
+_SIGN = 1 << 63
+_V_ROWS = {
+    (1, 2, 0, -8291580938710487918, 16): [60562, 74178, 156433, 232686],
+    (1, 2, 1, 411687513358362068, 16): [288212, 374832, 433052, 460214],
+}
+_INDEX_COLS = ["band_key", "dhash", "bits", "mod"]
+_POS_INDEX_COLS = ["vid", "n_frames", "frame_idx", "band_key", "dhash", "bits", "mod"]
+_GOLDEN_INDEX = {
+    "image": (_INDEX_COLS, {
+        (-8192712136519261644, 16): [57908, 129980, 172983, 233037],
+    }),
+    "image-wide": (["band_key", "h0", "h1", "h2", "h3", "bits", "mod"], {
+        (711458392371561979, 1114483266343501346, 934352852285092187,
+         119947881030269677, 16): [
+            1531, 93639, 170915, 199135, 294434, 343685, 422048, 462711,
+            553307, 655187, 687351, 724215, 834285, 874590, 926710, 983466,
+        ],
+    }),
+    "audio": (_INDEX_COLS, {
+        (-8192712136519261644, 16): [57908, 129980, 172983, 233037],
+    }),
+    "video": (_POS_INDEX_COLS, _V_ROWS),
+    "audio-chunk": (_POS_INDEX_COLS, _V_ROWS),
+}
+_GOLDEN_TABLE = {
+    "aligned": (_POS_INDEX_COLS, {
+        **_V_ROWS,
+        (2, 1, 0, 816068468346854677, 16): [7445, 114742, 147954, 199507],
+    }),
+    "offset": (["vid", "n_frames", "frame_idx", "chunk_key", "dhash", "bits", "mod"], {
+        (1, 2, 0, -8291580938710487918, 16): [60562, 74178, 156433, 232686],
+        (1, 2, 1, 411687513358362068, 16): [26068, 112688, 170908, 198070],
+        (2, 1, 0, 816068468346854677, 16): [7445, 114742, 147954, 199507],
+    }),
+    "coarse": (["vid", "n_frames", "frame_idx", "chunk_key", "dhash", "bits", "mod"], {
+        (1, 2, 0, -8291580938710487918, 32): [566422674, 6659400465],
+        (1, 2, 1, 411687513358362068, 32): [3090179540, 4390820764],
+        (2, 1, 0, 816068468346854677, 32): [3224771861, 4484973042],
+    }),
+}
+
+
+def _keyed_rows(df, mod):
+    """Stored rows -> {non-key columns minus mod: sorted keys}, checking
+    every row carries `mod`."""
+    key = "chunk_key" if "chunk_key" in df.columns else "band_key"
+    out = {}
+    for r in df.collect():
+        assert r["mod"] == mod
+        rest = tuple(r[c] for c in df.columns if c not in (key, "mod"))
+        out.setdefault(rest, []).append(r[key])
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def _golden_media(mod):
+    """One crafted medium per family; the image/audio hash and the first
+    frame hash carry the sign bit, so chunk 3 of a negative long is
+    pinned too."""
+    from railgun_spark.operators.phash import (
+        FAMILIES,
+        _phash_wav,
+        _phash_wav_chunks,
+        _phash_wide_pgm,
+        _phash_wide_target,
+        _phash_y4m,
+    )
+
+    h = _phash_target(5, 0) | _SIGN
+    frames = [_phash_target(500, 0) | _SIGN, _phash_target(501, 0)]
+    payload = {
+        "image": ("image", _phash_pgm(h)),
+        "image-wide": ("image", _phash_wide_pgm(_phash_wide_target(9, 1))),
+        "audio": ("audio", _phash_wav(h)),
+        "video": ("video", _phash_y4m(frames)),
+        "audio-chunk": ("audio", _phash_wav_chunks(frames)),
+    }[mod]
+    return FAMILIES[mod], [(1, payload[0], bytearray(payload[1]), {})]
+
+
+@pytest.mark.parametrize("mod", list(_GOLDEN_INDEX))
+def test_index_band_rows_golden(spark, tmp_path, mod):
+    """`append_media_to_index` writes exactly the recorded rows."""
+    fam, rows = _golden_media(mod)
+    idx = str(tmp_path / "idx")
+    append_media_to_index(spark.createDataFrame(rows, MEDIA_SCHEMA), idx, fam, every_n=1)
+    got = spark.read.parquet(idx)
+    cols, want = _GOLDEN_INDEX[mod]
+    assert got.columns == cols
+    assert _keyed_rows(got, mod) == want
+
+
+@pytest.mark.parametrize("layout", list(_GOLDEN_TABLE))
+def test_table_band_rows_golden(spark, tmp_path, layout):
+    """`bucketize_media_index` then `append_media_to_table` write exactly
+    the recorded rows for the aligned, offset and coarse table layouts."""
+    import shutil
+
+    from railgun_spark.operators.phash import _phash_y4m
+
+    offset, coarse = layout != "aligned", layout == "coarse"
+    fam, first = _golden_media("video")
+    second = [(2, "video", bytearray(_phash_y4m([_phash_target(502, 2)])), {})]
+    idx = str(tmp_path / "vidx")
+    append_media_to_index(spark.createDataFrame(first, MEDIA_SCHEMA), idx, fam, every_n=1)
+    table = f"phash_golden_{layout}"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    shutil.rmtree(f"spark-warehouse/{table}", ignore_errors=True)
+    try:
+        bucketize_media_index(
+            spark, idx, table, fam, n_buckets=4,
+            offset_tolerant=offset, coarse=coarse,
+        )
+        append_media_to_table(
+            spark.createDataFrame(second, MEDIA_SCHEMA), table, fam, every_n=1,
+            offset_tolerant=offset, coarse=coarse,
+        )
+        got = spark.table(table)
+        cols, want = _GOLDEN_TABLE[layout]
+        assert got.columns == cols
+        assert _keyed_rows(got, "video") == want
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+@pytest.mark.parametrize(
+    "mod,offset_tolerant,coarse",
+    [("image", False, False), ("image-wide", False, False), ("audio", False, False)]
+    + [(m, o, c) for m in ("video", "audio-chunk")
+       for o, c in ((False, False), (True, False), (True, True))],
+)
+def test_gate_drops_equal_pair_id_b(spark, tmp_path, mod, offset_tolerant, coarse):
+    """One body: against an empty index, the ids the gate drops are
+    exactly the id_b side of `media_pairs` over the same batch."""
+    from railgun_spark.operators.phash import (
+        FAMILIES,
+        _phash_wav,
+        _phash_wav_chunks,
+        _phash_wide_pgm,
+        _phash_wide_target,
+        _phash_y4m,
+    )
+
+    fam = FAMILIES[mod]
+    x, z = _phash_target(5, 0), _phash_target(40, 0)
+    if mod == "image-wide":
+        kind, payloads = "image", [
+            _phash_wide_pgm(_phash_wide_target(g, v))
+            for g, v in ((5, 0), (5, 1), (5, 2), (40, 0))
+        ]
+    elif not fam.positional:
+        kind, enc = ("image", _phash_pgm) if mod == "image" else ("audio", _phash_wav)
+        payloads = [enc(h) for h in (x, x ^ 1, x ^ 0b10000000000000000011, z)]
+    else:
+        kind, enc = ("video", _phash_y4m) if mod == "video" else ("audio", _phash_wav_chunks)
+        xs = [_phash_target(700 + f, 0) for f in range(4)]
+        zs = [_phash_target(800 + f, 0) for f in range(4)]
+        payloads = [enc(fs) for fs in (
+            xs, [h ^ 1 for h in xs], [h ^ 1 for h in xs[1:]], zs,
+        )]
+    rows = [(i + 1, kind, bytearray(p), {}) for i, p in enumerate(payloads)]
+    rows.append((len(rows) + 1, kind, bytearray(b"JUNK"), {}))
+    batch = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    kw = {"offset_tolerant": offset_tolerant, "coarse": coarse}
+
+    survivors = media_dedup_against_index(
+        batch, str(tmp_path / "empty"), fam, every_n=1, **kw
+    )
+    dropped = {r[0] for r in rows} - {r["media_id"] for r in survivors.collect()}
+    pairs = media_pairs(fam.extract(batch, 1, "media_id"), fam, **kw)
+    assert dropped == {r["id_b"] for r in pairs.collect()}
+    assert dropped
