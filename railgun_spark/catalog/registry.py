@@ -15,8 +15,9 @@ Reference parity:
   (ServiceExecHandler.go:132)
 - workflow exec runs jobs sequentially, sharing variables
   (railgun/handlers/WorkflowExecHandler.go:79-186)
-- TTL'd dataframe cache keyed by source mtime
-  (railgun/cache/Cache.go:25-79, ServiceExecHandler.go:159-278)
+- one TTL'd, source-mtime-stamped memo type (`Memo`) for parsed frames,
+  mask grids and tile features (railgun/cache/Cache.go:25-79,
+  ServiceExecHandler.go:159-278); server.py reuses it for encoded bodies
 """
 
 from __future__ import annotations
@@ -43,7 +44,6 @@ from railgun_spark.catalog.models import (
 from railgun_spark.dfl import run_pipeline
 from railgun_spark.dfl import parser as _dfl_parser
 from railgun_spark.dfl.ast import Literal
-from railgun_spark.dfl.compiler import Context, compile_expr
 from railgun_spark.sources import formats
 
 
@@ -70,11 +70,82 @@ _PLURAL = {
 }
 
 
-@dataclass
-class _CacheEntry:
-    df: DataFrame
-    mtime: float
-    loaded_at: float
+# parsed frames held at once for DataStore uris that read request
+# $variables: each distinct value resolves to a new key, and each frame is
+# a ``.cache()``d dataset in executor memory. Frames of uris without `$`
+# are not counted here: the catalog's DataStores bound them.
+_VARIABLE_FRAME_CAPACITY = 16
+
+
+def _source_mtime(uri: str) -> float:
+    """The cache stamp of a datastore uri: its mtime, or -1 for sources
+    without one (stored_query://, jdbc:), which fall back to TTL only."""
+    return os.path.getmtime(uri) if os.path.exists(uri) else -1.0
+
+
+class Memo:
+    """Bounded TTL memo behind every serve-path cache — the reference's
+    one cache (cache/Cache.go:25-79). An entry is served while its stamp
+    matches and it is younger than ``ttl``; a full memo drops its oldest
+    insertion. ``clear()`` bumps a generation: a value computed under an
+    older generation goes back to its caller but is never stored.
+    Concurrent computes of one key share the first value stored. ``drop``
+    releases each value that leaves the memo (frames: ``unpersist``)."""
+
+    def __init__(self, capacity: int, drop=None):
+        self.capacity = capacity
+        self._drop = drop
+        self._entries: dict = {}  # key -> (stamp, stored_at, value)
+        self._gen = 0
+        self._lock = _threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get(self, key, stamp, ttl: float, compute):
+        now = time.time()
+        with self._lock:
+            gen = self._gen
+            ent = self._entries.get(key)
+            if ent is not None and ent[0] == stamp and now - ent[1] < ttl:
+                return ent[2]
+            # a stale entry is released BEFORE the recompute: Spark keeps
+            # one cache entry per equal frame plan, so a re-read of the
+            # same uri would otherwise be served the old cached data
+            gone = [self._entries.pop(key)] if ent is not None else []
+        self._release(gone)
+        value = compute()
+        with self._lock:
+            ent = self._entries.get(key)
+            if gen != self._gen:
+                # computed under an older definition: the caller gets it,
+                # the memo does not. It is released unless a current entry
+                # holds the key, whose equal frame plan shares its one
+                # Spark cache entry.
+                gone = [] if ent is not None else [(stamp, now, value)]
+            elif ent is not None and ent[0] == stamp:
+                # a concurrent compute of this key landed first: share its
+                # value, for the same reason
+                return ent[2]
+            else:
+                gone = [self._entries.pop(key)] if ent is not None else []
+                if len(self._entries) >= self.capacity:
+                    gone.append(self._entries.pop(next(iter(self._entries))))
+                self._entries[key] = (stamp, now, value)
+        self._release(gone)
+        return value
+
+    def clear(self) -> None:
+        with self._lock:
+            self._gen += 1
+            gone = list(self._entries.values())
+            self._entries.clear()
+        self._release(gone)
+
+    def _release(self, entries: list) -> None:
+        if self._drop is not None:
+            for _, _, value in entries:
+                self._drop(value)
 
 
 @dataclass
@@ -84,27 +155,22 @@ class Catalog:
     objects: dict[str, dict[str, object]] = field(
         default_factory=lambda: {p: {} for p in _PLURAL.values()}
     )
-    _df_cache: dict[str, _CacheEntry] = field(default_factory=dict)
     _service_vars: dict[str, dict] = field(default_factory=dict)
-    # (layer, z, x, y, mask_zoom, threshold) -> (source mtime, loaded_at,
-    # grid): the reference caches layer results with the same 5-min TTL
-    # (cache/Cache.go:79); here the cached unit is the DRIVER-TINY mask
-    # grid (<= 2^8 x 2^8 ints), not the frame, because the groupBy grid is
-    # where the serve wall goes (SERVE_CONC_SF1_r15: ~1.1-1.3 s / request)
-    _grid_cache: dict[tuple, tuple] = field(default_factory=dict)
-    _grid_cache_max: int = 1024
-    _grid_cache_lock: object = field(default_factory=_threading.Lock)
-    # data-tile feature lists (layer_tile_features) — same TTL/mtime/
-    # generation discipline as the mask grids, separate dict with a
-    # smaller cap because a cached unit is up to `limit` GeoJSON
-    # features, not a 2^8 x 2^8 int grid
-    _tile_cache: dict[tuple, tuple] = field(default_factory=dict)
-    _tile_cache_max: int = 256
-    # bumped (under the lock) by every update/delete invalidation: a grid
-    # computed OUTSIDE the lock is inserted only if the generation it
-    # started under is still current, so an invalidation landing
-    # mid-compute discards the stale grid instead of caching it for TTL
-    _grid_cache_gen: int = 0
+    # (resolved uri, format) -> parsed, cached source frame; unbounded for
+    # uris without `$`, see _VARIABLE_FRAME_CAPACITY
+    _frames: Memo = field(
+        default_factory=lambda: Memo(float("inf"), drop=DataFrame.unpersist)
+    )
+    _variable_frames: Memo = field(
+        default_factory=lambda: Memo(_VARIABLE_FRAME_CAPACITY, drop=DataFrame.unpersist)
+    )
+    # (layer, z, x, y, mask_zoom, threshold) -> mask grid: the DRIVER-TINY
+    # (<= 2^8 x 2^8 ints) unit, because the groupBy grid is where the
+    # serve wall goes (SERVE_CONC_SF1_r15: ~1.1-1.3 s / request)
+    _grids: Memo = field(default_factory=lambda: Memo(1024))
+    # (layer, z, x, y, limit, user_dfl, buffer_tiles) -> GeoJSON feature
+    # list: smaller cap, a unit holds up to `limit` features
+    _tiles: Memo = field(default_factory=lambda: Memo(256))
 
     # ---- CRUD (GroupHandler/ItemHandler semantics) ----
     def add(self, obj) -> None:
@@ -124,15 +190,7 @@ class Catalog:
         if obj.name not in bucket:
             raise NotFound(f"{type(obj).__name__} {obj.name!r}")
         bucket[obj.name] = obj
-        if isinstance(obj, (Layer, DataStore)):
-            # a redefined layer expression / datastore uri invalidates any
-            # cached mask grids / tile features computed under the old
-            # definition (both caches are driver-bounded; selective purge
-            # isn't worth it)
-            with self._grid_cache_lock:
-                self._grid_cache_gen += 1
-                self._grid_cache.clear()
-                self._tile_cache.clear()
+        self._invalidate(type(obj))
 
     def list(self, kind: type) -> list:
         return sorted(self.objects[_PLURAL[kind]].values(), key=lambda o: o.name)
@@ -144,13 +202,21 @@ class Catalog:
         if deps:
             raise DependencyError(f"{kind.__name__} {name!r} is used by {deps}")
         del self.objects[_PLURAL[kind]][name]
+        self._invalidate(kind)
+
+    def _invalidate(self, kind: type) -> None:
+        """Drop what was cached under a definition that just changed: a
+        datastore's parsed frames and everything derived from them, a
+        layer's grids and tiles. Clearing every frame frees the replaced
+        one at once and keeps ``_frames`` within the live DataStores; the
+        other memos are driver-bounded, so a selective purge is not worth
+        it."""
+        if kind is DataStore:
+            self._frames.clear()
+            self._variable_frames.clear()
         if kind in (Layer, DataStore):
-            # delete-then-re-add under the same name must not serve grids
-            # computed under the deleted definition (same rule as update)
-            with self._grid_cache_lock:
-                self._grid_cache_gen += 1
-                self._grid_cache.clear()
-                self._tile_cache.clear()
+            self._grids.clear()
+            self._tiles.clear()
 
     def _dependents(self, kind: type, name: str) -> list[str]:
         deps: list[str] = []
@@ -206,7 +272,6 @@ class Catalog:
             return uri
         if isinstance(node, Literal):
             return str(node.value)
-        ctx = Context(df=None, variables=dict(variables))
         # static evaluation: string concat of literals/variables
         from railgun_spark.dfl.ast import Binary, Variable
 
@@ -250,18 +315,11 @@ class Catalog:
             from railgun_spark.sources.jdbc import read_jdbc
 
             return read_jdbc(self.spark, uri)
-        mtime = os.path.getmtime(uri) if os.path.exists(uri) else -1.0
-        now = time.time()
-        ent = self._df_cache.get(uri)
-        if ent and ent.mtime == mtime and now - ent.loaded_at < self.ttl_seconds:
-            return ent.df
-        if ent is not None:
-            # expired or stale: release executor memory before re-caching
-            ent.df.unpersist()
-        df = formats.read(self.spark, uri, fmt=ds.format)
-        df = df.cache()
-        self._df_cache[uri] = _CacheEntry(df=df, mtime=mtime, loaded_at=now)
-        return df
+        memo = self._variable_frames if "$" in ds.uri else self._frames
+        return memo.get(
+            (uri, ds.format), _source_mtime(uri), self.ttl_seconds,
+            lambda: formats.read(self.spark, uri, fmt=ds.format).cache(),
+        )
 
     def layer_frame(self, name: str, variables: dict | None = None) -> DataFrame:
         layer: Layer = self.get(Layer, name)
@@ -271,89 +329,56 @@ class Catalog:
             df = run_pipeline(df, layer.expression, merged)
         return df
 
+    def _layer_memo(self, memo: Memo, name: str, key: tuple, compute):
+        """``compute(frame, layer_extent)`` for layer ``name`` through
+        ``memo``, stamped with the layer's source mtime: a warm repeat
+        skips the Spark job; a datastore rewrite (mtime), a layer or
+        datastore update or delete, or TTL expiry recomputes."""
+        layer: Layer = self.get(Layer, name)
+        ds: DataStore = self.get(DataStore, layer.datastore)
+        uri = self._resolve_uri(ds.uri, layer.defaults or {})
+        extent = tuple(layer.extent) if layer.extent else None
+        return memo.get(
+            (name, *key), _source_mtime(uri), self.ttl_seconds,
+            lambda: compute(self.layer_frame(name), extent),
+        )
+
     def layer_mask_grid(
         self, name: str, z: int, x: int, y: int,
         mask_zoom: int, threshold: int,
     ) -> list:
-        """TTL + source-mtime cached mask grid for the tile mask route —
-        the reference's layer-cache behavior (cache/Cache.go:79, 5-min
-        TTL) applied at the grid level: a warm repeat skips the whole
-        groupBy, a datastore rewrite (mtime change), layer/datastore
-        update, or TTL expiry recomputes. stored_query:// and jdbc:
-        sources have no mtime and fall back to TTL-only, exactly the
-        reference's behavior."""
-        layer: Layer = self.get(Layer, name)
-        ds: DataStore = self.get(DataStore, layer.datastore)
-        uri = self._resolve_uri(ds.uri, layer.defaults or {})
-        mtime = os.path.getmtime(uri) if os.path.exists(uri) else -1.0
-        key = (name, z, x, y, mask_zoom, threshold)
-        now = time.time()
-        with self._grid_cache_lock:
-            ent = self._grid_cache.get(key)
-            gen = self._grid_cache_gen
-        if ent and ent[0] == mtime and now - ent[1] < self.ttl_seconds:
-            return ent[2]
-        from railgun_spark.geo.serving import tile_mask_grid
+        """Cached mask grid for the tile mask route — the reference's
+        layer cache (cache/Cache.go:79, 5-min TTL) applied at the grid
+        level, so a warm repeat skips the whole groupBy."""
+        from railgun_spark.geo import serving
 
-        grid = tile_mask_grid(
-            self.layer_frame(name), z, x, y,
-            mask_zoom=mask_zoom, threshold=threshold,
-            layer_extent=tuple(layer.extent) if layer.extent else None,
+        return self._layer_memo(
+            self._grids, name, (z, x, y, mask_zoom, threshold),
+            lambda df, extent: serving.tile_mask_grid(
+                df, z, x, y, mask_zoom=mask_zoom, threshold=threshold,
+                layer_extent=extent,
+            ),
         )
-        with self._grid_cache_lock:
-            # bounded: drop the oldest insertion (dict order) so a tile
-            # crawler can't grow driver memory without bound. Locked:
-            # the serve path is threaded and two concurrent evictions
-            # could otherwise race iter() against a resize. Generation
-            # check: a layer/datastore update that landed while this
-            # grid was computing bumped the generation, so the grid was
-            # built under a stale definition — return it to this caller
-            # (it read a consistent snapshot) but never cache it.
-            if gen == self._grid_cache_gen:
-                if len(self._grid_cache) >= self._grid_cache_max:
-                    self._grid_cache.pop(next(iter(self._grid_cache)), None)
-                self._grid_cache[key] = (mtime, now, grid)
-        return grid
 
     def layer_tile_features(
         self, name: str, z: int, x: int, y: int,
         limit: int | None = None, user_dfl: str | None = None,
         buffer_tiles: int = 1,
     ) -> list:
-        """TTL + source-mtime cached data-tile features — the reference
-        caches layer DATA with the same 5-min TTL (cache/Cache.go:25-79)
-        that layer_mask_grid applies to mask grids; without it the data
-        route recomputed the bbox filter + collect per request (warm
-        tiles_data p50 0.38-0.43 s at 12-wide sf1, SERVE_CONC_SF1_r16,
-        vs the mask's 31-36 ms). The cached unit is the driver-resident
-        GeoJSON feature list (bounded by `limit`); invalidation is
-        layer_mask_grid's exactly: datastore rewrite (mtime), layer/
-        datastore update or delete (generation counter discards grids
-        AND mid-compute results), TTL expiry."""
-        layer: Layer = self.get(Layer, name)
-        ds: DataStore = self.get(DataStore, layer.datastore)
-        uri = self._resolve_uri(ds.uri, layer.defaults or {})
-        mtime = os.path.getmtime(uri) if os.path.exists(uri) else -1.0
-        key = (name, z, x, y, limit, user_dfl, buffer_tiles)
-        now = time.time()
-        with self._grid_cache_lock:
-            ent = self._tile_cache.get(key)
-            gen = self._grid_cache_gen
-        if ent and ent[0] == mtime and now - ent[1] < self.ttl_seconds:
-            return ent[2]
-        from railgun_spark.geo.serving import tile_data
+        """Cached data-tile features — the reference caches layer DATA
+        with the same TTL (cache/Cache.go:25-79); without it the data
+        route re-ran the bbox filter + collect per request (warm p50
+        0.38-0.43 s at 12-wide sf1, SERVE_CONC_SF1_r16, vs the mask's
+        31-36 ms). The cached unit is the GeoJSON feature list."""
+        from railgun_spark.geo import serving
 
-        feats = tile_data(
-            self.layer_frame(name), z, x, y,
-            layer_extent=tuple(layer.extent) if layer.extent else None,
-            user_dfl=user_dfl, limit=limit, buffer_tiles=buffer_tiles,
+        return self._layer_memo(
+            self._tiles, name, (z, x, y, limit, user_dfl, buffer_tiles),
+            lambda df, extent: serving.tile_data(
+                df, z, x, y, layer_extent=extent,
+                user_dfl=user_dfl, limit=limit, buffer_tiles=buffer_tiles,
+            ),
         )
-        with self._grid_cache_lock:
-            if gen == self._grid_cache_gen:
-                if len(self._tile_cache) >= self._tile_cache_max:
-                    self._tile_cache.pop(next(iter(self._tile_cache)), None)
-                self._tile_cache[key] = (mtime, now, feats)
-        return feats
 
     def exec_service(self, name: str, variables: dict | None = None):
         """cache -> defaults -> request variable merge

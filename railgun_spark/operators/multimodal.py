@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from railgun_spark.session import spread_scan
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -52,45 +54,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-# Below this estimated input size a LIGHT decode stage (byte arithmetic,
-# header sniffing) finishes faster on the scan partitions than the
-# spread-shuffle costs; real codecs (heavy=True) always spread.
-SPREAD_MIN_BYTES = 32 << 20
-
-
-def spread_for_decode(
-    df: DataFrame, heavy: bool = False, min_bytes: int = SPREAD_MIN_BYTES
-) -> DataFrame:
-    """Spread a Python-decode-bound frame across the session's cores.
-
-    CPU-bound Arrow decode stages must not be bounded by input FILE
-    SPLITS: a single small parquet file scans as ONE partition, so one
-    core would do all the decoding. Narrow inputs are repartitioned up
-    to ``defaultParallelism``. Three cases skip the shuffle:
-
-    - the frame already carries >= defaultParallelism partitions (any
-      real scan at 100 TB) — the exchange buys nothing;
-    - the frame is streaming — micro-batch parallelism follows the
-      ingest file splits (keep producer files sized to the cluster's
-      cores); a per-batch shuffle needs the shuffle service for no
-      stable benefit;
-    - ``heavy`` is False and Catalyst's size estimate is under
-      ``min_bytes`` — a light decode (byte arithmetic, header fields)
-      over a few MB is faster on one core than the round-trip shuffle.
-
-    ``heavy=True`` marks real-codec stages (JPEG/MP3/FLAC…): tens of
-    ms/row CPU dominates any shuffle at any size, so narrow inputs
-    always spread. Unknown stats (Catalyst's 8-EiB default) count as
-    big — the safe direction.
-
-    Delegates to ``session.spread_scan`` (r17): the same input-skew fix
-    applies to corpus-wide hash/shingle passes, so the logic lives once.
-    """
-    from railgun_spark.session import spread_scan
-
-    return spread_scan(df, heavy=heavy, min_bytes=min_bytes)
 
 
 def fake_decode(content: bytes, kind: str) -> dict:
@@ -207,7 +170,7 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     keep MEDIA_SCHEMA with meta recording the source dimensions, so
     resize stages compose with extract_features/decode_media downstream.
     Non-image rows pass through untouched. Spread the input with
-    spread_for_decode(heavy=True) if it comes from few file splits."""
+    spread_scan(heavy=True) if it comes from few file splits."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -293,7 +256,7 @@ _FEAT_SUM_SQL = " + ".join(
     tags=("multimodal", "pandas-udf"),
 )
 def multimodal_features(spark, sf_dir: str) -> DataFrame:
-    media = spread_for_decode(media_frame(spark, sf_dir))
+    media = spread_scan(media_frame(spark, sf_dir))
     feats = extract_features(media)
     return feats.select(
         "media_id",
@@ -330,7 +293,7 @@ def multimodal_features(spark, sf_dir: str) -> DataFrame:
     tags=("multimodal", "mp3", "pandas-udf"),
 )
 def multimodal_mp3_features(spark, sf_dir: str) -> DataFrame:
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 19 == 0)
         .select("doc_id"),
@@ -534,7 +497,7 @@ _REFUSAL_CASE_SQL = "CASE CAST((doc_id // 13) % 8 AS INT) " + " ".join(
     tags=("multimodal", "mp3", "observability", "pandas-udf"),
 )
 def mp3_refusal_report(spark, sf_dir: str) -> DataFrame:
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 13 == 0)
         .select("doc_id", "source"),
@@ -982,7 +945,7 @@ _MEDIA_REASON_CASE = f"CASE CAST((doc_id // 7) % {len(MEDIA_CRAFT_CLASSES)} AS I
     tags=("multimodal", "observability", "pandas-udf"),
 )
 def media_refusal_report(spark, sf_dir: str) -> DataFrame:
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 7 == 0)
         .select("doc_id", "source"),
@@ -1048,7 +1011,7 @@ def media_refusal_report(spark, sf_dir: str) -> DataFrame:
     tags=("multimodal", "pandas-udf"),
 )
 def gif_animation_report(spark, sf_dir: str) -> DataFrame:
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 5 == 0)
         .select("doc_id", "source"),
@@ -1118,7 +1081,7 @@ def gif_animation_report(spark, sf_dir: str) -> DataFrame:
     tags=("multimodal", "pandas-udf"),
 )
 def multimodal_resize_report(spark, sf_dir: str) -> DataFrame:
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 9 == 0)
         .select("doc_id", "source"),
@@ -1194,7 +1157,7 @@ def multimodal_resize_report(spark, sf_dir: str) -> DataFrame:
 def audio_resample_report(spark, sf_dir: str) -> DataFrame:
     import struct
 
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 11 == 0)
         .select("doc_id", "source"),

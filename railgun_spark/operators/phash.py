@@ -32,7 +32,7 @@ integer Column algebra:
   a uniform integer key, bucketable at PB scale.
 
 At 100 TB of images the expensive stage is decode; it is map-only and
-scales with input splits (spread_for_decode). The hash index stays ~32
+scales with input splits (spread_scan). The hash index stays ~32
 bytes per admitted image regardless of image size.
 """
 
@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from railgun_spark.session import spread_scan
 from railgun_spark.suite import extra_query, query
 
 PHASH_BITS = 64
@@ -270,9 +271,9 @@ def _phash_y4m(frame_hashes) -> bytes:
     tags=("multimodal", "dedup", "pandas-udf"),
 )
 def image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
 
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % PHASH_SAMPLE_MOD == 0)
         .select("doc_id"),
@@ -475,9 +476,9 @@ VIDEO_PHASH_SAMPLE_MOD = 13
 def video_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
 
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % VIDEO_PHASH_SAMPLE_MOD == 0)
         .select("doc_id"),
@@ -646,9 +647,9 @@ def _phash_wav(h: int) -> bytes:
     tags=("multimodal", "dedup", "pandas-udf"),
 )
 def audio_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
 
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % AUDIO_PHASH_SAMPLE_MOD == 0)
         .select("doc_id"),
@@ -888,9 +889,9 @@ def image_phash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _wide_craft_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The doc_id-predicted 34x32 PGM corpus shared by the wide-pair
     certification queries."""
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
 
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % PHASH_WIDE_SAMPLE_MOD == 0)
         .select("doc_id"),
@@ -1058,9 +1059,9 @@ def _video_offset_frames(g: int, v: int) -> list:
     tags=("multimodal", "dedup", "pandas-udf"),
 )
 def video_phash_offset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
 
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % VIDEO_OFFSET_SAMPLE_MOD == 0)
         .select("doc_id"),
@@ -1147,9 +1148,9 @@ def video_phash_offset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "dedup", "pandas-udf"),
 )
 def video_phash_offset_coarse_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
 
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % VIDEO_OFFSET_SAMPLE_MOD == 0)
         .select("doc_id"),
@@ -1539,9 +1540,9 @@ AUDIO_OFFSET_SAMPLE_MOD = 29
     tags=("multimodal", "dedup", "pandas-udf"),
 )
 def audio_phash_offset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
 
-    docs = spread_for_decode(
+    docs = spread_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % AUDIO_OFFSET_SAMPLE_MOD == 0)
         .select("doc_id"),

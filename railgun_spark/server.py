@@ -24,16 +24,17 @@ ItemHandler.go:127-136,202-211). Auth activates when create_app is given a
 root_password; without one the server stays open (dev mode).
 
 The server is a driver-side veneer: every request compiles to a DataFrame
-plan executed by the shared SparkSession; the catalog's TTL/mtime caches
-(registry.py) bound repeated reads exactly like the reference's 5-minute
-caches (cache/Cache.go:79)."""
+plan executed by the shared SparkSession; the catalog's TTL/mtime memos
+(registry.py `Memo`) bound repeated reads like the reference's 5-minute
+cache (cache/Cache.go:79), and the tile routes memoize encoded bodies with
+the same type."""
 
 from __future__ import annotations
 
 import json
 
 from railgun_spark.catalog.models import MODEL_TYPES, to_dict
-from railgun_spark.catalog.registry import AlreadyExists, Catalog, DependencyError, NotFound
+from railgun_spark.catalog.registry import AlreadyExists, Catalog, DependencyError, Memo, NotFound
 from railgun_spark.functions import functions as dfl_functions
 from railgun_spark.sources.formats import FORMATS
 
@@ -154,7 +155,7 @@ def create_app(
     session_duration: float = 3600.0,
     private_key=None,
 ):
-    from flask import Flask, request
+    from flask import Flask, Response, request
 
     from railgun_spark import auth as _auth
 
@@ -162,18 +163,19 @@ def create_app(
     if root_password is not None and private_key is None:
         private_key = _auth.generate_keypair()
     public_key = private_key.public_key() if private_key is not None else None
-    # encoded mask bodies keyed by (layer, z, x, y, zoom, threshold, ext),
-    # validated against the catalog grid cache's object identity —
-    # see layer_tile_mask. Lock guards the bounded eviction: the serve
-    # path is threaded and iter()-during-resize would raise.
-    import threading as _threading
+    # encoded tile bodies per format: a second level over the catalog's
+    # format-free grid/feature memos, because encoding is per-extension
+    # and GIL-bound (the gif/jpg encoders were the residual ~120 ms at
+    # 12-wide). An entry is stamped with id() of the catalog value it
+    # encodes and holds that value, so the id cannot be reused while the
+    # entry lives: a warm repeat is a lookup, a recomputed value re-encodes.
+    data_bodies, mask_bodies = Memo(256), Memo(1024)
 
-    _mask_body_cache: dict[tuple, tuple] = {}
-    _mask_body_lock = _threading.Lock()
-    # serialized data-tile bodies, same identity-validation discipline
-    # against the catalog's cached feature list (layer_tile_data)
-    _data_body_cache: dict[tuple, tuple] = {}
-    _data_body_lock = _threading.Lock()
+    def _encoded(memo: Memo, key: tuple, value, encode):
+        _, body, mime = memo.get(
+            key, id(value), float("inf"), lambda: (value, *encode(value))
+        )
+        return Response(body, mimetype=mime)
 
     def _require_auth():
         """Bearer check for mutating routes (GroupHandler.go:100-109).
@@ -301,8 +303,6 @@ def create_app(
 
     @app.route("/layers/<name>/tiles/data/<int:z>/<int:x>/<int:y>.<ext>")
     def layer_tile_data(name, z, x, y, ext):
-        from flask import Response
-
         from railgun_spark.geo.serving import feature_collection
 
         try:
@@ -310,29 +310,18 @@ def create_app(
         except ValueError:
             return _render({"error": "limit must be an integer"}, ext), 400
         user_dfl = request.args.get("dfl")
-        # features through the catalog's TTL+mtime cache (the reference
-        # caches layer DATA with the same 5-min TTL, cache/Cache.go:
-        # 25-79); the serialized body is memoized per format against the
-        # feature list's IDENTITY, exactly the mask route's discipline —
-        # a warm repeat is a dict lookup, no Spark job and no re-encode
         feats = catalog.layer_tile_features(
             name, z, x, y, limit=limit, user_dfl=user_dfl
         )
-        key = (name, z, x, y, limit, user_dfl, ext)
-        ent = _data_body_cache.get(key)
-        if ent is None or ent[0] is not feats:
+
+        def encode(feats):
             resp = _render(feature_collection(feats), ext)
-            ent = (feats, resp.get_data(), resp.mimetype)
-            with _data_body_lock:
-                if len(_data_body_cache) >= 256:
-                    _data_body_cache.pop(next(iter(_data_body_cache)), None)
-                _data_body_cache[key] = ent
-        return Response(ent[1], mimetype=ent[2])
+            return resp.get_data(), resp.mimetype
+
+        return _encoded(data_bodies, (name, z, x, y, limit, user_dfl, ext), feats, encode)
 
     @app.route("/layers/<name>/tiles/mask/<int:z>/<int:x>/<int:y>.<ext>")
     def layer_tile_mask(name, z, x, y, ext):
-        from flask import Response
-
         from railgun_spark.geo.serving import MASK_FORMATS, grid_to_image
 
         if ext not in MASK_FORMATS:  # png/gif/jpg per RespondWithGrid.go:20-46
@@ -344,27 +333,13 @@ def create_app(
             threshold = int(request.args.get("threshold", 1))
         except ValueError:
             return Response("zoom and threshold must be integers", status=400)
-        # grid computed through the catalog's TTL+mtime cache
-        # (cache/Cache.go:79 twin); the encoded body is memoized per
-        # format against the grid's IDENTITY — valid exactly as long as
-        # the catalog keeps returning the same cached grid object, so a
-        # warm repeat is a dict lookup (the gif/jpg encoders are
-        # GIL-bound Python and re-encoding per request was the residual
-        # ~120 ms at 12-wide)
         grid = catalog.layer_mask_grid(
             name, z, x, y, mask_zoom=zoom, threshold=threshold
         )
-        key = (name, z, x, y, zoom, threshold, ext)
-        ent = _mask_body_cache.get(key)
-        if ent is None or ent[0] is not grid:
-            body, mime = grid_to_image(grid, ext)
-            # the grid ref rides along purely as the validity token
-            ent = (grid, body, mime)
-            with _mask_body_lock:
-                if len(_mask_body_cache) >= 1024:
-                    _mask_body_cache.pop(next(iter(_mask_body_cache)), None)
-                _mask_body_cache[key] = ent
-        return Response(ent[1], mimetype=ent[2])
+        return _encoded(
+            mask_bodies, (name, z, x, y, zoom, threshold, ext), grid,
+            lambda grid: grid_to_image(grid, ext),
+        )
 
     @app.route("/health.<ext>")
     def health_route(ext):
@@ -393,8 +368,6 @@ def create_app(
         The reference serves an OpenLayers map demo pulling CDN assets; a
         headless engine serves a minimal self-contained HTML index of the
         catalog and API routes instead (no external assets)."""
-        from flask import Response
-
         rows = "".join(
             f"<li><a href=\"/{plural}.json\">{plural}</a> "
             f"({len(catalog.list(MODEL_TYPES[kind_name]))})</li>"

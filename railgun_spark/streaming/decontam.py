@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from railgun_spark.operators.dedup import (
     CONTAM_THRESHOLD,
@@ -26,6 +27,7 @@ from railgun_spark.operators.dedup import (
     shingles_of_words,
     words,
 )
+from railgun_spark.streaming.ingest import _drain_availablenow
 
 
 def eval_shingle_set(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,6 +87,46 @@ def _refuse_fresh_checkpoint_over_used_sink(checkpoint_dir: str, flags_sink: str
             )
 
 
+def _drain_to_flags(
+    spark: SparkSession,
+    schema: StructType,
+    source_dir: str,
+    checkpoint_dir: str,
+    flags_sink: str,
+    max_files_per_trigger: int,
+    flags_of,
+    empty_schema: str,
+) -> DataFrame:
+    """Drain `source_dir` (documents of `schema`; availableNow, through
+    ingest's scaffold and its refusal of nested shard dirs): each micro-batch overwrites its own
+    ``ingest_batch=<id>`` partition of `flags_sink` with
+    ``flags_of(batch_df)``. Returns the sink read back."""
+
+    def gate(batch_df: DataFrame, batch_id: int) -> int:
+        # empty batches still write their (empty) partition: idempotent
+        # either way, and the sink then records that the batch was examined
+        flags_of(batch_df).write.mode("overwrite").parquet(
+            f"{flags_sink}/ingest_batch={batch_id}"
+        )
+        return 0
+
+    _drain_availablenow(
+        spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, gate
+    )
+    try:
+        return spark.read.option("basePath", flags_sink).parquet(flags_sink)
+    except AnalysisException as e:
+        # zero micro-batches ran (empty source dir): no sink was created.
+        # ONLY that case maps to empty — an unreadable/corrupt sink must
+        # raise, not silently report zero contamination (same discipline
+        # as dedup._read_index_or_none).
+        from railgun_spark.errors import is_path_not_found
+
+        if is_path_not_found(e):
+            return spark.createDataFrame([], empty_schema)
+        raise
+
+
 def stream_decontaminate_availablenow(
     spark: SparkSession,
     sf_dir: str,
@@ -108,43 +150,16 @@ def stream_decontaminate_availablenow(
     flags (the join has no cross-batch state) and overwrites the same
     partition, so restarts never duplicate or lose flags."""
     _refuse_fresh_checkpoint_over_used_sink(checkpoint_dir, flags_sink)
-    static_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # materialize the eval side ONCE: without this, every micro-batch
     # re-executes the whole scan/shingle/explode/distinct subtree before
     # broadcasting — "computed once" must mean the work, not just the plan
     ev = eval_shingle_set(spark, sf_dir).localCheckpoint()
-    stream = (
-        spark.readStream.schema(static_docs.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    return _drain_to_flags(
+        spark, schema, source_dir, checkpoint_dir, flags_sink, max_files_per_trigger,
+        lambda batch_df: flag_contaminated_batch(batch_df, ev),
+        "doc_id BIGINT, ingest_batch INT",
     )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # empty batches still write their (empty) partition: idempotent
-        # either way, and the sink then records that the batch was examined
-        flag_contaminated_batch(batch_df, ev).write.mode("overwrite").parquet(
-            f"{flags_sink}/ingest_batch={batch_id}"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    try:
-        return spark.read.option("basePath", flags_sink).parquet(flags_sink)
-    except AnalysisException as e:
-        # zero micro-batches ran (empty source dir): no sink was created.
-        # ONLY that case maps to empty — an unreadable/corrupt sink must
-        # raise, not silently report zero contamination (same discipline
-        # as dedup._read_index_or_none).
-        from railgun_spark.errors import is_path_not_found
-
-        if is_path_not_found(e):
-            return spark.createDataFrame([], "doc_id BIGINT, ingest_batch INT")
-        raise
 
 
 def stream_neardup_decontaminate_availablenow(
@@ -190,13 +205,8 @@ def stream_neardup_decontaminate_availablenow(
         )
         .localCheckpoint()
     )
-    stream = (
-        spark.readStream.schema(static_docs.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
+    def flags_of(batch_df: DataFrame) -> DataFrame:
         tr = (
             batch_df.filter(
                 (F.col("doc_id") % EVAL_MOD != 0)
@@ -212,7 +222,7 @@ def stream_neardup_decontaminate_availablenow(
             tr, ev, "doc_id", "sh", NEARDUP_CONTAM_NUM, NEARDUP_CONTAM_DEN
         )
         best = Window.partitionBy("id_left").orderBy(F.desc("jaccard"), "id_right")
-        flags = (
+        return (
             pairs.withColumn("__rn", F.row_number().over(best))
             .filter(F.col("__rn") == 1)
             .select(
@@ -221,22 +231,9 @@ def stream_neardup_decontaminate_availablenow(
                 F.round("jaccard", 4).alias("jaccard"),
             )
         )
-        flags.write.mode("overwrite").parquet(f"{flags_sink}/ingest_batch={batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_to_flags(
+        spark, static_docs.schema, source_dir, checkpoint_dir, flags_sink,
+        max_files_per_trigger, flags_of,
+        "doc_id BIGINT, eval_doc_id BIGINT, jaccard DOUBLE, ingest_batch INT",
     )
-    q.awaitTermination()
-    try:
-        return spark.read.option("basePath", flags_sink).parquet(flags_sink)
-    except AnalysisException as e:
-        from railgun_spark.errors import is_path_not_found
-
-        if is_path_not_found(e):
-            return spark.createDataFrame(
-                [], "doc_id BIGINT, eval_doc_id BIGINT, jaccard DOUBLE, ingest_batch INT"
-            )
-        raise

@@ -31,8 +31,8 @@ from railgun_spark.operators.multimodal import (
     MEDIA_STATUS_SCHEMA,
     extract_features,
     media_decode_status,
-    spread_for_decode,
 )
+from railgun_spark.session import spread_scan
 
 
 def stream_media_features_availablenow(
@@ -57,7 +57,7 @@ def stream_media_features_availablenow(
     # shared decode-spread policy: no-op on streams (micro-batch
     # parallelism follows ingest file splits), conditional on batch
     feats = extract_features(
-        spread_for_decode(stream), decoder=decoder, require_real=require_real
+        spread_scan(stream), decoder=decoder, require_real=require_real
     )
     q = (
         feats.writeStream.format("parquet")
@@ -93,7 +93,7 @@ def stream_media_decode_status_availablenow(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(media_dir)
     )
-    status = media_decode_status(spread_for_decode(stream))
+    status = media_decode_status(spread_scan(stream))
     q = (
         status.writeStream.format("parquet")
         .option("path", sink_dir)

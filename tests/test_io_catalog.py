@@ -226,6 +226,156 @@ def test_datastore_uri_dfl_expression(spark, tmp_path):
     assert df.collect()[0]["projectId"] == 5400
 
 
+def test_frame_memo_invalidation_and_eviction(spark, tmp_path):
+    """A DataStore redefinition (update, or delete then re-add) makes
+    layer_frame parse the source anew and unpersists the replaced frame;
+    a full memo of variable-uri frames evicts, and unpersists, its oldest
+    frame."""
+
+    def released(df) -> bool:
+        return not df.is_cached and not df.storageLevel.useMemory
+
+    data = tmp_path / "pts.jsonl"
+    data.write_text('{"id": 0, "lat": 2.0, "lon": 1.0}\n{"id": 1, "lat": 3.0, "lon": 4.0}\n')
+    cat = Catalog(spark)
+    cat.add(DataStore(name="pts", uri=str(data), format="csv"))
+    cat.add(Layer(name="l", datastore="pts"))
+    as_csv = cat.layer_frame("l")
+    assert sorted(as_csv.columns) != ["id", "lat", "lon"]
+    assert cat.layer_frame("l") is as_csv  # warm repeat
+
+    cat.update(DataStore(name="pts", uri=str(data), format="jsonl"))
+    as_json = cat.layer_frame("l")
+    assert sorted(as_json.columns) == ["id", "lat", "lon"]
+    assert released(as_csv)
+
+    cat.delete(Layer, "l")
+    cat.delete(DataStore, "pts")
+    cat.add(DataStore(name="pts", uri=str(data), format="csv"))
+    cat.add(Layer(name="l", datastore="pts"))
+    assert sorted(cat.layer_frame("l").columns) != ["id", "lat", "lon"]
+    assert released(as_json)
+    # one uri under two formats is two frames
+    cat.add(DataStore(name="pts_json", uri=str(data), format="jsonl"))
+    assert sorted(cat.load_datastore("pts_json").columns) == ["id", "lat", "lon"]
+    assert sorted(cat.layer_frame("l").columns) != ["id", "lat", "lon"]
+
+    # a uri over $variables is a key per value, bounded: the oldest
+    # frame is evicted and unpersisted. A uri without `$` is one key per
+    # DataStore and does not count against that bound.
+    cat = Catalog(spark)
+    cat._variable_frames.capacity = 2
+    cat.add(DataStore(name="fixed", uri=str(data), format="jsonl"))
+    fixed = cat.load_datastore("fixed")
+    cat.add(DataStore(name="var", uri=f'"{tmp_path}/f" + $i + ".jsonl"', format="jsonl"))
+    frames = []
+    for i in range(3):
+        (tmp_path / f"f{i}.jsonl").write_text(json.dumps({"id": i}))
+        frames.append(cat.load_datastore("var", {"i": str(i)}))
+    assert len(cat._variable_frames) == 2
+    assert released(frames[0]) and frames[2].is_cached
+    assert cat.load_datastore("var", {"i": "2"}) is frames[2]
+    assert cat.load_datastore("fixed") is fixed and fixed.is_cached
+
+
+def test_memo_concurrent_same_key_shares_first_value():
+    """Two computes of one key racing to insert: the second caller gets
+    the first caller's value and nothing is released — releasing either
+    frame would unpersist the cache entry their equal plans share."""
+    import threading
+
+    from railgun_spark.catalog.registry import Memo
+
+    dropped: list = []
+    memo = Memo(4, drop=dropped.append)
+    both_computing = threading.Barrier(2, timeout=30)
+    got: list = []
+
+    def compute() -> list:
+        both_computing.wait()
+        return [threading.get_ident()]
+
+    threads = [
+        threading.Thread(target=lambda: got.append(memo.get("k", 1.0, 300.0, compute)))
+        for _ in range(2)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 2 and got[0] is got[1]
+    assert dropped == [] and memo.get("k", 1.0, 300.0, list) is got[0]
+
+
+def test_memo_threaded_bound_and_single_release():
+    """Many threads over few keys, with clears racing the computes: the
+    memo never exceeds its capacity, never releases a value twice, and
+    never holds a released value; a value a clear made stale mid-compute
+    is released."""
+    import sys
+    import threading
+
+    from railgun_spark.catalog.registry import Memo
+
+    dropped: list = []
+    memo = Memo(4, drop=dropped.append)
+    errors: list = []
+
+    def work(seed: int) -> None:
+        try:
+            for i in range(400):
+                key = (seed * 7 + i) % 9
+                value = memo.get(key, i % 3, 300.0, lambda key=key: [key])
+                assert value == [key]
+                if i % 50 == seed:
+                    memo.clear()
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(memo) <= 4
+    ids = [id(v) for v in dropped]
+    assert len(ids) == len(set(ids))
+    held = {id(v) for _, _, v in memo._entries.values()}
+    assert not held & set(ids)
+
+    # a clear landing mid-compute: the caller gets its value and the memo
+    # does not keep it. It is released, unless a compute under the new
+    # generation has stored the key by then (their equal frame plans
+    # share one Spark cache entry).
+    memo.clear()
+    dropped.clear()
+
+    def clearing() -> list:
+        memo.clear()
+        return ["stale"]
+
+    stale = memo.get("k", 0, 300.0, clearing)
+    assert stale == ["stale"] and len(memo) == 0 and dropped == [stale]
+
+    dropped.clear()
+    fresh: list = []
+
+    def clearing_then_refilled() -> list:
+        memo.clear()
+        fresh.append(memo.get("k", 0, 300.0, lambda: ["fresh"]))
+        return ["stale"]
+
+    assert memo.get("k", 0, 300.0, clearing_then_refilled) == ["stale"]
+    assert dropped == [] and memo.get("k", 0, 300.0, list) is fresh[0]
+
+
 # ---------------- schemes, zip, enc routing ----------------
 
 def test_read_http_scheme(spark, tmp_path):
@@ -308,7 +458,7 @@ def test_spread_for_decode_conditional(spark):
     Python decode stage uses every core; a frame already at or above
     that parallelism passes through IDENTICALLY — no extra Exchange in
     the plan (the 100 TB scan path must not pay a pointless shuffle)."""
-    from railgun_spark.operators.multimodal import spread_for_decode
+    from railgun_spark.session import spread_scan
 
     par = spark.sparkContext.defaultParallelism
     base = spark.range(1000)
@@ -316,19 +466,19 @@ def test_spread_for_decode_conditional(spark):
     assert narrow.rdd.getNumPartitions() == 1
 
     # heavy (real-codec) decode: narrow input always spreads
-    assert spread_for_decode(narrow, heavy=True).rdd.getNumPartitions() == par
+    assert spread_scan(narrow, heavy=True).rdd.getNumPartitions() == par
 
     # light decode over a tiny input: the shuffle costs more than one
     # core's decode — pass through identically
-    assert spread_for_decode(narrow) is narrow
+    assert spread_scan(narrow) is narrow
 
     # light decode over a "big" input (threshold forced to 0): spreads
-    assert spread_for_decode(narrow, min_bytes=0).rdd.getNumPartitions() == par
+    assert spread_scan(narrow, min_bytes=0).rdd.getNumPartitions() == par
 
     # already-parallel input: identity regardless of cost class
     wide = base.repartition(par * 2)
-    assert spread_for_decode(wide, heavy=True) is wide
-    assert spread_for_decode(wide) is wide
+    assert spread_scan(wide, heavy=True) is wide
+    assert spread_scan(wide) is wide
 
 
 # ---------------- bucketed co-located join ----------------

@@ -239,15 +239,15 @@ def test_mask_grid_cache_warm_and_invalidation(spark, tmp_path, monkeypatch):
 
     # the cache is bounded: overflow evicts, never grows past the cap
     cat.ttl_seconds = 300.0
-    cat._grid_cache_max = 4
+    cat._grids.capacity = 4
     for t in range(10):
         cat.layer_mask_grid("bars", 10, 292, 391, 12, 10 + t)
-    assert len(cat._grid_cache) <= 4
+    assert len(cat._grids) <= 4
 
     # an invalidation landing MID-COMPUTE (generation bump between the
     # cache miss and the insert) must not cache the stale grid: the
     # caller gets its consistent result, the next request recomputes
-    cat._grid_cache.clear()
+    cat._grids.clear()
     before = calls["n"]
 
     def bumping(*a, **kw):
@@ -259,11 +259,11 @@ def test_mask_grid_cache_warm_and_invalidation(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(serving, "tile_mask_grid", bumping)
     cat.layer_mask_grid("bars", 10, 292, 391, 12, 1)
     assert calls["n"] == before + 1
-    assert len(cat._grid_cache) == 0  # stale grid discarded, not cached
+    assert len(cat._grids) == 0  # stale grid discarded, not cached
     monkeypatch.setattr(serving, "tile_mask_grid", counting)
     cat.layer_mask_grid("bars", 10, 292, 391, 12, 1)
     assert calls["n"] == before + 2  # recomputed under the new generation
-    assert len(cat._grid_cache) == 1
+    assert len(cat._grids) == 1
 
 
 def test_data_tile_cache_warm_and_invalidation(spark, tmp_path, monkeypatch):
@@ -329,12 +329,12 @@ def test_data_tile_cache_warm_and_invalidation(spark, tmp_path, monkeypatch):
     # bounded + mid-compute invalidation discarded (same generation
     # discipline as the mask grid cache)
     cat.ttl_seconds = 300.0
-    cat._tile_cache_max = 4
+    cat._tiles.capacity = 4
     for t in range(8):
         cat.layer_tile_features("bars", 10, 292, 391, limit=10 + t)
-    assert len(cat._tile_cache) <= 4
+    assert len(cat._tiles) <= 4
 
-    cat._tile_cache.clear()
+    cat._tiles.clear()
     before = calls["n"]
 
     def bumping(*a, **kw):
@@ -345,7 +345,59 @@ def test_data_tile_cache_warm_and_invalidation(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(serving, "tile_data", bumping)
     cat.layer_tile_features("bars", 10, 292, 391, limit=-1)
     assert calls["n"] == before + 1
-    assert len(cat._tile_cache) == 0
+    assert len(cat._tiles) == 0
+
+
+def test_tile_body_memo_warm_update_and_bound(app_client, monkeypatch):
+    """The server's encoded-body memos: a warm repeat of a data (.json)
+    and a mask (.png) tile re-encodes nothing; a Layer update recomputes
+    the catalog value, so each body re-encodes once; neither memo grows
+    past its capacity."""
+    import railgun_spark.geo.serving as serving
+
+    calls = {"feature_collection": 0, "grid_to_image": 0}
+    for fn in calls:
+        def counting(*a, _fn=fn, _real=getattr(serving, fn), **kw):
+            calls[_fn] += 1
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(serving, fn, counting)
+    data = "/layers/bars/tiles/data/10/292/391.json"
+    mask = "/layers/bars/tiles/mask/10/292/391.png?zoom=12"
+
+    def both():
+        return app_client.get(data).data, app_client.get(mask).data
+
+    cold = both()
+    assert calls == {"feature_collection": 1, "grid_to_image": 1}
+    assert both() == cold
+    assert calls == {"feature_collection": 1, "grid_to_image": 1}
+
+    r = app_client.post("/layers/bars.json", json={
+        "datastore": "pts", "expression": "filter(@, '@amenity == bar')"})
+    assert r.status_code == 200
+    assert both() == cold and both() == cold
+    assert calls == {"feature_collection": 2, "grid_to_image": 2}
+
+    # the bound, seen through the encode counts: with one catalog value
+    # behind every key, capacity + 1 distinct keys keep the newest
+    # capacity bodies and evict the oldest
+    feats, grid = [], [[1] * 4] * 4
+    monkeypatch.setattr(Catalog, "layer_tile_features", lambda self, *a, **kw: feats)
+    monkeypatch.setattr(Catalog, "layer_mask_grid", lambda self, *a, **kw: grid)
+    for route, fn, capacity in (
+        (f"{data}?limit=", "feature_collection", 256),
+        (f"{mask}&threshold=", "grid_to_image", 1024),
+    ):
+        before = calls[fn]
+        for k in range(capacity + 1):
+            assert app_client.get(f"{route}{k}").status_code == 200
+        assert calls[fn] == before + capacity + 1
+        app_client.get(f"{route}1")
+        app_client.get(f"{route}{capacity}")
+        assert calls[fn] == before + capacity + 1
+        app_client.get(f"{route}0")
+        assert calls[fn] == before + capacity + 2
 
 
 def test_server_tiles(app_client):

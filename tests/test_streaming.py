@@ -786,13 +786,18 @@ def test_stream_ingest_soak_embedding_gate(spark, tmp_path):
     assert got == want
 
 
-def test_stream_ingest_refuses_nested_shard_dirs(spark, tmp_path):
+def test_stream_ingest_refuses_nested_shard_dirs(spark, sf_dir, tmp_path):
     """A source dir holding parquet only inside shard DIRECTORIES would
-    silently drain zero batches — the scaffold must refuse loudly."""
+    silently drain zero batches — the scaffold must refuse loudly, for
+    the ingest gates and the two decontamination drivers alike."""
     import pytest as _pytest
 
     from pyspark.sql import Row
 
+    from railgun_spark.streaming.decontam import (
+        stream_decontaminate_availablenow,
+        stream_neardup_decontaminate_availablenow,
+    )
     from railgun_spark.streaming.ingest import stream_ingest_dedup_availablenow
 
     src = tmp_path / "arr"
@@ -806,6 +811,12 @@ def test_stream_ingest_refuses_nested_shard_dirs(spark, tmp_path):
             spark, str(src), schema, str(tmp_path / "i"), str(tmp_path / "c"),
             str(tmp_path / "ck"),
         )
+    for i, drive in enumerate(
+        (stream_decontaminate_availablenow, stream_neardup_decontaminate_availablenow)
+    ):
+        with _pytest.raises(ValueError, match="does not recurse"):
+            drive(spark, sf_dir, str(src), str(tmp_path / f"dck{i}"),
+                  str(tmp_path / f"flags{i}"))
 
 
 def test_stream_media_features_restart_idempotent(spark, tmp_path):

@@ -240,7 +240,8 @@ def main() -> int:
 
         import pandas as pd
 
-        from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+        from railgun_spark.operators.multimodal import MEDIA_SCHEMA
+        from railgun_spark.session import spread_scan
         from railgun_spark.operators.phash import _phash_pgm
 
         def synth(it):
@@ -254,7 +255,7 @@ def main() -> int:
                     rows, columns=["media_id", "kind", "content", "meta"]
                 )
 
-        return spread_for_decode(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
+        return spread_scan(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
 
     img_index_src = _media_frame(
         spark.range(60_000).select((F.col("id") + 1_000_000_000).alias("media_id")),
@@ -280,7 +281,8 @@ def main() -> int:
 
         import pandas as pd
 
-        from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+        from railgun_spark.operators.multimodal import MEDIA_SCHEMA
+        from railgun_spark.session import spread_scan
         from railgun_spark.operators.phash import _phash_wide_pgm
 
         def synth(it):
@@ -299,7 +301,7 @@ def main() -> int:
                     rows, columns=["media_id", "kind", "content", "meta"]
                 )
 
-        return spread_for_decode(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
+        return spread_scan(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
 
     imgw_index_src = _media_frame_wide(
         spark.range(60_000).select((F.col("id") + 2_000_000_000).alias("media_id")),
@@ -324,7 +326,8 @@ def main() -> int:
 
         import pandas as pd
 
-        from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+        from railgun_spark.operators.multimodal import MEDIA_SCHEMA
+        from railgun_spark.session import spread_scan
         from railgun_spark.operators.phash import _phash_wav
 
         def synth(it):
@@ -338,7 +341,7 @@ def main() -> int:
                     rows, columns=["media_id", "kind", "content", "meta"]
                 )
 
-        return spread_for_decode(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
+        return spread_scan(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
 
     audio_ingest = _media_ingest("audio")
 
@@ -363,7 +366,8 @@ def main() -> int:
 
         import pandas as pd
 
-        from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+        from railgun_spark.operators.multimodal import MEDIA_SCHEMA
+        from railgun_spark.session import spread_scan
         from railgun_spark.operators.phash import _phash_y4m
 
         def synth(it):
@@ -381,7 +385,7 @@ def main() -> int:
                     rows, columns=["media_id", "kind", "content", "meta"]
                 )
 
-        return spread_for_decode(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
+        return spread_scan(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
 
     video_ingest = _media_ingest("video", every_n=1)
 
@@ -452,7 +456,8 @@ def main() -> int:
 
         import pandas as pd
 
-        from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+        from railgun_spark.operators.multimodal import MEDIA_SCHEMA
+        from railgun_spark.session import spread_scan
         from railgun_spark.operators.phash import _phash_wav_chunks
 
         def synth(it):
@@ -470,7 +475,7 @@ def main() -> int:
                     rows, columns=["media_id", "kind", "content", "meta"]
                 )
 
-        return spread_for_decode(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
+        return spread_scan(ids_df, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
 
     audio_chunk_offset_ingest = _media_ingest("audio-chunk", offset_tolerant=True)
 

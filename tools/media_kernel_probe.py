@@ -9,7 +9,7 @@ real PCM WAVs through decode -> linear interp -> 16-bit re-encode) plus
 the new perceptual-hash pass (decode -> 2x bilinear -> dHash/aHash).
 Each stage is one Arrow mapInPandas pass whose cost is per-byte decode
 work, so the expected curve is linear in payload bytes; the ratios
-printed here pin that. spread_for_decode(heavy=True) keeps the CPU-bound
+printed here pin that. spread_scan(heavy=True) keeps the CPU-bound
 stage on all cores despite the single-file synthetic source.
 
 Usage: python tools/media_kernel_probe.py [--out MEDIA_KERNEL_PROBE.json]
@@ -39,7 +39,8 @@ def _media_rows(spark, n_images: int, n_clips: int):
     import numpy as np
     import pandas as pd
 
-    from railgun_spark.operators.multimodal import MEDIA_SCHEMA, spread_for_decode
+    from railgun_spark.operators.multimodal import MEDIA_SCHEMA
+    from railgun_spark.session import spread_scan
 
     ids = spark.range(n_images + n_clips).select(F.col("id").alias("media_id"))
 
@@ -67,7 +68,7 @@ def _media_rows(spark, n_images: int, n_clips: int):
                     rows.append((mid, "audio", wav, {}))
             yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
 
-    return spread_for_decode(ids, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
+    return spread_scan(ids, heavy=True).mapInPandas(synth, MEDIA_SCHEMA)
 
 
 def _timed(df) -> tuple[float, int]:
