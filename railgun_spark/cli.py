@@ -367,9 +367,7 @@ def cmd_dedup(args) -> int:
             )
         pairs = minhash_dup_pairs(spark, sf_dir, tau_num / tau_den)
     else:
-        s = _docs_with_shingles(spark, sf_dir).select(
-            "doc_id", F.transform("sh", lambda g: F.xxhash64(g)).alias("sh")
-        )
+        s = _docs_with_shingles(spark, sf_dir, hashed=True)
         if args.method == "jaccard":
             pairs = jaccard_similarity_join(s, "doc_id", "sh", tau_num, tau_den).select(
                 F.col("id_a").alias("doc_a"),
@@ -460,38 +458,25 @@ def cmd_decontam(args) -> int:
         CONTAM_THRESHOLD,
         neardup_contamination,
         pooled_contamination,
-        shingles_of_words,
-        words,
+        shingle_pool,
+        shingle_sets,
     )
     from railgun_spark.session import get_spark
 
     spark = get_spark("railgun_decontam")
 
     def shingled(path: str) -> "object":
-        docs = spark.read.parquet(f"{path}/documents.parquet")
-        # two-stage tokenize->shingle + word-count non-empty filter:
-        # the regexp tokenizer and the shingle chain each run once per
-        # row (see dedup.py _docs_with_shingles)
-        return (
-            docs.filter(F.size(words(F.col(args.text_col))) >= 3)
-            .select(
-                F.col(args.id_col).alias("doc_id"),
-                words(F.col(args.text_col)).alias("__ws"),
-            )
-            .select(
-                "doc_id",
-                F.transform(
-                    shingles_of_words(F.col("__ws")), lambda g: F.xxhash64(g)
-                ).alias("sh"),
-            )
+        docs = spark.read.parquet(f"{path}/documents.parquet").select(
+            F.col(args.id_col).alias("doc_id"), args.text_col
         )
+        return shingle_sets(docs, "doc_id", text_col=args.text_col, hashed=True)
 
     tr, ev = shingled(args.input_dir), shingled(args.eval_dir)
     summary = {"mode": args.mode}
     if args.mode == "pooled":
         thr = args.threshold if args.threshold is not None else CONTAM_THRESHOLD
         summary["threshold"] = thr
-        flags = pooled_contamination(tr, ev, threshold=thr)
+        flags = pooled_contamination(tr, shingle_pool(ev), threshold=thr)
     else:
         if args.threshold is not None:
             # the prefix filter needs a RATIONAL tau; map the float exactly

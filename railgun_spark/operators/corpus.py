@@ -111,7 +111,7 @@ def corpus_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stragglers backfills with the other branches' tasks) instead of
     # strictly sequentially — the id-set checkpoints are loser-sized,
     # so pinning them costs nothing at any scale.
-    from concurrent.futures import ThreadPoolExecutor
+    from railgun_spark.session import overlap
 
     def _exact():
         return exact_losers.localCheckpoint()
@@ -130,13 +130,7 @@ def corpus_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id"
         ).localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_exact = pool.submit(_exact)
-        f_near = pool.submit(_near)
-        f_contam = pool.submit(_contam)
-        exact_losers, near_losers, contam = (
-            f_exact.result(), f_near.result(), f_contam.result()
-        )
+    exact_losers, near_losers, contam = overlap(spark, _exact, _near, _contam)
 
     def flag(name: str, ids: DataFrame) -> DataFrame:
         return F.broadcast(ids.withColumn(name, F.lit(True)))
@@ -402,33 +396,25 @@ def prepare_training_shards(
     # frame, not one job per number — at corpus scale each extra count
     # is a full pass. n_train_docs + n_chunked_docs share a single
     # aggregate over the pinned clean corpus.
-    from concurrent.futures import ThreadPoolExecutor
+    from railgun_spark.session import overlap
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_write = pool.submit(
-            write_training_shards,
+    _, tstats, pstats, n_input_docs, n_covered = overlap(
+        spark,
+        lambda: write_training_shards(
             rows, shards_path, sort_key="bin_id",
             records_per_shard=records_per_shard,
-        )
-        f_tstats = pool.submit(
-            lambda: train.agg(
-                F.count(F.lit(1)).alias("n_train"),
-                F.sum(F.when(toks > max_tokens, 1).otherwise(0)).alias("n_big"),
-            ).first()
-        )
-        f_pstats = pool.submit(
-            lambda: packed.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.countDistinct("bin_id").alias("n_bins"),
-            ).first()
-        )
-        f_ndocs = pool.submit(docs.count)
-        f_cov = pool.submit(
-            lambda: rows.select("orig_doc_id").distinct().count()
-        )
-        f_write.result()
-        tstats, pstats = f_tstats.result(), f_pstats.result()
-        n_input_docs, n_covered = f_ndocs.result(), f_cov.result()
+        ),
+        lambda: train.agg(
+            F.count(F.lit(1)).alias("n_train"),
+            F.sum(F.when(toks > max_tokens, 1).otherwise(0)).alias("n_big"),
+        ).first(),
+        lambda: packed.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("bin_id").alias("n_bins"),
+        ).first(),
+        docs.count,
+        lambda: rows.select("orig_doc_id").distinct().count(),
+    )
     # one collect serves the manifest file AND n_shards — the previous
     # manifest.count() re-ran the whole footer scan + per-shard groupBy
     manifest_rows = build_manifest(spark, shards_path, sort_key="bin_id").collect()

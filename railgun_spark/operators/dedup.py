@@ -59,8 +59,9 @@ def shingles_of_words(ws: Column, n: int = 3) -> Column:
     projection's attribute), not the tokenizer expression itself —
     interpreted higher-order functions re-evaluate every embedded
     subexpression, so an inlined regexp tokenizer runs 2n times per row.
-    `shingles()` below is the convenience one-expression form for
-    contexts where the duplication cannot bite (tiny frames, tests)."""
+    Data paths go through `shingle_sets`; `shingles()` below is the
+    one-expression form for contexts where the duplication cannot bite
+    (tiny frames, tests)."""
     acc = ws
     for j in range(1, n):
         shifted = F.slice(ws, j + 1, F.greatest(F.size(ws) - j, F.lit(0)))
@@ -74,9 +75,41 @@ def shingles_of_words(ws: Column, n: int = 3) -> Column:
 
 def shingles(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column (empty if < n
-    words) as ONE expression — see shingles_of_words for the two-stage
-    form data paths should prefer."""
+    words) as ONE expression — see shingle_sets for the two-stage form
+    data paths use."""
     return shingles_of_words(words(text), n)
+
+
+def shingle_sets(
+    docs: DataFrame, *keep: str, text_col: str = "text", hashed: bool = False
+) -> DataFrame:
+    """(*keep, sh): the distinct word-trigram shingle set of every doc
+    in `docs` with >= 3 words — the one text-signature front end every
+    shingle consumer (near-dup joins, MinHash bands, decontamination,
+    source overlap) goes through. `hashed` stores each shingle as its
+    int64 xxhash64, so set joins carry 8-byte elements instead of text;
+    string shingles are kept where a hash must match the DuckDB oracle
+    (md5-based MinHash, pooled overlap).
+
+    The non-empty filter counts words (>= 3 words <=> >= 1 shingle) and
+    the projection is two-stage, tokenize then shingle from the column;
+    README "Text signatures" says why both keep the regexp and the
+    interpreted shingle chain to one evaluation per row."""
+    ws = words(F.col(text_col))
+    sh = shingles_of_words(F.col("__ws"))
+    if hashed:
+        sh = F.transform(sh, lambda g: F.xxhash64(g))
+    return (
+        docs.filter(F.size(ws) >= 3)
+        .select(*keep, ws.alias("__ws"))
+        .select(*keep, sh.alias("sh"))
+    )
+
+
+def shingle_pool(sets: DataFrame) -> DataFrame:
+    """(g): the distinct shingles of a `shingle_sets` frame — the pooled
+    eval side `pooled_contamination` broadcasts."""
+    return sets.select(F.explode("sh").alias("g")).distinct()
 
 
 def _hash60_str(e: Column) -> Column:
@@ -105,30 +138,6 @@ def _affine_params(num_hashes: int = NUM_HASHES) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(sh: Column, num_hashes: int = NUM_HASHES) -> Column:
-    """Array of `num_hashes` minhash values over a shingle-set column.
-
-    One md5 per shingle (base hash), then cheap affine permutations —
-    16x fewer cryptographic hashes than a per-seed-md5 family.
-
-    COST NOTE: as a single Column expression the `base` subtree is
-    INLINED into every array_min transform by Catalyst — the md5 runs
-    num_hashes times per shingle, interpreted. Fine for expression
-    contexts (small frames, tests); for data-path signature computation
-    use the exploded row form (`minhash_dup_pairs` / `_band_rows`):
-    one codegen'd md5 per shingle row + min-aggregates, ~16x cheaper."""
-    base = F.transform(sh, lambda s: _hash60_str(s) % MERSENNE31)
-
-    def perm(a: int, b: int):
-        # factory, not default-arg lambda: pyspark infers HOF arity from the
-        # lambda signature, so extra bound params break analysis
-        return lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE31
-
-    return F.array(
-        *[F.array_min(F.transform(base, perm(a, b))) for a, b in _affine_params(num_hashes)]
-    )
-
-
 def band_keys(sig: Column, num_bands: int = NUM_BANDS, rows: int = ROWS_PER_BAND) -> Column:
     """LSH band keys: one string key per band (band index ++ its signature slice)."""
     return F.array(
@@ -143,44 +152,37 @@ def band_keys(sig: Column, num_bands: int = NUM_BANDS, rows: int = ROWS_PER_BAND
     )
 
 
-def _docs_with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from railgun_spark.session import spread_scan
+def minhash_bands(sets: DataFrame, id_col: str) -> DataFrame:
+    """(id_col, band_key): the NUM_BANDS LSH band keys of every shingle
+    set in `sets` (id_col, sh), one row per (doc, band).
 
-    # SIZE-GATED spread (r18): at bench scale the repartition round-trip
-    # costs more than the parallelism buys (r17 A/B at the 0.6 MB sf0.1
-    # scan: dedup_ngram_jaccard 3.21 -> 3.42 s, decontaminate_ngram
-    # 2.02 -> 2.30 s, containment 3.59 -> 3.77 s — spread rejected), but
-    # the shingle pass is per-row CPU that a near-single-split scan
-    # serializes: at a 24 MB corpus (40x docs, one file) the UNSPREAD
-    # forms measured jaccard 41.0 s / minhash 34.6 s / decontam 43.8 s
-    # vs 14.2 / 9.1 / 23.9 s spread (x1.8-3.8). The 8 MiB gate sits
-    # between the measured-negative (0.6 MB) and measured-positive
-    # (24 MB) points; at 100 TB the scan already carries >= cores
-    # partitions and spread_scan no-ops.
-    #
-    # The non-empty filter is the WORD-COUNT form, not `size(sh) > 0`:
-    # a doc has >= 1 trigram shingle iff it has >= 3 words (the zip_with
-    # chain yields exactly len(ws)-2 non-null grams), and Catalyst pushes
-    # this filter below the shingle projection by INLINING the filter
-    # expression — with `size(sh) > 0` the whole interpreted zip_with
-    # chain re-evaluates per row inside the pushed-down Filter (2-3
-    # evaluations/row in the scan plans), while the word form re-runs
-    # only the regexp tokenize.
-    #
-    # Two-stage projection (tokenize, then shingle FROM THE COLUMN): the
-    # shingle expression references the word array 6 times, and Catalyst
-    # evaluates an inlined regexp tokenizer at every reference inside
-    # the interpreted zip_with chain. CollapseProject keeps the stages
-    # apart (it refuses to duplicate a non-cheap multiply-referenced
-    # alias), so the tokenizer runs once per row in its own projection.
-    docs = spread_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), min_bytes=8 << 20
+    Row form: the shingles explode so the base md5 runs ONCE per shingle
+    in codegen'd row form, and the NUM_HASHES affine permutations are
+    cheap integer min-aggregates. An array-expression signature inlines
+    the md5 transform into each of the 16 array_min higher-order
+    functions (16x the cryptographic work, interpreted per element; the
+    r11 ingest grid measured 500 gate docs at 12 s that way vs < 1 s
+    here). An empty set has no rows, hence no bands — a NULL-min
+    signature would otherwise degenerate to the keys '0'..'3'."""
+    tok = sets.select(id_col, F.explode("sh").alias("__sg")).select(
+        id_col, (_hash60_str(F.col("__sg")) % MERSENNE31).alias("__h31")
     )
-    return (
-        docs.filter(F.size(words(F.col("text"))) >= 3)
-        .select("doc_id", "lang", words(F.col("text")).alias("__ws"))
-        .select("doc_id", "lang", shingles_of_words(F.col("__ws")).alias("sh"))
+    sig = tok.groupBy(id_col).agg(
+        *[
+            F.min((F.lit(a) * F.col("__h31") + F.lit(b)) % MERSENNE31).alias(f"__h{j}")
+            for j, (a, b) in enumerate(_affine_params())
+        ]
+    ).select(
+        id_col, F.array(*[F.col(f"__h{j}") for j in range(NUM_HASHES)]).alias("__sig")
     )
+    return sig.select(id_col, F.explode(band_keys(F.col("__sig"))).alias("band_key"))
+
+
+def _docs_with_shingles(spark: SparkSession, sf_dir: str, hashed: bool = False) -> DataFrame:
+    """(doc_id, lang, sh) over the documents table (see shingle_sets)."""
+    from railgun_spark.operators.text import _docs_scan
+
+    return shingle_sets(_docs_scan(spark, sf_dir), "doc_id", "lang", hashed=hashed)
 
 
 # --------------------------------------------------------------------------
@@ -498,11 +500,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Thin wrapper over jaccard_similarity_join (see its docstring for the
     # lossless-prefix-filter argument): shingles hash to 8-byte ints
     # map-side so candidate/verify rows carry int arrays, not ~2 KB text.
-    s = _docs_with_shingles(spark, sf_dir).select(
-        "doc_id",
-        "lang",
-        F.transform("sh", lambda g: F.xxhash64(g)).alias("sh"),
-    )
+    s = _docs_with_shingles(spark, sf_dir, hashed=True)
     pairs = jaccard_similarity_join(
         s, id_col="doc_id", set_col="sh", tau_num=4, tau_den=5, block_cols=("lang",)
     )
@@ -526,6 +524,30 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 DUP_WINDOW_K = 10
 DUP_WINDOW_FRAC = 0.5
+
+
+def _window_hash_array(ws: Column, k: int) -> Column:
+    """hash60 of every k-word window of the word array `ws`, in order
+    (non-distinct: a window repeated inside one doc appears each time).
+    `ws` must be a bound column, not the tokenizer: the expression
+    references it twice per window."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(ws) - k + 1),
+        lambda i: _hash60_str(F.concat_ws(" ", F.slice(ws, i, k))),
+    )
+
+
+def _window_hashes(
+    docs: DataFrame, id_col: str, text_col: str = "text", k: int = DUP_WINDOW_K
+) -> DataFrame:
+    """(id_col, h) for every k-word window of every doc with >= k words,
+    tokenized in its own projection like `shingle_sets`."""
+    ws = words(F.col(text_col))
+    return (
+        docs.filter(F.size(ws) >= k)
+        .select(id_col, ws.alias("__ws"))
+        .select(id_col, F.explode(_window_hash_array(F.col("__ws"), k)).alias("h"))
+    )
 
 
 @query(
@@ -599,22 +621,7 @@ def window_dup_frac_frame(docs: DataFrame) -> DataFrame:
     a sort-merge join, i.e. two MORE shuffles)."""
     from pyspark.sql import Window
 
-    k = DUP_WINDOW_K
-    # two-stage tokenize -> window-hash (r18, same discipline as
-    # _docs_with_shingles): the generator references the word array
-    # twice (sequence bound + slice), so an inlined regexp tokenizer
-    # would run per reference; projecting `ws` first makes it one
-    # regexp per row, with the per-window md5 left as the real floor
-    ws_col = F.col("__ws")
-    win_hashes = F.transform(
-        F.sequence(F.lit(1), F.size(ws_col) - k + 1),
-        lambda i: _hash60_str(F.concat_ws(" ", F.slice(ws_col, i, k))),
-    )
-    win = (
-        docs.filter(F.size(words(F.col("text"))) >= k)
-        .select("doc_id", words(F.col("text")).alias("__ws"))
-        .select("doc_id", F.explode(win_hashes).alias("h"))
-    )
+    win = _window_hashes(docs, "doc_id")
     # r18 skew hardening (VERDICT r17 #4/#6): aggregate BEFORE anything
     # is keyed by h alone. groupBy(h, doc_id) gets Catalyst's partial
     # (map-side) aggregation, so intra-doc window repeats collapse
@@ -739,12 +746,8 @@ def span_removal_frame(
         F.col(id_col).alias("doc_id"), words(F.col(text_col)).alias("ws")
     )
     base = base.localCheckpoint(eager=False)  # reused: window explode + final rewrite
-    win_hashes = F.transform(
-        F.sequence(F.lit(1), F.size("ws") - k + 1),
-        lambda i: _hash60_str(F.concat_ws(" ", F.slice("ws", i, k))),
-    )
     win = base.filter(F.size("ws") >= k).select(
-        "doc_id", F.posexplode(win_hashes).alias("i0", "h")
+        "doc_id", F.posexplode(_window_hash_array(F.col("ws"), k)).alias("i0", "h")
     )
     wh = Window.partitionBy("h")
     dupwin = (
@@ -1099,9 +1102,7 @@ def containment_similarity_join(
     tags=("dedup", "containment"),
 )
 def dedup_containment_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _docs_with_shingles(spark, sf_dir).select(
-        "doc_id", F.transform("sh", lambda g: F.xxhash64(g)).alias("sh")
-    )
+    s = _docs_with_shingles(spark, sf_dir, hashed=True)
     # CONTAIN_THRESHOLD = 0.9 as the rational 9/10
     pairs = containment_similarity_join(s, "doc_id", "sh", tau_num=9, tau_den=10)
     # container = larger set; on equal sizes the LOWER id (= id_small by
@@ -1220,27 +1221,22 @@ def _minhash_oracle() -> str:
     tags=("dedup", "reporting"),
 )
 def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _docs_with_shingles(spark, sf_dir).select(
-        "doc_id", F.transform("sh", lambda g: F.xxhash64(g)).alias("sh")
-    )
+    s = _docs_with_shingles(spark, sf_dir, hashed=True)
     # the ground-truth and LSH legs are independent pipelines whose
     # eager checkpoints (prefix table / signature bands) otherwise
     # materialize strictly sequentially at build time — overlap them
     # (guide-§2.6), same discipline as corpus_verdicts
-    from concurrent.futures import ThreadPoolExecutor
+    from railgun_spark.session import overlap
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact = pool.submit(
-            lambda: jaccard_similarity_join(s, "doc_id", "sh", 1, 2).select(
-                F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-            )
-        )
-        f_lsh = pool.submit(
-            lambda: minhash_dup_pairs(spark, sf_dir, 0.5)
-            .select("doc_a", "doc_b")
-            .withColumn("__hit", F.lit(1))
-        )
-        exact, lsh = f_exact.result(), f_lsh.result()
+    exact, lsh = overlap(
+        spark,
+        lambda: jaccard_similarity_join(s, "doc_id", "sh", 1, 2).select(
+            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
+        ),
+        lambda: minhash_dup_pairs(spark, sf_dir, 0.5)
+        .select("doc_a", "doc_b")
+        .withColumn("__hit", F.lit(1)),
+    )
     # LSH's verified pairs are a subset of the exact set (same J filter),
     # so one left join carries all three counts. The zero-exact-pairs
     # corpus (the healthy steady state this canary confirms) reports NULL
@@ -1269,28 +1265,12 @@ def minhash_dup_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.5) 
     re-shingling the corpus 3x — the same persist-signatures trade every
     production MinHash pipeline makes (23% faster at sf0.1 here)."""
     s = _docs_with_shingles(spark, sf_dir).select("doc_id", "sh").localCheckpoint()
-    # explode so the base md5 is computed ONCE per shingle in codegen'd row
-    # form; the 16 permutations are cheap integer min-aggregates.
-    tok = s.select("doc_id", F.explode("sh").alias("sg")).select(
-        "doc_id", (_hash60_str(F.col("sg")) % MERSENNE31).alias("h31")
-    )
-    sig = tok.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h31") + F.lit(b)) % MERSENNE31).alias(f"h{j}")
-            for j, (a, b) in enumerate(_affine_params())
-        ]
-    )
-    sig = sig.select(
-        "doc_id", F.array(*[F.col(f"h{j}") for j in range(NUM_HASHES)]).alias("sig")
-    )
     # materialize the band keys ONCE: the self-join otherwise plans the
     # whole signature pipeline (shingle explode + 16-permutation min
     # aggregate) on BOTH sides — the corpus was being minhashed twice.
     # The frame is NUM_BANDS rows/doc of (id, 8-byte key): far cheaper
     # to pin than to recompute at any scale.
-    bands = sig.select(
-        "doc_id", F.explode(band_keys(F.col("sig"))).alias("band_key")
-    ).localCheckpoint()
+    bands = minhash_bands(s, "doc_id").localCheckpoint()
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, (F.col("a.band_key") == F.col("b.band_key")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -1496,20 +1476,21 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _docs_with_shingles(spark, sf_dir)
     return pooled_contamination(
         s.filter(F.col("doc_id") % EVAL_MOD != 0),
-        s.filter(F.col("doc_id") % EVAL_MOD == 0),
+        shingle_pool(s.filter(F.col("doc_id") % EVAL_MOD == 0)),
     ).orderBy("doc_id")
 
 
 def pooled_contamination(
-    tr: DataFrame, ev: DataFrame, threshold: float = CONTAM_THRESHOLD
+    tr: DataFrame, ev_pool: DataFrame, threshold: float = CONTAM_THRESHOLD
 ) -> DataFrame:
-    """Pooled-shingle decontamination over shingled (doc_id, sh) frames:
-    training docs whose shingle overlap with the UNION of eval shingles
-    reaches `threshold`, as (doc_id, n_shingles, n_overlap, contam_frac).
-    The eval pool broadcasts (benchmarks are tiny next to the corpus);
-    the scan is a map-side join + one groupBy(doc_id). Shared by the
-    oracle-gated query and the decontam CLI."""
-    ev_pool = ev.select(F.explode("sh").alias("g")).distinct()
+    """Pooled-shingle decontamination of a shingled (doc_id, sh) frame
+    against `ev_pool`, the distinct eval shingles (`shingle_pool`):
+    training docs whose shingle overlap with the pool reaches
+    `threshold`, as (doc_id, n_shingles, n_overlap, contam_frac). The
+    pool broadcasts (benchmarks are tiny next to the corpus); the scan is
+    a map-side join + one groupBy(doc_id). Shared by the oracle-gated
+    query, the decontam CLI and the streaming twin, which pins its pool
+    once per stream instead of re-aggregating it per micro-batch."""
     tok = tr.select(
         "doc_id", F.size("sh").alias("n_shingles"), F.explode("sh").alias("g")
     )
@@ -1579,9 +1560,7 @@ NEARDUP_CONTAM_NUM, NEARDUP_CONTAM_DEN = 7, 10
     tags=("dedup", "decontamination"),
 )
 def decontaminate_neardup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _docs_with_shingles(spark, sf_dir).select(
-        "doc_id", F.transform("sh", lambda g: F.xxhash64(g)).alias("sh")
-    )
+    s = _docs_with_shingles(spark, sf_dir, hashed=True)
     return neardup_contamination(
         s.filter(F.col("doc_id") % EVAL_MOD != 0),
         s.filter(F.col("doc_id") % EVAL_MOD == 0),
@@ -1598,7 +1577,7 @@ def neardup_contamination(
     frames: each training doc within Jaccard >= tau of some eval doc,
     with its best match (ties -> lowest eval id), as
     (doc_id, eval_doc_id, jaccard). Shared by the oracle-gated query,
-    the streaming twin's semantics, and the decontam CLI."""
+    the streaming twin, and the decontam CLI."""
     pairs = jaccard_similarity_join_ab(tr, ev, "doc_id", "sh", tau_num, tau_den)
     from pyspark.sql.window import Window
 
@@ -1795,9 +1774,7 @@ def _cluster_survivors(pairs: DataFrame) -> DataFrame:
     tags=("dedup", "iterative"),
 )
 def dedup_cluster_survivors_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _docs_with_shingles(spark, sf_dir).select(
-        "doc_id", F.transform("sh", lambda g: F.xxhash64(g)).alias("sh")
-    )
+    s = _docs_with_shingles(spark, sf_dir, hashed=True)
     pairs = jaccard_similarity_join(s, "doc_id", "sh", 1, 2).select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
@@ -2120,23 +2097,6 @@ def append_to_index(survivors: DataFrame, index_path: str) -> None:
 # Within one batch, cross-doc duplication still counts both ways (same
 # min!=max trick as the batch operator).
 # --------------------------------------------------------------------------
-def _window_hashes(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
-    """(id, h) for every k-word window (non-distinct: repeats inside one
-    doc each count toward that doc's fraction, like the batch operator).
-    Two-stage tokenize -> window-hash so the regexp runs once per row
-    (see window_dup_frac_frame)."""
-    ws_col = F.col("__ws")
-    win_hashes = F.transform(
-        F.sequence(F.lit(1), F.size(ws_col) - k + 1),
-        lambda i: _hash60_str(F.concat_ws(" ", F.slice(ws_col, i, k))),
-    )
-    return (
-        df.filter(F.size(words(F.col(text_col))) >= k)
-        .select(F.col(id_col).alias("__id"), words(F.col(text_col)).alias("__ws"))
-        .select("__id", F.explode(win_hashes).alias("h"))
-    )
-
-
 def span_dup_against_index(
     df: DataFrame,
     index_path: str,
@@ -2151,7 +2111,7 @@ def span_dup_against_index(
     `append_window_hashes_to_index` with the admitted docs to commit.
     Shuffles carry (h, id) 8-byte pairs; the index join is a left semi on
     the hash column only."""
-    win = _window_hashes(df, text_col, id_col, k)
+    win = _window_hashes(df.select(F.col(id_col).alias("__id"), text_col), "__id", text_col, k)
     per = win.groupBy("h", "__id").agg(F.count(F.lit(1)).alias("cnt"))
     # intra-batch duplicated hashes: seen in >= 2 docs of this batch
     batch_dup = (
@@ -2192,7 +2152,7 @@ def append_window_hashes_to_index(
     """Append the admitted docs' DISTINCT window hashes (8 bytes/row).
     Replays re-append the same hashes — semi-join consumers are unaffected
     by physical duplicates, and compact_index() folds them away."""
-    _window_hashes(df, text_col, id_col, k).select("h").distinct().write.mode(
+    _window_hashes(df, id_col, text_col, k).select("h").distinct().write.mode(
         "append"
     ).parquet(index_path)
 
@@ -2254,46 +2214,6 @@ def append_to_bucketed_index(survivors: DataFrame, table: str) -> None:
 # zero shuffle until the index join, which at PB scale is a bucketed
 # equi-join on uniformly-distributed band hashes.
 # --------------------------------------------------------------------------
-def _band_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, band_key) — one row per (doc, band). Docs with < 3 words have
-    no shingles, hence no bands: they can never near-dup match and always
-    survive (exact dedup handles them). The word-count filter below
-    enforces that (>= 3 words <=> >= 1 shingle; the cheap form keeps the
-    pushed-down Filter from re-evaluating the whole interpreted shingle
-    chain per row — see _docs_with_shingles): without it, an empty
-    shingle array yields a NULL-min signature whose concat_ws band keys
-    DEGENERATE to '0'..'3' — every short doc would collide with every
-    other short doc forever once one was admitted to the index.
-
-    Signatures use the exploded row form minhash_dup_pairs settled on —
-    one codegen'd md5 per shingle ROW, then NUM_HASHES cheap integer
-    min-aggregates — NOT the array-expression minhash_signature, whose
-    md5 base transform gets inlined into each of the 16 array_min
-    higher-order functions (16x the cryptographic work, interpreted
-    per-element). The r11 ingest grid caught the gap: 500 gate docs took
-    12 s through the array form vs <1 s through this one (identical
-    band keys — same hash family, same params)."""
-    tok = (
-        df.filter(F.size(words(F.col(text_col))) >= 3)
-        .select(F.col(id_col).alias("__id"), words(F.col(text_col)).alias("__ws"))
-        .select("__id", shingles_of_words(F.col("__ws")).alias("__sh"))
-        .select("__id", F.explode("__sh").alias("__sg"))
-        .select("__id", (_hash60_str(F.col("__sg")) % MERSENNE31).alias("__h31"))
-    )
-    sig = tok.groupBy("__id").agg(
-        *[
-            F.min((F.lit(a) * F.col("__h31") + F.lit(b)) % MERSENNE31).alias(f"__h{j}")
-            for j, (a, b) in enumerate(_affine_params())
-        ]
-    ).select(
-        "__id",
-        F.array(*[F.col(f"__h{j}") for j in range(NUM_HASHES)]).alias("__sig"),
-    )
-    return sig.select(
-        "__id", F.explode(band_keys(F.col("__sig"))).alias("band_key")
-    )
-
-
 def near_dup_against_index(
     df: DataFrame,
     index_path: str,
@@ -2302,7 +2222,8 @@ def near_dup_against_index(
 ) -> DataFrame:
     """Rows of `df` with no LSH band collision against the index nor
     against a smaller-id row of this batch. Commit survivors with
-    `append_bands_to_index`.
+    `append_bands_to_index`. Docs with < 3 words have no bands, so they
+    never near-dup match and always survive (exact dedup handles them).
 
     Fault-tolerance tradeoff: the eager localCheckpoint below stores the
     band blocks on executors WITHOUT lineage — an executor loss mid-job
@@ -2317,7 +2238,8 @@ def near_dup_against_index(
     # three plan branches consume the bands (both intra-batch join sides
     # + the index semi-join): materialize once instead of re-hashing the
     # batch's shingles per branch
-    bands = _band_rows(df, text_col, id_col).localCheckpoint()
+    sets = shingle_sets(df.select(F.col(id_col).alias("__id"), text_col), "__id", text_col=text_col)
+    bands = minhash_bands(sets, "__id").localCheckpoint()
     a, b = bands.alias("a"), bands.alias("b")
     intra_hits = (
         a.join(b, (F.col("a.band_key") == F.col("b.band_key")) & (F.col("b.__id") < F.col("a.__id")))
@@ -2342,9 +2264,8 @@ def append_bands_to_index(
 ) -> None:
     """Append the survivors' band keys (recomputed map-only; the index
     stays ~NUM_BANDS rows/doc regardless of document size)."""
-    _band_rows(survivors, text_col, id_col).select("band_key").write.mode(
-        "append"
-    ).parquet(index_path)
+    sets = shingle_sets(survivors, id_col, text_col=text_col)
+    minhash_bands(sets, id_col).select("band_key").write.mode("append").parquet(index_path)
 
 
 def compact_index(spark: SparkSession, index_path: str, n_files: int | None = None) -> int:

@@ -97,16 +97,9 @@ def _pagerank_oracle() -> str:
     tags=("graph", "iterative"),
 )
 def pagerank_word_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # size-gated spread (r18): at the 0.6 MB bench scan the extra
-    # exchange costs more than it buys (A/B 1.93 -> 2.24 s — the gate
-    # keeps it off there), but a near-single-split corpus serializes
-    # the word-explode map side; 8 MiB gate per the text/dedup family
-    # crossover measurements (text.py _docs_scan)
-    from railgun_spark.session import spread_scan
+    from railgun_spark.operators.text import _docs_scan
 
-    docs = spread_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), min_bytes=8 << 20
-    )
+    docs = _docs_scan(spark, sf_dir)
     # slice of the sorted distinct-word array bounds the self-join fan-out
     # per doc at K·(K-1) regardless of document length (see PR_MAX_WORDS_PER_DOC)
     dw = (

@@ -182,24 +182,14 @@ def token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reporting", "dedup"),
 )
 def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from railgun_spark.operators.dedup import shingles_of_words, words
-    from railgun_spark.session import spread_scan
+    from railgun_spark.operators.dedup import shingle_sets
+    from railgun_spark.operators.text import _docs_scan
 
-    # SIZE-GATED spread (r18, same gate/rationale as _docs_with_shingles
-    # in dedup.py): a wash at the 0.6 MB bench scan (A/B min-of-5:
-    # 1.854 -> 1.885 s, so the gate keeps it off there), a multi-x win
-    # once the per-row shingle pass serializes on a near-single-split
-    # scan (measured at a 24 MB corpus)
-    docs = spread_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), min_bytes=8 << 20
-    )
     # pinned once: the marginals and BOTH self-join sides otherwise
-    # re-plan the shingle explode + distinct (4 scans in the before-plan).
-    # Two-stage tokenize->shingle so the regexp evaluates once per row
-    # (see _docs_with_shingles in dedup.py).
+    # re-plan the shingle explode + distinct (4 scans in the before-plan)
     hs = (
-        docs.select("source", words(F.col("text")).alias("__ws"))
-        .select("source", F.explode(shingles_of_words(F.col("__ws"))).alias("shingle"))
+        shingle_sets(_docs_scan(spark, sf_dir), "source")
+        .select("source", F.explode("sh").alias("shingle"))
         .distinct()
     ).localCheckpoint()
     marg = hs.groupBy("source").agg(F.count(F.lit(1)).alias("n_shingles"))

@@ -1774,9 +1774,9 @@ def build_ivf_index(
     # spark.sql.shuffle.partitions so hot lists split across tasks.
     # The indexed-vector count rides the write as an observe() metric —
     # the previous read-back count() re-scanned the freshly written index.
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Observation
+
+    from railgun_spark.session import overlap
 
     obs = Observation()
 
@@ -1795,9 +1795,7 @@ def build_ivf_index(
 
     # independent writes overlap (guide-§2.6): the tiny centroids job
     # fills the vecs write's scheduling gaps instead of queueing after it
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fv, fc = pool.submit(_write_vecs), pool.submit(_write_cents)
-        fv.result(), fc.result()
+    overlap(spark, _write_vecs, _write_cents)
     return int(obs.get["n"])
 
 
@@ -2492,9 +2490,9 @@ def build_ivf_pq_index(
     # metadata writes serialized behind them. The indexed-vector count
     # rides the codes write as an observe() metric instead of a
     # read-back count() over the freshly written index.
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Observation
+
+    from railgun_spark.session import overlap
 
     obs = Observation()
 
@@ -2523,9 +2521,7 @@ def build_ivf_pq_index(
         jobs.append(
             lambda: _write_raw_store(assigned, f"{index_path}/raw", "overwrite")
         )
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        for f in [pool.submit(j) for j in jobs]:
-            f.result()
+    overlap(spark, *jobs)
     # meta/ is the COMMIT MARKER: written only after every overlapped
     # artifact write has joined, so a crash mid-build leaves an index
     # with no meta/ — which readers reject as incomplete
@@ -2561,25 +2557,20 @@ def ann_ivf_pq_search_index(
     costs R raw rows per query and removes that cap. The shortlist
     (Q×R rows) broadcasts into the pruned raw scan — no index-side
     shuffle, same discipline as the probes join."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Window
+
+    from railgun_spark.session import overlap
 
     # the three K-bounded metadata reads (centroids, codebooks,
     # encoding marker) are independent collects — overlap them
     # (guide-§2.6) instead of paying three sequential driver round
     # trips per search
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_cents = pool.submit(
-            lambda: spark.read.parquet(f"{index_path}/centroids").collect()
-        )
-        f_books = pool.submit(
-            lambda: spark.read.parquet(f"{index_path}/codebooks").collect()
-        )
-        f_enc = pool.submit(_ivf_pq_encoding, spark, index_path)
-        cents_rows, books_rows, encoding = (
-            f_cents.result(), f_books.result(), f_enc.result()
-        )
+    cents_rows, books_rows, encoding = overlap(
+        spark,
+        lambda: spark.read.parquet(f"{index_path}/centroids").collect(),
+        lambda: spark.read.parquet(f"{index_path}/codebooks").collect(),
+        lambda: _ivf_pq_encoding(spark, index_path),
+    )
     cents = sorted(
         (int(r["cid"]), [float(x) for x in r["cv"]]) for r in cents_rows
     )

@@ -22,16 +22,15 @@ from railgun_spark.suite import extra_query, query
 
 
 def _docs_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan for the per-row text passes, spread when a
-    near-single-split file would serialize the compute.
-
-    Size-gated (8 MiB, see dedup._docs_with_shingles for the measured
-    crossover: spread is a regression at the 0.6 MB bench scan, a
-    x1.6-5.9 win at a 24 MB single-file corpus where ~6 splits fed 32
-    cores — inverted_index_rare 26.2 -> 4.5 s, unigram 15.5 -> 6.1 s,
-    word_hist 3.8 -> 1.5 s, pmi 15.8 -> 9.3 s measured there). At
-    production scans the frame already carries >= cores partitions and
-    spread_scan no-ops."""
+    """documents scan for every per-row text pass (tokenize, shingle,
+    word explode), spread when a near-single-split file would serialize
+    the compute. Size-gated at 8 MiB, between the measured crossover
+    points: at the 0.6 MB bench scan the spread lost (r17/r18 A/Bs:
+    dedup_ngram_jaccard 3.21 -> 3.42 s, pagerank 1.93 -> 2.24 s), at a
+    24 MB single-file corpus where ~6 splits fed 32 cores it won
+    x1.6-5.9 (minhash 34.6 -> 9.1 s, inverted_index_rare 26.2 -> 4.5 s,
+    unigram 15.5 -> 6.1 s, pmi 15.8 -> 9.3 s). At production scans the
+    frame already carries >= cores partitions and spread_scan no-ops."""
     from railgun_spark.session import spread_scan
 
     return spread_scan(

@@ -157,6 +157,27 @@ def pin_if_big(df, min_bytes: int = 64 << 20):
     return df.localCheckpoint()
 
 
+def overlap(spark: SparkSession, *thunks):
+    """Run independent thunks (each driving its own Spark jobs)
+    concurrently and return their results in order (guide §2.6: one
+    branch's straggler tail backfills with the others' tasks). Each runs
+    through `inheritable_thread_target`, so its jobs carry the caller's
+    local properties — job group, description, scheduler pool — which
+    pinned-thread mode otherwise leaves behind on a pool thread."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def carry(t):
+        wrap = inheritable_thread_target(spark)
+        # pinned-thread mode off: the session comes back unchanged
+        return t if wrap is spark else wrap(t)
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(carry(t)) for t in thunks]
+        return [f.result() for f in futures]
+
+
 def local_df(spark: SparkSession, rows: list, schema: str):
     """Tiny driver-side rows as a SINGLE-partition DataFrame.
 

@@ -22,50 +22,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from railgun_spark.operators.dedup import (
-    CONTAM_THRESHOLD,
     EVAL_MOD,
-    shingles_of_words,
-    words,
+    neardup_contamination,
+    pooled_contamination,
+    shingle_pool,
+    shingle_sets,
 )
 from railgun_spark.streaming.ingest import _drain_availablenow
-
-
-def eval_shingle_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Static side: distinct trigram shingles of the eval set (tiny)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        docs.filter(F.col("doc_id") % EVAL_MOD == 0)
-        # word-count form of the non-empty filter (>= 3 words <=> >= 1
-        # shingle): the pushed-down size(sh) form re-evaluates the whole
-        # interpreted shingle chain per row (see _docs_with_shingles)
-        .filter(F.size(words(F.col("text"))) >= 3)
-        # two-stage tokenize->shingle: regexp once per row (dedup.py)
-        .select(words(F.col("text")).alias("__ws"))
-        .select(shingles_of_words(F.col("__ws")).alias("sh"))
-        .select(F.explode("sh").alias("g"))
-        .distinct()
-    )
-
-
-def flag_contaminated_batch(batch_df: DataFrame, ev: DataFrame) -> DataFrame:
-    """The per-batch join: identical semantics to the batch operator."""
-    s = (
-        batch_df.filter(
-            (F.col("doc_id") % EVAL_MOD != 0)
-            & (F.size(words(F.col("text"))) >= 3)
-        )
-        .select("doc_id", words(F.col("text")).alias("__ws"))
-        .select("doc_id", shingles_of_words(F.col("__ws")).alias("sh"))
-    )
-    tr = s.select("doc_id", F.size("sh").alias("n_shingles"), F.explode("sh").alias("g"))
-    hits = (
-        tr.join(F.broadcast(ev), "g")
-        .groupBy("doc_id", "n_shingles")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    return hits.filter(
-        F.col("n_overlap") / F.col("n_shingles") >= CONTAM_THRESHOLD
-    ).select("doc_id")
 
 
 def _refuse_fresh_checkpoint_over_used_sink(checkpoint_dir: str, flags_sink: str) -> None:
@@ -150,15 +113,21 @@ def stream_decontaminate_availablenow(
     flags (the join has no cross-batch state) and overwrites the same
     partition, so restarts never duplicate or lose flags."""
     _refuse_fresh_checkpoint_over_used_sink(checkpoint_dir, flags_sink)
-    # materialize the eval side ONCE: without this, every micro-batch
+    static_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # materialize the eval pool ONCE: without this, every micro-batch
     # re-executes the whole scan/shingle/explode/distinct subtree before
     # broadcasting — "computed once" must mean the work, not just the plan
-    ev = eval_shingle_set(spark, sf_dir).localCheckpoint()
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    pool = shingle_pool(
+        shingle_sets(static_docs.filter(F.col("doc_id") % EVAL_MOD == 0))
+    ).localCheckpoint()
+
+    def flags_of(batch_df: DataFrame) -> DataFrame:
+        tr = shingle_sets(batch_df.filter(F.col("doc_id") % EVAL_MOD != 0), "doc_id")
+        return pooled_contamination(tr, pool).select("doc_id")
+
     return _drain_to_flags(
-        spark, schema, source_dir, checkpoint_dir, flags_sink, max_files_per_trigger,
-        lambda batch_df: flag_contaminated_batch(batch_df, ev),
-        "doc_id BIGINT, ingest_batch INT",
+        spark, static_docs.schema, source_dir, checkpoint_dir, flags_sink,
+        max_files_per_trigger, flags_of, "doc_id BIGINT, ingest_batch INT",
     )
 
 
@@ -183,54 +152,18 @@ def stream_neardup_decontaminate_availablenow(
     asserts the exact (doc_id, eval_doc_id, jaccard) set. Flags land in
     the replay-idempotent ``ingest_batch=<id>`` partition layout; the
     driver never holds a flag row."""
-    from railgun_spark.operators.dedup import (
-        NEARDUP_CONTAM_DEN,
-        NEARDUP_CONTAM_NUM,
-        jaccard_similarity_join_ab,
-    )
-    from pyspark.sql.window import Window
-
     _refuse_fresh_checkpoint_over_used_sink(checkpoint_dir, flags_sink)
     static_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # pinned eval side: hashed shingle sets, materialized once
-    ev = (
-        static_docs.filter(
-            (F.col("doc_id") % EVAL_MOD == 0)
-            & (F.size(words(F.col("text"))) >= 3)
-        )
-        .select("doc_id", words(F.col("text")).alias("__ws"))
-        .select(
-            "doc_id",
-            F.transform(shingles_of_words(F.col("__ws")), lambda g: F.xxhash64(g)).alias("sh"),
-        )
-        .localCheckpoint()
-    )
+    ev = shingle_sets(
+        static_docs.filter(F.col("doc_id") % EVAL_MOD == 0), "doc_id", hashed=True
+    ).localCheckpoint()
 
     def flags_of(batch_df: DataFrame) -> DataFrame:
-        tr = (
-            batch_df.filter(
-                (F.col("doc_id") % EVAL_MOD != 0)
-                & (F.size(words(F.col("text"))) >= 3)
-            )
-            .select("doc_id", words(F.col("text")).alias("__ws"))
-            .select(
-                "doc_id",
-                F.transform(shingles_of_words(F.col("__ws")), lambda g: F.xxhash64(g)).alias("sh"),
-            )
+        tr = shingle_sets(
+            batch_df.filter(F.col("doc_id") % EVAL_MOD != 0), "doc_id", hashed=True
         )
-        pairs = jaccard_similarity_join_ab(
-            tr, ev, "doc_id", "sh", NEARDUP_CONTAM_NUM, NEARDUP_CONTAM_DEN
-        )
-        best = Window.partitionBy("id_left").orderBy(F.desc("jaccard"), "id_right")
-        return (
-            pairs.withColumn("__rn", F.row_number().over(best))
-            .filter(F.col("__rn") == 1)
-            .select(
-                F.col("id_left").alias("doc_id"),
-                F.col("id_right").alias("eval_doc_id"),
-                F.round("jaccard", 4).alias("jaccard"),
-            )
-        )
+        return neardup_contamination(tr, ev)
 
     return _drain_to_flags(
         spark, static_docs.schema, source_dir, checkpoint_dir, flags_sink,

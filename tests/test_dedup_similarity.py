@@ -6,7 +6,8 @@ from pyspark.sql import functions as F
 
 from railgun_spark.operators.dedup import (
     dedup_exact_keep_first,
-    minhash_signature,
+    minhash_bands,
+    shingle_sets,
     shingles,
     simhash_fingerprints,
 )
@@ -35,7 +36,7 @@ def test_shingle_pipeline_single_evaluation(spark, tmp_path):
        inline (each chain instance costs the full interpreted
        higher-order evaluation per corpus row).
     """
-    from railgun_spark.operators.dedup import _docs_with_shingles, words
+    from railgun_spark.operators.dedup import words
 
     docs = spark.createDataFrame(
         [
@@ -51,9 +52,10 @@ def test_shingle_pipeline_single_evaluation(spark, tmp_path):
     sf_dir = str(tmp_path)
     docs.write.parquet(f"{sf_dir}/documents.parquet")
 
+    scan = spark.read.parquet(f"{sf_dir}/documents.parquet")
     got = {
         r["doc_id"]: sorted(r["sh"])
-        for r in _docs_with_shingles(spark, sf_dir).collect()
+        for r in shingle_sets(scan, "doc_id").collect()
     }
     ref = {
         r["doc_id"]: sorted(r["sh"])
@@ -72,7 +74,7 @@ def test_shingle_pipeline_single_evaluation(spark, tmp_path):
     assert all(r["w3"] == r["nonempty"] for r in both)
 
     # plan shape: one chain instance in the exploded pipeline
-    tok = _docs_with_shingles(spark, sf_dir).select(
+    tok = shingle_sets(scan, "doc_id").select(
         "doc_id", F.explode("sh").alias("g")
     )
     plan = tok._jdf.queryExecution().executedPlan().toString()
@@ -112,8 +114,11 @@ def test_minhash_identical_texts_share_signature(spark):
         [(1, "the quick brown fox jumps over the lazy dog"), (2, "the quick brown fox jumps over the lazy dog"), (3, "completely different words entirely here now")],
         ["id", "text"],
     )
-    sig = df.select("id", minhash_signature(shingles(F.col("text"))).alias("sig")).collect()
-    by_id = {r["id"]: r["sig"] for r in sig}
+    bands = minhash_bands(shingle_sets(df, "id"), "id").collect()
+    by_id = {}
+    for r in bands:
+        by_id.setdefault(r["id"], []).append(r["band_key"])
+    by_id = {k: sorted(v) for k, v in by_id.items()}
     assert by_id[1] == by_id[2]
     assert by_id[1] != by_id[3]
 
@@ -785,7 +790,6 @@ def test_short_docs_never_near_dup_match(spark, tmp_path):
     from pyspark.sql import Row
 
     from railgun_spark.operators.dedup import (
-        _band_rows,
         append_bands_to_index,
         near_dup_against_index,
     )
@@ -794,13 +798,70 @@ def test_short_docs_never_near_dup_match(spark, tmp_path):
     b1 = spark.createDataFrame(
         [Row(doc_id=1, text="hi"), Row(doc_id=2, text="yo there")]
     )
-    assert _band_rows(b1, "text", "doc_id").count() == 0
+    assert minhash_bands(shingle_sets(b1, "doc_id"), "doc_id").count() == 0
     s1 = near_dup_against_index(b1, idx)
     assert sorted(r["doc_id"] for r in s1.collect()) == [1, 2]
     append_bands_to_index(s1, idx)  # writes nothing for short docs
 
     b2 = spark.createDataFrame([Row(doc_id=10, text="hey now")])
     assert [r["doc_id"] for r in near_dup_against_index(b2, idx).collect()] == [10]
+
+
+_GOLDEN_TEXT_BANDS = [
+    "0:166047306:440158014:380842389:542062907",
+    "0:345851042:145502943:474819217:50208269",
+    "0:345851042:145502943:474819217:50208269",
+    "1:338440468:321658926:66688969:112687711",
+    "1:338440468:88375464:231400806:112687711",
+    "1:605280069:238172417:814927537:265932370",
+    "2:104648940:29561172:10771787:781549",
+    "2:112961126:29561172:10771787:781549",
+    "2:778444150:636703240:259149987:413439642",
+    "3:279370328:29991536:52241975:261202091",
+    "3:279370328:29991536:52241975:628202786",
+    "3:820554963:1247146027:66005660:437062872",
+]
+_GOLDEN_TEXT_WINDOWS = [
+    81575525717369554,
+    434591219844338095,
+    521384712224479079,
+    574379157323263950,
+    778907718042404368,
+]
+
+
+def test_text_index_rows_golden(spark, tmp_path):
+    """`append_bands_to_index` and `append_window_hashes_to_index` write
+    exactly the recorded rows: the stored band keys and window hashes of
+    the text indexes are a persisted format. A doc under 3 words writes
+    no band; a doc under DUP_WINDOW_K words writes no window hash."""
+    from pyspark.sql import Row
+
+    from railgun_spark.operators.dedup import (
+        append_bands_to_index,
+        append_window_hashes_to_index,
+    )
+
+    docs = [
+        Row(doc_id=1, text="The quick brown fox jumps over the lazy dog, again and again today."),
+        Row(doc_id=2, text="Copied: the quick brown fox jumps over the lazy dog again and again!"),
+        Row(doc_id=3, text="only five short words here"),
+        Row(doc_id=4, text="two words"),
+    ]
+
+    def written(df, kind):
+        path = str(tmp_path / f"{kind}_{df.count()}")
+        if kind == "bands":
+            append_bands_to_index(df, path)
+            return sorted(r[0] for r in spark.read.schema("band_key STRING").parquet(path).collect())
+        append_window_hashes_to_index(df, path)
+        return sorted(r[0] for r in spark.read.schema("h BIGINT").parquet(path).collect())
+
+    every = spark.createDataFrame(docs)
+    assert written(every, "bands") == _GOLDEN_TEXT_BANDS
+    assert written(every, "windows") == _GOLDEN_TEXT_WINDOWS
+    assert written(spark.createDataFrame(docs[3:]), "bands") == []
+    assert written(spark.createDataFrame(docs[2:]), "windows") == []
 
 
 def test_dedup_exact_keep_first_nonunique_ids(spark):

@@ -35,3 +35,32 @@ def test_codegen_cache_reuses_compiled_plans(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_ENTRIES
     )
+
+
+def test_overlap_jobs_keep_caller_job_group(spark, tmp_path):
+    """Jobs that `session.overlap` runs on pool threads carry the
+    caller's job group: every job a tiny `lsh_recall_report` starts
+    under setJobGroup is listed for that group, none lands ungrouped
+    (pinned-thread mode does not hand local properties to a plain pool
+    thread)."""
+    from railgun_spark.operators.dedup import lsh_recall_report
+
+    spark.createDataFrame(
+        [
+            (1, "en", "the quick brown fox jumps over the lazy dog"),
+            (2, "en", "the quick brown fox jumps over the lazy cat"),
+            (3, "en", "something else entirely written here today"),
+        ],
+        ["doc_id", "lang", "text"],
+    ).write.parquet(f"{tmp_path}/documents.parquet")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("overlap-attribution", "lsh recall under one job group")
+    try:
+        lsh_recall_report(spark, str(tmp_path)).collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert tracker.getJobIdsForGroup("overlap-attribution")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()

@@ -165,14 +165,18 @@ def test_stream_decontaminate_matches_batch(spark, tmp_path):
     # crash-replay idempotence: a replayed batch (same batch id, same
     # content — what a checkpoint resume delivers) OVERWRITES its own
     # partition, leaving one copy of every flag
-    from railgun_spark.streaming.decontam import (
-        eval_shingle_set,
-        flag_contaminated_batch,
+    from railgun_spark.operators.dedup import (
+        EVAL_MOD,
+        pooled_contamination,
+        shingle_pool,
+        shingle_sets,
     )
 
-    ev = eval_shingle_set(spark, sf_dir)
+    static = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    ev = shingle_pool(shingle_sets(static.filter(F.col("doc_id") % EVAL_MOD == 0)))
     batch_df = spark.read.parquet(str(src / "shard-0.parquet"))
-    flag_contaminated_batch(batch_df, ev).write.mode("overwrite").parquet(
+    tr = shingle_sets(batch_df.filter(F.col("doc_id") % EVAL_MOD != 0), "doc_id")
+    pooled_contamination(tr, ev).select("doc_id").write.mode("overwrite").parquet(
         str(tmp_path / "flags" / "ingest_batch=0")
     )
     replay = spark.read.option("basePath", str(tmp_path / "flags")).parquet(

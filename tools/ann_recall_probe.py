@@ -37,11 +37,12 @@ Emits {"metric": "ann_ivf_recall_widek", ...}.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.1"
 QUERY_IDS = tuple(range(100, 120))

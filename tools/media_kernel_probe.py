@@ -18,11 +18,12 @@ Usage: python tools/media_kernel_probe.py [--out MEDIA_KERNEL_PROBE.json]
 from __future__ import annotations
 
 import json
+import os
 import struct
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

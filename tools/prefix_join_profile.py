@@ -21,7 +21,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -50,9 +50,7 @@ def profile_jaccard(spark, sf_dir):
     )
 
     res = {}
-    s_in = _docs_with_shingles(spark, sf_dir).select(
-        "doc_id", "lang", F.transform("sh", lambda g: F.xxhash64(g)).alias("sh")
-    )
+    s_in = _docs_with_shingles(spark, sf_dir, hashed=True)
     bc = ["lang"]
     s = _sets_frame(s_in, "doc_id", "sh", bc)
     _, res["t_sets_frame_noop"] = timed(spark, "jac: sets frame", lambda: noop(s))
@@ -97,9 +95,7 @@ def profile_containment(spark, sf_dir):
     )
 
     res = {}
-    s_in = _docs_with_shingles(spark, sf_dir).select(
-        "doc_id", F.transform("sh", lambda g: F.xxhash64(g)).alias("sh")
-    )
+    s_in = _docs_with_shingles(spark, sf_dir, hashed=True)
     s = _sets_frame(s_in, "doc_id", "sh", [])
     _, res["t_sets_frame_noop"] = timed(spark, "cont: sets frame", lambda: noop(s))
     tok = _tokens(s, [])

@@ -27,10 +27,11 @@ completion marker exists.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.sf1_probe import SRC, _build_sf1, _run  # noqa: E402
 

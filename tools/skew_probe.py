@@ -41,10 +41,11 @@ Usage: python tools/skew_probe.py [blow_factor] [--agg]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.window import Window  # noqa: E402
