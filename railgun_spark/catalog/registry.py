@@ -16,8 +16,9 @@ Reference parity:
 - workflow exec runs jobs sequentially, sharing variables
   (railgun/handlers/WorkflowExecHandler.go:79-186)
 - one TTL'd, source-mtime-stamped memo type (`Memo`) for parsed frames,
-  mask grids and tile features (railgun/cache/Cache.go:25-79,
-  ServiceExecHandler.go:159-278); server.py reuses it for encoded bodies
+  mask grids, tile features and small layers' driver-side snapshots
+  (railgun/cache/Cache.go:25-79, ServiceExecHandler.go:159-278);
+  server.py reuses it for encoded bodies
 """
 
 from __future__ import annotations
@@ -171,6 +172,10 @@ class Catalog:
     # (layer, z, x, y, limit, user_dfl, buffer_tiles) -> GeoJSON feature
     # list: smaller cap, a unit holds up to `limit` features
     _tiles: Memo = field(default_factory=lambda: Memo(256))
+    # (layer,) -> serving.LayerSnapshot, or None for a layer over
+    # spark.sql.autoBroadcastJoinThreshold, whose tiles run on Spark: each
+    # unit is within that threshold (64 MiB by default)
+    _snapshots: Memo = field(default_factory=lambda: Memo(16))
 
     # ---- CRUD (GroupHandler/ItemHandler semantics) ----
     def add(self, obj) -> None:
@@ -207,16 +212,17 @@ class Catalog:
     def _invalidate(self, kind: type) -> None:
         """Drop what was cached under a definition that just changed: a
         datastore's parsed frames and everything derived from them, a
-        layer's grids and tiles. Clearing every frame frees the replaced
-        one at once and keeps ``_frames`` within the live DataStores; the
-        other memos are driver-bounded, so a selective purge is not worth
-        it."""
+        layer's grids, tiles and snapshot. Clearing every frame frees the
+        replaced one at once and keeps ``_frames`` within the live
+        DataStores; the other memos are driver-bounded, so a selective
+        purge is not worth it."""
         if kind is DataStore:
             self._frames.clear()
             self._variable_frames.clear()
         if kind in (Layer, DataStore):
             self._grids.clear()
             self._tiles.clear()
+            self._snapshots.clear()
 
     def _dependents(self, kind: type, name: str) -> list[str]:
         deps: list[str] = []
@@ -330,17 +336,17 @@ class Catalog:
         return df
 
     def _layer_memo(self, memo: Memo, name: str, key: tuple, compute):
-        """``compute(frame, layer_extent)`` for layer ``name`` through
-        ``memo``, stamped with the layer's source mtime: a warm repeat
-        skips the Spark job; a datastore rewrite (mtime), a layer or
-        datastore update or delete, or TTL expiry recomputes."""
+        """``compute(layer_extent)`` for layer ``name`` through ``memo``,
+        stamped with the layer's source mtime: a warm repeat skips the
+        Spark job; a datastore rewrite (mtime), a layer or datastore
+        update or delete, or TTL expiry recomputes."""
         layer: Layer = self.get(Layer, name)
         ds: DataStore = self.get(DataStore, layer.datastore)
         uri = self._resolve_uri(ds.uri, layer.defaults or {})
         extent = tuple(layer.extent) if layer.extent else None
         return memo.get(
             (name, *key), _source_mtime(uri), self.ttl_seconds,
-            lambda: compute(self.layer_frame(name), extent),
+            lambda: compute(extent),
         )
 
     def layer_mask_grid(
@@ -354,9 +360,9 @@ class Catalog:
 
         return self._layer_memo(
             self._grids, name, (z, x, y, mask_zoom, threshold),
-            lambda df, extent: serving.tile_mask_grid(
-                df, z, x, y, mask_zoom=mask_zoom, threshold=threshold,
-                layer_extent=extent,
+            lambda extent: serving.tile_mask_grid(
+                self.layer_frame(name), z, x, y, mask_zoom=mask_zoom,
+                threshold=threshold, layer_extent=extent,
             ),
         )
 
@@ -369,15 +375,25 @@ class Catalog:
         with the same TTL (cache/Cache.go:25-79); without it the data
         route re-ran the bbox filter + collect per request (warm p50
         0.38-0.43 s at 12-wide sf1, SERVE_CONC_SF1_r16, vs the mask's
-        31-36 ms). The cached unit is the GeoJSON feature list."""
+        31-36 ms). The cached unit is the GeoJSON feature list. A miss
+        on a small layer is answered from the layer's snapshot without a
+        Spark job; a user dfl or a layer over the snapshot gate runs the
+        bbox filter + collect on Spark."""
         from railgun_spark.geo import serving
 
+        def compute(extent):
+            snap = None if user_dfl else self._layer_memo(
+                self._snapshots, name, (),
+                lambda _: serving.layer_snapshot(self.layer_frame(name)),
+            )
+            return serving.tile_data(
+                self.layer_frame(name) if snap is None else snap, z, x, y,
+                layer_extent=extent, user_dfl=user_dfl, limit=limit,
+                buffer_tiles=buffer_tiles,
+            )
+
         return self._layer_memo(
-            self._tiles, name, (z, x, y, limit, user_dfl, buffer_tiles),
-            lambda df, extent: serving.tile_data(
-                df, z, x, y, layer_extent=extent,
-                user_dfl=user_dfl, limit=limit, buffer_tiles=buffer_tiles,
-            ),
+            self._tiles, name, (z, x, y, limit, user_dfl, buffer_tiles), compute
         )
 
     def exec_service(self, name: str, variables: dict | None = None):

@@ -9,6 +9,10 @@ Pipeline parity:
     of partition pruning
   bbox filter ∧ layer expression ∧ user dfl -> limit -> GeoJSON envelope
     (pipeline/Pipeline.go:7-11, named/named.go:14-20)
+  small layers: the reference filters its in-memory layer cache by the
+    bbox inside the process (cache/Cache.go:25-79); `LayerSnapshot` is
+    that cache, one driver-side Arrow table per layer, so a tile miss is
+    a numpy mask instead of a Spark job
   mask: group-by-finer-zoom-tile counts -> threshold -> 256x256 png grid
     (LayerMaskHandler.go:176-215, img/RespondWithGrid.go:20-46)
 
@@ -21,9 +25,14 @@ from __future__ import annotations
 
 import struct
 import zlib
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.types import DoubleType, FloatType, IntegralType, StructType
 
 from railgun_spark.dfl import run_pipeline
 from railgun_spark.geo.tiles import bbox_filter, tile_bbox, tile_x, tile_y
@@ -45,8 +54,60 @@ def extent_intersects(a: tuple | list | None, b: tuple | list | None) -> bool:
     return not (a[2] < b[0] or b[2] < a[0] or a[3] < b[1] or b[3] < a[1])
 
 
+@dataclass(frozen=True)
+class LayerSnapshot:
+    """A small layer frame held on the driver: its rows as one Arrow
+    table in ``collect()`` order, its lon/lat as float64 arrays for the
+    bbox mask (null -> NaN, which no bbox holds), and its schema."""
+
+    table: pa.Table
+    lon: np.ndarray
+    lat: np.ndarray
+    schema: StructType
+
+    def rows_in(self, bbox: tuple, limit: int | None = None) -> list[Row]:
+        """The rows inside ``bbox`` (bounds inclusive), the first
+        ``limit`` of them when ``limit >= 0``, built as ``collect()``
+        builds them from Arrow."""
+        w, s, e, n = bbox
+        idx = np.flatnonzero(
+            (self.lon >= w) & (self.lon <= e) & (self.lat >= s) & (self.lat <= n)
+        )
+        if limit is not None and limit >= 0:
+            idx = idx[:limit]
+        return ArrowTableToRowsConversion.convert(self.table.take(idx), self.schema)
+
+
+def layer_snapshot(
+    df: DataFrame, lon_col: str = "lon", lat_col: str = "lat"
+) -> LayerSnapshot | None:
+    """``df`` read once into a `LayerSnapshot` when it is small enough to
+    hold on the driver, else None (its tiles stay on Spark). Small means
+    what Spark itself would ship to every executor: the optimized plan's
+    size estimate is within ``spark.sql.autoBroadcastJoinThreshold``. A
+    threshold of -1 or unknown stats (8 EiB) keeps Spark, and so do
+    lon/lat columns that are not integer or floating point, whose
+    comparison with the bbox Spark casts by its own rules."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if not 0 <= size <= conf.autoBroadcastJoinThreshold():
+        return None
+    fields = {f.name: f.dataType for f in df.schema.fields}
+    if not all(
+        isinstance(fields.get(c), (IntegralType, FloatType, DoubleType))
+        for c in (lon_col, lat_col)
+    ):
+        return None
+    table = df.toArrow()
+
+    def coord(c: str) -> np.ndarray:
+        return np.asarray(table.column(c).to_numpy(), dtype=np.float64)
+
+    return LayerSnapshot(table, coord(lon_col), coord(lat_col), df.schema)
+
+
 def tile_data(
-    df: DataFrame,
+    df: DataFrame | LayerSnapshot,
     z: int,
     x: int,
     y: int,
@@ -57,19 +118,27 @@ def tile_data(
     limit: int | None = None,
     buffer_tiles: int = 1,
 ) -> list[dict]:
-    """Tile data query -> GeoJSON FeatureCollection feature list.
+    """Tile data query -> GeoJSON FeatureCollection feature list, from
+    the layer frame (one Spark job) or its `LayerSnapshot` (no job; a
+    user dfl needs the frame).
 
     Returns [] without touching data when the tile misses the extent."""
     bbox = buffered_tile_bbox(z, x, y, buffer_tiles)
     if not extent_intersects(bbox, layer_extent):
         return []
-    out = df.filter(bbox_filter(F.col(lon_col), F.col(lat_col), bbox))
-    if user_dfl:
-        out = run_pipeline(out, user_dfl)
-    if limit is not None and limit >= 0:
-        out = out.limit(limit)
+    if isinstance(df, LayerSnapshot):
+        if user_dfl:
+            raise ValueError("a user dfl runs on Spark: pass the layer frame")
+        rows = df.rows_in(bbox, limit)
+    else:
+        out = df.filter(bbox_filter(F.col(lon_col), F.col(lat_col), bbox))
+        if user_dfl:
+            out = run_pipeline(out, user_dfl)
+        if limit is not None and limit >= 0:
+            out = out.limit(limit)
+        rows = out.collect()
     feats = []
-    for r in out.collect():
+    for r in rows:
         d = r.asDict(recursive=True)
         lon, lat = d.pop(lon_col), d.pop(lat_col)
         feats.append(
@@ -89,6 +158,11 @@ def feature_collection(features: list[dict]) -> dict:
         "features": features,
         "numberOfFeatures": len(features),
     }
+
+
+# the finest mask zoom below a tile: a grid of at most 2^8 x 2^8 cells,
+# one per pixel of the 256x256 raster
+MASK_MAX_DZ = 8
 
 
 def tile_mask_grid(
@@ -231,8 +305,6 @@ def _lzw_encode(indices, min_code_size: int) -> bytes:
     codes.append(eoi)
     widths.append(dec_width)
 
-    import numpy as np
-
     cd = np.asarray(codes, dtype=np.uint32)
     wd = np.asarray(widths, dtype=np.int64)
     total = int(wd.sum())
@@ -252,8 +324,6 @@ def grid_to_gif(grid: list[list[int]], size: int = 256) -> bytes:
     """GIF87a of the mask grid scaled to size x size — the reference's
     gif branch of img/RespondWithGrid.go:33-34, library-free (from-scratch
     LZW). Two-entry palette: background black, mask white."""
-    import numpy as np
-
     side = len(grid)
     scale = max(1, size // side)
     w = h = side * scale
@@ -366,8 +436,6 @@ def grid_to_jpeg(grid: list[list[int]], size: int = 256) -> bytes:
     """Baseline JPEG of the mask grid — the reference's jpeg branch of
     img/RespondWithGrid.go:35-37, via the library's own grayscale
     encoder (operators/jpeg.py)."""
-    import numpy as np
-
     from railgun_spark.operators.jpeg import encode_gray_jpeg
 
     side = len(grid)

@@ -42,6 +42,9 @@ ROWS_PER_BAND = NUM_HASHES // NUM_BANDS
 
 
 def words(text: Column) -> Column:
+    """The engine's one word tokenizer: the lower-cased ``[a-z0-9]+``
+    runs of ``text``. Every Spark text operator tokenizes through it;
+    the DuckDB oracle SQL spells the same regex."""
     return F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), 0)
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from railgun_spark.operators.dedup import words
 from railgun_spark.session import pin_if_big
 from railgun_spark.suite import extra_query, query
 
@@ -105,9 +106,7 @@ def pagerank_word_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     dw = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-            ).alias("word"),
+            F.explode(words(F.col("text"))).alias("word"),
         )
         .groupBy("doc_id")
         .agg(

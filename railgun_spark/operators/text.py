@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from railgun_spark.operators.dedup import words
 from railgun_spark.suite import extra_query, query
 
 
@@ -207,9 +208,7 @@ def word_hist_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_scan(spark, sf_dir)
     return (
         docs.select(
-            F.explode(F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)).alias(
-                "word"
-            )
+            F.explode(words(F.col("text"))).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -227,7 +226,7 @@ def word_hist_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def repetition_ratio(text: Column) -> Column:
     """1 - distinct_words/total_words in [0,1); 0 = no repetition."""
-    ws = F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), 0)
+    ws = words(text)
     return F.lit(1.0) - F.size(F.array_distinct(ws)) / F.size(ws)
 
 
@@ -255,7 +254,7 @@ def repetition_ratio(text: Column) -> Column:
 )
 def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_scan(spark, sf_dir)
-    ws = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    ws = words(F.col("text"))
     rep = (F.lit(1.0) - F.size(F.array_distinct(ws)) / F.size(ws)).alias("rep")
     return (
         docs.select("lang", rep, F.size(ws).alias("nw"))
@@ -318,7 +317,7 @@ ENTROPY_LOW = 2.0  # nats; ~e^2 effective vocabulary
 )
 def text_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_scan(spark, sf_dir)
-    ws = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    ws = words(F.col("text"))
     cnt = (
         docs.select("doc_id", "lang", F.explode(ws).alias("w"))
         .groupBy("doc_id", "lang", "w")
@@ -434,9 +433,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-            ).alias("word"),
+            F.explode(words(F.col("text"))).alias("word"),
         )
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -498,7 +495,7 @@ def inverted_index_rare(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_scan(spark, sf_dir)
     ws = docs.select(
         "doc_id",
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0).alias("w"),
+        words(F.col("text")).alias("w"),
     )
     n = F.size("w")
     # clamp at 0: a doc with no [a-z0-9] runs (empty/punctuation/pure CJK)
@@ -616,9 +613,7 @@ def word_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_scan(spark, sf_dir)
     dw = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-        ).alias("word"),
+        F.explode(words(F.col("text"))).alias("word"),
     ).distinct().localCheckpoint()
     # pinned once: the scalar count, the marginals and BOTH self-join
     # sides otherwise re-plan the word explode + distinct (4 scans)
@@ -706,9 +701,7 @@ def _word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_scan(spark, sf_dir)
     return (
         docs.select(
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-            ).alias("w")
+            F.explode(words(F.col("text"))).alias("w")
         )
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -990,16 +983,14 @@ def bpe_encode(
                 out.append(syms)
             yield pd.DataFrame({"w": pdf["w"], "toks": out})
 
-    words = df.select(
+    doc_words = df.select(
         F.col(id_col).alias("__id"),
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0)
-        ).alias("pos", "w"),
+        F.posexplode(words(F.col(text_col))).alias("pos", "w"),
     )
-    vocab = words.select("w").distinct()
+    vocab = doc_words.select("w").distinct()
     word_toks = vocab.mapInPandas(tokenize_words, "w: string, toks: array<string>")
     assembled = (
-        words.join(word_toks, "w")
+        doc_words.join(word_toks, "w")
         .groupBy("__id")
         .agg(
             F.flatten(
@@ -1046,7 +1037,7 @@ def bpe_encode(
 )
 def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_scan(spark, sf_dir)
-    ws = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    ws = words(F.col("text"))
     posts = docs.select("doc_id", "lang", F.explode(ws).alias("w"))
     cnt = posts.groupBy("doc_id", "lang", "w").agg(F.count(F.lit(1)).alias("c"))
     # pin the vocab aggregate: the token total is sum(cw) over THIS frame
@@ -1088,7 +1079,7 @@ CLASSIFIER_BUCKETS = 4096
 def classifier_score(text: Column) -> Column:
     """Mean hashed-bucket weight over the doc's words: the linear
     classifier margin (monotone in the sigmoid probability)."""
-    ws = F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), 0)
+    ws = words(text)
     D = CLASSIFIER_BUCKETS
 
     def weight(w: Column) -> Column:
@@ -1130,7 +1121,7 @@ def classifier_score(text: Column) -> Column:
 )
 def quality_classifier_lowscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_scan(spark, sf_dir)
-    ws = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    ws = words(F.col("text"))
     return (
         docs.filter(F.size(ws) > 0)
         .select(
@@ -1175,7 +1166,7 @@ def train_quality_classifier(
     `score_documents` to apply it). L2-free, full-batch gradient descent
     — deterministic given the input."""
     spark = docs.sparkSession
-    ws = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0)
+    ws = words(F.col(text_col))
     base = (
         docs.filter(F.size(ws) > 0)
         .select(
@@ -1244,7 +1235,7 @@ def score_documents(
         spark, [(i, w) for i, w in enumerate(weights)],
         "__b: long, __wt: double",
     )
-    ws = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0)
+    ws = words(F.col(text_col))
     tok = (
         docs.filter(F.size(ws) > 0)
         .select(

@@ -322,7 +322,7 @@ def create_app(
 
     @app.route("/layers/<name>/tiles/mask/<int:z>/<int:x>/<int:y>.<ext>")
     def layer_tile_mask(name, z, x, y, ext):
-        from railgun_spark.geo.serving import MASK_FORMATS, grid_to_image
+        from railgun_spark.geo.serving import MASK_FORMATS, MASK_MAX_DZ, grid_to_image
 
         if ext not in MASK_FORMATS:  # png/gif/jpg per RespondWithGrid.go:20-46
             return _render(
@@ -333,6 +333,8 @@ def create_app(
             threshold = int(request.args.get("threshold", 1))
         except ValueError:
             return Response("zoom and threshold must be integers", status=400)
+        if not 0 <= zoom - z <= MASK_MAX_DZ:
+            return Response(f"zoom must be within [{z}, {z + MASK_MAX_DZ}]", status=400)
         grid = catalog.layer_mask_grid(
             name, z, x, y, mask_zoom=zoom, threshold=threshold
         )

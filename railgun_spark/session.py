@@ -37,7 +37,9 @@ _BUILTIN_EXCLUDED_RULES = (
 
 # spark.sql.codegen.cache.maxEntries: holds every registry query's classes
 # (1374 on the perfbench tables, ~2.5 KB bytecode each) with headroom, plus
-# 3 per distinct tile the server has served.
+# 3 per distinct data tile the server has filtered on Spark: tiles with a
+# user dfl and tiles of layers over spark.sql.autoBroadcastJoinThreshold
+# (the others are answered from a driver-side snapshot, geo/serving.py).
 CODEGEN_CACHE_ENTRIES = 4096
 
 

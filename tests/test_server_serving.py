@@ -423,6 +423,18 @@ def test_server_tiles(app_client):
     assert r.get_json()["numberOfFeatures"] == 0
 
 
+def test_mask_zoom_bounds(app_client):
+    """The mask zoom is z..z+8 (a grid of at most 256x256 cells): below
+    z or deeper is a 400 before any Spark work, not a 500 or a 2^dz
+    square grid on the driver."""
+    z, x, y = 10, 292, 391
+    route = f"/layers/bars/tiles/mask/{z}/{x}/{y}.png?zoom="
+    assert app_client.get(f"{route}{z - 1}").status_code == 400
+    assert app_client.get(f"{route}{z + 9}").status_code == 400
+    r = app_client.get(f"{route}{z + 8}")
+    assert r.status_code == 200 and r.data.startswith(b"\x89PNG")
+
+
 def _lzw_decode(data: bytes, min_code_size: int) -> list[int]:
     """Test-side GIF LZW decoder (mirror width/reset rules)."""
     clear = 1 << min_code_size
