@@ -183,6 +183,18 @@ def _prepare_end_to_end(spark, sf_dir):
 _ANN_BENCH_INDEX_CACHE: dict = {}
 
 
+def _ann_bench_spec(kind: str):
+    from railgun_spark.operators.similarity import IVF_INDEX, IVF_PQ_INDEX, IVFSpec
+
+    return {
+        "ivf": IVF_INDEX,
+        "pq": IVF_PQ_INDEX,
+        # the production shape: 8x256 residual codes + raw refine store,
+        # searched as a residual ADC shortlist + exact refine
+        "wide_res": IVFSpec(m=8, ks=256, residual=True, store_raw=True, rerank=50),
+    }[kind]
+
+
 def _ann_bench_index(spark, sf_dir: str, kind: str) -> str:
     key = (sf_dir, kind)
     if key not in _ANN_BENCH_INDEX_CACHE:
@@ -194,8 +206,7 @@ def _ann_bench_index(spark, sf_dir: str, kind: str) -> str:
 
         from railgun_spark.operators.similarity import (
             IVF_INDEX_QUERY_IDS,
-            build_ivf_index,
-            build_ivf_pq_index,
+            build_index,
             to_double,
         )
 
@@ -204,15 +215,7 @@ def _ann_bench_index(spark, sf_dir: str, kind: str) -> str:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
             "vec_id", "label", to_double(F.col("embedding")).alias("v")
         )
-        if kind == "ivf":
-            build_ivf_index(emb, d, exclude_ids=IVF_INDEX_QUERY_IDS)
-        elif kind == "pq":
-            build_ivf_pq_index(emb, d, exclude_ids=IVF_INDEX_QUERY_IDS)
-        else:  # production shape: 8x256 residual codes + raw refine store
-            build_ivf_pq_index(
-                emb, d, ks=256, m=8, exclude_ids=IVF_INDEX_QUERY_IDS,
-                residual=True, store_raw=True,
-            )
+        build_index(emb, d, _ann_bench_spec(kind), exclude_ids=IVF_INDEX_QUERY_IDS)
         _ANN_BENCH_INDEX_CACHE[key] = d
     return _ANN_BENCH_INDEX_CACHE[key]
 
@@ -222,8 +225,7 @@ def _ann_search_only(spark, sf_dir: str, kind: str) -> None:
 
     from railgun_spark.operators.similarity import (
         IVF_INDEX_QUERY_IDS,
-        ann_ivf_pq_search_index,
-        ann_ivf_search_index,
+        search_index,
         to_double,
     )
 
@@ -233,12 +235,10 @@ def _ann_search_only(spark, sf_dir: str, kind: str) -> None:
     ).filter(F.col("vec_id").isin(list(IVF_INDEX_QUERY_IDS))).select(
         F.col("vec_id").alias("qid"), "v"
     )
-    if kind == "ivf":
-        ann_ivf_search_index(spark, queries, idx).collect()
-    elif kind == "pq":
-        ann_ivf_pq_search_index(spark, queries, idx).collect()
-    else:  # the production search: residual ADC shortlist + exact refine
-        ann_ivf_pq_search_index(spark, queries, idx, rerank=50).collect()
+    spec = _ann_bench_spec(kind)
+    search_index(
+        spark, queries, idx, pq=spec.pq, nprobe=spec.nprobe, rerank=spec.rerank
+    ).collect()
 
 
 BENCH_SPECIAL = {

@@ -90,13 +90,17 @@ class Memo:
     matches and it is younger than ``ttl``; a full memo drops its oldest
     insertion. ``clear()`` bumps a generation: a value computed under an
     older generation goes back to its caller but is never stored.
-    Concurrent computes of one key share the first value stored. ``drop``
-    releases each value that leaves the memo (frames: ``unpersist``)."""
+    Single flight: a miss on a key computing under the same generation and
+    stamp waits for that compute and shares its value (if it raises, a
+    waiter computes again). Only the thread that owns a flight computes
+    past it, should its compute reach its own key. ``drop`` releases each
+    value that leaves the memo (frames: ``unpersist``)."""
 
     def __init__(self, capacity: int, drop=None):
         self.capacity = capacity
         self._drop = drop
         self._entries: dict = {}  # key -> (stamp, stored_at, value)
+        self._flights: dict = {}  # key -> (gen, stamp, owner, done, [value])
         self._gen = 0
         self._lock = _threading.Lock()
 
@@ -104,18 +108,37 @@ class Memo:
         return len(self._entries)
 
     def get(self, key, stamp, ttl: float, compute):
-        now = time.time()
-        with self._lock:
-            gen = self._gen
-            ent = self._entries.get(key)
-            if ent is not None and ent[0] == stamp and now - ent[1] < ttl:
-                return ent[2]
-            # a stale entry is released BEFORE the recompute: Spark keeps
-            # one cache entry per equal frame plan, so a re-read of the
-            # same uri would otherwise be served the old cached data
-            gone = [self._entries.pop(key)] if ent is not None else []
+        while True:
+            now = time.time()
+            with self._lock:
+                gen = self._gen
+                ent = self._entries.get(key)
+                if ent is not None and ent[0] == stamp and now - ent[1] < ttl:
+                    return ent[2]
+                me = _threading.get_ident()
+                running = self._flights.get(key)
+                if running is not None and running[:3] == (gen, stamp, me):
+                    flight, gone = None, []  # re-entered from its own compute
+                    break
+                if running is None or running[:2] != (gen, stamp):
+                    # a stale entry is released BEFORE the recompute:
+                    # Spark keeps one cache entry per equal frame plan, so
+                    # a re-read of the same uri would otherwise be served
+                    # the old cached data
+                    gone = [self._entries.pop(key)] if ent is not None else []
+                    flight = (gen, stamp, me, _threading.Event(), [])
+                    self._flights[key] = flight
+                    break
+            running[3].wait()
+            if running[4]:
+                return running[4][0]
         self._release(gone)
-        value = compute()
+        try:
+            value = compute()
+        except BaseException:
+            with self._lock:
+                self._land(key, flight)
+            raise
         with self._lock:
             ent = self._entries.get(key)
             if gen != self._gen:
@@ -125,16 +148,26 @@ class Memo:
                 # Spark cache entry.
                 gone = [] if ent is not None else [(stamp, now, value)]
             elif ent is not None and ent[0] == stamp:
-                # a concurrent compute of this key landed first: share its
-                # value, for the same reason
-                return ent[2]
+                # another compute of this key and stamp landed first (a
+                # re-entry, or a flight displaced by one for another
+                # stamp): share its value, for the same reason
+                value, gone = ent[2], []
             else:
                 gone = [self._entries.pop(key)] if ent is not None else []
                 if len(self._entries) >= self.capacity:
                     gone.append(self._entries.pop(next(iter(self._entries))))
                 self._entries[key] = (stamp, now, value)
+            self._land(key, flight, value)
         self._release(gone)
         return value
+
+    def _land(self, key, flight, *value) -> None:
+        """End ``flight`` under the lock; its waiters wake with ``value``."""
+        if flight is not None:
+            if self._flights.get(key) is flight:
+                del self._flights[key]
+            flight[4].extend(value)
+            flight[3].set()
 
     def clear(self) -> None:
         with self._lock:

@@ -548,14 +548,18 @@ def cmd_ann(args) -> int:
     from pyspark.sql import functions as F
 
     from railgun_spark.operators.similarity import (
-        ann_ivf_pq_search_index,
-        ann_ivf_search_index,
-        append_to_ivf_index,
-        append_to_ivf_pq_index,
-        build_ivf_index,
-        build_ivf_pq_index,
+        PQ_KS,
+        PQ_M,
+        IVFSpec,
+        _centroid_rows,
+        append_to_index,
+        build_index,
         compact_ivf_index,
+        residual_frame,
+        search_index,
         to_double,
+        train_ivf_centroids,
+        train_pq_codebooks,
     )
     from railgun_spark.session import get_spark
 
@@ -565,32 +569,25 @@ def cmd_ann(args) -> int:
         print(json.dumps({"rows": n}))
         return 0
     if args.action == "info":
-        from pyspark.errors import AnalysisException
-
-        from railgun_spark.errors import is_path_not_found
         from railgun_spark.operators.similarity import (
-            _ivf_has_raw,
-            _ivf_pq_encoding,
+            _ivf_has,
+            _pq_geometry,
+            _read_quantizer,
         )
 
-        try:  # codebooks/ is the PQ marker; works on remote schemes too
-            spark.read.parquet(f"{args.index}/codebooks")
-            is_pq = True
-        except AnalysisException as e:
-            if not is_path_not_found(e):
-                raise
-            is_pq = False
+        # codebooks/ is the PQ marker; works on remote schemes too
+        is_pq = _ivf_has(spark, args.index, "codebooks")
+        cents, books, encoding = _read_quantizer(spark, args.index, is_pq)
         sizes = {
             int(r["cid"]): int(r["n"])
             for r in spark.read.parquet(f"{args.index}/vecs")
             .groupBy("cid").agg(F.count(F.lit(1)).alias("n")).collect()
         }
-        k = spark.read.parquet(f"{args.index}/centroids").count()
         rows = sum(sizes.values())
         mean = rows / max(1, len(sizes))
         info = {
             "pq": is_pq,
-            "k": k,
+            "k": len(cents),
             "rows": rows,
             "nonempty_lists": len(sizes),
             # list-balance health: skew predicts probe-cost variance
@@ -603,28 +600,18 @@ def cmd_ann(args) -> int:
         }
         if is_pq:
             # geometry derives from the stored codebooks, never flags
-            geo = (
-                spark.read.parquet(f"{args.index}/codebooks")
-                .agg(
-                    F.countDistinct("m").alias("m"),
-                    F.countDistinct("j").alias("ks"),
-                )
-                .collect()[0]
-            )
+            ms, _, ks = _pq_geometry(books)
             info.update({
-                "pq_m": int(geo["m"]),
-                "pq_ks": int(geo["ks"]),
-                "encoding": _ivf_pq_encoding(spark, args.index),
-                "store_raw": _ivf_has_raw(spark, args.index),
+                "pq_m": len(ms),
+                "pq_ks": ks,
+                "encoding": encoding,
+                "store_raw": _ivf_has(spark, args.index, "raw"),
             })
         print(json.dumps(info))
         return 0
     if not args.input:
         print(f"ann {args.action} requires --input", file=sys.stderr)
         return 2
-    build_fn = build_ivf_pq_index if args.pq else build_ivf_index
-    append_fn = append_to_ivf_pq_index if args.pq else append_to_ivf_index
-    search_fn = ann_ivf_pq_search_index if args.pq else ann_ivf_search_index
 
     def load_vecs(path: str, id_alias: str = "vec_id"):
         df = spark.read.parquet(path)
@@ -655,57 +642,45 @@ def cmd_ann(args) -> int:
             print("--pq-m/--pq-ks/--pq-train-iters/--pq-residual only "
                   "apply to --pq builds", file=sys.stderr)
             return 2
+        spec = IVFSpec(
+            k=args.k, m=(args.pq_m or PQ_M) if args.pq else 0,
+            ks=args.pq_ks or PQ_KS, residual=bool(args.pq_residual),
+            store_raw=bool(args.store_raw),
+        )
         cents = None
         train_sample = None if args.train_sample == -1 else args.train_sample
         if args.train_iters:
-            from railgun_spark.operators.similarity import train_ivf_centroids
-
             cents = train_ivf_centroids(vecs, k=args.k,
                                         iters=args.train_iters,
                                         sample=train_sample)
-        if args.pq:
-            from railgun_spark.operators.similarity import (
-                PQ_KS,
-                PQ_M,
-                _centroid_rows,
-                residual_frame,
-                train_pq_codebooks,
-            )
-
-            pq_m = args.pq_m or PQ_M
-            pq_ks = args.pq_ks or PQ_KS
-            books = None
-            if args.pq_train_iters:
-                train_on = vecs
-                if args.pq_residual:
-                    train_on = residual_frame(
-                        vecs, cents or _centroid_rows(vecs, args.k)
-                    )
-                books = train_pq_codebooks(
-                    train_on, m=pq_m, ks=pq_ks, iters=args.pq_train_iters,
-                    sample=train_sample,
+        books = None
+        if args.pq and args.pq_train_iters:
+            train_on = vecs
+            if args.pq_residual:
+                train_on = residual_frame(
+                    vecs, cents or _centroid_rows(vecs, args.k)
                 )
-            n = build_fn(vecs, args.index, k=args.k, ks=pq_ks, m=pq_m,
-                         store_raw=args.store_raw, centroids=cents,
-                         codebooks=books, residual=args.pq_residual)
-        else:
-            n = build_fn(vecs, args.index, k=args.k, centroids=cents)
+            books = train_pq_codebooks(
+                train_on, m=spec.m, ks=spec.ks, iters=args.pq_train_iters,
+                sample=train_sample,
+            )
+        n = build_index(vecs, args.index, spec, centroids=cents, codebooks=books)
         # report the EFFECTIVE geometry (defaults resolved), so the
         # recorded build metadata agrees with what `ann info` later
         # derives from the stored codebooks
-        print(json.dumps({"indexed": n, "k": args.k, "pq": bool(args.pq),
-                          "store_raw": bool(args.store_raw),
+        print(json.dumps({"indexed": n, "k": spec.k, "pq": spec.pq,
+                          "store_raw": spec.store_raw,
                           "train_iters": args.train_iters,
-                          "pq_m": pq_m if args.pq else None,
-                          "pq_ks": pq_ks if args.pq else None,
+                          "pq_m": spec.m or None,
+                          "pq_ks": spec.ks if spec.pq else None,
                           "pq_train_iters": args.pq_train_iters,
-                          "pq_residual": bool(args.pq_residual)}))
+                          "pq_residual": spec.residual}))
         return 0
     if args.action == "append":
         vecs = load_vecs(args.input)
         if vecs is None:
             return 2
-        n = append_fn(vecs, args.index)
+        n = append_to_index(vecs, args.index, pq=bool(args.pq))
         print(json.dumps({"appended": n}))
         return 0
     # search
@@ -719,15 +694,10 @@ def cmd_ann(args) -> int:
         print("--rerank only applies to --pq searches (raw IVF already "
               "ranks by exact cosine)", file=sys.stderr)
         return 2
-    if args.rerank:
-        hits = search_fn(
-            spark, queries, args.index, nprobe=args.nprobe, topk=args.topk,
-            rerank=args.rerank,
-        )
-    else:
-        hits = search_fn(
-            spark, queries, args.index, nprobe=args.nprobe, topk=args.topk
-        )
+    hits = search_index(
+        spark, queries, args.index, pq=bool(args.pq), nprobe=args.nprobe,
+        rerank=args.rerank, topk=args.topk,
+    )
     hits.write.mode("overwrite").parquet(args.output)
     out = spark.read.parquet(args.output)
     print(json.dumps({

@@ -22,6 +22,7 @@ Arrow-batched pandas_udf matmul per batch (BLAS), never per-row Python.
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -653,6 +654,25 @@ def append_embedding_bands_to_index(
 IVF_K = 8
 IVF_NPROBE = 2
 
+# the oracles' rounded cosine and rounded squared distance (DuckDB)
+_SQL_COS = (
+    "round(list_dot_product({a}, {b}) / "
+    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
+)
+_SQL_SQD = (
+    "round(list_aggregate(list_transform({a}, "
+    "(x, i) -> (x - {b}[i]) * (x - {b}[i])), 'sum'), 6)"
+)
+
+
+def _embeddings(spark: SparkSession, sf_dir: str, col: str = "v",
+                label: bool = True) -> DataFrame:
+    """The embeddings table as (vec_id[, label], <col>: array<double>)."""
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", *(["label"] if label else []),
+        to_double(F.col("embedding")).alias(col),
+    )
+
 
 def _lit_vec(values) -> Column:
     """Literal double-array Column in ONE py4j round-trip: the SQL text
@@ -671,10 +691,7 @@ def _lit_vec(values) -> Column:
 
 
 def _ivf_oracle() -> str:
-    cos = (
-        "round(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
+    cos = _SQL_COS
     return f"""
     WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
     c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND {IVF_K}),
@@ -702,9 +719,7 @@ def _ivf_oracle() -> str:
 
 
 @extra_query(
-    # r15 rotation: demoted — the in-memory IVF shape (quantizer,
-    # probe selection, re-rank, tiebreaks) is a strict subset of the
-    # now-driver-gated persistent ann_ivf_index_topk
+    # a strict subset of the gated ann_ivf_index_topk
     "ann_ivf_topk",
     oracle=_ivf_oracle(),
     doc=f"IVF ANN: {IVF_K} coarse centroids, map-only nearest-centroid "
@@ -713,47 +728,45 @@ def _ivf_oracle() -> str:
     tags=("similarity", "ann"),
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "label", to_double(F.col("embedding")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     # one pushdown-pruned job fetches query vector + centroids together
     small = {
         int(r["vec_id"]): [float(x) for x in r["v"]]
         for r in emb.filter(F.col("vec_id") <= IVF_K).collect()
     }
     cents = sorted((cid, v) for cid, v in small.items() if cid >= 1)
-    qv = small[0]
+    return _in_memory_ivf(emb, cents, small[0], IVF_NPROBE, 10, 0)
 
-    # assignment: rounded cosine to each centroid; array order = ascending
-    # cid, and array_position returns the FIRST max — lowest-cid tiebreak.
-    sims = F.array(*[F.round(cosine(F.col("v"), _lit_vec(cv)), 6) for _, cv in cents])
-    cid_of = F.array(*[F.lit(cid) for cid, _ in cents])
-    assigned = F.element_at(cid_of, F.array_position(sims, F.array_max(sims)).cast("int"))
 
-    # probe selection is client-side over K tiny centroids, as in real IVF
-    def _pycos(a: list[float], b: list[float]) -> float:
-        num = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return round(num / (na * nb), 6)
+def _pycos(a: list[float], b: list[float]) -> float:
+    """Rounded cosine on the driver, folded left to right like `cosine`."""
+    num = sum(x * y for x, y in zip(a, b))
+    na = sum(x * x for x in a) ** 0.5
+    nb = sum(x * x for x in b) ** 0.5
+    return round(num / (na * nb), 6)
 
-    probes = [cid for cid, _ in sorted(cents, key=lambda c: (-_pycos(c[1], qv), c[0]))[:IVF_NPROBE]]
 
+def _in_memory_ivf(
+    emb: DataFrame, cents: list, qv: list, nprobe: int, k: int, query_vec_id: int
+) -> DataFrame:
+    """IVF search for one driver-held query vector: map-only assignment
+    against the [(cid, vector)] centroids, probe selection client-side
+    over the K tiny centroids (as in real IVF), exact cosine re-rank
+    inside the probed cells only."""
+    probes = [
+        cid for cid, _ in sorted(cents, key=lambda c: (-_pycos(c[1], qv), c[0]))[:nprobe]
+    ]
     # deliberately NOT spread_scan'd: the one assignment+rerank pass is
     # light enough that the exchange round-trip loses (A/B min-of-5:
     # 1.29 -> 1.43 s with the spread)
     return (
-        emb.filter(F.col("vec_id") != 0)
-        .withColumn("cid", assigned)
+        emb.filter(F.col("vec_id") != query_vec_id)
+        .withColumn("cid", _assign_cid(F.col("v"), cents))
         .filter(F.col("cid").isin(probes))
-        .select(
-            "vec_id",
-            "label",
-            "cid",
-            F.round(cosine(F.col("v"), _lit_vec(qv)), 6).alias("cos_sim"),
-        )
+        .select("vec_id", "label", "cid",
+                F.round(cosine(F.col("v"), _lit_vec(qv)), 6).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(10)
+        .limit(k)
     )
 
 
@@ -827,17 +840,77 @@ def _sq_dist(vec: Column, centroid: list[float]) -> Column:
     return F.round(F.aggregate(diff2, F.lit(0.0), lambda acc, x: acc + x), 6)
 
 
-def assign_clusters(emb: DataFrame, centroids: dict[int, list[float]]) -> DataFrame:
-    """Map-only argmin over broadcast-literal centroids (lowest-id ties).
+# the k-means oracles' rounded squared distance of e to centroid c
+_SQL_KMEANS_SQD = """round(list_aggregate(
+               list_transform(e, (x, i) -> (x - c[i]) * (x - c[i])), 'sum'), 6)"""
+# ... and the unit-normalized assigned vectors (a1 -> a1n)
+_SQL_A1N = """a1n AS (
+      SELECT vec_id, cluster,
+             list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS en
+      FROM a1
+    )"""
 
-    Distances are staged as named columns in their OWN projection before
-    the least/when argmin references them: each of the K interpreted
-    distance folds evaluates once per row instead of twice (once under
-    least(), once in the when-chain) — Catalyst's CollapseProject keeps
-    the split because the folds are non-cheap expressions. Measured ~2x
-    on the assignment stage at K=16.
-    """
+
+def _sql_assign_pass(first_k, dist: str = _SQL_KMEANS_SQD) -> str:
+    """The oracles' CTE chain of one k-means assignment pass: emb, the
+    first-K init c0 (vec_id < first_k), d1 (rounded distance of every
+    vector to every centroid) and a1 (argmin, lowest-cid ties)."""
+    return f"""emb AS (
+      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+      FROM embeddings
+    ), c0 AS (
+      SELECT vec_id AS cid, e AS c FROM emb WHERE vec_id < {first_k}
+    ), d1 AS (
+      SELECT vec_id, e, cid,
+             {dist}
+               AS dist
+      FROM emb CROSS JOIN c0
+    ), a1 AS (
+      SELECT vec_id, e, cid AS cluster FROM (
+        SELECT vec_id, e, cid, dist,
+               row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+        FROM d1) WHERE rn = 1
+    )"""
+
+
+def assign_clusters(
+    emb: DataFrame, centroids: dict[int, list[float]], arrow: bool | None = None
+) -> DataFrame:
+    """Map-only L2 argmin over broadcast-literal centroids, lowest-id
+    ties: (vec_id, e) -> (vec_id, e, cluster, dist), distances rounded
+    to 6. `arrow` forces a form; by default _arrow_form decides by K.
+    The expression form stages the distances as named columns in their
+    OWN projection, so each of the K interpreted folds evaluates once per
+    row, not twice (least() and the when-chain; ~2x at K=16). The Arrow
+    form is one BLAS argmin per batch, ||x||^2 - 2xC^T + ||c||^2 (SemDeDup
+    scale: K in the tens of thousands); its summation ORDER differs, so
+    an exact rounded tie could in principle pick another cluster
+    (parity-tested on the fixture data)."""
     cids = sorted(centroids)
+    if arrow is None:
+        arrow = _arrow_form(len(cids))
+    if arrow:
+        C = np.array([centroids[c] for c in cids], dtype="float64")  # K x dim
+        c_sq = (C**2).sum(axis=1)  # K
+        cid_arr = _int32_cids(cids)
+
+        @F.pandas_udf("struct<cluster: int, dist: double>")
+        def _assign(col: pd.Series) -> pd.DataFrame:
+            if col.empty:
+                return pd.DataFrame({"cluster": [], "dist": []})
+            M = np.vstack(col.to_numpy()).astype("float64")  # n x dim
+            d = _np_round6((M**2).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c_sq[None, :])
+            idx = d.argmin(axis=1)  # first minimum = lowest cid (cids sorted)
+            return pd.DataFrame(
+                {"cluster": cid_arr[idx], "dist": d[np.arange(len(idx)), idx]}
+            )
+
+        return emb.select("vec_id", "e", _assign("e").alias("a")).select(
+            "vec_id",
+            "e",
+            F.col("a.cluster").alias("cluster"),
+            F.col("a.dist").alias("dist"),
+        )
     staged = emb.select(
         "vec_id",
         "e",
@@ -868,23 +941,7 @@ def recompute_centroids(assigned: DataFrame) -> dict[int, list[float]]:
 @extra_query(
     "kmeans_embeddings",
     oracle=f"""
-    WITH emb AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ), c0 AS (
-      SELECT vec_id AS cid, e AS c FROM emb WHERE vec_id < {KMEANS_K}
-    ), d1 AS (
-      SELECT vec_id, e, cid,
-             round(list_aggregate(
-               list_transform(e, (x, i) -> (x - c[i]) * (x - c[i])), 'sum'), 6)
-               AS dist
-      FROM emb CROSS JOIN c0
-    ), a1 AS (
-      SELECT vec_id, e, cid AS cluster FROM (
-        SELECT vec_id, e, cid, dist,
-               row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM d1) WHERE rn = 1
-    ), c1pos AS (
+    WITH {_sql_assign_pass(KMEANS_K)}, c1pos AS (
       SELECT cluster, pos, round(avg(val), 4) AS m FROM (
         SELECT cluster, generate_subscripts(e, 1) AS pos, unnest(e) AS val
         FROM a1) GROUP BY cluster, pos
@@ -892,8 +949,7 @@ def recompute_centroids(assigned: DataFrame) -> dict[int, list[float]]:
       SELECT cluster AS cid, list(m ORDER BY pos) AS c FROM c1pos GROUP BY cluster
     ), d2 AS (
       SELECT vec_id, cid,
-             round(list_aggregate(
-               list_transform(e, (x, i) -> (x - c[i]) * (x - c[i])), 'sum'), 6)
+             {_SQL_KMEANS_SQD}
                AS dist
       FROM emb CROSS JOIN c1
     ), a2 AS (
@@ -911,9 +967,7 @@ def recompute_centroids(assigned: DataFrame) -> dict[int, list[float]]:
     tags=("similarity", "clustering"),
 )
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", to_double(F.col("embedding")).alias("e")
-    )
+    emb = _embeddings(spark, sf_dir, "e", label=False)
     init_rows = (
         emb.filter(F.col("vec_id") < KMEANS_K).orderBy("vec_id").collect()
     )
@@ -948,31 +1002,29 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # by its codes.
 #
 # 100 TB shape: encoding is map-only against broadcast-literal centroids
-# (one pruned collect for the codebook init; production would train each
-# sub-codebook with the kmeans_embeddings loop per subspace — same plan
-# shape). Scoring touches only the PQ_M-byte codes, never the raw
-# vectors: the scan reads a few bytes/row and the top-k is a TakeOrdered.
-# Cross-engine determinism: squared distances rounded at 6 before the
-# argmin (lowest-centroid tiebreak), the shared _sq_dist/row_number
-# idioms proven by kmeans/IVF.
+# (train_pq_codebooks trains them per subspace); scoring touches only the
+# PQ_M-byte codes, and the top-k is a TakeOrdered. Squared distances are
+# rounded at 6 before the argmin (lowest-centroid tiebreak).
 # --------------------------------------------------------------------------
 PQ_M = 4  # subspaces
 PQ_DS = EMB_DIM // PQ_M  # dims per subspace
 PQ_KS = 4  # centroids per sub-codebook (init = subvectors of vec_id 1..KS)
 
 
+def _sql_sub(ds: int, m: int) -> str:
+    """The oracles' per-subspace rows of e: (vec_id, label, m, sv)."""
+    return f"""sub AS (
+      SELECT vec_id, label, m.range AS m,
+             v[m.range * {ds} + 1 : m.range * {ds} + {ds}] AS sv
+      FROM e, range(0, {m}) m
+    )"""
+
+
 def _pq_oracle() -> str:
-    sqd = (
-        "round(list_aggregate(list_transform({a}, "
-        "(x, i) -> (x - {b}[i]) * (x - {b}[i])), 'sum'), 6)"
-    )
+    sqd = _SQL_SQD
     return f"""
     WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-    sub AS (
-      SELECT vec_id, label, m.range AS m,
-             v[m.range * {PQ_DS} + 1 : m.range * {PQ_DS} + {PQ_DS}] AS sv
-      FROM e, range(0, {PQ_M}) m
-    ),
+    {_sql_sub(PQ_DS, PQ_M)},
     cent AS (SELECT vec_id AS j, m, sv AS cv FROM sub
              WHERE vec_id BETWEEN 1 AND {PQ_KS}),
     q AS (SELECT m, sv AS qv FROM sub WHERE vec_id = 0),
@@ -1009,17 +1061,15 @@ def _pq_oracle() -> str:
     tags=("similarity", "ann"),
 )
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "label", to_double(F.col("embedding")).alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     # one pushdown-pruned job fetches query + codebook-init vectors
     small = {
         int(r["vec_id"]): [float(x) for x in r["v"]]
         for r in emb.filter(F.col("vec_id") <= PQ_KS).collect()
     }
     qv = small[0]
-    # cents[m] = [(j, subvector)] for subspace m, ascending j
-    cents = {
+    # books[m] = [(j, subvector)] for subspace m, ascending j
+    books = {
         m: [(j, small[j][m * PQ_DS : (m + 1) * PQ_DS]) for j in range(1, PQ_KS + 1)]
         for m in range(PQ_M)
     }
@@ -1031,32 +1081,19 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc += (x - y) * (x - y)
         return round(acc, 6)
 
-    # ADC lookup table, driver-side: PQ_M x PQ_KS rounded distances
-    lut = {
-        m: [_py_sqd(qv[m * PQ_DS : (m + 1) * PQ_DS], cv) for _, cv in cents[m]]
-        for m in range(PQ_M)
-    }
-
     # deliberately NOT spread_scan'd: the tiny 4x4 oracle geometry's
     # encode pass is too light to repay the exchange (A/B min-of-5:
     # 0.81 -> 0.84 s; the production-geometry builds DO spread)
-    enc = emb.filter(F.col("vec_id") != 0)
-    code_cols = []
+    codes = _pq_code_cols(F.col("v"), books)
     adc = F.lit(0.0)
-    for m in range(PQ_M):
-        sub = F.slice(F.col("v"), m * PQ_DS + 1, PQ_DS)
-        dists = F.array(*[_sq_dist(sub, cv) for _, cv in cents[m]])
-        # first-min position = lowest-j tiebreak; j is the 1-based position
-        code_m = F.array_position(dists, F.array_min(dists)).cast("int")
-        code_cols.append(code_m)
-        adc = adc + F.element_at(_lit_vec(lut[m]), code_m)
+    for m, code in enumerate(codes):
+        # ADC lookup table row, driver-side: PQ_KS rounded distances
+        lut = [_py_sqd(qv[m * PQ_DS : (m + 1) * PQ_DS], cv) for _, cv in books[m]]
+        adc = adc + F.element_at(_lit_vec(lut), code)
     return (
-        enc.select(
-            "vec_id",
-            "label",
-            F.concat_ws("-", *code_cols).alias("code"),
-            F.round(adc, 6).alias("adc_dist"),
-        )
+        emb.filter(F.col("vec_id") != 0)
+        .select("vec_id", "label", F.concat_ws("-", *codes).alias("code"),
+                F.round(adc, 6).alias("adc_dist"))
         .orderBy("adc_dist", "vec_id")
         .limit(10)
     )
@@ -1090,27 +1127,7 @@ def semdedup_pairs_ctes() -> str:
     SAME expression shape the Spark side computes (normalize once per
     vector, dot once per pair), so rounded values match across engines."""
     cos = "round(list_dot_product({a}, {b}), 6)"
-    return f"""emb AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ), c0 AS (
-      SELECT vec_id AS cid, e AS c FROM emb WHERE vec_id < {SEMDEDUP_K}
-    ), d1 AS (
-      SELECT vec_id, e, cid,
-             round(list_aggregate(
-               list_transform(e, (x, i) -> (x - c[i]) * (x - c[i])), 'sum'), 6)
-               AS dist
-      FROM emb CROSS JOIN c0
-    ), a1 AS (
-      SELECT vec_id, e, cid AS cluster FROM (
-        SELECT vec_id, e, cid, dist,
-               row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM d1) WHERE rn = 1
-    ), a1n AS (
-      SELECT vec_id, cluster,
-             list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS en
-      FROM a1
-    ), sempairs AS (
+    return f"""{_sql_assign_pass(SEMDEDUP_K)}, {_SQL_A1N}, sempairs AS (
       SELECT x.cluster, x.vec_id AS vec_a, y.vec_id AS vec_b,
              {cos.format(a="x.en", b="y.en")} AS cos_sim
       FROM a1n x JOIN a1n y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
@@ -1138,9 +1155,7 @@ def _semdedup_oracle() -> str:
 def semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from railgun_spark.session import spread_scan
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", to_double(F.col("embedding")).alias("e")
-    )
+    emb = _embeddings(spark, sf_dir, "e", label=False)
     init_rows = emb.filter(F.col("vec_id") < SEMDEDUP_K).orderBy("vec_id").collect()
     c0 = {int(r["vec_id"]): list(r["e"]) for r in init_rows}
     # the K interpreted distance folds per row are the CPU-heavy stage;
@@ -1184,150 +1199,23 @@ def _pairs_within_clusters(a: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_train(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KMEANS_K,
-    max_iter: int = 20,
-    tol: float = 1e-4,
-) -> dict[int, list[float]]:
-    """Lloyd's k-means to CONVERGENCE (movement below `tol`), the
-    production form of the fixed-2-iteration gate query: same map-only
-    broadcast-centroid assignment and one K*dim-row shuffle per iteration,
-    plus a driver-side movement check (K*dim doubles — trivially small)
-    that stops the loop when centroids settle. Deterministic: first-K
-    init, rounded centroid recomputation each step (the cross-engine
-    discipline), lowest-id tie-breaks. Returns {cluster_id: centroid}.
-
-    At 100 TB each iteration is one scan + one tiny shuffle; the frame
-    never accumulates lineage because assignment is re-derived from the
-    BASE scan against new literal centroids each pass (no checkpoint
-    needed — the plan depth is constant per iteration)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", to_double(F.col("embedding")).alias("e")
-    )
-    init_rows = emb.filter(F.col("vec_id") < k).orderBy("vec_id").collect()
-    cents = {int(r["vec_id"]): list(r["e"]) for r in init_rows}
-    return _kmeans_loop(emb, cents, max_iter, tol)
-
-
-def _kmeans_loop(
-    emb: DataFrame, cents: dict[int, list[float]], max_iter: int, tol: float
-) -> dict[int, list[float]]:
-    """Shared Lloyd's loop over a (vec_id, e) frame: assignment vs
-    broadcast-literal centroids, K*dim-row recompute shuffle, driver-side
-    movement stop. A cluster that captures no points keeps its centroid.
-    Assignment is K-routed: the oracle-gated geometries keep the staged
-    expression form, wide quantizers/codebooks (K past the Column cap —
-    e.g. training 256-codeword PQ sub-codebooks or a production coarse
-    quantizer) run the Arrow BLAS twin, whose parity discipline is
-    assign_clusters_batch's."""
-    assign = (
-        assign_clusters_batch
-        if len(cents) > _IVF_COLUMN_PATH_MAX_K
-        else assign_clusters
-    )
-    for _ in range(max_iter):
-        new_cents = recompute_centroids(assign(emb, cents))
-        for cid in cents:
-            new_cents.setdefault(cid, cents[cid])
-        movement = max(
-            max(abs(a - b) for a, b in zip(cents[cid], new_cents[cid]))
-            for cid in cents
-        )
-        cents = new_cents
-        if movement < tol:
-            break
-    return cents
-
-
-def pq_train(
-    spark: SparkSession,
-    sf_dir: str,
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    max_iter: int = 10,
-    tol: float = 1e-4,
-) -> dict[int, dict[int, list[float]]]:
-    """Train PQ sub-codebooks — the production form of `ann_pq_topk`'s
-    first-K codebook init, closing the loop its docstring promises: for
-    each of the `m` subspaces, run the shared Lloyd's loop over the SLICED
-    (dim/m)-dim frame. Each subspace's iterations are the same
-    map-only-assignment + tiny-shuffle plan as full k-means, just on
-    narrower vectors; the m loops run sequentially on a shared scan
-    (slice is a map-side projection). Returns {subspace: {cid: centroid}};
-    centroid ids are 1..ks to match the 1-based codes `ann_pq_topk`
-    emits."""
-    ds = EMB_DIM // m
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", to_double(F.col("embedding")).alias("e")
-    )
-    init_rows = (
-        emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= ks))
-        .orderBy("vec_id")
-        .collect()
-    )
-    books: dict[int, dict[int, list[float]]] = {}
-    for mm in range(m):
-        sub = emb.select(
-            "vec_id", F.slice(F.col("e"), mm * ds + 1, ds).alias("e")
-        )
-        init = {
-            int(r["vec_id"]): list(r["e"])[mm * ds : (mm + 1) * ds]
-            for r in init_rows
-        }
-        books[mm] = _kmeans_loop(sub, init, max_iter, tol)
-    return books
-
-
 def ivf_search(
     spark: SparkSession,
     sf_dir: str,
-    centroids: dict[int, list[float]],
+    centroids: list,
     nprobe: int = 2,
     k: int = 10,
     query_vec_id: int = 0,
 ) -> DataFrame:
-    """IVF search against TRAINED centroids — the production composition
-    `kmeans_train(...)` -> `ivf_search(...)` that `ann_ivf_topk` (fixed
-    first-K codebook, oracle-gated) stands in for at the gate. Same plan
-    shape: map-only cell assignment vs broadcast-literal centroids,
-    client-side probe selection over the K tiny centroids, exact cosine
-    re-rank inside the probed cells only. `nprobe=len(centroids)` probes
-    everything and therefore equals brute force — the recall knob is
-    explicit."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "label", to_double(F.col("embedding")).alias("v")
-    )
+    """`ann_ivf_topk`'s body against TRAINED centroids ([(cid, vector)],
+    e.g. from train_ivf_centroids). `nprobe=len(centroids)` probes
+    everything and therefore equals brute force."""
+    emb = _embeddings(spark, sf_dir)
     qrow = emb.filter(F.col("vec_id") == query_vec_id).first()
     if qrow is None:
         raise ValueError(f"query vector vec_id={query_vec_id} not found in {sf_dir}")
     qv = [float(x) for x in qrow["v"]]
-    cents = sorted(centroids.items())
-    sims = F.array(*[F.round(cosine(F.col("v"), _lit_vec(cv)), 6) for _, cv in cents])
-    cid_of = F.array(*[F.lit(cid) for cid, _ in cents])
-    assigned = F.element_at(cid_of, F.array_position(sims, F.array_max(sims)).cast("int"))
-
-    def _pycos(a: list[float], b: list[float]) -> float:
-        num = sum(x * y for x, y in zip(a, b))
-        return round(num / (sum(x * x for x in a) ** 0.5 * sum(x * x for x in b) ** 0.5), 6)
-
-    probes = [
-        cid for cid, _ in sorted(cents, key=lambda c: (-_pycos(c[1], qv), c[0]))[:nprobe]
-    ]
-    return (
-        emb.filter(F.col("vec_id") != query_vec_id)
-        .withColumn("cid", assigned)
-        .filter(F.col("cid").isin(probes))
-        .select(
-            "vec_id",
-            "label",
-            "cid",
-            F.round(cosine(F.col("v"), _lit_vec(qv)), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(k)
-    )
+    return _in_memory_ivf(emb, sorted(centroids), qv, nprobe, k, query_vec_id)
 
 
 @extra_query(
@@ -1372,80 +1260,26 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def assign_clusters_batch(
-    emb: DataFrame, centroids: dict[int, list[float]]
-) -> DataFrame:
-    """Large-K twin of `assign_clusters`: one Arrow-batched BLAS argmin
-    per batch against a broadcast centroid matrix. The literal-expression
-    argmin builds an O(K) Catalyst expression tree — exact and
-    oracle-matched, but impractical past a few dozen centroids; at
-    SemDeDup scale (K in the tens of thousands, grown with the corpus)
-    the assignment must be ||x||^2 - 2xC^T + ||c||^2 in one matmul.
-    Same rounded-distance / lowest-cid-tie discipline; note the float
-    summation ORDER differs from the Catalyst fold, so on exact
-    rounded-distance ties near the 1e-6 boundary the two forms could in
-    principle pick different clusters — the oracle-gated queries keep
-    the expression form, this is the production fan-out path
-    (parity-tested on the fixture data)."""
-    cids = sorted(centroids)
-    C = np.array([centroids[c] for c in cids], dtype="float64")  # K x dim
-    c_sq = (C**2).sum(axis=1)  # K
-    cid_arr = _int32_cids(cids)
-
-    @F.pandas_udf("struct<cluster: int, dist: double>")
-    def _assign(col: pd.Series) -> pd.DataFrame:
-        if col.empty:
-            return pd.DataFrame({"cluster": [], "dist": []})
-        M = np.vstack(col.to_numpy()).astype("float64")  # n x dim
-        d = _np_round6((M**2).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c_sq[None, :])
-        idx = d.argmin(axis=1)  # first minimum = lowest cid (cids sorted)
-        return pd.DataFrame(
-            {"cluster": cid_arr[idx], "dist": d[np.arange(len(idx)), idx]}
-        )
-
-    return emb.select("vec_id", "e", _assign("e").alias("a")).select(
-        "vec_id",
-        "e",
-        F.col("a.cluster").alias("cluster"),
-        F.col("a.dist").alias("dist"),
-    )
-
-
 SEMDEDUP_DOCS_PER_CLUSTER = 125  # the paper's scale knob: K = max(16,
 # n // 125) keeps expected cluster occupancy (hence within-cluster pair
 # work, sum cluster_size^2 ~ n^2/K) constant as the corpus grows
+_SQL_SCALED_K = (
+    f"(SELECT GREATEST({SEMDEDUP_K}, COUNT(*) // {SEMDEDUP_DOCS_PER_CLUSTER}) FROM emb)"
+)
+# assign_clusters' Arrow-form distance expansion, term for term
+_SQL_BLAS_SQD = """round(list_dot_product(e, e) - 2 * list_dot_product(e, c)
+                   + list_dot_product(c, c), 6)"""
 
 
 @query(
     "semantic_dedup_scaled",
     # The oracle recomputes the corpus-scaled K as a scalar subquery and
-    # mirrors assign_clusters_batch's BLAS distance expansion term-for-term
+    # mirrors assign_clusters' Arrow-form BLAS distance expansion term-for-term
     # (||x||^2 - 2<x,c> + ||c||^2, rounded to 6) instead of the K=16 leg's
     # elementwise (x-c)^2 fold — each engine's summation shape matches the
     # side it certifies.
     oracle=f"""
-    WITH emb AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ), c0 AS (
-      SELECT vec_id AS cid, e AS c FROM emb
-      WHERE vec_id < (SELECT GREATEST({SEMDEDUP_K},
-                        COUNT(*) // {SEMDEDUP_DOCS_PER_CLUSTER}) FROM emb)
-    ), d1 AS (
-      SELECT vec_id, e, cid,
-             round(list_dot_product(e, e) - 2 * list_dot_product(e, c)
-                   + list_dot_product(c, c), 6) AS dist
-      FROM emb CROSS JOIN c0
-    ), a1 AS (
-      SELECT vec_id, e, cid AS cluster FROM (
-        SELECT vec_id, e, cid, dist,
-               row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM d1) WHERE rn = 1
-    ), a1n AS (
-      SELECT vec_id, cluster,
-             list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS en
-      FROM a1
-    )
+    WITH {_sql_assign_pass(_SQL_SCALED_K, _SQL_BLAS_SQD)}, {_SQL_A1N}
     SELECT x.cluster, x.vec_id AS vec_a, y.vec_id AS vec_b,
            round(list_dot_product(x.en, y.en), 6) AS cos_sim
     FROM a1n x JOIN a1n y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
@@ -1454,16 +1288,14 @@ SEMDEDUP_DOCS_PER_CLUSTER = 125  # the paper's scale knob: K = max(16,
     """,
     doc="SemDeDup PRODUCTION path, oracle-certified: corpus-scaled K "
     f"(max({SEMDEDUP_K}, n/{SEMDEDUP_DOCS_PER_CLUSTER})) through "
-    "assign_clusters_batch's Arrow-batched BLAS argmin — the fan-out "
+    "assign_clusters' Arrow-batched BLAS argmin — the fan-out "
     "configuration SEMDEDUP_K_r11.json measured flat (K=160 at 10x "
     "vectors: 2.8 s vs 43-52 s for the fixed-K certification legs). "
     "Retires the 'probe-only' status of the scaled-K knob.",
     tags=("similarity", "dedup", "pandas-udf"),
 )
 def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", to_double(F.col("embedding")).alias("e")
-    )
+    emb = _embeddings(spark, sf_dir, "e", label=False)
     n = emb.count()
     k = max(SEMDEDUP_K, n // SEMDEDUP_DOCS_PER_CLUSTER)
     c0 = {
@@ -1473,7 +1305,7 @@ def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file parquet = ONE input partition; the BLAS argmin is the
     # CPU-heavy Python stage, so spread it across the executor cores first
     spread = emb.repartition(spark.sparkContext.defaultParallelism)
-    a = assign_clusters_batch(spread, c0).select("vec_id", "e", "cluster")
+    a = assign_clusters(spread, c0, arrow=True).select("vec_id", "e", "cluster")
     return _pairs_within_clusters(a)
 
 
@@ -1584,62 +1416,69 @@ _suite.EXTRA["embedding_lsh_recall_report"].oracle = f"""
 
 
 # --------------------------------------------------------------------------
-# Persistent IVF index (r14 extension): the similarity-search twin of the
-# dedup gates' build-once/probe-many discipline. ann_ivf_topk above
-# computes assignment + probe + re-rank in one job; at corpus scale the
-# assignment pass (the expensive leg — one cosine per vector per
-# centroid) must be paid ONCE and amortized over every query batch.
-# build_ivf_index writes the assigned vectors PARTITIONED BY CENTROID
-# (parquet partitionBy('cid')), so a search probing `nprobe` inverted
-# lists is directory-level PARTITION PRUNING on the scan — the unprobed
-# (k - nprobe)/k of the corpus is never read, the exact analogue of
-# FAISS's inverted-list seek. Probe selection is pure Column algebra
-# over k literal centroids (no driver loop over queries), so one search
-# call serves an arbitrarily large query BATCH: probes explode to
-# (qid, cid) pairs, candidates join on cid, and a per-qid window takes
-# the top k — every stage distributed.
+# The vector-quantizer family: every persistent IVF / IVF-PQ index is an
+# IVFSpec over one assignment (rounded-cosine argmax, lowest-cid ties),
+# one probe (a query's nprobe best centroids), one PQ encoder / ADC
+# lookup table (per subspace, the rounded squared distance to every
+# codeword; codes = first min), one Lloyd loop, and one build, search
+# and append. Each kernel has an expression form (oracle-certified) and
+# an Arrow-batched numpy form; _arrow_form alone picks between them.
+#
+# vecs/ holds the assigned rows PARTITIONED BY CENTROID (raw vectors, or
+# PQ codes), so a search probing `nprobe` lists is directory-level
+# PARTITION PRUNING: the unprobed (k - nprobe)/k of the corpus is never
+# read (FAISS's inverted-list seek). The assignment pass is paid once
+# per build. Probes are Column algebra over the k literal centroids, so
+# one search serves a query BATCH: probes explode to (qid, cid) pairs,
+# candidates join on cid, a per-qid window takes the top k. PQ scores
+# come from the codes alone (asymmetric distance): per-query lookup
+# tables built from the literal codebooks ride the probes join.
 # --------------------------------------------------------------------------
-def _centroid_rows(emb: DataFrame, k: int) -> list:
-    """Deterministic coarse quantizer: the k lowest-vec_id vectors OF
-    THE GIVEN SET (ann_ivf_topk's first-K convention generalized to
-    arbitrary id ranges — swap in kmeans output for trained centroids;
-    the index layout is identical). Refuses loudly on fewer than k
-    vectors: an empty/short quantizer would silently build a degenerate
-    index."""
-    rows = emb.select("vec_id", "v").orderBy("vec_id").limit(k).collect()
-    if len(rows) < k:
-        raise ValueError(
-            f"cannot build a {k}-centroid IVF quantizer from "
-            f"{len(rows)} vectors"
-        )
-    return sorted((int(r["vec_id"]), [float(x) for x in r["v"]]) for r in rows)
+@dataclass(frozen=True)
+class IVFSpec:
+    """One IVF / IVF-PQ configuration: `k` coarse centroids, `nprobe`
+    lists probed per query; `m` > 0 makes an IVF-PQ index of `m`
+    subspaces x `ks` codewords (0 keeps raw vectors in the lists);
+    `residual` encodes v - centroid(cid) (IVFADC); `store_raw` keeps the
+    exact vectors in raw/ so a search can `rerank` its ADC top-R by exact
+    cosine. build_index reads the build fields; search_index and
+    append_to_index take only the layout, `nprobe` and `rerank`, since
+    the geometry and encoding are the stored index's."""
+
+    k: int = IVF_K
+    nprobe: int = IVF_NPROBE
+    m: int = 0
+    ks: int = PQ_KS
+    residual: bool = False
+    store_raw: bool = False
+    rerank: int = 0
+
+    def __post_init__(self) -> None:
+        if not self.pq and (self.residual or self.store_raw or self.rerank):
+            raise ValueError(
+                "residual, store_raw and rerank apply to IVF-PQ specs (m > 0) only"
+            )
+
+    @property
+    def pq(self) -> bool:
+        return self.m > 0
 
 
-def _assign_cid(v: Column, cents: list) -> Column:
-    """Nearest-centroid cid as a Column: rounded-cosine argmax with the
-    lowest-cid tiebreak (array_position returns the FIRST max). Routes
-    to the Arrow BLAS kernel past _IVF_COLUMN_PATH_MAX_K centroids —
-    the literal-expression argmax builds an O(K) Catalyst tree, exact
-    and oracle-matched but impractical at production list counts
-    (K ~ sqrt(N): thousands at 100 TB). Same assign_clusters /
-    assign_clusters_batch split, cosine form."""
-    if len(cents) > _IVF_COLUMN_PATH_MAX_K:
-        return _assign_cid_pandas(cents)(v)
-    sims = F.array(*[F.round(cosine(v, _lit_vec(cv)), 6) for _, cv in cents])
-    cid_of = F.array(*[F.lit(cid) for cid, _ in cents])
-    return F.element_at(cid_of, F.array_position(sims, F.array_max(sims)).cast("int"))
-
-
-# Above this many coarse centroids, assignment and probe selection route
-# to Arrow-batched BLAS kernels (one rounded-cosine matmul per batch)
-# instead of K inline fold expressions — the IVF twin of the PQ cell cap
-# and the assign_clusters/assign_clusters_batch split. Every oracle-gated
-# geometry (K=8) stays on the certified Column path; note the float
-# summation ORDER differs, so an exact rounded-distance tie at the 1e-6
-# boundary could in principle assign differently across the two forms.
-# (The rounding MODE is normalized: _np_round6 below is HALF_UP like
-# Spark F.round and the DuckDB oracles, not numpy's half-to-even.)
+# The expression forms build one fold per centroid or per (subspace,
+# codeword) cell, so analysis and codegen grow with them; past these caps
+# the Arrow kernels do the same math as one matmul/broadcast per batch.
+# Every oracle-gated geometry but ann_ivf_pq_wide_topk (8x64, the Arrow
+# encode/LUT certificate) stays on the expression path. The float
+# summation ORDER differs between forms, so an exact rounded tie at the
+# 1e-6 boundary could in principle resolve differently.
 _IVF_COLUMN_PATH_MAX_K = 64
+_PQ_COLUMN_PATH_MAX_CELLS = 256
+
+
+def _arrow_form(n: int, cells: bool = False) -> bool:
+    """The one expression-vs-Arrow routing rule: True past the cap for
+    `n` centroids (or, with `cells`, `n` = m*ks PQ cells)."""
+    return n > (_PQ_COLUMN_PATH_MAX_CELLS if cells else _IVF_COLUMN_PATH_MAX_K)
 
 
 def _np_round6(x: "np.ndarray") -> "np.ndarray":
@@ -1671,612 +1510,143 @@ def _int32_cids(cids: list) -> "np.ndarray":
     return arr.astype("int32")
 
 
-def _assign_cid_pandas(cents: list):
-    """Large-K twin of _assign_cid's expression form: rounded-cosine
-    argmax as one BLAS matmul per Arrow batch; first-argmax over
-    cid-ascending columns = the lowest-cid tiebreak."""
+def _cos_kernel(cents: list, nprobe: int = 0):
+    """Arrow form of the rounded-cosine ops over [(cid, vector)]
+    centroids, one BLAS matmul per batch: the nearest cid (int; first
+    argmax over cid-ascending columns = the lowest-cid tiebreak) or, with
+    `nprobe`, the nprobe best cids (array<int>; a stable argsort keeps
+    ties on the lowest cid)."""
     cids = _int32_cids([cid for cid, _ in cents])
     C = np.array([cv for _, cv in cents], dtype="float64")
     c_n = np.sqrt((C ** 2).sum(axis=1))
 
-    @F.pandas_udf("int")
-    def assign(col: pd.Series) -> pd.Series:
+    @F.pandas_udf("array<int>" if nprobe else "int")
+    def kernel(col: pd.Series) -> pd.Series:
         if col.empty:
-            return pd.Series([], dtype="int32")
+            return pd.Series([], dtype=object if nprobe else "int32")
         M = np.vstack(col.to_numpy()).astype("float64")
         sims = _np_round6(
             (M @ C.T) / (np.sqrt((M ** 2).sum(axis=1))[:, None] * c_n[None, :])
         )
-        return pd.Series(cids[sims.argmax(axis=1)])
+        if not nprobe:
+            return pd.Series(cids[sims.argmax(axis=1)])
+        return pd.Series(list(cids[np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]]))
 
-    return assign
+    return kernel
 
 
-def _probe_cids_pandas(cents: list, nprobe: int):
-    """Large-K probe selection: per query, the nprobe nearest centroids
-    by (rounded cosine desc, cid asc) as an int array — the Arrow twin
-    of the K-struct array_sort expression (stable argsort over
-    cid-ascending columns keeps ties on the lowest cid)."""
-    cids = _int32_cids([cid for cid, _ in cents])
-    C = np.array([cv for _, cv in cents], dtype="float64")
-    c_n = np.sqrt((C ** 2).sum(axis=1))
+def _assign_cid(v: Column, cents: list) -> Column:
+    """Nearest-centroid cid as a Column: rounded-cosine argmax with the
+    lowest-cid tiebreak (array_position returns the FIRST max)."""
+    if _arrow_form(len(cents)):
+        return _cos_kernel(cents)(v)
+    sims = F.array(*_cos_sims(v, cents))
+    cid_of = F.array(*[F.lit(cid) for cid, _ in cents])
+    return F.element_at(cid_of, F.array_position(sims, F.array_max(sims)).cast("int"))
 
-    @F.pandas_udf("array<int>")
-    def probes(col: pd.Series) -> pd.Series:
-        if col.empty:
-            return pd.Series([], dtype=object)
-        M = np.vstack(col.to_numpy()).astype("float64")
-        sims = _np_round6(
-            (M @ C.T) / (np.sqrt((M ** 2).sum(axis=1))[:, None] * c_n[None, :])
+
+def _cos_sims(v: Column, cents: list) -> list:
+    """Expression form of _cos_kernel: v's rounded cosine to each centroid."""
+    return [F.round(cosine(v, _lit_vec(cv)), 6) for _, cv in cents]
+
+
+def _probed_queries(queries: DataFrame, cents: list, nprobe: int, carry: dict) -> DataFrame:
+    """(qid, *carry, cid) — one row per (query, probed inverted list).
+    `carry` maps output names to per-query columns of `queries`, computed
+    in the projection that explodes the probes. The expression form is
+    the oracle-certified K-struct array_sort."""
+    if _arrow_form(len(cents)):
+        return queries.select(
+            "qid", *carry.values(),
+            F.explode(_cos_kernel(cents, nprobe)(F.col("v"))).alias("cid"),
         )
-        idx = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series(list(cids[idx]))
-
-    return probes
-
-
-def _probed_queries(queries: DataFrame, cents: list, nprobe: int) -> DataFrame:
-    """(qid, v, cid) — one row per (query, probed inverted list), routed
-    by quantizer width like _assign_cid. The Column form is the
-    oracle-certified K-struct array_sort; the wide form is one BLAS
-    pass over the query batch."""
-    if len(cents) <= _IVF_COLUMN_PATH_MAX_K:
-        ex = F.explode(
-            F.slice(
-                F.array_sort(F.array(*[
-                    F.struct(
-                        (-F.round(cosine(F.col("v"), _lit_vec(cv)), 6))
-                        .alias("negsim"),
-                        F.lit(cid).alias("cid"),
-                    )
-                    for cid, cv in cents
-                ])),
-                1,
-                nprobe,
-            )
-        ).alias("p")
-        return queries.select("qid", "v", ex).select(
-            "qid", "v", F.col("p.cid").alias("cid")
-        )
-    return queries.select(
-        "qid", "v",
-        F.explode(_probe_cids_pandas(cents, nprobe)(F.col("v"))).alias("cid"),
+    ex = F.explode(F.slice(F.array_sort(F.array(*[
+        F.struct((-sim).alias("negsim"), F.lit(cid).alias("cid"))
+        for (cid, _), sim in zip(cents, _cos_sims(F.col("v"), cents))
+    ])), 1, nprobe)).alias("p")
+    return queries.select("qid", *carry.values(), ex).select(
+        "qid", *carry, F.col("p.cid").alias("cid")
     )
-
-
-def build_ivf_index(
-    emb: DataFrame, index_path: str, k: int = IVF_K,
-    exclude_ids: tuple = (),
-    centroids: list | None = None,
-) -> int:
-    """Assign every vector (minus `exclude_ids`) to its nearest of the k
-    coarse centroids and write {index_path}/vecs partitioned by cid,
-    plus the centroids at {index_path}/centroids. Returns the number of
-    indexed vectors. `emb` needs (vec_id, label, v:array<double>).
-    `centroids` overrides the first-K quantizer with trained ones
-    ([(cid, vector)], e.g. from 2 Lloyd iterations via assign_clusters /
-    recompute_centroids) — the layout and search are identical."""
-    spark = emb.sparkSession
-    base = emb
-    if exclude_ids:
-        base = base.filter(~F.col("vec_id").isin(list(exclude_ids)))
-    cents = sorted(centroids) if centroids is not None else _centroid_rows(base, k)
-    # deliberately NOT spread_scan'd: the A/B regressed hard (build
-    # entries 24.9 -> 43.3 s sum-of-mins) — the extra round-robin
-    # exchange ahead of the cid repartition costs more than the
-    # parallelized assignment saves on the build's multi-consumer plan
-    assigned = base.select(
-        "vec_id", "label", "v", _assign_cid(F.col("v"), cents).alias("cid")
-    )
-    # one shuffle keyed by cid so each inverted list lands in few files
-    # (a task per cid, not per (task, cid) — 32 upstream partitions would
-    # otherwise spray k files each); at production scale raise
-    # spark.sql.shuffle.partitions so hot lists split across tasks.
-    # The indexed-vector count rides the write as an observe() metric —
-    # the previous read-back count() re-scanned the freshly written index.
-    from pyspark.sql import Observation
-
-    from railgun_spark.session import overlap
-
-    obs = Observation()
-
-    def _write_vecs():
-        assigned.observe(obs, F.count(F.lit(1)).alias("n")).repartition(
-            F.col("cid")
-        ).write.mode("overwrite").partitionBy("cid").parquet(
-            f"{index_path}/vecs"
-        )
-
-    def _write_cents():
-        local_df(
-            spark, [(cid, cv) for cid, cv in cents],
-            "cid: int, cv: array<double>",
-        ).write.mode("overwrite").parquet(f"{index_path}/centroids")
-
-    # independent writes overlap (guide-§2.6): the tiny centroids job
-    # fills the vecs write's scheduling gaps instead of queueing after it
-    overlap(spark, _write_vecs, _write_cents)
-    return int(obs.get["n"])
-
-
-def _recover_ivf(index_path: str) -> None:
-    """Restore a crashed compaction's backup before any vecs/ or raw/
-    read (the same discipline as dedup._read_index_or_none): if
-    compact_ivf_index died between its two renames, the live dir is
-    absent but the backup holds the complete pre-compaction layout.
-    No-op on remote schemes."""
-    import os
-    from urllib.parse import urlparse
-
-    from railgun_spark.operators.dedup import _recover_index
-
-    if urlparse(index_path).scheme in ("", "file"):
-        vecs = _ivf_vecs_local(index_path)
-        _recover_index(vecs)
-        _recover_index(os.path.join(os.path.dirname(vecs.rstrip("/")), "raw"))
-
-
-# Lloyd training inputs are bounded to ~this many vectors per centroid/
-# codeword (FAISS's guidance: quantizer quality saturates around
-# 256 points per cell; training past that buys nothing but wall time).
-TRAIN_SAMPLE_PER_CENTROID = 256
-# ... but never fewer than this many vectors total, so small-K quantizers
-# still see a corpus-shaped sample
-TRAIN_SAMPLE_MIN = 100_000
-
-
-def _training_sample(emb: DataFrame, target: int) -> DataFrame:
-    """Bounded deterministic Lloyd-training input: if the corpus exceeds
-    `target` rows, keep a ~target-row hash bucket (xxhash64 of vec_id —
-    the stable_sample discipline: the choice is a pure function of row
-    identity, stable across runs, partitionings, and appends). Either
-    way the result is localCheckpoint'd, so every training iteration
-    scans a MATERIALIZED bounded frame instead of re-reading the corpus
-    — at 100 TB this is the difference between m*iters full-corpus
-    passes and one sampling pass (quantizer quality saturates at a few
-    hundred points per cell; FAISS trains on max(256*k, ~1e5) vectors
-    for the same reason). The checkpointed frame is bounded by ~target
-    rows x dim doubles — driver-independent, executor-resident."""
-    n = emb.count()
-    if n > target:
-        # integer-permille keep decision — exact fraction arithmetic on
-        # the hash, no float sampling nondeterminism
-        denom = 1_000_000
-        keep = int(target * denom // n)
-        emb = emb.filter(
-            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(denom)) < F.lit(keep)
-        )
-    return emb.localCheckpoint()
-
-
-def train_ivf_centroids(
-    emb: DataFrame, k: int = IVF_K, iters: int = 5,
-    sample: int | None = 0,
-) -> list:
-    """Lloyd-train a coarse quantizer from the first-K init: `iters`
-    rounds of map-only assignment (broadcast-literal centroids) + one
-    (cluster, pos) shuffle each. Returns [(cid, vector)] for
-    build_ivf_index / build_ivf_pq_index's `centroids` override. On
-    clustered data this is what turns IVF pruning into recall-efficient
-    pruning (ANN_RECALL_CLUSTERED_r15: recall@10 = 0.775 at 3.1% of
-    lists scanned vs ~= scanned-fraction untrained). A cluster that
-    empties mid-training keeps its previous centroid so the quantizer
-    stays k-wide. `emb` needs (vec_id, v).
-
-    `sample` bounds the Lloyd input (_training_sample): 0 (default)
-    auto-sizes to max(256*k, 100k) vectors; an explicit int is the
-    bound; None trains on the full corpus. The first-K init always
-    comes from the FULL corpus, so when the bound doesn't bind the
-    result is identical to full-corpus training."""
-    if sample == 0:
-        sample = max(TRAIN_SAMPLE_PER_CENTROID * k, TRAIN_SAMPLE_MIN)
-    base = emb.select("vec_id", F.col("v").alias("e"))
-    if sample is not None:
-        base = _training_sample(base, sample)
-    cents = dict(_centroid_rows(emb, k))
-    # K-routed like _kmeans_loop: a production coarse quantizer
-    # (K ~ sqrt(N)) trains through the Arrow BLAS assignment
-    assign = (
-        assign_clusters_batch if k > _IVF_COLUMN_PATH_MAX_K
-        else assign_clusters
-    )
-    for _ in range(iters):
-        new = recompute_centroids(assign(base, cents))
-        cents = {cid: new.get(cid, cv) for cid, cv in cents.items()}
-    return sorted(cents.items())
-
-
-def residual_frame(emb: DataFrame, centroids: list) -> DataFrame:
-    """(vec_id, v=residual-against-assigned-centroid) — the training
-    frame for a residual (IVFADC) build's codebooks:
-    train_pq_codebooks(residual_frame(emb, cents), m, ks) trains
-    sub-codebooks on exactly the vectors the index will encode."""
-    return emb.select(
-        "vec_id", "v", _assign_cid(F.col("v"), centroids).alias("cid")
-    ).select("vec_id", _residual_col(F.col("v"), centroids).alias("v"))
-
-
-def train_pq_codebooks(
-    emb: DataFrame, m: int = PQ_M, ks: int = PQ_KS, iters: int = 10,
-    tol: float = 1e-4,
-    sample: int | None = 0,
-) -> dict:
-    """Lloyd-train per-subspace PQ codebooks from the first-K init, in
-    build_ivf_pq_index's `codebooks` shape ({m: [(j, subvector)]},
-    1-based ascending j). The DataFrame twin of `pq_train` (which reads
-    an sf_dir): each subspace runs the shared _kmeans_loop over the
-    SLICED frame — map-only assignment vs broadcast-literal codewords +
-    one ks*ds-row shuffle per iteration. Codeword ids are re-keyed to
-    1..ks by ascending init vec_id so codes stay 1-based array
-    positions. `emb` needs (vec_id, v).
-
-    `sample` bounds the Lloyd input (_training_sample): 0 (default)
-    auto-sizes to max(256*ks, 100k) vectors; an explicit int is the
-    bound; None trains on the full corpus. Without the bound, m
-    subspaces x iters iterations means m*iters FULL-CORPUS passes — at
-    m=16, iters=10 that is 160 passes, the difference between a
-    minutes-long build step and a day at 100 TB; with it, one sampling
-    pass materializes a bounded frame all m loops share. The first-ks
-    init always comes from the FULL corpus, so when the bound doesn't
-    bind the result is identical to full-corpus training."""
-    if sample == 0:
-        sample = max(TRAIN_SAMPLE_PER_CENTROID * ks, TRAIN_SAMPLE_MIN)
-    base = emb.select("vec_id", F.col("v").alias("e"))
-    if sample is not None:
-        base = _training_sample(base, sample)
-    init_rows = _centroid_rows(emb, ks)
-    dim = len(init_rows[0][1])
-    ds = dim // m
-    books: dict = {}
-    for mm in range(m):
-        sub = base.select(
-            "vec_id", F.slice(F.col("e"), mm * ds + 1, ds).alias("e")
-        )
-        init = {vid: v[mm * ds:(mm + 1) * ds] for vid, v in init_rows}
-        trained = _kmeans_loop(sub, init, iters, tol)
-        books[mm] = [
-            (j, trained[vid])
-            for j, vid in enumerate(sorted(trained), 1)
-        ]
-    return books
-
-
-def _probed_vecs(spark: SparkSession, index_path: str, cids: list) -> DataFrame:
-    """The probed inverted lists only: an isin over the cid PARTITION
-    column prunes unprobed directories at plan time (inputFiles shrinks
-    with nprobe — pinned by test)."""
-    _recover_ivf(index_path)
-    return spark.read.parquet(f"{index_path}/vecs").filter(
-        F.col("cid").isin([int(c) for c in cids])
-    )
-
-
-def ann_ivf_search_index(
-    spark: SparkSession,
-    queries: DataFrame,
-    index_path: str,
-    nprobe: int = IVF_NPROBE,
-    topk: int = 10,
-    broadcast_probes: bool = True,
-) -> DataFrame:
-    """Batch ANN search against a build_ivf_index layout: for each query
-    row (qid, v) pick the `nprobe` nearest centroids (Column algebra
-    over the k stored centroids — no per-query driver work), scan ONLY
-    those partitions, exact-re-rank by rounded cosine, and return the
-    per-query top-`topk` as (qid, vec_id, label, cid, cos_sim, rnk).
-    Ties break on lowest vec_id / lowest cid, matching ann_ivf_topk.
-    `broadcast_probes` fits the usual shape (query batch << index) by
-    shipping the probes to the pruned scan with no index-side shuffle;
-    set it False when the query batch itself is cluster-scale and must
-    not be collected to one node (the join degrades to a shuffle on
-    cid — correctness identical)."""
-    from pyspark.sql import Window
-
-    cents = sorted(
-        (int(r["cid"]), [float(x) for x in r["cv"]])
-        for r in spark.read.parquet(f"{index_path}/centroids").collect()
-    )
-    # per-query probe list (K-routed: Column struct-sort or BLAS kernel),
-    # exploded to (qid, cid) pairs carrying the query vector along for
-    # the re-rank leg; checkpointed so the probe pass over the query
-    # batch runs ONCE (the distinct-cid collect below and the candidate
-    # join would otherwise re-evaluate the whole lineage)
-    probes = _probed_queries(queries, cents, nprobe).select(
-        "qid", F.col("v").alias("qv"), "cid"
-    ).localCheckpoint()
-    # static partition pruning: the union of probed cids is bounded by k
-    # (tiny), so one driver-side distinct keeps the scan pruned even
-    # without runtime DPP
-    probed_cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
-    if broadcast_probes:
-        probes = F.broadcast(probes)
-    cand = _probed_vecs(spark, index_path, probed_cids).join(probes, "cid")
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("cos_sim"), F.col("vec_id"), F.col("cid")
-    )
-    return (
-        cand.select(
-            "qid", "vec_id", "label", "cid",
-            F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
-        )
-        # at-least-once appends (crash-replayed streaming batches) may
-        # duplicate index rows; identical candidates fold here so a
-        # vector never double-fills the top-k (compact_ivf_index
-        # reclaims the storage)
-        .distinct()
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= topk)
-        .select("qid", "vec_id", "label", "cid", "cos_sim", "rnk")
-    )
-
-
-IVF_INDEX_QUERY_IDS = (0, 9, 10)
-
-
-def _ivf_index_oracle() -> str:
-    cos = (
-        "round(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-    qids = ", ".join(str(q) for q in IVF_INDEX_QUERY_IDS)
-    return f"""
-    WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-    c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND {IVF_K}),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id IN ({qids})),
-    assign AS (
-      SELECT vec_id, label, v, cid FROM (
-        SELECT e.vec_id, e.label, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {cos.format(a="e.v", b="c.cv")} DESC, c.cid) AS rn
-        FROM e, c WHERE e.vec_id NOT IN ({qids})
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT qid, qv, cid FROM (
-        SELECT q.qid, q.qv, c.cid,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {cos.format(a="qv", b="c.cv")} DESC, c.cid) AS rn
-        FROM c, q
-      ) WHERE rn <= {IVF_NPROBE}
-    )
-    SELECT qid, vec_id, label, cid, cos_sim, rnk FROM (
-      SELECT p.qid, a.vec_id, a.label, a.cid,
-             {cos.format(a="a.v", b="p.qv")} AS cos_sim,
-             row_number() OVER (PARTITION BY p.qid
-               ORDER BY {cos.format(a="a.v", b="p.qv")} DESC, a.vec_id, a.cid)
-               AS rnk
-      FROM assign a JOIN probes p USING (cid)
-    ) WHERE rnk <= 10
-    ORDER BY qid, rnk
-    """
-
-
-@query(
-    # r15 rotation: promoted to the driver gate (r14 flagship)
-    "ann_ivf_index_topk",
-    oracle=_ivf_index_oracle(),
-    doc=f"Persistent-IVF ANN search: build a cid-partitioned index "
-    f"(coarse quantizer = vec_ids 1..{IVF_K}, held-out query ids "
-    f"{IVF_INDEX_QUERY_IDS}), then run a 3-query batch probing "
-    f"{IVF_NPROBE} inverted lists each with partition-pruned scans and "
-    "a per-query windowed top-10 — must match the all-in-one SQL "
-    "definition exactly.",
-    tags=("similarity", "ann"),
-)
-def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "label", to_double(F.col("embedding")).alias("v")
-    )
-    queries = emb.filter(
-        F.col("vec_id").isin(list(IVF_INDEX_QUERY_IDS))
-    ).select(F.col("vec_id").alias("qid"), "v")
-    with tempfile.TemporaryDirectory(prefix="ivf_idx_") as d:
-        build_ivf_index(emb, d, exclude_ids=IVF_INDEX_QUERY_IDS)
-        return ann_ivf_search_index(spark, queries, d).orderBy(
-            "qid", "rnk"
-        ).localCheckpoint()
-
-
-def _ivf_append_guard(index_path: str, expect_pq: bool):
-    """Shared preamble for both append functions: verify the stored
-    layout matches the rows this append writes (fail loudly on
-    mismatch), restore a crashed compaction's backup, and take the SAME
-    lock compaction takes so an append racing a compactor's double
-    rename fails loudly instead of writing into a directory about to be
-    renamed away. Returns (lock, token) for _release_compact_lock; on
-    remote schemes (s3/hdfs) returns (None, None) — locking and
-    driver-side recovery are local-filesystem concerns, remote appends
-    rely on the store's committer."""
-    from urllib.parse import urlparse
-
-    from railgun_spark.operators.dedup import _acquire_compact_lock
-
-    if urlparse(index_path).scheme not in ("", "file"):
-        return None, None
-    _check_ivf_layout(index_path, expect_pq)
-    vecs = _ivf_vecs_local(index_path)
-    lock, token = _acquire_compact_lock(vecs)
-    try:
-        _recover_ivf(index_path)
-    except Exception:
-        from railgun_spark.operators.dedup import _release_compact_lock
-
-        _release_compact_lock(lock, token)
-        raise
-    return lock, token
-
-
-def append_to_ivf_index(new_vecs: DataFrame, index_path: str) -> int:
-    """Incrementally grow a build_ivf_index layout: assign `new_vecs`
-    (vec_id, label, v) with the STORED quantizer and append them to
-    their cid partitions (dynamic partitionBy append — only the touched
-    inverted lists gain files; the quantizer is immutable for the
-    index's lifetime, the same discipline as the dedup gates' band
-    geometry). Returns the number of vectors appended. Refuses a PQ
-    target layout (raw rows in a codes index would corrupt every
-    query's top-k) and holds the maintenance lock across the write so
-    an append cannot race a compaction swap."""
-    from railgun_spark.operators.dedup import _release_compact_lock
-
-    spark = new_vecs.sparkSession
-    lock, token = _ivf_append_guard(index_path, expect_pq=False)
-    try:
-        cents = sorted(
-            (int(r["cid"]), [float(x) for x in r["cv"]])
-            for r in spark.read.parquet(f"{index_path}/centroids").collect()
-        )
-        assigned = new_vecs.select(
-            "vec_id", "label", "v", _assign_cid(F.col("v"), cents).alias("cid")
-        ).localCheckpoint()
-        assigned.repartition(F.col("cid")).write.mode("append").partitionBy(
-            "cid"
-        ).parquet(f"{index_path}/vecs")
-        return assigned.count()
-    finally:
-        if lock is not None:
-            _release_compact_lock(lock, token)
-
-
-# --------------------------------------------------------------------------
-# Persistent IVF-PQ index: the canonical billion-scale ANN layout — the
-# IVF index's centroid-partitioned inverted lists, but storing PQ CODES
-# (PQ_M bytes of codebook ids) instead of raw vectors, scored by
-# asymmetric distance (ADC) from per-query lookup tables. The scan leg
-# then reads ~(nprobe/k) of the corpus at ~code-width bytes per vector
-# (PQ_M ints here vs EMB_DIM doubles — a 16x row shrink at these
-# constants, 100x+ at production dims), and every stage stays Column
-# algebra: the per-query LUTs are built from the (tiny, literal)
-# codebooks ON the query rows, ride the probes join, and ADC is a fold
-# of element_at(lut_m, code_m) — no driver work per query, no raw
-# vectors read. Encoding and ADC semantics are exactly ann_pq_topk's
-# (first-min/lowest-j codes, rounded sub-distances, left-to-right sum);
-# the coarse quantizer and probe selection are exactly the IVF index's.
-# --------------------------------------------------------------------------
-def _pq_codebooks(base: DataFrame, ks: int, m: int = PQ_M) -> dict:
-    """cents[m] = [(j, subvector)] (ascending j, 1-based): sub-codebooks
-    from the ks lowest-vec_id vectors of the indexed set (the PQ first-K
-    convention generalized like _centroid_rows). `m` subspaces of
-    dim/m dims each — the geometry travels with the returned dict
-    (subspace count = keys, ds = subvector length), so every consumer
-    derives it from the stored artifact instead of module constants."""
-    rows = _centroid_rows(base, ks)
-    ds = len(rows[0][1]) // m
-    return {
-        mm: [(j, v[mm * ds:(mm + 1) * ds]) for j, (_, v) in enumerate(rows, 1)]
-        for mm in range(m)
-    }
 
 
 def _pq_geometry(books: dict) -> tuple[list[int], int, int]:
     """(ascending subspace ids, dims per subspace, codewords per
-    subspace) derived from a codebooks dict — search/append/encode work
-    for ANY (m, ks) build because the geometry rides the stored
-    codebooks, never a constant."""
+    subspace) of a codebooks dict {m: [(j, subvector)]}: the geometry
+    rides the stored codebooks, never a constant."""
     ms = sorted(books)
     ds = len(books[ms[0]][0][1])
     return ms, ds, len(books[ms[0]])
 
 
-# Above this many (subspace, codeword) cells the Column encode/LUT path
-# (one zip_with/aggregate fold per codeword per subspace in a single
-# projection) stops being the right plan: expression-tree analysis and
-# codegen grow linearly in m*ks while an Arrow-batched numpy kernel does
-# the same math as one (rows x ks x ds) broadcast per subspace. 256 keeps
-# every oracle-gated geometry (4x16, 8x32) on the certified Column path.
-_PQ_COLUMN_PATH_MAX_CELLS = 256
-
-
-def _pq_code_cols(v: Column, cents: dict) -> list:
-    """One 1-based code Column per subspace: first-min squared distance,
-    lowest-j tiebreak — ann_pq_topk's encoding verbatim."""
-    ms, ds, _ = _pq_geometry(cents)
-    cols = []
-    for m in ms:
-        sub = F.slice(v, m * ds + 1, ds)
-        dists = F.array(*[_sq_dist(sub, cv) for _, cv in cents[m]])
-        cols.append(F.array_position(dists, F.array_min(dists)).cast("int"))
-    return cols
-
-
-def _pq_codes_pandas(books: dict):
-    """Arrow-batched PQ encoder for production-shaped codebooks (e.g.
-    M=8, Ks=256 — 2048 cells, where the Column path's per-codeword fold
-    expressions stop scaling): same semantics as _pq_code_cols (squared
-    distance rounded to 6, first-min / lowest-j argmin), computed as one
-    numpy broadcast per subspace over row chunks sized to bound the
-    (chunk, ks, ds) intermediate."""
+def _sqd_kernel(books: dict, luts: bool = False):
+    """Arrow form of the PQ encoder and lookup tables: per row and
+    subspace, the rounded squared distance to every codeword as one
+    numpy broadcast over row chunks sized to bound the (chunk, ks, ds)
+    intermediate (a full ~10k-row Arrow batch at 8x256 would transiently
+    allocate ~160MB per subspace). Returns the 1-based first-min codes
+    (array<int>) or, with `luts`, the tables (array<array<double>>:
+    outer index = subspace, inner = codeword j)."""
     ms, ds, _ = _pq_geometry(books)
-    mats = [
-        np.asarray([cv for _, cv in books[m]], dtype="float64") for m in ms
-    ]
+    mats = [np.asarray([cv for _, cv in books[m]], dtype="float64") for m in ms]
 
-    @F.pandas_udf("array<int>")
-    def enc(vs: pd.Series) -> pd.Series:
+    @F.pandas_udf("array<array<double>>" if luts else "array<int>")
+    def kernel(vs: pd.Series) -> pd.Series:
         if vs.empty:
             return pd.Series([], dtype=object)
         X = np.asarray(vs.tolist(), dtype="float64")
-        out = np.empty((len(X), len(ms)), dtype="int32")
-        for lo in range(0, len(X), 1024):
-            chunk = X[lo:lo + 1024]
-            for i, m in enumerate(ms):
-                sub = chunk[:, m * ds:(m + 1) * ds]
-                d = _np_round6(
-                    ((sub[:, None, :] - mats[i][None, :, :]) ** 2).sum(-1)
-                )
-                out[lo:lo + 1024, i] = d.argmin(1) + 1
-        return pd.Series(list(out))
-
-    return enc
-
-
-def _pq_codes_col(v: Column, books: dict) -> Column:
-    """The codes array for one vector column, routed by geometry size:
-    oracle-certified Column algebra for small codebooks, the Arrow
-    kernel for production-shaped ones. Build and append share this so
-    an index always encodes appends the way it was built."""
-    ms, _, ks = _pq_geometry(books)
-    if len(ms) * ks <= _PQ_COLUMN_PATH_MAX_CELLS:
-        return F.array(*_pq_code_cols(v, books))
-    return _pq_codes_pandas(books)(v)
-
-
-def _pq_luts_pandas(books: dict):
-    """Arrow-batched per-query ADC lookup tables for production-shaped
-    codebooks: array<array<double>> of rounded squared distances,
-    outer index = subspace (ascending), inner = codeword j. The query
-    batch is small, so one vectorized pass replaces m*ks fold
-    expressions whose analysis alone would dominate."""
-    ms, ds, _ = _pq_geometry(books)
-    mats = [
-        np.asarray([cv for _, cv in books[m]], dtype="float64") for m in ms
-    ]
-
-    @F.pandas_udf("array<array<double>>")
-    def luts(vs: pd.Series) -> pd.Series:
-        if vs.empty:
-            return pd.Series([], dtype=object)
-        X = np.asarray(vs.tolist(), dtype="float64")
-        # chunked like _pq_codes_pandas: the (chunk, ks, ds) broadcast
-        # intermediate stays bounded even if a caller LUTs a corpus-sized
-        # frame (a full ~10k-row Arrow batch at 8x256 would transiently
-        # allocate ~160MB per subspace)
         out: list = []
         for lo in range(0, len(X), 1024):
             chunk = X[lo:lo + 1024]
-            per_m = [
+            d = np.stack([
                 _np_round6(
-                    ((chunk[:, m * ds:(m + 1) * ds][:, None, :]
-                      - mats[i][None, :, :]) ** 2).sum(-1)
+                    ((chunk[:, m * ds:(m + 1) * ds][:, None, :] - mats[i][None, :, :]) ** 2)
+                    .sum(-1)
                 )
                 for i, m in enumerate(ms)
-            ]
-            stacked = np.stack(per_m, axis=1)  # (chunk, M, ks)
-            out.extend([list(row) for row in q] for q in stacked)
+            ], axis=1)  # (chunk, M, ks)
+            if luts:
+                out.extend([list(row) for row in q] for q in d)
+            else:
+                out.extend((d.argmin(2) + 1).astype("int32"))
         return pd.Series(out)
 
-    return luts
+    return kernel
+
+
+def _sub_sqd(v: Column, books: dict) -> list:
+    """Expression form of _sqd_kernel: per subspace, the array of rounded
+    squared distances from v's subvector to each codeword (ascending j)."""
+    ms, ds, _ = _pq_geometry(books)
+    return [
+        F.array(*[_sq_dist(F.slice(v, m * ds + 1, ds), cv) for _, cv in books[m]])
+        for m in ms
+    ]
+
+
+def _pq_code_cols(v: Column, books: dict) -> list:
+    """One 1-based code Column per subspace: first-min squared distance,
+    lowest-j tiebreak."""
+    return [F.array_position(d, F.array_min(d)).cast("int") for d in _sub_sqd(v, books)]
+
+
+def _pq_codes_col(v: Column, books: dict) -> Column:
+    """The codes array of one vector column (build and append share it,
+    so an index always encodes appends the way it was built)."""
+    ms, _, ks = _pq_geometry(books)
+    if _arrow_form(len(ms) * ks, cells=True):
+        return _sqd_kernel(books)(v)
+    return F.array(*_pq_code_cols(v, books))
+
+
+def _lut_cols(src: Column, books: dict) -> dict:
+    """{f"lut{m}": the query's ADC lookup table for subspace m}."""
+    ms, _, ks = _pq_geometry(books)
+    if _arrow_form(len(ms) * ks, cells=True):
+        all_luts = _sqd_kernel(books, luts=True)(src)
+        tables = [F.element_at(all_luts, i + 1) for i in range(len(ms))]
+    else:
+        tables = _sub_sqd(src, books)
+    return {f"lut{m}": t.alias(f"lut{m}") for m, t in zip(ms, tables)}
 
 
 def _centroid_vec_col(cents: list) -> Column:
@@ -2293,13 +1663,12 @@ def _centroid_vec_col(cents: list) -> Column:
 
 
 def _residual_col(v: Column, cents: list) -> Column:
-    """v - centroid(cid), reading the row's cid column; K-routed like
-    _assign_cid (the map literal carries K*dim literal nodes — fine at
-    oracle K, an analysis blob at production list counts). Both paths
-    are exact double subtraction."""
-    if len(cents) <= _IVF_COLUMN_PATH_MAX_K:
-        return F.zip_with(v, _centroid_vec_col(cents), lambda x, y: x - y)
-    return _residual_pandas(cents)(v, F.col("cid"))
+    """v - centroid(cid), reading the row's cid column (the map literal
+    carries K*dim literal nodes — fine at oracle K, an analysis blob at
+    production list counts). Both forms are exact double subtraction."""
+    if _arrow_form(len(cents)):
+        return _residual_pandas(cents)(v, F.col("cid"))
+    return F.zip_with(v, _centroid_vec_col(cents), lambda x, y: x - y)
 
 
 def _residual_pandas(cents: list):
@@ -2315,6 +1684,176 @@ def _residual_pandas(cents: list):
         return pd.Series(list(M - C[idx]))
 
     return res
+
+
+# Lloyd training inputs are bounded to ~this many vectors per centroid/
+# codeword (FAISS's guidance: quantizer quality saturates around
+# 256 points per cell; training past that buys nothing but wall time).
+TRAIN_SAMPLE_PER_CENTROID = 256
+# ... but never fewer than this many vectors total, so small-K quantizers
+# still see a corpus-shaped sample
+TRAIN_SAMPLE_MIN = 100_000
+
+
+def _training_sample(emb: DataFrame, target: int) -> DataFrame:
+    """Bounded deterministic Lloyd-training input: if the corpus exceeds
+    `target` rows, keep a ~target-row hash bucket (xxhash64 of vec_id —
+    a pure function of row identity, stable across runs, partitionings
+    and appends). Either way the result is localCheckpoint'd, so every
+    training iteration scans a MATERIALIZED bounded frame (~target rows
+    x dim doubles, executor-resident) instead of re-reading the corpus:
+    at 100 TB, one sampling pass instead of m*iters full-corpus passes."""
+    n = emb.count()
+    if n > target:
+        # integer-permille keep decision — exact fraction arithmetic on
+        # the hash, no float sampling nondeterminism
+        denom = 1_000_000
+        keep = int(target * denom // n)
+        emb = emb.filter(
+            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(denom)) < F.lit(keep)
+        )
+    return emb.localCheckpoint()
+
+
+def _train_frame(emb: DataFrame, width: int, sample: int | None) -> DataFrame:
+    """The (vec_id, e) Lloyd input of a (vec_id, v) frame, bounded by
+    `sample` (_training_sample): 0 auto-sizes it to max(256*width, 100k)
+    vectors, an int is the bound, None keeps the full frame. Trainers
+    take their init from the FULL frame, so when the bound doesn't bind
+    the result is identical to full-corpus training."""
+    base = emb.select("vec_id", F.col("v").alias("e"))
+    if sample == 0:
+        sample = max(TRAIN_SAMPLE_PER_CENTROID * width, TRAIN_SAMPLE_MIN)
+    return base if sample is None else _training_sample(base, sample)
+
+
+_LLOYD_TOL = 1e-4  # one rounded (4-place) centroid coordinate step
+
+
+def _lloyd(base: DataFrame, cents: dict, iters: int) -> dict:
+    """The one Lloyd loop over a (vec_id, e) frame: up to `iters` rounds
+    of map-only assignment against broadcast-literal centroids
+    (assign_clusters, routed by K) plus one K*dim-row (cluster, pos)
+    shuffle each, stopping once no coordinate moves by _LLOYD_TOL. A cluster
+    that captures no points keeps its centroid (the quantizer stays K
+    wide); the plan depth is constant per iteration."""
+    for _ in range(iters):
+        new = recompute_centroids(assign_clusters(base, cents))
+        new = {cid: new.get(cid, cv) for cid, cv in cents.items()}
+        movement = max(
+            max(abs(a - b) for a, b in zip(cents[cid], new[cid])) for cid in cents
+        )
+        cents = new
+        if movement < _LLOYD_TOL:
+            break
+    return cents
+
+
+def train_ivf_centroids(
+    emb: DataFrame, k: int = IVF_K, iters: int = 5, sample: int | None = 0,
+) -> list:
+    """Lloyd-train a coarse quantizer from the first-K init of `emb`
+    (vec_id, v) for up to `iters` rounds; `sample` bounds the
+    input (_train_frame). Returns [(cid, vector)] for build_index's
+    `centroids` override or ivf_search. On clustered data this is what
+    turns IVF pruning into recall-efficient pruning
+    (ANN_RECALL_CLUSTERED_r15: recall@10 = 0.775 at 3.1% of lists
+    scanned vs ~= scanned-fraction untrained)."""
+    base = _train_frame(emb, k, sample)
+    return sorted(_lloyd(base, dict(_centroid_rows(emb, k)), iters).items())
+
+
+def residual_frame(emb: DataFrame, centroids: list) -> DataFrame:
+    """(vec_id, v=residual-against-assigned-centroid) — the training
+    frame for a residual (IVFADC) build's codebooks:
+    train_pq_codebooks(residual_frame(emb, cents), m, ks) trains
+    sub-codebooks on exactly the vectors the index will encode."""
+    return emb.select(
+        "vec_id", "v", _assign_cid(F.col("v"), centroids).alias("cid")
+    ).select("vec_id", _residual_col(F.col("v"), centroids).alias("v"))
+
+
+def train_pq_codebooks(
+    emb: DataFrame, m: int = PQ_M, ks: int = PQ_KS, iters: int = 10,
+    sample: int | None = 0,
+) -> dict:
+    """Per-subspace PQ codebooks {m: [(j, subvector)]}, 1-based ascending
+    j: the ks lowest-vec_id vectors of `emb` (vec_id, v), sliced into m
+    subspaces and Lloyd-trained on the sliced frame for up to `iters`
+    rounds each (0 = the first-K codebooks). The m loops share one
+    bounded sample (_train_frame): without it, m subspaces x iters
+    iterations are m*iters FULL-CORPUS passes (160 at m=16, iters=10)."""
+    base = _train_frame(emb, ks, sample)
+    init_rows = _centroid_rows(emb, ks)
+    ds = len(init_rows[0][1]) // m
+    books: dict = {}
+    for mm in range(m):
+        sub = base.select("vec_id", F.slice(F.col("e"), mm * ds + 1, ds).alias("e"))
+        init = {vid: v[mm * ds:(mm + 1) * ds] for vid, v in init_rows}
+        trained = _lloyd(sub, init, iters)
+        books[mm] = [(j, trained[vid]) for j, vid in enumerate(sorted(trained), 1)]
+    return books
+
+
+def _centroid_rows(emb: DataFrame, k: int) -> list:
+    """Deterministic first-K quantizer: the k lowest-vec_id vectors OF
+    THE GIVEN SET as [(vec_id, vector)] (ann_ivf_topk's convention
+    generalized to arbitrary id ranges; the init of every Lloyd run).
+    Refuses loudly on fewer than k vectors: an empty/short quantizer
+    would silently build a degenerate index."""
+    rows = emb.select("vec_id", "v").orderBy("vec_id").limit(k).collect()
+    if len(rows) < k:
+        raise ValueError(
+            f"cannot build a {k}-centroid IVF quantizer from "
+            f"{len(rows)} vectors"
+        )
+    return sorted((int(r["vec_id"]), [float(x) for x in r["v"]]) for r in rows)
+
+
+def _read_quantizer(spark: SparkSession, index_path: str, pq: bool) -> tuple:
+    """(centroids [(cid, vector)], codebooks {m: [(j, subvector)]} or
+    None, encoding 'raw'/'residual' or None) of a stored index. The
+    three K-bounded PQ reads are independent collects, overlapped
+    (guide-§2.6) instead of three sequential driver round trips."""
+    from railgun_spark.session import overlap
+
+    def rows(name: str) -> list:
+        return spark.read.parquet(f"{index_path}/{name}").collect()
+
+    books = encoding = None
+    if not pq:
+        cents_rows = rows("centroids")
+    else:
+        cents_rows, books_rows, encoding = overlap(
+            spark, lambda: rows("centroids"), lambda: rows("codebooks"),
+            lambda: _ivf_pq_encoding(spark, index_path),
+        )
+        books = {}
+        for r in books_rows:
+            books.setdefault(int(r["m"]), []).append((int(r["j"]), [float(x) for x in r["cv"]]))
+        books = {m: sorted(entries) for m, entries in books.items()}
+    cents = sorted((int(r["cid"]), [float(x) for x in r["cv"]]) for r in cents_rows)
+    return cents, books, encoding
+
+
+def _coded(assigned: DataFrame, cents: list, books: dict | None, residual: bool) -> DataFrame:
+    """The rows vecs/ stores for (vec_id, label, v, cid) rows: the rows
+    themselves for an IVF index; (vec_id, label, cid, codes) for IVF-PQ,
+    the codes of v or, for a residual index, of v - centroid(cid)."""
+    if books is None:
+        return assigned
+    enc_v = _residual_col(F.col("v"), cents) if residual else F.col("v")
+    return assigned.select(
+        "vec_id", "label", "cid", _pq_codes_col(enc_v, books).alias("codes")
+    )
+
+
+def _write_lists(rows: DataFrame, target: str, mode: str) -> None:
+    """Inverted lists: one shuffle keyed by cid so each list lands in few
+    files (a task per cid, not per (task, cid) — 32 upstream partitions
+    would otherwise spray k files each); at production scale raise
+    spark.sql.shuffle.partitions so hot lists split across tasks."""
+    rows.repartition(F.col("cid")).write.mode(mode).partitionBy("cid").parquet(target)
 
 
 # raw/ is written with page-sized parquet row groups (~50-100 rows at
@@ -2341,8 +1880,12 @@ def _raw_probed_bytes(spark: SparkSession, index_path: str,
     """Total bytes under the probed raw/cid=... directories — the
     driver-side metadata read (one content summary per probed list,
     K-bounded) behind the refine read's prune-or-scan decision. Works
-    on local and remote schemes through the Hadoop FileSystem; a
-    missing dir (empty list) contributes 0."""
+    on local and remote schemes through the Hadoop FileSystem. A
+    missing dir (empty list) contributes 0; every other failure (a
+    permission error, an unsupported scheme, a gateway fault) raises
+    rather than steer the search to the full-scan branch."""
+    from py4j.protocol import Py4JJavaError
+
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     total = 0
@@ -2354,8 +1897,9 @@ def _raw_probed_bytes(spark: SparkSession, index_path: str,
             total += int(
                 p.getFileSystem(conf).getContentSummary(p).getLength()
             )
-        except Exception:
-            pass
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+                raise
     return total
 
 
@@ -2377,14 +1921,6 @@ def _write_raw_store(rows: DataFrame, target: str, mode: str) -> None:
          .option("parquet.block.size", RAW_STORE_BLOCK_BYTES)
          .partitionBy("cid")
          .parquet(target))
-
-
-def _write_ivf_pq_meta(spark: SparkSession, index_path: str,
-                       residual: bool) -> None:
-    local_df(
-        spark, [("encoding", "residual" if residual else "raw")],
-        "key: string, value: string",
-    ).write.mode("overwrite").parquet(f"{index_path}/meta")
 
 
 def _ivf_pq_encoding(spark: SparkSession, index_path: str) -> str:
@@ -2415,271 +1951,212 @@ def _ivf_pq_encoding(spark: SparkSession, index_path: str) -> str:
     return {r["key"]: r["value"] for r in rows}.get("encoding", "raw")
 
 
-def build_ivf_pq_index(
-    emb: DataFrame, index_path: str, k: int = IVF_K, ks: int = PQ_KS,
-    m: int = PQ_M,
+def build_index(
+    emb: DataFrame, index_path: str, spec: IVFSpec = IVFSpec(),
     exclude_ids: tuple = (),
-    store_raw: bool = False,
     centroids: list | None = None,
     codebooks: dict | None = None,
-    residual: bool = False,
 ) -> int:
-    """IVF-PQ build: assign every vector to its nearest coarse centroid
-    AND encode it to PQ codes in the same pass; the inverted lists store
-    (vec_id, label, codes) ONLY — raw vectors never land in the index.
-    Writes vecs/ (partitioned by cid), centroids/, and codebooks/.
-
-    `store_raw` additionally writes the raw vectors to raw/ under the
-    SAME cid partitioning — the FAISS-refine / DiskANN pattern: searches
-    still scan codes-width rows, but `ann_ivf_pq_search_index(rerank=R)`
-    can re-score the ADC shortlist against exact vectors read from ONLY
-    the probed partitions. Pure-ADC ranking caps recall at the
-    quantizer's resolution; the re-rank leg removes that cap at the cost
-    of R raw-row lookups per query.
-
-    `centroids` ([(cid, vector)]) and `codebooks` ({m: [(j, subvector)]},
-    ascending 1-based j) override the first-K quantizer/codebooks with
-    trained ones (Lloyd iterations / per-subspace kmeans) — the layout,
-    search, and stored-artifact contract are identical.
-
-    `m` (subspaces) and `ks` (codewords per sub-codebook) set the code
-    geometry: the defaults are the tiny oracle-certified shape; a
-    production build wants M=8, Ks=256 (64 bits/vector) with trained
-    codebooks (`train_pq_codebooks`), where encoding routes to the
-    Arrow kernel automatically. Search and append derive the geometry
-    from the stored codebooks/ — nothing else to configure.
-
-    `residual=True` is the IVFADC form: codes (and the default first-K
-    codebooks) are computed on v - centroid(cid) instead of v, so the
-    sub-codebooks spend their resolution on INTRA-list structure — on
-    clustered data this is what makes the ADC shortlist itself
-    accurate (the raw-vector form wastes codewords on the between-
-    cluster variance every list member shares). Search computes its
-    lookup tables per (query, probed list) on the query's residual;
-    the encoding choice is recorded in meta/ and appends follow it.
-    Trained codebooks for this mode come from
-    train_pq_codebooks(residual_frame(emb, cents), ...)."""
-    spark = emb.sparkSession
-    base = emb
-    if exclude_ids:
-        base = base.filter(~F.col("vec_id").isin(list(exclude_ids)))
-    cents = sorted(centroids) if centroids is not None else _centroid_rows(base, k)
-    # deliberately NOT spread_scan'd — same measured regression as
-    # build_ivf_index (the build plan consumes `assigned` several times;
-    # each re-execution would pay the extra exchange)
-    assigned = base.select(
-        "vec_id", "label", "v", _assign_cid(F.col("v"), cents).alias("cid")
-    )
-    enc_v = _residual_col(F.col("v"), cents) if residual else F.col("v")
-    if codebooks is not None:
-        books = {mm: sorted(entries) for mm, entries in codebooks.items()}
-    elif residual:
-        books = _pq_codebooks(
-            assigned.select("vec_id", enc_v.alias("v")), ks, m
-        )
-    else:
-        books = _pq_codebooks(base, ks, m)
-    coded = assigned.select(
-        "vec_id", "label", "cid",
-        _pq_codes_col(enc_v, books).alias("codes"),
-    )
-    # All five artifact writes are independent of each other; run them
-    # from a thread pool (guide-§2.6 overlap) — the codes and raw
-    # stores are the two heavy jobs (each a full assignment pass) and
-    # previously queued strictly after one another, with three tiny
-    # metadata writes serialized behind them. The indexed-vector count
-    # rides the codes write as an observe() metric instead of a
-    # read-back count() over the freshly written index.
+    """Build a `spec` index of `emb` (vec_id, label, v:array<double>)
+    minus `exclude_ids` and return the number of indexed vectors: assign
+    every vector to its nearest coarse centroid, write vecs/ (by cid) and
+    centroids/; an IVF-PQ spec encodes in the same pass, stores (vec_id,
+    label, codes) ONLY and writes codebooks/ and, last, meta/. Trained
+    `centroids` [(cid, vector)] (train_ivf_centroids) and `codebooks`
+    {m: [(j, subvector)]}, ascending 1-based j (train_pq_codebooks; for a
+    residual build over residual_frame) override the first-K ones of the
+    indexed set; a production build wants M=8, Ks=256 trained codebooks.
+    `residual` (IVFADC) codes v - centroid(cid), so the sub-codebooks
+    spend their resolution on INTRA-list structure; `store_raw` writes
+    the exact vectors to raw/ under the SAME cid partitioning (the
+    FAISS-refine / DiskANN pattern) for a search's `rerank`."""
     from pyspark.sql import Observation
 
     from railgun_spark.session import overlap
 
+    if codebooks is not None and not spec.pq:
+        raise ValueError("codebooks apply to IVF-PQ specs (m > 0) only")
+    spark = emb.sparkSession
+    base = emb
+    if exclude_ids:
+        base = base.filter(~F.col("vec_id").isin(list(exclude_ids)))
+    cents = sorted(centroids) if centroids is not None else _centroid_rows(base, spec.k)
+    # deliberately NOT spread_scan'd: the A/B regressed hard (build
+    # entries 24.9 -> 43.3 s sum-of-mins) — the extra round-robin
+    # exchange ahead of the cid repartition costs more than the
+    # parallelized assignment saves on the build's multi-consumer plan
+    assigned = base.select(
+        "vec_id", "label", "v", _assign_cid(F.col("v"), cents).alias("cid")
+    )
+    books = None
+    if spec.pq and codebooks is not None:
+        books = {mm: sorted(entries) for mm, entries in codebooks.items()}
+    elif spec.pq:
+        train_on = base if not spec.residual else assigned.select(
+            "vec_id", _residual_col(F.col("v"), cents).alias("v")
+        )
+        books = train_pq_codebooks(train_on, spec.m, spec.ks, iters=0, sample=None)
+    # The artifact writes are independent of each other; run them from a
+    # thread pool (guide-§2.6 overlap): the lists and raw stores are the
+    # two heavy jobs (each a full assignment pass), the tiny metadata
+    # writes fill their scheduling gaps. The indexed-vector count rides
+    # the lists write as an observe() metric instead of a read-back
+    # count() over the freshly written index.
     obs = Observation()
 
-    def _write_codes():
-        coded.observe(obs, F.count(F.lit(1)).alias("n")).repartition(
-            F.col("cid")
-        ).write.mode("overwrite").partitionBy("cid").parquet(
-            f"{index_path}/vecs"
-        )
+    def small(name: str, rows: list, schema: str) -> None:
+        local_df(spark, rows, schema).write.mode("overwrite").parquet(f"{index_path}/{name}")
 
     jobs = [
-        _write_codes,
-        lambda: local_df(
-            spark, [(cid, cv) for cid, cv in cents],
-            "cid: int, cv: array<double>",
-        ).write.mode("overwrite").parquet(f"{index_path}/centroids"),
-        lambda: local_df(
-            spark,
-            [(m, j, cv) for m, entries in books.items() for j, cv in entries],
-            "m: int, j: int, cv: array<double>",
-        ).write.mode("overwrite").parquet(f"{index_path}/codebooks"),
+        lambda: _write_lists(
+            _coded(assigned, cents, books, spec.residual).observe(
+                obs, F.count(F.lit(1)).alias("n")
+            ),
+            f"{index_path}/vecs", "overwrite",
+        ),
+        lambda: small("centroids", cents, "cid: int, cv: array<double>"),
     ]
-    if store_raw:
-        # the SAME assigned frame as codes/ — a divergent re-derivation
-        # here would break the rerank join's cid equality
+    if books is not None:
+        jobs.append(lambda: small(
+            "codebooks", [(m, j, cv) for m, entries in books.items() for j, cv in entries],
+            "m: int, j: int, cv: array<double>",
+        ))
+    if books is not None and spec.store_raw:
+        # the SAME assigned frame as the codes — a divergent
+        # re-derivation here would break the rerank join's cid equality
         jobs.append(
             lambda: _write_raw_store(assigned, f"{index_path}/raw", "overwrite")
         )
     overlap(spark, *jobs)
-    # meta/ is the COMMIT MARKER: written only after every overlapped
-    # artifact write has joined, so a crash mid-build leaves an index
-    # with no meta/ — which readers reject as incomplete
-    # (_ivf_pq_encoding) instead of silently defaulting a residual-coded
-    # index to 'raw' and corrupting search/append semantics.
-    _write_ivf_pq_meta(spark, index_path, residual)
+    if books is not None:
+        # meta/ is the COMMIT MARKER: written only after every overlapped
+        # artifact write has joined, so a crash mid-build leaves an index
+        # with no meta/, which readers reject as incomplete
+        # (_ivf_pq_encoding)
+        small("meta", [("encoding", "residual" if spec.residual else "raw")],
+              "key: string, value: string")
     return int(obs.get["n"])
 
 
-def ann_ivf_pq_search_index(
+def _probed_vecs(spark: SparkSession, index_path: str, cids: list) -> DataFrame:
+    """The probed inverted lists only: an isin over the cid PARTITION
+    column prunes unprobed directories at plan time (inputFiles shrinks
+    with nprobe — pinned by test)."""
+    _recover_ivf(index_path)
+    return spark.read.parquet(f"{index_path}/vecs").filter(
+        F.col("cid").isin([int(c) for c in cids])
+    )
+
+
+def _ranked(scored: DataFrame, score: str, n: int, rank: str = "rnk") -> DataFrame:
+    """Per-query top `n` of scored candidates: cosine descending or ADC
+    ascending, ties on the lowest vec_id, then the lowest cid."""
+    from pyspark.sql import Window
+
+    order = F.desc(score) if score == "cos_sim" else F.col(score)
+    w = Window.partitionBy("qid").orderBy(order, F.col("vec_id"), F.col("cid"))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+
+
+def _cos_scored(cand: DataFrame) -> DataFrame:
+    """(qid, vec_id, label, cid, cos_sim) of candidates carrying v and
+    the query's qv. At-least-once appends (crash-replayed streaming
+    batches) may duplicate index rows; identical candidates fold here
+    so a vector never double-fills the top-k (compact_ivf_index
+    reclaims the storage)."""
+    return cand.select(
+        "qid", "vec_id", "label", "cid",
+        F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
+    ).distinct()
+
+
+def search_index(
     spark: SparkSession,
     queries: DataFrame,
     index_path: str,
+    pq: bool = False,
     nprobe: int = IVF_NPROBE,
+    rerank: int = 0,
     topk: int = 10,
     broadcast_probes: bool = True,
-    rerank: int = 0,
 ) -> DataFrame:
-    """Batch ADC search against a build_ivf_pq_index layout: per-query
-    probe selection as in ann_ivf_search_index, per-query LUTs (rounded
-    squared distance of each query subvector to each codeword) computed
-    as Columns on the query rows, and candidates scored from their codes
-    alone — (qid, vec_id, label, cid, adc_dist, rnk), ascending ADC with
-    lowest-vec_id/cid ties.
-
-    `rerank=R` (requires a build with store_raw=True) keeps the ADC pass
-    as a SHORTLIST stage: the per-query ADC top-R survivors are re-scored
-    by exact cosine against the raw vectors read from only the probed
-    cid partitions, and the result is the exact-cosine top-`topk` —
-    (qid, vec_id, label, cid, cos_sim, rnk), descending cosine. Pure-ADC
-    ranking caps recall at the PQ quantizer's resolution (two distinct
-    vectors with the same codes are indistinguishable); the refine leg
-    costs R raw rows per query and removes that cap. The shortlist
-    (Q×R rows) broadcasts into the pruned raw scan — no index-side
-    shuffle, same discipline as the probes join."""
-    from pyspark.sql import Window
-
-    from railgun_spark.session import overlap
-
-    # the three K-bounded metadata reads (centroids, codebooks,
-    # encoding marker) are independent collects — overlap them
-    # (guide-§2.6) instead of paying three sequential driver round
-    # trips per search
-    cents_rows, books_rows, encoding = overlap(
-        spark,
-        lambda: spark.read.parquet(f"{index_path}/centroids").collect(),
-        lambda: spark.read.parquet(f"{index_path}/codebooks").collect(),
-        lambda: _ivf_pq_encoding(spark, index_path),
-    )
-    cents = sorted(
-        (int(r["cid"]), [float(x) for x in r["cv"]]) for r in cents_rows
-    )
-    books: dict = {}
-    for r in books_rows:
-        books.setdefault(int(r["m"]), []).append(
-            (int(r["j"]), [float(x) for x in r["cv"]])
+    """Batch ANN search of (qid, v) query rows against a build_index
+    layout (IVF-PQ when `pq`; the other layout is refused): per query,
+    the `nprobe` nearest centroids, a scan of ONLY those partitions, and
+    the top-`topk` — (qid, vec_id, label, cid, cos_sim, rnk) by exact
+    rounded cosine for IVF; (..., adc_dist, rnk) by ADC from the codes
+    for IVF-PQ, against per-query lookup tables (per probed list, on the
+    query's residual, for a residual index). `rerank` = R (store_raw
+    builds) re-scores each query's ADC top-R by exact cosine against the
+    raw vectors of the probed partitions (cosine schema): pure ADC caps
+    recall at the quantizer's resolution, the refine leg costs R raw rows
+    per query. Ties break on the lowest vec_id, then cid.
+    `broadcast_probes` ships the probes to the pruned scan with no
+    index-side shuffle; set it False for a cluster-scale query batch (a
+    shuffle join on cid)."""
+    if rerank and not pq:
+        raise ValueError("rerank applies to IVF-PQ searches only (raw IVF "
+                         "already ranks by exact cosine)")
+    cents, books, encoding = _read_quantizer(spark, index_path, pq)
+    # per-query probe list exploded to (qid, cid) pairs carrying what the
+    # scoring needs; checkpointed so the probe pass over the query batch
+    # runs ONCE (the distinct-cid collect below and the candidate join
+    # would otherwise re-evaluate the whole lineage)
+    if books is None:
+        probes = _probed_queries(queries, cents, nprobe, {"v": "v"}).select(
+            "qid", F.col("v").alias("qv"), "cid"
         )
-    books = {m: sorted(entries) for m, entries in books.items()}
-    ms, ds, ks = _pq_geometry(books)
-    wide = len(ms) * ks > _PQ_COLUMN_PATH_MAX_CELLS
-
-    def lut_cols(src: Column) -> list:
-        if not wide:
-            return [
-                F.array(*[
-                    _sq_dist(F.slice(src, m * ds + 1, ds), cv)
-                    for _, cv in books[m]
-                ]).alias(f"lut{m}")
-                for m in ms
-            ]
-        all_luts = _pq_luts_pandas(books)(src)
-        return [
-            F.element_at(all_luts, i + 1).alias(f"lut{m}")
-            for i, m in enumerate(ms)
-        ]
-
-    residual = encoding == "residual"
-    if residual or len(cents) > _IVF_COLUMN_PATH_MAX_K:
+    elif encoding == "residual":
         # IVFADC: the LUT for a probed list is computed on the QUERY'S
         # RESIDUAL against that list's centroid, matching the stored
-        # codes' frame — per (qid, cid) row, after the probe explode.
-        # Wide quantizers (raw or residual) land here too: probe
-        # selection is K-routed inside _probed_queries and the per-row
-        # LUT recompute over nprobe rows is query-batch-sized.
-        src = _residual_col(F.col("v"), cents) if residual else F.col("v")
-        probes = (
-            _probed_queries(queries, cents, nprobe)
-            .select("qid", "cid", *lut_cols(src))
-            .localCheckpoint()
+        # codes' frame — per (qid, cid) row, after the probe explode
+        probes = _probed_queries(queries, cents, nprobe, {"v": "v"}).select(
+            "qid", "cid", *_lut_cols(_residual_col(F.col("v"), cents), books).values()
         )
     else:
-        probe_explode = F.explode(
-            F.slice(
-                F.array_sort(F.array(*[
-                    F.struct(
-                        (-F.round(cosine(F.col("v"), _lit_vec(cv)), 6))
-                        .alias("negsim"),
-                        F.lit(cid).alias("cid"),
-                    )
-                    for cid, cv in cents
-                ])),
-                1,
-                nprobe,
-            )
-        ).alias("p")
-        probes = queries.select(
-            "qid",
-            *lut_cols(F.col("v")),
-            probe_explode,
-        ).select("qid", *[f"lut{m}" for m in ms],
-                 F.col("p.cid").alias("cid")).localCheckpoint()
+        # the LUTs are computed per query, before the probe explode
+        probes = _probed_queries(queries, cents, nprobe, _lut_cols(F.col("v"), books))
+    probes = probes.localCheckpoint()
+    # static partition pruning: the union of probed cids is bounded by k
+    # (tiny), so one driver-side distinct keeps the scan pruned even
+    # without runtime DPP
     probed_cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
     if broadcast_probes:
         probes = F.broadcast(probes)
     cand = _probed_vecs(spark, index_path, probed_cids).join(probes, "cid")
+    if books is None:
+        return _ranked(_cos_scored(cand), "cos_sim", topk).select(
+            "qid", "vec_id", "label", "cid", "cos_sim", "rnk"
+        )
     adc = F.lit(0.0)
-    for i, m in enumerate(ms):
+    for i, m in enumerate(sorted(books)):
         adc = adc + F.element_at(
             F.col(f"lut{m}"), F.element_at(F.col("codes"), i + 1)
         )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("adc_dist"), F.col("vec_id"), F.col("cid")
-    )
     scored = cand.select(
         "qid", "vec_id", "label", "cid", F.round(adc, 6).alias("adc_dist")
     ).distinct()  # duplicate-safe under at-least-once appends
     if not rerank:
-        return (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= topk)
-            .select("qid", "vec_id", "label", "cid", "adc_dist", "rnk")
+        return _ranked(scored, "adc_dist", topk).select(
+            "qid", "vec_id", "label", "cid", "adc_dist", "rnk"
         )
-    if not _ivf_has_raw(spark, index_path):
+    if not _ivf_has(spark, index_path, "raw"):
         raise ValueError(
             f"rerank={rerank} needs raw vectors: build the index with "
             f"store_raw=True (no raw/ under {index_path!r})"
         )
     shortlist = (
-        scored.withColumn("arnk", F.row_number().over(w))
-        .filter(F.col("arnk") <= rerank)
+        _ranked(scored, "adc_dist", rerank, rank="arnk")
         .join(queries.select("qid", F.col("v").alias("qv")), "qid")
         .select("qid", "vec_id", "label", "cid", "qv")
         # materialized once: the id collect below and the refine join
         # must not re-run the whole ADC leg
         .localCheckpoint()
     )
-    # shortlist-shaped refine read: the survivors' vec_ids (K-bounded:
-    # <= queries x rerank rows) are pushed into the raw scan as In
-    # filters. raw/ is written sorted by vec_id with small row groups
-    # (_write_raw_store), so the parquet row-group statistics prune the
-    # scan to ~rows-per-group rows per shortlisted id — the refine read
-    # stops tracking list size. The ids are pushed in chunks of
-    # _RAW_IN_PUSHDOWN_CHUNK unioned together: Spark converts a pushed
-    # In to a LEFT-DEEP or(eq, ...) chain that parquet evaluates
-    # recursively, and a ~1000-id chain overflows the task stack
-    # (measured at the widek probe's 20x50 shortlist); 128-deep is
-    # comfortably safe, and the union's branches touch disjoint ids so
-    # the total row groups read are identical to one wide filter.
+    # shortlist-shaped refine read: the survivors' vec_ids (<= queries x
+    # rerank) are pushed into the raw scan as In filters, which prune
+    # the vec_id-sorted small row groups (_write_raw_store) to ~one group
+    # per id, in unioned _RAW_IN_PUSHDOWN_CHUNK-id scans
     sl_ids = sorted(
         int(r["vec_id"])
         for r in shortlist.select("vec_id").distinct().collect()
@@ -2716,202 +2193,201 @@ def ann_ivf_pq_search_index(
             raw = raw.unionByName(s)
     else:
         raw = base_raw.filter(F.col("vec_id").isin(sl_ids))
-    w2 = Window.partitionBy("qid").orderBy(
-        F.desc("cos_sim"), F.col("vec_id"), F.col("cid")
+    # raw/ may carry at-least-once duplicate rows too
+    refined = _cos_scored(raw.join(F.broadcast(shortlist), ["cid", "vec_id", "label"]))
+    return _ranked(refined, "cos_sim", topk).select(
+        "qid", "vec_id", "label", "cid", "cos_sim", "rnk"
     )
-    return (
-        raw.join(F.broadcast(shortlist), ["cid", "vec_id", "label"])
-        .select(
-            "qid", "vec_id", "label", "cid",
-            F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
+
+
+def append_to_index(new_vecs: DataFrame, index_path: str, pq: bool = False) -> int:
+    """Grow a build_index layout (IVF-PQ when `pq`) by `new_vecs`
+    (vec_id, label, v), assigned (and encoded, in the stored encoding)
+    with the STORED quantizer and codebooks — immutable for the index's
+    lifetime — and appended to their cid partitions; a store_raw index
+    grows raw/ in the same append, or reranked top-k would drop every
+    appended vector. Returns the number appended. Refuses the other
+    layout and holds the maintenance lock across the write, so an append
+    cannot race a compaction swap."""
+    from railgun_spark.operators.dedup import _release_compact_lock
+
+    spark = new_vecs.sparkSession
+    lock, token = _ivf_append_guard(spark, index_path, pq)
+    try:
+        cents, books, encoding = _read_quantizer(spark, index_path, pq)
+        assigned = new_vecs.select(
+            "vec_id", "label", "v", _assign_cid(F.col("v"), cents).alias("cid")
+        ).localCheckpoint()
+        _write_lists(
+            _coded(assigned, cents, books, encoding == "residual"),
+            f"{index_path}/vecs", "append",
         )
-        .distinct()  # raw/ may carry at-least-once duplicate rows too
-        .withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= topk)
-        .select("qid", "vec_id", "label", "cid", "cos_sim", "rnk")
-    )
+        if pq and _ivf_has(spark, index_path, "raw"):
+            _write_raw_store(assigned, f"{index_path}/raw", "append")
+        return assigned.count()
+    finally:
+        if lock is not None:
+            _release_compact_lock(lock, token)
 
 
-def _ivf_pq_index_oracle(m: int = PQ_M, ks: int = PQ_KS) -> str:
-    cos = (
-        "round(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-    sqd = (
-        "round(list_aggregate(list_transform({a}, "
-        "(x, i) -> (x - {b}[i]) * (x - {b}[i])), 'sum'), 6)"
-    )
-    ds = EMB_DIM // m
+IVF_INDEX_QUERY_IDS = (0, 9, 10)
+PQ_RERANK = 25  # ADC shortlist width for the exact-refine leg
+PQ_WIDE_M = 8  # production-shaped geometry: 8 subspaces x 64 codewords
+PQ_WIDE_KS = 64
+
+
+_SQL_SEP = ",\n    "
+
+
+def _index_oracle(spec: IVFSpec) -> str:
+    """The all-in-one SQL definition of _index_gate(spec): first-K
+    quantizer and codebooks of the indexed set (query ids held out),
+    the same assignment, probes, codes and lookup tables, one window per
+    query. A rerank spec takes its book from vec_ids 1..ks directly (the
+    first ks indexed ids at these query ids); a residual spec codes,
+    books and LUTs v - centroid(assigned cid), so each candidate is
+    scored by the LUT of ITS OWN probed list (the lut CTE carries cid)."""
+    cos, sqd = _SQL_COS.format, _SQL_SQD.format
     qids = ", ".join(str(q) for q in IVF_INDEX_QUERY_IDS)
-    return f"""
-    WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-    c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND {IVF_K}),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id IN ({qids})),
-    sub AS (
-      SELECT vec_id, label, m.range AS m,
-             v[m.range * {ds} + 1 : m.range * {ds} + {ds}] AS sv
-      FROM e, range(0, {m}) m
-    ),
-    -- the ks LOWEST vec_ids OF THE INDEXED SET (query ids held out),
-    -- re-keyed 1..ks — matches _pq_codebooks' first-K convention even
-    -- when ks exceeds a held-out id
-    bids AS (
+    ds, m, ks = (EMB_DIM // spec.m, spec.m, spec.ks) if spec.pq else (0, 0, 0)
+    v, ev, qv, qqv = ("", "", "", "") if spec.pq else ("v, ", "e.v, ", "qv, ", "q.qv, ")
+    head = [
+        "e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)",
+        f"c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND {IVF_K})",
+        f"q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id IN ({qids}))",
+    ]
+    assign = f"""assign AS (
+      SELECT vec_id, label, {v}cid FROM (
+        SELECT e.vec_id, e.label, {ev}c.cid,
+               row_number() OVER (PARTITION BY e.vec_id
+                 ORDER BY {cos(a="e.v", b="c.cv")} DESC, c.cid) AS rn
+        FROM e, c WHERE e.vec_id NOT IN ({qids})
+      ) WHERE rn = 1
+    )"""
+    probes = f"""probes AS (
+      SELECT qid, {qv}cid FROM (
+        SELECT q.qid, {qqv}c.cid,
+               row_number() OVER (PARTITION BY q.qid
+                 ORDER BY {cos(a="qv", b="c.cv")} DESC, c.cid) AS rn
+        FROM c, q
+      ) WHERE rn <= {IVF_NPROBE}
+    )"""
+    if not spec.pq:
+        return f"""
+    WITH {_SQL_SEP.join([*head, assign, probes])}
+    SELECT qid, vec_id, label, cid, cos_sim, rnk FROM (
+      SELECT p.qid, a.vec_id, a.label, a.cid,
+             {cos(a="a.v", b="p.qv")} AS cos_sim,
+             row_number() OVER (PARTITION BY p.qid
+               ORDER BY {cos(a="a.v", b="p.qv")} DESC, a.vec_id, a.cid)
+               AS rnk
+      FROM assign a JOIN probes p USING (cid)
+    ) WHERE rnk <= 10
+    ORDER BY qid, rnk
+    """
+    bids = f"""bids AS (
       SELECT vec_id, row_number() OVER (ORDER BY vec_id) AS j
       FROM e WHERE vec_id NOT IN ({qids})
       ORDER BY vec_id LIMIT {ks}
     ),
     book AS (SELECT b.j, s.m, s.sv AS bv
-             FROM sub s JOIN bids b USING (vec_id)),
-    assign AS (
-      SELECT vec_id, label, cid FROM (
-        SELECT e.vec_id, e.label, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {cos.format(a="e.v", b="c.cv")} DESC, c.cid) AS rn
-        FROM e, c WHERE e.vec_id NOT IN ({qids})
-      ) WHERE rn = 1
-    ),
-    codes AS (
+             FROM sub s JOIN bids b USING (vec_id))"""
+    where = "" if spec.residual else f"WHERE s.vec_id NOT IN ({qids})"
+    codes = f"""codes AS (
       SELECT vec_id, m, j AS code FROM (
         SELECT s.vec_id, s.m, b.j,
                row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {sqd.format(a="s.sv", b="b.bv")}, b.j) AS rn
+                 ORDER BY {sqd(a="s.sv", b="b.bv")}, b.j) AS rn
         FROM sub s JOIN book b ON s.m = b.m
-        WHERE s.vec_id NOT IN ({qids})
+        {where}
       ) WHERE rn = 1
-    ),
-    lut AS (
+    )"""
+    if spec.residual:
+        ctes = [*head, assign, f"""resid AS (
+      SELECT a.vec_id, a.label, a.cid,
+             list_transform(e.v, (x, i) -> x - c.cv[i]) AS rv
+      FROM assign a JOIN e USING (vec_id) JOIN c USING (cid)
+    )""", f"""sub AS (
+      SELECT vec_id, m.range AS m,
+             rv[m.range * {ds} + 1 : m.range * {ds} + {ds}] AS sv
+      FROM resid, range(0, {m}) m
+    )""", bids, codes, probes, f"""qsub AS (
+      SELECT p.qid, p.cid, m.range AS m,
+             list_transform(q.qv, (x, i) -> x - c.cv[i])
+               [m.range * {ds} + 1 : m.range * {ds} + {ds}] AS sv
+      FROM probes p JOIN q USING (qid) JOIN c USING (cid),
+           range(0, {m}) m
+    )""", f"""lut AS (
+      SELECT qs.qid, qs.cid, b.m, b.j,
+             {sqd(a="qs.sv", b="b.bv")} AS qd
+      FROM qsub qs JOIN book b ON qs.m = b.m
+    )""", """adc AS (
+      SELECT l.qid, a.vec_id, a.label, a.cid,
+             round(sum(l.qd), 6) AS adc_dist
+      FROM assign a
+      JOIN probes p USING (cid)
+      JOIN codes cd ON cd.vec_id = a.vec_id
+      JOIN lut l ON l.qid = p.qid AND l.cid = a.cid
+                AND l.m = cd.m AND l.j = cd.code
+      GROUP BY l.qid, a.vec_id, a.label, a.cid
+    )"""]
+        return f"""
+    WITH {_SQL_SEP.join(ctes)}
+    SELECT qid, vec_id, label, cid, adc_dist, rnk FROM (
+      SELECT qid, vec_id, label, cid, adc_dist,
+             row_number() OVER (PARTITION BY qid
+               ORDER BY adc_dist, vec_id, cid) AS rnk
+      FROM adc
+    ) WHERE rnk <= 10
+    ORDER BY qid, rnk
+    """
+    if spec.rerank:
+        book = f"""book AS (SELECT vec_id AS j, m, sv AS bv FROM sub
+             WHERE vec_id BETWEEN 1 AND {ks})"""
+    else:
+        book = f"""-- the ks LOWEST vec_ids OF THE INDEXED SET (query ids held out),
+    -- re-keyed 1..ks — matches _pq_codebooks' first-K convention even
+    -- when ks exceeds a held-out id
+    {bids}"""
+    ctes = [*head, _sql_sub(ds, m), book, assign, codes, f"""lut AS (
       SELECT qs.vec_id AS qid, b.m, b.j,
-             {sqd.format(a="qs.sv", b="b.bv")} AS qd
+             {sqd(a="qs.sv", b="b.bv")} AS qd
       FROM sub qs JOIN book b ON qs.m = b.m
       WHERE qs.vec_id IN ({qids})
-    ),
-    probes AS (
-      SELECT qid, cid FROM (
-        SELECT q.qid, c.cid,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {cos.format(a="qv", b="c.cv")} DESC, c.cid) AS rn
-        FROM c, q
-      ) WHERE rn <= {IVF_NPROBE}
-    ),
-    adc AS (
+    )""", probes, """adc AS (
       SELECT l.qid, cd.vec_id, round(sum(l.qd), 6) AS adc_dist
       FROM codes cd JOIN lut l ON cd.m = l.m AND cd.code = l.j
       GROUP BY l.qid, cd.vec_id
-    )
+    )"""]
+    ranked = """FROM assign a
+      JOIN probes p USING (cid)
+      JOIN adc d ON d.qid = p.qid AND d.vec_id = a.vec_id"""
+    if not spec.rerank:
+        return f"""
+    WITH {_SQL_SEP.join(ctes)}
     SELECT qid, vec_id, label, cid, adc_dist, rnk FROM (
       SELECT p.qid, a.vec_id, a.label, a.cid, d.adc_dist,
              row_number() OVER (PARTITION BY p.qid
                ORDER BY d.adc_dist, a.vec_id, a.cid) AS rnk
-      FROM assign a
-      JOIN probes p USING (cid)
-      JOIN adc d ON d.qid = p.qid AND d.vec_id = a.vec_id
+      {ranked}
     ) WHERE rnk <= 10
     ORDER BY qid, rnk
     """
-
-
-@extra_query(
-    "ann_ivf_pq_index_topk",
-    oracle=_ivf_pq_index_oracle(),
-    doc=f"Persistent IVF-PQ ANN: codes-only inverted lists ({PQ_M} ints "
-    f"per vector), per-query ADC lookup tables as Column algebra, "
-    f"{IVF_NPROBE}-list probes over a {IVF_K}-centroid quantizer with "
-    f"held-out query ids {IVF_INDEX_QUERY_IDS} — the partition-pruned "
-    "build + batch search must match the all-in-one SQL definition "
-    "exactly.",
-    tags=("similarity", "ann"),
-)
-def ann_ivf_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "label", to_double(F.col("embedding")).alias("v")
-    )
-    queries = emb.filter(
-        F.col("vec_id").isin(list(IVF_INDEX_QUERY_IDS))
-    ).select(F.col("vec_id").alias("qid"), "v")
-    with tempfile.TemporaryDirectory(prefix="ivfpq_idx_") as d:
-        build_ivf_pq_index(emb, d, exclude_ids=IVF_INDEX_QUERY_IDS)
-        return ann_ivf_pq_search_index(spark, queries, d).orderBy(
-            "qid", "rnk"
-        ).localCheckpoint()
-
-
-PQ_RERANK = 25  # ADC shortlist width for the exact-refine leg
-
-
-def _ivf_pq_rerank_oracle() -> str:
-    cos = (
-        "round(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-    sqd = (
-        "round(list_aggregate(list_transform({a}, "
-        "(x, i) -> (x - {b}[i]) * (x - {b}[i])), 'sum'), 6)"
-    )
-    qids = ", ".join(str(q) for q in IVF_INDEX_QUERY_IDS)
-    return f"""
-    WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-    c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND {IVF_K}),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id IN ({qids})),
-    sub AS (
-      SELECT vec_id, label, m.range AS m,
-             v[m.range * {PQ_DS} + 1 : m.range * {PQ_DS} + {PQ_DS}] AS sv
-      FROM e, range(0, {PQ_M}) m
-    ),
-    book AS (SELECT vec_id AS j, m, sv AS bv FROM sub
-             WHERE vec_id BETWEEN 1 AND {PQ_KS}),
-    assign AS (
-      SELECT vec_id, label, cid FROM (
-        SELECT e.vec_id, e.label, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {cos.format(a="e.v", b="c.cv")} DESC, c.cid) AS rn
-        FROM e, c WHERE e.vec_id NOT IN ({qids})
-      ) WHERE rn = 1
-    ),
-    codes AS (
-      SELECT vec_id, m, j AS code FROM (
-        SELECT s.vec_id, s.m, b.j,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {sqd.format(a="s.sv", b="b.bv")}, b.j) AS rn
-        FROM sub s JOIN book b ON s.m = b.m
-        WHERE s.vec_id NOT IN ({qids})
-      ) WHERE rn = 1
-    ),
-    lut AS (
-      SELECT qs.vec_id AS qid, b.m, b.j,
-             {sqd.format(a="qs.sv", b="b.bv")} AS qd
-      FROM sub qs JOIN book b ON qs.m = b.m
-      WHERE qs.vec_id IN ({qids})
-    ),
-    probes AS (
-      SELECT qid, cid FROM (
-        SELECT q.qid, c.cid,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {cos.format(a="qv", b="c.cv")} DESC, c.cid) AS rn
-        FROM c, q
-      ) WHERE rn <= {IVF_NPROBE}
-    ),
-    adc AS (
-      SELECT l.qid, cd.vec_id, round(sum(l.qd), 6) AS adc_dist
-      FROM codes cd JOIN lut l ON cd.m = l.m AND cd.code = l.j
-      GROUP BY l.qid, cd.vec_id
-    ),
-    shortlist AS (
+    ctes.append(f"""shortlist AS (
       SELECT qid, vec_id, cid FROM (
         SELECT p.qid, a.vec_id, a.cid,
                row_number() OVER (PARTITION BY p.qid
                  ORDER BY d.adc_dist, a.vec_id, a.cid) AS arnk
-        FROM assign a
-        JOIN probes p USING (cid)
-        JOIN adc d ON d.qid = p.qid AND d.vec_id = a.vec_id
-      ) WHERE arnk <= {PQ_RERANK}
-    )
+        {ranked}
+      ) WHERE arnk <= {spec.rerank}
+    )""")
+    return f"""
+    WITH {_SQL_SEP.join(ctes)}
     SELECT qid, vec_id, label, cid, cos_sim, rnk FROM (
       SELECT s.qid, s.vec_id, e.label, s.cid,
-             {cos.format(a="e.v", b="q.qv")} AS cos_sim,
+             {cos(a="e.v", b="q.qv")} AS cos_sim,
              row_number() OVER (PARTITION BY s.qid
-               ORDER BY {cos.format(a="e.v", b="q.qv")} DESC, s.vec_id, s.cid)
+               ORDER BY {cos(a="e.v", b="q.qv")} DESC, s.vec_id, s.cid)
                AS rnk
       FROM shortlist s
       JOIN e ON e.vec_id = s.vec_id
@@ -2921,10 +2397,62 @@ def _ivf_pq_rerank_oracle() -> str:
     """
 
 
+def _index_gate(spark: SparkSession, sf_dir: str, spec: IVFSpec) -> DataFrame:
+    """Build a `spec` index over the embeddings with the query ids held
+    out, then search it with the 3-query batch."""
+    import tempfile
+
+    emb = _embeddings(spark, sf_dir)
+    queries = emb.filter(
+        F.col("vec_id").isin(list(IVF_INDEX_QUERY_IDS))
+    ).select(F.col("vec_id").alias("qid"), "v")
+    with tempfile.TemporaryDirectory(prefix="ivf_gate_") as d:
+        build_index(emb, d, spec, exclude_ids=IVF_INDEX_QUERY_IDS)
+        return search_index(
+            spark, queries, d, pq=spec.pq, nprobe=spec.nprobe, rerank=spec.rerank
+        ).orderBy("qid", "rnk").localCheckpoint()
+
+
+IVF_INDEX = IVFSpec()
+IVF_PQ_INDEX = IVFSpec(m=PQ_M)
+IVF_PQ_RERANK = IVFSpec(m=PQ_M, store_raw=True, rerank=PQ_RERANK)
+IVF_PQ_RESIDUAL = IVFSpec(m=PQ_M, residual=True)
+IVF_PQ_WIDE = IVFSpec(m=PQ_WIDE_M, ks=PQ_WIDE_KS)
+
+
 @query(
-    # r15 flagship: driver-gated
+    "ann_ivf_index_topk",
+    oracle=_index_oracle(IVF_INDEX),
+    doc=f"Persistent-IVF ANN search: build a cid-partitioned index "
+    f"(coarse quantizer = vec_ids 1..{IVF_K}, held-out query ids "
+    f"{IVF_INDEX_QUERY_IDS}), then run a 3-query batch probing "
+    f"{IVF_NPROBE} inverted lists each with partition-pruned scans and "
+    "a per-query windowed top-10 — must match the all-in-one SQL "
+    "definition exactly.",
+    tags=("similarity", "ann"),
+)
+def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _index_gate(spark, sf_dir, IVF_INDEX)
+
+
+@extra_query(
+    "ann_ivf_pq_index_topk",
+    oracle=_index_oracle(IVF_PQ_INDEX),
+    doc=f"Persistent IVF-PQ ANN: codes-only inverted lists ({PQ_M} ints "
+    f"per vector), per-query ADC lookup tables as Column algebra, "
+    f"{IVF_NPROBE}-list probes over a {IVF_K}-centroid quantizer with "
+    f"held-out query ids {IVF_INDEX_QUERY_IDS} — the partition-pruned "
+    "build + batch search must match the all-in-one SQL definition "
+    "exactly.",
+    tags=("similarity", "ann"),
+)
+def ann_ivf_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _index_gate(spark, sf_dir, IVF_PQ_INDEX)
+
+
+@query(
     "ann_ivf_pq_rerank_topk",
-    oracle=_ivf_pq_rerank_oracle(),
+    oracle=_index_oracle(IVF_PQ_RERANK),
     doc=f"IVF-PQ with exact refine: ADC ranks a {PQ_RERANK}-deep "
     f"shortlist per query, then the survivors re-score by exact cosine "
     f"against raw vectors stored under the same cid partitioning "
@@ -2934,121 +2462,12 @@ def _ivf_pq_rerank_oracle() -> str:
     tags=("similarity", "ann"),
 )
 def ann_ivf_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "label", to_double(F.col("embedding")).alias("v")
-    )
-    queries = emb.filter(
-        F.col("vec_id").isin(list(IVF_INDEX_QUERY_IDS))
-    ).select(F.col("vec_id").alias("qid"), "v")
-    with tempfile.TemporaryDirectory(prefix="ivfpq_rr_") as d:
-        build_ivf_pq_index(
-            emb, d, exclude_ids=IVF_INDEX_QUERY_IDS, store_raw=True
-        )
-        return ann_ivf_pq_search_index(
-            spark, queries, d, rerank=PQ_RERANK
-        ).orderBy("qid", "rnk").localCheckpoint()
-
-
-def _ivf_pq_residual_oracle(m: int = PQ_M, ks: int = PQ_KS) -> str:
-    """The IVFADC (residual-encoded) ADC search as one SQL definition:
-    identical to _ivf_pq_index_oracle except that codes, codebooks and
-    the per-query lookup tables are computed on v - centroid(assigned
-    cid) — so each candidate is scored by the LUT of ITS OWN probed
-    list (the lut CTE carries cid)."""
-    cos = (
-        "round(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-    sqd = (
-        "round(list_aggregate(list_transform({a}, "
-        "(x, i) -> (x - {b}[i]) * (x - {b}[i])), 'sum'), 6)"
-    )
-    ds = EMB_DIM // m
-    qids = ", ".join(str(q) for q in IVF_INDEX_QUERY_IDS)
-    return f"""
-    WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-    c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND {IVF_K}),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id IN ({qids})),
-    assign AS (
-      SELECT vec_id, label, cid FROM (
-        SELECT e.vec_id, e.label, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {cos.format(a="e.v", b="c.cv")} DESC, c.cid) AS rn
-        FROM e, c WHERE e.vec_id NOT IN ({qids})
-      ) WHERE rn = 1
-    ),
-    resid AS (
-      SELECT a.vec_id, a.label, a.cid,
-             list_transform(e.v, (x, i) -> x - c.cv[i]) AS rv
-      FROM assign a JOIN e USING (vec_id) JOIN c USING (cid)
-    ),
-    sub AS (
-      SELECT vec_id, m.range AS m,
-             rv[m.range * {ds} + 1 : m.range * {ds} + {ds}] AS sv
-      FROM resid, range(0, {m}) m
-    ),
-    bids AS (
-      SELECT vec_id, row_number() OVER (ORDER BY vec_id) AS j
-      FROM e WHERE vec_id NOT IN ({qids})
-      ORDER BY vec_id LIMIT {ks}
-    ),
-    book AS (SELECT b.j, s.m, s.sv AS bv
-             FROM sub s JOIN bids b USING (vec_id)),
-    codes AS (
-      SELECT vec_id, m, j AS code FROM (
-        SELECT s.vec_id, s.m, b.j,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {sqd.format(a="s.sv", b="b.bv")}, b.j) AS rn
-        FROM sub s JOIN book b ON s.m = b.m
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT qid, cid FROM (
-        SELECT q.qid, c.cid,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {cos.format(a="qv", b="c.cv")} DESC, c.cid) AS rn
-        FROM c, q
-      ) WHERE rn <= {IVF_NPROBE}
-    ),
-    qsub AS (
-      SELECT p.qid, p.cid, m.range AS m,
-             list_transform(q.qv, (x, i) -> x - c.cv[i])
-               [m.range * {ds} + 1 : m.range * {ds} + {ds}] AS sv
-      FROM probes p JOIN q USING (qid) JOIN c USING (cid),
-           range(0, {m}) m
-    ),
-    lut AS (
-      SELECT qs.qid, qs.cid, b.m, b.j,
-             {sqd.format(a="qs.sv", b="b.bv")} AS qd
-      FROM qsub qs JOIN book b ON qs.m = b.m
-    ),
-    adc AS (
-      SELECT l.qid, a.vec_id, a.label, a.cid,
-             round(sum(l.qd), 6) AS adc_dist
-      FROM assign a
-      JOIN probes p USING (cid)
-      JOIN codes cd ON cd.vec_id = a.vec_id
-      JOIN lut l ON l.qid = p.qid AND l.cid = a.cid
-                AND l.m = cd.m AND l.j = cd.code
-      GROUP BY l.qid, a.vec_id, a.label, a.cid
-    )
-    SELECT qid, vec_id, label, cid, adc_dist, rnk FROM (
-      SELECT qid, vec_id, label, cid, adc_dist,
-             row_number() OVER (PARTITION BY qid
-               ORDER BY adc_dist, vec_id, cid) AS rnk
-      FROM adc
-    ) WHERE rnk <= 10
-    ORDER BY qid, rnk
-    """
+    return _index_gate(spark, sf_dir, IVF_PQ_RERANK)
 
 
 @query(
-    # r17 rotation: promoted to the driver gate (the production IVFADC
-    # encoding deserves driver certification; VERDICT r16 #5)
     "ann_ivf_pq_residual_topk",
-    oracle=_ivf_pq_residual_oracle(),
+    oracle=_index_oracle(IVF_PQ_RESIDUAL),
     doc=f"IVFADC residual encoding at the tiny oracle geometry "
     f"({PQ_M}x{PQ_KS}): codes, codebooks and per-(query, probed-list) "
     "lookup tables computed on v - centroid(cid) — the FAISS default "
@@ -3058,32 +2477,13 @@ def _ivf_pq_residual_oracle(m: int = PQ_M, ks: int = PQ_KS) -> str:
     tags=("similarity", "ann"),
 )
 def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "label", to_double(F.col("embedding")).alias("v")
-    )
-    queries = emb.filter(
-        F.col("vec_id").isin(list(IVF_INDEX_QUERY_IDS))
-    ).select(F.col("vec_id").alias("qid"), "v")
-    with tempfile.TemporaryDirectory(prefix="ivfpq_res_") as d:
-        build_ivf_pq_index(
-            emb, d, exclude_ids=IVF_INDEX_QUERY_IDS, residual=True
-        )
-        return ann_ivf_pq_search_index(spark, queries, d).orderBy(
-            "qid", "rnk"
-        ).localCheckpoint()
-
-
-PQ_WIDE_M = 8  # production-shaped geometry: 8 subspaces x 64 codewords
-PQ_WIDE_KS = 64
+    return _index_gate(spark, sf_dir, IVF_PQ_RESIDUAL)
 
 
 @query(
-    # r16 flagship: certifies the Arrow encode/LUT kernels the
-    # production geometry routes to (m*ks=512 > the Column-path cap)
+    # certifies the Arrow encode/LUT kernels (m*ks=512 > the cell cap)
     "ann_ivf_pq_wide_topk",
-    oracle=_ivf_pq_index_oracle(m=PQ_WIDE_M, ks=PQ_WIDE_KS),
+    oracle=_index_oracle(IVF_PQ_WIDE),
     doc=f"Production-shaped IVF-PQ ADC search: {PQ_WIDE_M} subspaces x "
     f"{PQ_WIDE_KS}-entry sub-codebooks (first-K init so the SQL oracle "
     "can derive identical codebooks), where encoding and the per-query "
@@ -3095,139 +2495,88 @@ PQ_WIDE_KS = 64
     tags=("similarity", "ann"),
 )
 def ann_ivf_pq_wide_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "label", to_double(F.col("embedding")).alias("v")
-    )
-    queries = emb.filter(
-        F.col("vec_id").isin(list(IVF_INDEX_QUERY_IDS))
-    ).select(F.col("vec_id").alias("qid"), "v")
-    with tempfile.TemporaryDirectory(prefix="ivfpq_wide_") as d:
-        build_ivf_pq_index(
-            emb, d, ks=PQ_WIDE_KS, m=PQ_WIDE_M,
-            exclude_ids=IVF_INDEX_QUERY_IDS,
-        )
-        return ann_ivf_pq_search_index(spark, queries, d).orderBy(
-            "qid", "rnk"
-        ).localCheckpoint()
+    return _index_gate(spark, sf_dir, IVF_PQ_WIDE)
 
 
-def append_to_ivf_pq_index(new_vecs: DataFrame, index_path: str) -> int:
-    """Incrementally grow a build_ivf_pq_index layout: assign AND encode
-    `new_vecs` with the STORED quantizer and codebooks (both immutable
-    for the index's lifetime) and append the codes to their cid
-    partitions. Returns the number of vectors appended. Refuses a
-    raw-vector target layout (codes rows in a raw index would corrupt
-    every query's top-k) and holds the maintenance lock across the
-    write so an append cannot race a compaction swap."""
-    from railgun_spark.operators.dedup import _release_compact_lock
-
-    spark = new_vecs.sparkSession
-    lock, token = _ivf_append_guard(index_path, expect_pq=True)
-    try:
-        cents = sorted(
-            (int(r["cid"]), [float(x) for x in r["cv"]])
-            for r in spark.read.parquet(f"{index_path}/centroids").collect()
-        )
-        books: dict = {}
-        for r in spark.read.parquet(f"{index_path}/codebooks").collect():
-            books.setdefault(int(r["m"]), []).append(
-                (int(r["j"]), [float(x) for x in r["cv"]])
-            )
-        books = {m: sorted(entries) for m, entries in books.items()}
-        assigned = new_vecs.select(
-            "vec_id", "label", "v", _assign_cid(F.col("v"), cents).alias("cid")
-        ).localCheckpoint()
-        enc_v = (
-            _residual_col(F.col("v"), cents)
-            if _ivf_pq_encoding(spark, index_path) == "residual"
-            else F.col("v")
-        )
-        coded = assigned.select(
-            "vec_id", "label", "cid",
-            _pq_codes_col(enc_v, books).alias("codes"),
-        )
-        coded.repartition(F.col("cid")).write.mode("append").partitionBy(
-            "cid"
-        ).parquet(f"{index_path}/vecs")
-        # a store_raw index must grow its refine store in the same append,
-        # or reranked top-k would silently drop every appended vector (the
-        # refine join finds no raw row for them)
-        if _ivf_has_raw(spark, index_path):
-            _write_raw_store(
-                assigned.select("vec_id", "label", "v", "cid"),
-                f"{index_path}/raw", "append",
-            )
-        return assigned.count()
-    finally:
-        if lock is not None:
-            _release_compact_lock(lock, token)
-
-
-def _ivf_has_raw(spark: SparkSession, index_path: str) -> bool:
-    """True iff the index carries a raw refine store (raw/ exists).
-    Local schemes probe the driver filesystem; remote schemes (s3/hdfs)
-    ask the Hadoop FileSystem instead — _local_index_path would raise on
-    them, which previously broke remote PQ appends AFTER the codes write
-    and made rerank unusable against a remote store_raw index even
-    though the raw/ read itself works (remote appends/reads rely on the
-    store's committer, per _ivf_append_guard's contract)."""
+def _recover_ivf(index_path: str) -> None:
+    """Restore a crashed compaction's backup before any vecs/ or raw/
+    read (the same discipline as dedup._read_index_or_none): if
+    compact_ivf_index died between its two renames, the live dir is
+    absent but the backup holds the complete pre-compaction layout.
+    No-op on remote schemes."""
     from urllib.parse import urlparse
 
+    from railgun_spark.operators.dedup import _recover_index
+
     if urlparse(index_path).scheme in ("", "file"):
-        import os
-
-        from railgun_spark.operators.dedup import _local_index_path
-
-        return os.path.isdir(
-            os.path.join(_local_index_path(index_path).rstrip("/"), "raw")
-        )
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{index_path.rstrip('/')}/raw")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
+        _recover_index(_ivf_local(index_path, "vecs"))
+        _recover_index(_ivf_local(index_path, "raw"))
 
 
-def _ivf_vecs_local(index_path: str) -> str:
-    """Local filesystem path of an index's vecs/ directory — the unit the
-    maintenance lock and the backup/recover swap operate on. Raises on
-    remote schemes (driver-side os.rename only makes sense locally; on
-    s3/hdfs, compaction is a job-committer concern — same contract as
-    dedup._local_index_path)."""
-    import os
+def _ivf_append_guard(spark: SparkSession, index_path: str, expect_pq: bool):
+    """The append preamble: verify the stored layout matches the rows
+    this append writes — codebooks/ marks an IVF-PQ index, and raw rows
+    in a codes index (or codes in a raw one) would read back as nulls,
+    sorting null adc_dist FIRST in every query's top-k — restore a
+    crashed compaction's backup, and take the SAME lock compaction takes
+    so an append racing a compactor's double rename fails loudly instead
+    of writing into a directory about to be renamed away. Returns (lock,
+    token) for _release_compact_lock; on remote schemes (s3/hdfs)
+    returns (None, None) — locking and driver-side recovery are
+    local-filesystem concerns, remote appends rely on the store's
+    committer."""
+    from urllib.parse import urlparse
 
-    from railgun_spark.operators.dedup import _local_index_path
+    from railgun_spark.operators.dedup import _acquire_compact_lock, _release_compact_lock
 
-    return os.path.join(_local_index_path(index_path).rstrip("/"), "vecs")
-
-
-def _ivf_layout_is_pq(index_path: str) -> bool:
-    """True iff the index stores PQ codes: the codebooks/ directory is the
-    PQ marker (written only by build_ivf_pq_index). Used to fail loudly
-    on layout-mismatched appends — appending raw-vector rows into a PQ
-    index would 'succeed' and then sort null adc_dist FIRST in every
-    query's ascending top-k, silently corrupting results."""
-    import os
-
-    from railgun_spark.operators.dedup import _local_index_path
-
-    return os.path.isdir(
-        os.path.join(_local_index_path(index_path).rstrip("/"), "codebooks")
-    )
-
-
-def _check_ivf_layout(index_path: str, expect_pq: bool) -> None:
-    is_pq = _ivf_layout_is_pq(index_path)
+    if urlparse(index_path).scheme not in ("", "file"):
+        return None, None
+    is_pq = _ivf_has(spark, index_path, "codebooks")
     if is_pq != expect_pq:
         have = "IVF-PQ (codes-only)" if is_pq else "raw-vector IVF"
         want = "IVF-PQ" if expect_pq else "raw-vector IVF"
         raise ValueError(
             f"index layout mismatch at {index_path!r}: the stored index is "
             f"{have} but this append writes {want} rows — mixed rows would "
-            "read back as nulls and corrupt every query's top-k. Use the "
-            "matching append function (ann CLI: check the --pq flag)."
+            "read back as nulls and corrupt every query's top-k. Append "
+            "with the index's layout (ann CLI: check the --pq flag)."
         )
+    lock, token = _acquire_compact_lock(_ivf_local(index_path, "vecs"))
+    try:
+        _recover_ivf(index_path)
+    except Exception:
+        _release_compact_lock(lock, token)
+        raise
+    return lock, token
+
+
+def _ivf_has(spark: SparkSession, index_path: str, sub: str) -> bool:
+    """True iff the index has a `sub` directory: codebooks/ (the IVF-PQ
+    marker) or raw/ (the refine store). Local schemes probe the driver
+    filesystem; remote schemes (s3/hdfs) ask the Hadoop FileSystem, so
+    remote PQ appends and reranks work against a remote store_raw
+    index."""
+    from urllib.parse import urlparse
+
+    if urlparse(index_path).scheme in ("", "file"):
+        import os
+
+        return os.path.isdir(_ivf_local(index_path, sub))
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{index_path.rstrip('/')}/{sub}")
+    return bool(jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath))
+
+
+def _ivf_local(index_path: str, sub: str) -> str:
+    """Local filesystem path of an index's `sub` directory; vecs/ is the
+    unit the maintenance lock and the backup/recover swap operate on.
+    Raises on remote schemes (driver-side os.rename only makes sense
+    locally; on s3/hdfs, compaction is a job-committer concern — same
+    contract as dedup._local_index_path)."""
+    import os
+
+    from railgun_spark.operators.dedup import _local_index_path
+
+    return os.path.join(_local_index_path(index_path).rstrip("/"), sub)
 
 
 def compact_ivf_index(spark: SparkSession, index_path: str) -> int:
@@ -3256,8 +2605,7 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> int:
         _swap_compacted,
     )
 
-    vecs = _ivf_vecs_local(index_path)
-    raw = os.path.join(os.path.dirname(vecs.rstrip("/")), "raw")
+    vecs, raw = _ivf_local(index_path, "vecs"), _ivf_local(index_path, "raw")
     lock, lock_token = _acquire_compact_lock(vecs)
     try:
         _recover_index(vecs)
@@ -3270,17 +2618,10 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> int:
             if n is None:
                 n = distinct.count()
 
-            def write(tmp: str) -> None:
-                if live == raw:
-                    # preserve the refine store's point-lookup layout
-                    # (vec_id sort + small row groups)
-                    _write_raw_store(distinct, tmp, "overwrite")
-                else:
-                    distinct.repartition(F.col("cid")).write.mode(
-                        "overwrite"
-                    ).partitionBy("cid").parquet(tmp)
-
-            _swap_compacted(live, write)
+            # raw/ keeps the refine store's point-lookup layout (vec_id
+            # sort + small row groups)
+            writer = _write_raw_store if live == raw else _write_lists
+            _swap_compacted(live, lambda tmp: writer(distinct, tmp, "overwrite"))
     finally:
         _release_compact_lock(lock, lock_token)
     return n

@@ -1139,7 +1139,7 @@ def quality_classifier_lowscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TRAINED counterpart to classifier_score's deterministic demo weights.
 # The model a production quality filter actually runs (fasttext-lineage
 # linear classifier) is a D-bucket weight vector; training it at corpus
-# scale is the same shape as kmeans_train / bpe_train: per-iteration
+# scale is the same shape as train_ivf_centroids / bpe_train: per-iteration
 # map-side work + one tiny aggregate, with only the D-sized weight
 # vector ever reaching the driver.
 #

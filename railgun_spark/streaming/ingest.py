@@ -454,7 +454,7 @@ def stream_append_ivf_availablenow(
     """Continual ANN-index maintenance: drain `source_dir` of embedding
     shards (id/vec[/label] columns) and append every micro-batch to a
     persistent IVF (or IVF-PQ with `pq`) index with its STORED quantizer
-    — the index must exist (build_ivf_[pq_]index). Appends are
+    — the index must exist (similarity.build_index). Appends are
     AT-LEAST-ONCE: a crash between an append and its checkpoint replays
     the batch and duplicates its rows; searches fold identical
     candidates before ranking, and similarity.compact_ivf_index reclaims
@@ -462,13 +462,8 @@ def stream_append_ivf_availablenow(
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from railgun_spark.operators.similarity import (
-        append_to_ivf_index,
-        append_to_ivf_pq_index,
-        to_double,
-    )
+    from railgun_spark.operators import similarity
 
-    append_fn = append_to_ivf_pq_index if pq else append_to_ivf_index
     schema = T.StructType(
         [
             T.StructField(id_col, T.LongType()),
@@ -481,9 +476,9 @@ def stream_append_ivf_availablenow(
         vecs = batch_df.select(
             F.col(id_col).alias("vec_id"),
             F.col("label"),
-            to_double(F.col(vec_col)).alias("v"),
+            similarity.to_double(F.col(vec_col)).alias("v"),
         )
-        return append_fn(vecs, index_path)
+        return similarity.append_to_index(vecs, index_path, pq=pq)
 
     return _drain_availablenow(
         spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, gate

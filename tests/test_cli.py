@@ -858,7 +858,7 @@ def test_ann_info_action(spark, capsys, tmp_path):
 def test_ann_compact_action(spark, capsys, tmp_path):
     """ann compact folds replay-duplicated index rows in place; build
     and append without --input refuse."""
-    from railgun_spark.operators.similarity import append_to_ivf_index, to_double
+    from railgun_spark.operators.similarity import append_to_index, to_double
     from pyspark.sql import functions as F
 
     src = "/root/testdata/sf0.001/embeddings.parquet"
@@ -872,8 +872,8 @@ def test_ann_compact_action(spark, capsys, tmp_path):
     dup = spark.read.parquet(src).filter("vec_id >= 100 AND vec_id < 110").select(
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
     )
-    append_to_ivf_index(dup, idx)
-    append_to_ivf_index(dup, idx)
+    append_to_index(dup, idx)
+    append_to_index(dup, idx)
     assert spark.read.parquet(f"{idx}/vecs").count() == 120
 
     assert main(["ann", "compact", "--index", idx]) == 0

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from railgun_spark.operators.dedup import (
@@ -1009,14 +1010,15 @@ def test_redact_phone_numeric_list_sweep(spark):
 
 
 def test_kmeans_train_matches_numpy_reference(spark):
-    """kmeans_train to convergence must reproduce an in-memory numpy
+    """train_ivf_centroids to convergence must reproduce an in-memory numpy
     Lloyd's loop with the same init, rounding, and tie-breaks."""
     import numpy as np
 
-    from railgun_spark.operators.similarity import kmeans_train
+    from railgun_spark.operators.similarity import train_ivf_centroids
 
     sf_dir = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").orderBy("vec_id")
+    vecs = emb.select("vec_id", to_double(F.col("embedding")).alias("v"))
     X = np.array([list(map(float, r["embedding"])) for r in emb.collect()])
     k = 4
     cents = {i: X[i].tolist() for i in range(k)}
@@ -1038,7 +1040,7 @@ def test_kmeans_train_matches_numpy_reference(spark):
         if movement < 1e-4:
             break
 
-    got = kmeans_train(spark, sf_dir, k=k, max_iter=20, tol=1e-4)
+    got = dict(train_ivf_centroids(vecs, k=k, iters=20, sample=None))
     assert set(got) == set(cents)
     for cid in cents:
         assert got[cid] == [round(v, 4) for v in cents[cid]], cid
@@ -1054,12 +1056,19 @@ def test_pq_train_reduces_quantization_distortion(spark):
         EMB_DIM,
         PQ_KS,
         PQ_M,
-        pq_train,
+        train_pq_codebooks,
     )
 
     sf_dir = "/root/testdata/sf0.001"
     ds = EMB_DIM // PQ_M
-    books = pq_train(spark, sf_dir, max_iter=10)
+    # first-K init from vec_ids 1..KS: the set ann_pq_topk encodes
+    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", to_double(F.col("embedding")).alias("v")
+    ).filter("vec_id != 0")
+    books = {
+        mm: dict(entries)
+        for mm, entries in train_pq_codebooks(vecs, iters=10, sample=None).items()
+    }
     assert set(books) == set(range(PQ_M))
     for mm in range(PQ_M):
         assert set(books[mm]) == set(range(1, PQ_KS + 1))
@@ -1085,16 +1094,19 @@ def test_pq_train_reduces_quantization_distortion(spark):
 
 
 def test_ivf_search_with_trained_centroids_recall(spark):
-    """kmeans_train -> ivf_search composition: recall@10 vs brute force is
+    """train_ivf_centroids -> ivf_search composition: recall@10 vs brute force is
     non-decreasing in nprobe and exactly 1.0 when every cell is probed."""
     from railgun_spark.operators.similarity import (
         ivf_search,
-        kmeans_train,
         knn_brute_force,
+        train_ivf_centroids,
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    cents = kmeans_train(spark, sf_dir, k=8, max_iter=10)
+    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", to_double(F.col("embedding")).alias("v")
+    )
+    cents = train_ivf_centroids(vecs, k=8, iters=10, sample=None)
     exact = [r["vec_id"] for r in knn_brute_force(spark, sf_dir).collect()]
 
     def recall(nprobe):
@@ -1141,19 +1153,23 @@ def test_assign_clusters_batch_parity(spark):
 
     from railgun_spark.operators.similarity import (
         assign_clusters,
-        assign_clusters_batch,
-        kmeans_train,
         to_double,
+        train_ivf_centroids,
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    cents = kmeans_train(spark, sf_dir, k=8, max_iter=10)
+    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", to_double(F.col("embedding")).alias("v")
+    )
+    cents = dict(train_ivf_centroids(vecs, k=8, iters=10, sample=None))
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", to_double(F.col("embedding")).alias("e")
     )
-    exact = {r["vec_id"]: r["cluster"] for r in assign_clusters(emb, cents).collect()}
+    exact = {
+        r["vec_id"]: r["cluster"] for r in assign_clusters(emb, cents, arrow=False).collect()
+    }
     fast = {
-        r["vec_id"]: r["cluster"] for r in assign_clusters_batch(emb, cents).collect()
+        r["vec_id"]: r["cluster"] for r in assign_clusters(emb, cents, arrow=True).collect()
     }
     assert fast == exact and len(exact) > 0
 
@@ -1781,7 +1797,7 @@ def test_embedding_gate_does_not_saturate(spark, tmp_path):
 
 
 def test_persistent_ivf_index_pruning_and_recall(spark, tmp_path):
-    """build_ivf_index writes cid-partitioned inverted lists; a search
+    """build_index writes cid-partitioned inverted lists; a search
     probing fewer lists reads FEWER FILES (directory-level partition
     pruning — the 100 TB seek path), and probing ALL k lists reproduces
     the exact brute-force top-10 per query."""
@@ -1790,8 +1806,8 @@ def test_persistent_ivf_index_pruning_and_recall(spark, tmp_path):
     from railgun_spark.operators.similarity import (
         IVF_K,
         _probed_vecs,
-        ann_ivf_search_index,
-        build_ivf_index,
+        search_index,
+        build_index,
         cosine,
         to_double,
         _lit_vec,
@@ -1802,7 +1818,7 @@ def test_persistent_ivf_index_pruning_and_recall(spark, tmp_path):
     )
     qids = (0, 9)
     idx = str(tmp_path / "ivf")
-    n = build_ivf_index(emb, idx, exclude_ids=qids)
+    n = build_index(emb, idx, exclude_ids=qids)
     assert n == emb.count() - len(qids)
 
     # partition pruning: the probed scan carries a PartitionFilters
@@ -1820,7 +1836,7 @@ def test_persistent_ivf_index_pruning_and_recall(spark, tmp_path):
         F.col("vec_id").alias("qid"), "v"
     )
     # nprobe = k: the pruned search must equal exact brute force
-    got = ann_ivf_search_index(spark, queries, idx, nprobe=IVF_K, topk=5)
+    got = search_index(spark, queries, idx, nprobe=IVF_K, topk=5)
     got_rows = {(r["qid"], r["rnk"]): (r["vec_id"], r["cos_sim"])
                 for r in got.collect()}
     qvecs = {int(r["qid"]): list(r["v"]) for r in queries.collect()}
@@ -1837,7 +1853,7 @@ def test_persistent_ivf_index_pruning_and_recall(spark, tmp_path):
             assert got_rows[(qid, i)] == (r["vec_id"], r["cos_sim"]), (qid, i)
 
     # nprobe=1 returns <= topk rows per query, all from the probed list
-    one = ann_ivf_search_index(spark, queries, idx, nprobe=1, topk=5)
+    one = search_index(spark, queries, idx, nprobe=1, topk=5)
     per_q = one.groupBy("qid").agg(
         F.countDistinct("cid").alias("nc"), F.count("*").alias("n")
     ).collect()
@@ -1845,16 +1861,16 @@ def test_persistent_ivf_index_pruning_and_recall(spark, tmp_path):
 
 
 def test_ivf_index_incremental_append(spark, tmp_path):
-    """append_to_ivf_index assigns with the STORED quantizer: appended
+    """append_to_index assigns with the STORED quantizer: appended
     vectors land in their cid partitions, become searchable, and an
     identical-vector append ranks at cosine 1.0 for a matching query."""
     from pyspark.sql import functions as F
 
     from railgun_spark.operators.similarity import (
         IVF_K,
-        ann_ivf_search_index,
-        append_to_ivf_index,
-        build_ivf_index,
+        search_index,
+        append_to_index,
+        build_index,
         to_double,
     )
 
@@ -1863,7 +1879,7 @@ def test_ivf_index_incremental_append(spark, tmp_path):
     )
     idx = str(tmp_path / "ivf")
     head = emb.filter(F.col("vec_id") < 200)
-    n0 = build_ivf_index(head, idx, exclude_ids=(0,))
+    n0 = build_index(head, idx, exclude_ids=(0,))
     assert n0 == head.count() - 1
 
     # append the tail; a re-labeled copy of the held-out query vector
@@ -1872,14 +1888,14 @@ def test_ivf_index_incremental_append(spark, tmp_path):
     copy = emb.filter(F.col("vec_id") == 0).select(
         F.lit(9999).cast("long").alias("vec_id"), "label", "v"
     )
-    n1 = append_to_ivf_index(tail.unionByName(copy), idx)
+    n1 = append_to_index(tail.unionByName(copy), idx)
     assert n1 == tail.count() + 1
     assert spark.read.parquet(f"{idx}/vecs").count() == n0 + n1
 
     queries = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("qid"), "v"
     )
-    got = ann_ivf_search_index(spark, queries, idx, nprobe=IVF_K, topk=3).collect()
+    got = search_index(spark, queries, idx, nprobe=IVF_K, topk=3).collect()
     assert got[0]["vec_id"] == 9999 and got[0]["cos_sim"] == 1.0
 
 
@@ -1893,8 +1909,9 @@ def test_persistent_ivf_pq_codes_only_storage(spark, tmp_path):
     from railgun_spark.operators.similarity import (
         IVF_K,
         PQ_M,
-        ann_ivf_pq_search_index,
-        build_ivf_pq_index,
+        IVFSpec,
+        search_index,
+        build_index,
         to_double,
     )
 
@@ -1903,7 +1920,7 @@ def test_persistent_ivf_pq_codes_only_storage(spark, tmp_path):
     )
     qids = (0, 9)
     idx = str(tmp_path / "ivfpq")
-    n = build_ivf_pq_index(emb, idx, exclude_ids=qids)
+    n = build_index(emb, idx, IVFSpec(m=PQ_M), exclude_ids=qids)
     assert n == emb.count() - len(qids)
 
     vecs = spark.read.parquet(f"{idx}/vecs")
@@ -1913,7 +1930,7 @@ def test_persistent_ivf_pq_codes_only_storage(spark, tmp_path):
     queries = emb.filter(F.col("vec_id").isin(list(qids))).select(
         F.col("vec_id").alias("qid"), "v"
     )
-    got = ann_ivf_pq_search_index(spark, queries, idx, nprobe=IVF_K, topk=5)
+    got = search_index(spark, queries, idx, pq=True, nprobe=IVF_K, topk=5)
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [cid" in plan
     rows = got.collect()
@@ -1944,9 +1961,9 @@ def test_stream_append_ivf_and_duplicate_safety(spark, tmp_path):
 
     from railgun_spark.operators.similarity import (
         IVF_K,
-        ann_ivf_search_index,
-        append_to_ivf_index,
-        build_ivf_index,
+        search_index,
+        append_to_index,
+        build_index,
         compact_ivf_index,
         to_double,
     )
@@ -1955,7 +1972,7 @@ def test_stream_append_ivf_and_duplicate_safety(spark, tmp_path):
     raw = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     emb = raw.select("vec_id", "label", to_double(F.col("embedding")).alias("v"))
     idx = str(tmp_path / "ivf")
-    n0 = build_ivf_index(emb.filter("vec_id < 100"), idx, exclude_ids=(0,))
+    n0 = build_index(emb.filter("vec_id < 100"), idx, exclude_ids=(0,))
 
     # two arriving shards as PLAIN part files
     src = tmp_path / "arriving"
@@ -1978,18 +1995,18 @@ def test_stream_append_ivf_and_duplicate_safety(spark, tmp_path):
 
     # crash-window replay: the last shard appends AGAIN
     dup = emb.filter("vec_id >= 300")
-    append_to_ivf_index(dup, idx)
+    append_to_index(dup, idx)
     total_rows = spark.read.parquet(f"{idx}/vecs").count()
     assert total_rows == n0 + n + dup.count()
 
     queries = emb.filter("vec_id = 0").select(F.col("vec_id").alias("qid"), "v")
-    got = ann_ivf_search_index(spark, queries, idx, nprobe=IVF_K, topk=10).collect()
+    got = search_index(spark, queries, idx, nprobe=IVF_K, topk=10).collect()
     ids = [r["vec_id"] for r in got]
     assert len(ids) == 10 and len(set(ids)) == 10  # no double-fill
 
     # compaction folds the duplicates; results unchanged
     assert compact_ivf_index(spark, idx) == n0 + n
-    got2 = ann_ivf_search_index(spark, queries, idx, nprobe=IVF_K, topk=10).collect()
+    got2 = search_index(spark, queries, idx, nprobe=IVF_K, topk=10).collect()
     assert [(r["vec_id"], r["cos_sim"]) for r in got2] == \
            [(r["vec_id"], r["cos_sim"]) for r in got]
 
@@ -2007,8 +2024,10 @@ def test_stream_append_residual_pq_index(spark, tmp_path):
 
     from railgun_spark.operators.similarity import (
         IVF_K,
-        ann_ivf_pq_search_index,
-        build_ivf_pq_index,
+        PQ_M,
+        IVFSpec,
+        search_index,
+        build_index,
         to_double,
     )
     from railgun_spark.streaming.ingest import stream_append_ivf_availablenow
@@ -2016,9 +2035,9 @@ def test_stream_append_residual_pq_index(spark, tmp_path):
     raw = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     emb = raw.select("vec_id", "label", to_double(F.col("embedding")).alias("v"))
     idx = str(tmp_path / "ivfadc")
-    build_ivf_pq_index(
-        emb.filter("vec_id < 200"), idx, exclude_ids=(0,),
-        residual=True, store_raw=True,
+    build_index(
+        emb.filter("vec_id < 200"), idx, IVFSpec(m=PQ_M, residual=True, store_raw=True),
+        exclude_ids=(0,),
     )
     src = tmp_path / "arriving"
     src.mkdir()
@@ -2034,17 +2053,15 @@ def test_stream_append_residual_pq_index(spark, tmp_path):
     assert n == raw.filter("vec_id >= 200").count()
 
     idx_all = str(tmp_path / "ivfadc_all")
-    build_ivf_pq_index(
-        emb, idx_all, exclude_ids=(0,), residual=True, store_raw=True
-    )
+    build_index(emb, idx_all, IVFSpec(m=PQ_M, residual=True, store_raw=True), exclude_ids=(0,))
     queries = emb.filter("vec_id = 0").select(F.col("vec_id").alias("qid"), "v")
     key = lambda rows: [(r["vec_id"], r["cos_sim"]) for r in
                         sorted(rows, key=lambda r: r["rnk"])]
-    got_stream = ann_ivf_pq_search_index(
-        spark, queries, idx, nprobe=IVF_K, topk=10, rerank=25
+    got_stream = search_index(
+        spark, queries, idx, pq=True, nprobe=IVF_K, rerank=25, topk=10
     ).collect()
-    got_all = ann_ivf_pq_search_index(
-        spark, queries, idx_all, nprobe=IVF_K, topk=10, rerank=25
+    got_all = search_index(
+        spark, queries, idx_all, pq=True, nprobe=IVF_K, rerank=25, topk=10
     ).collect()
     assert key(got_stream) == key(got_all)
 
@@ -2060,10 +2077,10 @@ def test_ivf_append_layout_mismatch_refusal(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from railgun_spark.operators.similarity import (
-        append_to_ivf_index,
-        append_to_ivf_pq_index,
-        build_ivf_index,
-        build_ivf_pq_index,
+        PQ_M,
+        IVFSpec,
+        append_to_index,
+        build_index,
         to_double,
     )
 
@@ -2072,18 +2089,44 @@ def test_ivf_append_layout_mismatch_refusal(spark, tmp_path):
     )
     head, tail = emb.filter("vec_id < 200"), emb.filter("vec_id >= 200")
     raw_idx, pq_idx = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
-    build_ivf_index(head, raw_idx)
-    build_ivf_pq_index(head, pq_idx)
+    build_index(head, raw_idx)
+    build_index(head, pq_idx, IVFSpec(m=PQ_M))
 
     before_pq = sorted(glob.glob(f"{pq_idx}/vecs/**/*.parquet", recursive=True))
     with pytest.raises(ValueError, match="layout mismatch"):
-        append_to_ivf_index(tail, pq_idx)  # raw rows into a PQ index
+        append_to_index(tail, pq_idx)  # raw rows into a PQ index
     assert sorted(glob.glob(f"{pq_idx}/vecs/**/*.parquet", recursive=True)) == before_pq
 
     before_raw = sorted(glob.glob(f"{raw_idx}/vecs/**/*.parquet", recursive=True))
     with pytest.raises(ValueError, match="layout mismatch"):
-        append_to_ivf_pq_index(tail, raw_idx)  # codes rows into a raw index
+        append_to_index(tail, raw_idx, pq=True)  # codes rows into a raw index
     assert sorted(glob.glob(f"{raw_idx}/vecs/**/*.parquet", recursive=True)) == before_raw
+
+
+def test_ivf_spec_refuses_settings_that_do_nothing(spark, tmp_path):
+    """residual, store_raw and rerank mean nothing for a raw-vector IVF
+    spec (m = 0), nor do codebooks for its build or rerank for its
+    search: each is refused instead of silently dropped."""
+    import pytest
+
+    from railgun_spark.operators.similarity import (
+        PQ_M,
+        IVFSpec,
+        build_index,
+        search_index,
+    )
+
+    for kw in ({"residual": True}, {"store_raw": True}, {"rerank": 5}):
+        with pytest.raises(ValueError, match="m > 0"):
+            IVFSpec(**kw)
+    assert IVFSpec(m=PQ_M, residual=True, store_raw=True, rerank=5).pq
+    vecs = spark.createDataFrame([(0, 1, [1.0, 0.0])], "vec_id long, label int, v array<double>")
+    idx = str(tmp_path / "ivf")
+    with pytest.raises(ValueError, match="codebooks"):
+        build_index(vecs, idx, IVFSpec(), codebooks={0: [(1, [1.0])]})
+    queries = vecs.selectExpr("vec_id AS qid", "v")
+    with pytest.raises(ValueError, match="rerank"):
+        search_index(spark, queries, idx, rerank=5)
 
 
 def test_ivf_maintenance_lock_append_vs_compact(spark, tmp_path):
@@ -2099,9 +2142,9 @@ def test_ivf_maintenance_lock_append_vs_compact(spark, tmp_path):
         _release_compact_lock,
     )
     from railgun_spark.operators.similarity import (
-        _ivf_vecs_local,
-        append_to_ivf_index,
-        build_ivf_index,
+        _ivf_local,
+        append_to_index,
+        build_index,
         compact_ivf_index,
         to_double,
     )
@@ -2110,18 +2153,18 @@ def test_ivf_maintenance_lock_append_vs_compact(spark, tmp_path):
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
     )
     idx = str(tmp_path / "ivf")
-    build_ivf_index(emb.filter("vec_id < 200"), idx)
+    build_index(emb.filter("vec_id < 200"), idx)
 
-    lock, token = _acquire_compact_lock(_ivf_vecs_local(idx))
+    lock, token = _acquire_compact_lock(_ivf_local(idx, "vecs"))
     try:
         with pytest.raises(RuntimeError, match="compaction already in progress"):
-            append_to_ivf_index(emb.filter("vec_id >= 200"), idx)
+            append_to_index(emb.filter("vec_id >= 200"), idx)
         with pytest.raises(RuntimeError, match="compaction already in progress"):
             compact_ivf_index(spark, idx)
     finally:
         _release_compact_lock(lock, token)
     # lock released -> both proceed
-    assert append_to_ivf_index(emb.filter("vec_id >= 200"), idx) > 0
+    assert append_to_index(emb.filter("vec_id >= 200"), idx) > 0
     assert compact_ivf_index(spark, idx) == emb.count()
 
 
@@ -2135,9 +2178,9 @@ def test_ivf_compact_crash_recovery(spark, tmp_path):
 
     from railgun_spark.operators.similarity import (
         IVF_K,
-        _ivf_vecs_local,
-        ann_ivf_search_index,
-        build_ivf_index,
+        _ivf_local,
+        search_index,
+        build_index,
         to_double,
     )
 
@@ -2145,21 +2188,21 @@ def test_ivf_compact_crash_recovery(spark, tmp_path):
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
     )
     idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx, exclude_ids=(0,))
+    build_index(emb, idx, exclude_ids=(0,))
     queries = emb.filter("vec_id = 0").select(F.col("vec_id").alias("qid"), "v")
     want = [
         (r["vec_id"], r["cos_sim"])
-        for r in ann_ivf_search_index(spark, queries, idx, nprobe=IVF_K).collect()
+        for r in search_index(spark, queries, idx, nprobe=IVF_K).collect()
     ]
 
     # simulate the crash window: live vecs/ renamed to backup, tmp lost
-    vecs = _ivf_vecs_local(idx)
+    vecs = _ivf_local(idx, "vecs")
     os.rename(vecs, vecs + ".compact_backup")
     assert not os.path.exists(vecs)
 
     got = [
         (r["vec_id"], r["cos_sim"])
-        for r in ann_ivf_search_index(spark, queries, idx, nprobe=IVF_K).collect()
+        for r in search_index(spark, queries, idx, nprobe=IVF_K).collect()
     ]
     assert got == want
     assert os.path.exists(vecs) and not os.path.exists(vecs + ".compact_backup")
@@ -2178,8 +2221,10 @@ def test_ivf_pq_rerank_exact_refine(spark, tmp_path):
 
     from railgun_spark.operators.similarity import (
         IVF_K,
-        ann_ivf_pq_search_index,
-        build_ivf_pq_index,
+        PQ_M,
+        IVFSpec,
+        search_index,
+        build_index,
         to_double,
     )
 
@@ -2191,15 +2236,11 @@ def test_ivf_pq_rerank_exact_refine(spark, tmp_path):
         F.lit(9999).cast("long").alias("vec_id"), "label", "v"
     )
     idx = str(tmp_path / "ivfpq")
-    build_ivf_pq_index(
-        emb.unionByName(dup), idx, exclude_ids=(0,), store_raw=True
-    )
+    build_index(emb.unionByName(dup), idx, IVFSpec(m=PQ_M, store_raw=True), exclude_ids=(0,))
     assert os.path.isdir(f"{idx}/raw")
     queries = emb.filter("vec_id = 0").select(F.col("vec_id").alias("qid"), "v")
 
-    got = ann_ivf_pq_search_index(
-        spark, queries, idx, nprobe=IVF_K, topk=5, rerank=25
-    )
+    got = search_index(spark, queries, idx, pq=True, nprobe=IVF_K, rerank=25, topk=5)
     assert got.columns == ["qid", "vec_id", "label", "cid", "cos_sim", "rnk"]
     rows = sorted(got.collect(), key=lambda r: r["rnk"])
     assert rows[0]["vec_id"] == 9999 and rows[0]["cos_sim"] == 1.0
@@ -2208,9 +2249,9 @@ def test_ivf_pq_rerank_exact_refine(spark, tmp_path):
 
     # no raw/ -> loud refusal
     idx2 = str(tmp_path / "ivfpq_noraw")
-    build_ivf_pq_index(emb, idx2, exclude_ids=(0,))
+    build_index(emb, idx2, IVFSpec(m=PQ_M), exclude_ids=(0,))
     with pytest.raises(ValueError, match="store_raw"):
-        ann_ivf_pq_search_index(spark, queries, idx2, rerank=25).collect()
+        search_index(spark, queries, idx2, pq=True, rerank=25).collect()
 
 
 def test_ivf_pq_store_raw_append_and_compact(spark, tmp_path):
@@ -2222,9 +2263,11 @@ def test_ivf_pq_store_raw_append_and_compact(spark, tmp_path):
 
     from railgun_spark.operators.similarity import (
         IVF_K,
-        ann_ivf_pq_search_index,
-        append_to_ivf_pq_index,
-        build_ivf_pq_index,
+        PQ_M,
+        IVFSpec,
+        search_index,
+        append_to_index,
+        build_index,
         compact_ivf_index,
         to_double,
     )
@@ -2233,9 +2276,7 @@ def test_ivf_pq_store_raw_append_and_compact(spark, tmp_path):
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
     )
     idx = str(tmp_path / "ivfpq")
-    build_ivf_pq_index(
-        emb.filter("vec_id < 200"), idx, exclude_ids=(0,), store_raw=True
-    )
+    build_index(emb.filter("vec_id < 200"), idx, IVFSpec(m=PQ_M, store_raw=True), exclude_ids=(0,))
     # append the tail + an exact duplicate of held-out query 0; append it
     # TWICE (crash-replay) so both layouts carry duplicates
     tail = emb.filter("vec_id >= 200")
@@ -2243,15 +2284,15 @@ def test_ivf_pq_store_raw_append_and_compact(spark, tmp_path):
         F.lit(9999).cast("long").alias("vec_id"), "label", "v"
     )
     batch = tail.unionByName(dup)
-    append_to_ivf_pq_index(batch, idx)
-    append_to_ivf_pq_index(batch, idx)
+    append_to_index(batch, idx, pq=True)
+    append_to_index(batch, idx, pq=True)
     n_vecs = spark.read.parquet(f"{idx}/vecs").count()
     n_raw = spark.read.parquet(f"{idx}/raw").count()
     assert n_vecs == n_raw  # raw grew with the appends
 
     queries = emb.filter("vec_id = 0").select(F.col("vec_id").alias("qid"), "v")
-    got = ann_ivf_pq_search_index(
-        spark, queries, idx, nprobe=IVF_K, topk=10, rerank=25
+    got = search_index(
+        spark, queries, idx, pq=True, nprobe=IVF_K, rerank=25, topk=10
     ).collect()
     ids = [r["vec_id"] for r in sorted(got, key=lambda r: r["rnk"])]
     assert ids[0] == 9999 and len(set(ids)) == 10  # appended vec found, no double-fill
@@ -2260,8 +2301,8 @@ def test_ivf_pq_store_raw_append_and_compact(spark, tmp_path):
     expect = emb.count()  # 199 indexed + 399 appended + 1 dup-of-0 = all ids once
     assert compact_ivf_index(spark, idx) == expect
     assert spark.read.parquet(f"{idx}/raw").count() == expect  # raw folded too
-    got2 = ann_ivf_pq_search_index(
-        spark, queries, idx, nprobe=IVF_K, topk=10, rerank=25
+    got2 = search_index(
+        spark, queries, idx, pq=True, nprobe=IVF_K, rerank=25, topk=10
     ).collect()
     assert [(r["vec_id"], r["cos_sim"]) for r in sorted(got2, key=lambda r: r["rnk"])] == \
            [(r["vec_id"], r["cos_sim"]) for r in sorted(got, key=lambda r: r["rnk"])]
@@ -2273,15 +2314,14 @@ def test_ivf_wide_k_kernels_match_column_path(spark):
     exactly the Column algebra's output on the fixture data (same
     rounded-cosine argmax with lowest-cid ties, same (sim desc, cid
     asc) probe order, same exact residual subtraction) — the same
-    parity discipline as assign_clusters vs assign_clusters_batch."""
+    parity discipline as assign_clusters' two forms."""
     from pyspark.sql import functions as F
 
     from railgun_spark.operators.similarity import (
         _assign_cid,
-        _assign_cid_pandas,
         _centroid_rows,
         _centroid_vec_col,
-        _probe_cids_pandas,
+        _cos_kernel,
         _probed_queries,
         _residual_pandas,
         cosine,
@@ -2297,7 +2337,7 @@ def test_ivf_wide_k_kernels_match_column_path(spark):
     got = emb.select(
         "vec_id",
         _assign_cid(F.col("v"), cents).alias("col_cid"),
-        _assign_cid_pandas(cents)(F.col("v")).alias("np_cid"),
+        _cos_kernel(cents)(F.col("v")).alias("np_cid"),
     ).filter(F.col("col_cid") != F.col("np_cid"))
     assert got.count() == 0
 
@@ -2305,12 +2345,12 @@ def test_ivf_wide_k_kernels_match_column_path(spark):
     queries = emb.limit(8).select(F.col("vec_id").alias("qid"), "v")
     col_probes = [
         (r["qid"], r["cid"])
-        for r in _probed_queries(queries, cents, 4)
+        for r in _probed_queries(queries, cents, 4, {"v": "v"})
         .withColumn("ord", F.monotonically_increasing_id())
         .orderBy("ord").collect()
     ]
     np_rows = queries.select(
-        "qid", F.explode(_probe_cids_pandas(cents, 4)(F.col("v"))).alias("cid")
+        "qid", F.explode(_cos_kernel(cents, 4)(F.col("v"))).alias("cid")
     ).withColumn("ord", F.monotonically_increasing_id()).orderBy("ord").collect()
     assert col_probes == [(r["qid"], r["cid"]) for r in np_rows]
 
@@ -2343,8 +2383,10 @@ def test_rerank_refine_read_is_shortlist_shaped(spark, tmp_path, monkeypatch):
 
     import railgun_spark.operators.similarity as sim
     from railgun_spark.operators.similarity import (
-        ann_ivf_pq_search_index,
-        build_ivf_pq_index,
+        PQ_M,
+        IVFSpec,
+        search_index,
+        build_index,
         to_double,
     )
 
@@ -2355,13 +2397,13 @@ def test_rerank_refine_read_is_shortlist_shaped(spark, tmp_path, monkeypatch):
         F.col("vec_id").alias("qid"), "v"
     )
     idx = str(tmp_path / "pqraw")
-    build_ivf_pq_index(emb, idx, exclude_ids=(0, 9), store_raw=True)
+    build_index(emb, idx, IVFSpec(m=PQ_M, store_raw=True), exclude_ids=(0, 9))
 
     # the tiny fixture index picks the single-scan branch (probed bytes
     # nowhere near ids x group bytes): the In-pushdown threshold conf is
     # left alone (the branch's observable side effect)
     spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "10")
-    got = ann_ivf_pq_search_index(spark, queries, idx, rerank=25, topk=5)
+    got = search_index(spark, queries, idx, pq=True, rerank=25, topk=5)
     rows = got.collect()
     assert spark.conf.get(
         "spark.sql.parquet.pushdown.inFilterThreshold") == "10"
@@ -2371,7 +2413,7 @@ def test_rerank_refine_read_is_shortlist_shaped(spark, tmp_path, monkeypatch):
     # must produce the IDENTICAL rows
     monkeypatch.setattr(sim, "_raw_probed_bytes",
                         lambda *a, **kw: 10 ** 12)
-    pushed = ann_ivf_pq_search_index(spark, queries, idx, rerank=25, topk=5)
+    pushed = search_index(spark, queries, idx, pq=True, rerank=25, topk=5)
     assert sorted(map(tuple, pushed.collect())) == sorted(map(tuple, rows))
     assert int(spark.conf.get(
         "spark.sql.parquet.pushdown.inFilterThreshold")) > 100
@@ -2386,7 +2428,7 @@ def test_rerank_refine_read_is_shortlist_shaped(spark, tmp_path, monkeypatch):
 
     from railgun_spark.operators.similarity import _np_round6
 
-    adc = ann_ivf_pq_search_index(spark, queries, idx, topk=25).collect()
+    adc = search_index(spark, queries, idx, pq=True, topk=25).collect()
     vecs = {int(r["vec_id"]): np.array(r["v"])
             for r in emb.collect()}
     for qid in (0, 9):
@@ -2413,10 +2455,25 @@ def test_rerank_refine_read_is_shortlist_shaped(spark, tmp_path, monkeypatch):
     # several hundred distinct ids) splits into unioned <=128-id scans:
     # one wide pushed In becomes a ~N-deep or(eq...) chain that parquet
     # evaluates recursively and overflows the task stack near 1000 terms
-    big_df = ann_ivf_pq_search_index(spark, queries, idx, rerank=200, topk=3)
+    big_df = search_index(spark, queries, idx, pq=True, rerank=200, topk=3)
     assert "Union" in big_df._jdf.queryExecution().executedPlan().toString()
     big = big_df.collect()
     assert len(big) == 6 and {int(r["qid"]) for r in big} == {0, 9}
+
+
+def test_raw_probed_bytes_missing_list_is_zero_other_failures_raise(spark, tmp_path):
+    """The refine read's prune-or-scan size probe: a probed list with no
+    raw/cid= directory counts 0 bytes, but any other Hadoop failure (an
+    unsupported scheme here) raises instead of steering the search to
+    the full-scan branch."""
+    from railgun_spark.operators.similarity import _raw_probed_bytes
+
+    part = tmp_path / "idx" / "raw" / "cid=1"
+    part.mkdir(parents=True)
+    (part / "part-0.parquet").write_bytes(b"x" * 100)
+    assert _raw_probed_bytes(spark, str(tmp_path / "idx"), [1, 2]) == 100
+    with pytest.raises(Exception, match="nosuch"):
+        _raw_probed_bytes(spark, "nosuch://x", [1])
 
 
 def test_np_round6_half_up_and_int32_cid_validation():
@@ -2522,11 +2579,13 @@ def test_ivf_pq_residual_encoding(spark, tmp_path):
 
     from railgun_spark.operators.similarity import (
         IVF_K,
+        PQ_M,
+        IVFSpec,
         _ivf_pq_encoding,
         _lit_vec,
-        ann_ivf_pq_search_index,
-        append_to_ivf_pq_index,
-        build_ivf_pq_index,
+        search_index,
+        append_to_index,
+        build_index,
         cosine,
         to_double,
     )
@@ -2537,32 +2596,31 @@ def test_ivf_pq_residual_encoding(spark, tmp_path):
     queries = emb.filter("vec_id = 0").select(F.col("vec_id").alias("qid"), "v")
 
     idx_all = str(tmp_path / "res_all")
-    build_ivf_pq_index(emb, idx_all, exclude_ids=(0,), residual=True,
-                       store_raw=True)
+    build_index(emb, idx_all, IVFSpec(m=PQ_M, residual=True, store_raw=True), exclude_ids=(0,))
     assert _ivf_pq_encoding(spark, idx_all) == "residual"
 
     # append-consistency: A = the low ids (so first-K centroids and
     # codebooks match the all-at-once build), B appended after
     idx_ab = str(tmp_path / "res_ab")
-    build_ivf_pq_index(emb.filter("vec_id < 200"), idx_ab, exclude_ids=(0,),
-                       residual=True, store_raw=True)
-    append_to_ivf_pq_index(emb.filter("vec_id >= 200"), idx_ab)
-    got_all = ann_ivf_pq_search_index(
-        spark, queries, idx_all, nprobe=IVF_K, topk=10
+    build_index(
+        emb.filter("vec_id < 200"), idx_ab, IVFSpec(m=PQ_M, residual=True, store_raw=True),
+        exclude_ids=(0,),
+    )
+    append_to_index(emb.filter("vec_id >= 200"), idx_ab, pq=True)
+    got_all = search_index(
+        spark, queries, idx_all, pq=True, nprobe=IVF_K, topk=10
     ).collect()
-    got_ab = ann_ivf_pq_search_index(
-        spark, queries, idx_ab, nprobe=IVF_K, topk=10
-    ).collect()
+    got_ab = search_index(spark, queries, idx_ab, pq=True, nprobe=IVF_K, topk=10).collect()
     key = lambda rows: [(r["vec_id"], r["adc_dist"]) for r in
                         sorted(rows, key=lambda r: r["rnk"])]
     assert key(got_all) == key(got_ab)
 
     # the residual ADC frame really differs from the raw one
     idx_raw = str(tmp_path / "raw_form")
-    build_ivf_pq_index(emb, idx_raw, exclude_ids=(0,))
+    build_index(emb, idx_raw, IVFSpec(m=PQ_M), exclude_ids=(0,))
     assert _ivf_pq_encoding(spark, idx_raw) == "raw"
-    got_raw = ann_ivf_pq_search_index(
-        spark, queries, idx_raw, nprobe=IVF_K, topk=10
+    got_raw = search_index(
+        spark, queries, idx_raw, pq=True, nprobe=IVF_K, topk=10
     ).collect()
     assert {r["adc_dist"] for r in got_raw} != {r["adc_dist"] for r in got_all}
 
@@ -2573,8 +2631,8 @@ def test_ivf_pq_residual_encoding(spark, tmp_path):
         .select("vec_id", F.round(cosine(F.col("v"), _lit_vec(qv)), 6).alias("c"))
         .orderBy(F.desc("c"), "vec_id").limit(10).collect()
     )
-    got_rr = ann_ivf_pq_search_index(
-        spark, queries, idx_all, nprobe=IVF_K, topk=10, rerank=500
+    got_rr = search_index(
+        spark, queries, idx_all, pq=True, nprobe=IVF_K, rerank=500, topk=10
     ).collect()
     assert [r["vec_id"] for r in sorted(got_rr, key=lambda r: r["rnk"])] == \
            [r["vec_id"] for r in exact]
@@ -2643,8 +2701,10 @@ def test_ivf_pq_missing_meta_is_rejected_as_incomplete(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from railgun_spark.operators.similarity import (
+        PQ_M,
+        IVFSpec,
         _ivf_pq_encoding,
-        build_ivf_pq_index,
+        build_index,
         to_double,
     )
 
@@ -2652,8 +2712,88 @@ def test_ivf_pq_missing_meta_is_rejected_as_incomplete(spark, tmp_path):
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
     )
     idx = str(tmp_path / "pq_idx")
-    build_ivf_pq_index(emb.filter("vec_id < 200"), idx, residual=True)
+    build_index(emb.filter("vec_id < 200"), idx, IVFSpec(m=PQ_M, residual=True))
     assert _ivf_pq_encoding(spark, idx) == "residual"
     shutil.rmtree(f"{idx}/meta")  # simulate a crash before commit
     with _pytest.raises(ValueError, match="commit marker"):
         _ivf_pq_encoding(spark, idx)
+
+
+# Digest per index directory of the sorted rows (and schema) an IVF /
+# IVF-PQ build writes over the sf0.001 embeddings; raw/ also pins each
+# file's row order (vec_id-sorted) and row-group count.
+_GOLDEN_IVF = {
+    "ivf_k8": {"centroids": "1dcfec9949f33b4e", "vecs": "6170fa176a7fb797"},
+    "pq_4x4": {
+        "centroids": "1dcfec9949f33b4e", "codebooks": "a728ed3838b4e59b",
+        "meta": "f991b71fe53f11c0", "vecs": "5052fc41811be6eb",
+    },
+    "pq_residual": {
+        "centroids": "1dcfec9949f33b4e", "codebooks": "b6525ca68fcdb3c0",
+        "meta": "23a0799c2f3e508f", "vecs": "18948bcb4119eec7",
+    },
+    "pq_store_raw": {
+        "centroids": "1dcfec9949f33b4e", "codebooks": "a728ed3838b4e59b",
+        "meta": "f991b71fe53f11c0", "raw": "8f7bb6a9080f811b",
+        "vecs": "5052fc41811be6eb",
+    },
+    "pq_wide_8x64": {
+        "centroids": "1dcfec9949f33b4e", "codebooks": "602a309d978fa761",
+        "meta": "f991b71fe53f11c0", "vecs": "b136523e7a0a9bbe",
+    },
+    "ivf_k72": {"centroids": "9c9cb910183b439a", "vecs": "0b7e1cf1d1ad064a"},
+}
+
+
+def _golden_ivf_build(emb, idx, case):
+    from railgun_spark.operators.similarity import PQ_M, IVFSpec, build_index
+
+    spec = {
+        "ivf_k8": IVFSpec(),
+        "ivf_k72": IVFSpec(k=72),
+        "pq_4x4": IVFSpec(m=PQ_M),
+        "pq_residual": IVFSpec(m=PQ_M, residual=True),
+        "pq_store_raw": IVFSpec(m=PQ_M, store_raw=True),
+        "pq_wide_8x64": IVFSpec(m=8, ks=64),
+    }[case]
+    return build_index(emb, idx, spec, exclude_ids=(0,))
+
+
+def _dir_digest(spark, path):
+    import glob
+    import hashlib
+    import os
+
+    import pyarrow.parquet as pq
+
+    df = spark.read.parquet(path)
+    rows = sorted(
+        repr(tuple(tuple(v) if isinstance(v, list) else v for v in r))
+        for r in df.collect()
+    )
+    lines = [df.schema.simpleString(), *rows]
+    if os.path.basename(path) == "raw":
+        for f in sorted(glob.glob(f"{path}/cid=*/*.parquet")):
+            meta = pq.ParquetFile(f).metadata
+            ids = pq.read_table(f, columns=["vec_id"]).column(0).to_pylist()
+            assert ids == sorted(ids), f
+            cid = os.path.basename(os.path.dirname(f))
+            lines.append(f"{cid} {meta.num_rows} {meta.num_row_groups}")
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+
+
+@pytest.mark.parametrize("case", list(_GOLDEN_IVF))
+def test_ivf_index_rows_golden(spark, tmp_path, sf_dir, case):
+    """Every IVF / IVF-PQ index layout writes exactly the recorded rows:
+    raw IVF at K=8 and at K=72 (past the Column assignment cap), PQ 4x4,
+    residual PQ, PQ with the raw refine store, and PQ 8x64 (the Arrow
+    encode path)."""
+    import os
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "label", to_double(F.col("embedding")).alias("v")
+    )
+    idx = str(tmp_path / "idx")
+    assert _golden_ivf_build(emb, idx, case) == 499
+    got = {d: _dir_digest(spark, f"{idx}/{d}") for d in sorted(os.listdir(idx))}
+    assert got == _GOLDEN_IVF[case]

@@ -279,26 +279,29 @@ def test_frame_memo_invalidation_and_eviction(spark, tmp_path):
 
 
 def test_memo_concurrent_same_key_shares_first_value():
-    """Two computes of one key racing to insert: the second caller gets
-    the first caller's value and nothing is released — releasing either
-    frame would unpersist the cache entry their equal plans share."""
+    """Two callers of one key released together: the compute runs once,
+    both get the same object and nothing is released — releasing it
+    would unpersist the one cache entry a frame's plan holds."""
     import threading
 
     from railgun_spark.catalog.registry import Memo
 
     dropped: list = []
     memo = Memo(4, drop=dropped.append)
-    both_computing = threading.Barrier(2, timeout=30)
+    both_calling = threading.Barrier(2, timeout=30)
+    calls: list = []
     got: list = []
 
     def compute() -> list:
-        both_computing.wait()
+        calls.append(1)
+        threading.Event().wait(0.3)  # the second caller arrives meanwhile
         return [threading.get_ident()]
 
-    threads = [
-        threading.Thread(target=lambda: got.append(memo.get("k", 1.0, 300.0, compute)))
-        for _ in range(2)
-    ]
+    def caller() -> None:
+        both_calling.wait()
+        got.append(memo.get("k", 1.0, 300.0, compute))
+
+    threads = [threading.Thread(target=caller) for _ in range(2)]
     for t in threads:
         t.start()
     for t in threads:
@@ -306,6 +309,65 @@ def test_memo_concurrent_same_key_shares_first_value():
     assert not any(t.is_alive() for t in threads)
     assert len(got) == 2 and got[0] is got[1]
     assert dropped == [] and memo.get("k", 1.0, 300.0, list) is got[0]
+    assert len(calls) == 1
+
+
+def test_memo_compute_reentering_its_key_does_not_wait_on_itself():
+    """A compute that reaches its own key computes it inline instead of
+    waiting on its own flight; the value that landed first is shared
+    and the other is not released (equal frame plans share one Spark
+    cache entry)."""
+    from railgun_spark.catalog.registry import Memo
+
+    dropped: list = []
+    memo = Memo(4, drop=dropped.append)
+    inner: list = []
+
+    def outer() -> list:
+        inner.append(memo.get("k", 1.0, 300.0, lambda: ["inner"]))
+        return ["outer"]
+
+    got = memo.get("k", 1.0, 300.0, outer)
+    assert got == ["inner"] and got is inner[0]
+    assert memo.get("k", 1.0, 300.0, list) is got and dropped == []
+
+
+def test_memo_single_flight_failed_compute_lets_waiter_compute():
+    """A compute that raises wakes the caller waiting on it, which then
+    computes the value itself; nothing from the failed flight is stored."""
+    import threading
+
+    import pytest
+
+    from railgun_spark.catalog.registry import Memo
+
+    memo = Memo(4)
+    first_running = threading.Event()
+    waiter_done: list = []
+    log: list = []
+
+    def failing() -> list:
+        first_running.set()
+        threading.Event().wait(0.3)
+        log.append("failed")
+        raise RuntimeError("boom")
+
+    def second() -> list:
+        log.append("second")
+        return ["second"]
+
+    def waiter() -> None:
+        first_running.wait(30)
+        waiter_done.append(memo.get("k", 1.0, 300.0, second))
+
+    t = threading.Thread(target=waiter)
+    t.start()
+    with pytest.raises(RuntimeError, match="boom"):
+        memo.get("k", 1.0, 300.0, failing)
+    t.join(timeout=60)
+    assert log == ["failed", "second"]
+    assert waiter_done == [["second"]]
+    assert memo.get("k", 1.0, 300.0, list) is waiter_done[0]
 
 
 def test_memo_threaded_bound_and_single_release():

@@ -1,5 +1,5 @@
 """Persistent-IVF recall/latency sweep: build a cid-partitioned index
-(similarity.build_ivf_index) over the sf0.1 embeddings at two coarse-
+(similarity.build_index) over the sf0.1 embeddings at two coarse-
 quantizer sizes, then sweep nprobe and report recall@10 against the
 exact brute-force top-10 for a 20-query held-out batch, plus the wall
 per batch and the fraction of inverted lists scanned.
@@ -57,15 +57,14 @@ def clustered_main(out: "str | None") -> int:
     from pyspark.sql import functions as F
 
     from railgun_spark.operators.similarity import (
+        IVFSpec,
         _centroid_rows,
         _lit_vec,
-        ann_ivf_pq_search_index,
-        ann_ivf_search_index,
         assign_clusters,
-        build_ivf_index,
-        build_ivf_pq_index,
+        build_index,
         cosine,
         recompute_centroids,
+        search_index,
     )
     from railgun_spark.session import get_spark
 
@@ -119,11 +118,11 @@ def clustered_main(out: "str | None") -> int:
 
     points = []
     with tempfile.TemporaryDirectory(prefix="ivf_clustered_") as d:
-        build_ivf_index(emb, d, k=K, exclude_ids=tuple(query_ids),
-                        centroids=trained)
+        build_index(emb, d, IVFSpec(k=K), exclude_ids=tuple(query_ids),
+                    centroids=trained)
         for nprobe in (1, 2, 4, K):
             t0 = time.time()
-            got = ann_ivf_search_index(
+            got = search_index(
                 spark, queries, d, nprobe=nprobe, topk=TOPK
             ).collect()
             pt = {
@@ -194,15 +193,15 @@ def clustered_main(out: "str | None") -> int:
         sample = residualize(pts[:N]) if res else pts[:N]
         books = train_codebooks(sample, m_, ks_)
         with tempfile.TemporaryDirectory(prefix="ivfpq_clustered_") as d:
-            build_ivf_pq_index(emb, d, k=K, exclude_ids=tuple(query_ids),
-                               store_raw=True, centroids=trained,
-                               codebooks=books, residual=res)
+            build_index(emb, d, IVFSpec(k=K, m=m_, ks=ks_, residual=res, store_raw=True),
+                        exclude_ids=tuple(query_ids), centroids=trained,
+                        codebooks=books)
             for nprobe in (2, 4):
                 for mode, kw in (("adc", {}), ("rerank50", {"rerank": 50}),
                                  ("rerank400", {"rerank": 400})):
                     t0 = time.time()
-                    got = ann_ivf_pq_search_index(
-                        spark, queries, d, nprobe=nprobe, topk=TOPK, **kw
+                    got = search_index(
+                        spark, queries, d, pq=True, nprobe=nprobe, **kw, topk=TOPK
                     ).collect()
                     pt = {
                         "index": "ivf_pq", "geometry": geom, "k": K,
@@ -253,9 +252,10 @@ def widek_main(out: "str | None") -> int:
     from pyspark.sql import functions as F
 
     from railgun_spark.operators.similarity import (
+        IVFSpec,
         _np_round6,
-        ann_ivf_pq_search_index,
-        build_ivf_pq_index,
+        build_index,
+        search_index,
         train_ivf_centroids,
     )
     from railgun_spark.session import get_spark
@@ -386,17 +386,17 @@ def widek_main(out: "str | None") -> int:
 
         with tempfile.TemporaryDirectory(prefix="ivfpq_widek_") as d:
             t0 = time.time()
-            build_ivf_pq_index(emb, d, k=K, exclude_ids=tuple(query_ids),
-                               store_raw=True, centroids=trained,
-                               codebooks=books, residual=True)
+            build_index(emb, d, IVFSpec(k=K, m=M, ks=KS, residual=True, store_raw=True),
+                        exclude_ids=tuple(query_ids), centroids=trained,
+                        codebooks=books)
             build_s = time.time() - t0
             print(f"build[K={K} {trained_on}] {build_s:.1f}s", flush=True)
             for nprobe in NPROBES:
                 ceil = round(ceiling(nprobe), 4)
                 for mode, kw in (("adc", {}), ("rerank50", {"rerank": 50})):
                     t0 = time.time()
-                    got = ann_ivf_pq_search_index(
-                        spark, queries, d, nprobe=nprobe, topk=TOPK, **kw
+                    got = search_index(
+                        spark, queries, d, pq=True, nprobe=nprobe, **kw, topk=TOPK
                     ).collect()
                     pt = {
                         "sigma": SIGMA,
@@ -467,10 +467,11 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from railgun_spark.operators.similarity import (
+        IVFSpec,
         _lit_vec,
-        ann_ivf_search_index,
-        build_ivf_index,
+        build_index,
         cosine,
+        search_index,
         to_double,
     )
     from railgun_spark.session import get_spark
@@ -533,12 +534,12 @@ def main() -> int:
         for quantizer in ("first-k", "trained"):
             cents = trained_centroids(k) if quantizer == "trained" else None
             with tempfile.TemporaryDirectory(prefix=f"ivf_probe_k{k}_") as d:
-                build_ivf_index(
-                    emb, d, k=k, exclude_ids=QUERY_IDS, centroids=cents
+                build_index(
+                    emb, d, IVFSpec(k=k), exclude_ids=QUERY_IDS, centroids=cents
                 )
                 for nprobe in (1, 2, 4, k):
                     t0 = time.time()
-                    got = ann_ivf_search_index(
+                    got = search_index(
                         spark, queries, d, nprobe=nprobe, topk=TOPK
                     ).collect()
                     wall = time.time() - t0

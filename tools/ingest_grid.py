@@ -579,13 +579,11 @@ def ann_main() -> int:
     import statistics
 
     from railgun_spark.operators.similarity import (
-        ann_ivf_pq_search_index,
-        ann_ivf_search_index,
-        append_to_ivf_index,
-        append_to_ivf_pq_index,
-        build_ivf_index,
-        build_ivf_pq_index,
+        IVFSpec,
+        append_to_index,
+        build_index,
         compact_ivf_index,
+        search_index,
     )
     from railgun_spark.session import get_spark
 
@@ -614,15 +612,13 @@ def ann_main() -> int:
     try:
         for kind in ("ivf", "ivf_pq_rerank"):
             pq = kind == "ivf_pq_rerank"
+            spec = (IVFSpec(k=k, m=8, ks=256, store_raw=True, rerank=50)
+                    if pq else IVFSpec(k=k))
             for idx_n in sizes:
                 base = os.path.join(work, f"{kind}_{idx_n}")
                 vecs = _synth_vecs(spark, idx_n)
                 t0 = time.time()
-                if pq:
-                    build_ivf_pq_index(vecs, base, k=k, ks=256, m=8,
-                                       store_raw=True)
-                else:
-                    build_ivf_index(vecs, base, k=k)
+                build_index(vecs, base, spec)
                 build_s = time.time() - t0
                 for batch_n in batches:
                     idx = os.path.join(work, f"{kind}_{idx_n}_{batch_n}")
@@ -632,22 +628,15 @@ def ann_main() -> int:
                     ).localCheckpoint()
                     rows = batch.count()
                     t0 = time.time()
-                    if pq:
-                        append_to_ivf_pq_index(batch, idx)
-                    else:
-                        append_to_ivf_index(batch, idx)
+                    append_to_index(batch, idx, pq=pq)
                     append_s = time.time() - t0
                     walls = []
                     for _ in range(5):
                         t0 = time.time()
-                        if pq:
-                            ann_ivf_pq_search_index(
-                                spark, queries, idx, nprobe=2, rerank=50
-                            ).collect()
-                        else:
-                            ann_ivf_search_index(
-                                spark, queries, idx, nprobe=2
-                            ).collect()
+                        search_index(
+                            spark, queries, idx, pq=pq, nprobe=spec.nprobe,
+                            rerank=spec.rerank,
+                        ).collect()
                         walls.append(time.time() - t0)
                     t0 = time.time()
                     compact_ivf_index(spark, idx)
