@@ -153,7 +153,7 @@ def cmd_ingest(args) -> int:
     fingerprint index (batch, or availableNow streaming with --stream).
     With --bucketed-table, the gate anti-joins a bucketed index table
     instead of the parquet path (shuffle-free on the index side)."""
-    from railgun_spark.session import get_spark
+    from railgun_spark.session import get_spark, pin
     from railgun_spark.streaming.ingest import (
         ingest_batch,
         stream_ingest_dedup_availablenow,
@@ -223,7 +223,8 @@ def cmd_ingest(args) -> int:
             args.bucketed_table,
             text_col=args.text_col,
             id_col=args.id_col,
-        ).localCheckpoint()
+        )
+        survivors = pin(survivors, "cli.bucketed_survivors")
         survivors.drop("__h").write.mode("append").parquet(args.sink)
         append_to_bucketed_index(survivors, args.bucketed_table)
         print(json.dumps({"admitted": survivors.count()}))

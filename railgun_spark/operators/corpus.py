@@ -32,6 +32,7 @@ from railgun_spark.operators.dedup import (
     minhash_pairs_ctes,
 )
 from railgun_spark.operators.text import token_count
+from railgun_spark.session import pin
 from railgun_spark.suite import extra_query, query
 
 MIN_TOKENS = 25
@@ -114,7 +115,7 @@ def corpus_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from railgun_spark.session import overlap
 
     def _exact():
-        return exact_losers.localCheckpoint()
+        return pin(exact_losers, "corpus.exact_losers")
 
     def _near():
         pairs = minhash_dup_pairs(spark, sf_dir, 0.5)
@@ -126,9 +127,8 @@ def corpus_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _contam():
-        return decontaminate_ngram_overlap(spark, sf_dir).select(
-            "doc_id"
-        ).localCheckpoint()
+        ids = decontaminate_ngram_overlap(spark, sf_dir).select("doc_id")
+        return pin(ids, "corpus.contaminated")
 
     exact_losers, near_losers, contam = overlap(spark, _exact, _near, _contam)
 
@@ -293,12 +293,12 @@ def prepare_training_shards(
     # design (split membership must not move when text is rewritten), so
     # it stays valid under span removal and redaction; __toks is
     # recomputed below for exactly the rows those passes rewrite.
-    clean = (
+    clean = pin(
         docs.join(clean_ids, "doc_id")
         .withColumn("__split", split_assignment(F.col("text")))
         .withColumn("__toks", bpe_token_estimate(F.col("text")))
-        .observe(obs_clean, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+        .observe(obs_clean, F.count(F.lit(1)).alias("n")),
+        "corpus.clean",
     )
     train = clean.filter(F.col("__split") == "train").drop("__split")
     n_span_rewritten = 0
@@ -323,7 +323,7 @@ def prepare_training_shards(
         # otherwise re-runs for the rewrite count, both union branches of
         # the packing units, and every summary count — same discipline as
         # the `clean` checkpoint above
-        joined = train.join(spans, "doc_id", "left").localCheckpoint()
+        joined = pin(train.join(spans, "doc_id", "left"), "corpus.span_joined")
         n_span_rewritten = joined.filter(rewritten).count()
         train = (
             joined.withColumn(
@@ -370,15 +370,13 @@ def prepare_training_shards(
         F.col("chunk_text").alias("text"),
     )
     obs_units = Observation()
-    units = (
-        small.unionByName(chunked)
-        .observe(obs_units, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+    units = pin(
+        small.unionByName(chunked).observe(obs_units, F.count(F.lit(1)).alias("n")),
+        "corpus.units",
     )
 
-    packed = pack_sequences(
-        units, max_tokens, n_buckets=n_buckets, id_col="uid"
-    ).localCheckpoint()
+    packed = pack_sequences(units, max_tokens, n_buckets=n_buckets, id_col="uid")
+    packed = pin(packed, "corpus.packed")
     packed_units = packed.select(
         F.col("doc_id").alias("uid"), "n_tokens", "bin_id"
     )

@@ -31,9 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-from railgun_spark.session import pin_if_big as _pin_if_big  # noqa: E402
-
+from railgun_spark.session import pin
 from railgun_spark.suite import extra_query, query
 
 NUM_HASHES = 16
@@ -270,8 +268,8 @@ def _check_tau(tau_num: int, tau_den: int) -> None:
 
 
 def _sets_frame(df: DataFrame, id_col: str, set_col: str, bc: list[str]) -> DataFrame:
-    """(block..., __id, __set, __n) with empty sets dropped, lazily
-    checkpointed — every caller reuses it for tokens AND verify sides.
+    """(block..., __id, __set, __n) with empty sets dropped, pinned —
+    every caller reuses it for tokens AND verify sides.
 
     The `__n > 0` filter sits ABOVE the checkpoint barrier on purpose:
     below it, Catalyst pushes the filter under the projection by
@@ -279,12 +277,15 @@ def _sets_frame(df: DataFrame, id_col: str, set_col: str, bc: list[str]) -> Data
     that re-evaluates the whole interpreted zip_with chain a second
     time per row during the one materialization job. Above the barrier
     it compares the already-materialized 4-byte `__n`."""
-    s = df.select(
-        *bc,
-        F.col(id_col).alias("__id"),
-        F.col(set_col).alias("__set"),
-        F.size(set_col).alias("__n"),
-    ).localCheckpoint(eager=False)
+    s = pin(
+        df.select(
+            *bc,
+            F.col(id_col).alias("__id"),
+            F.col(set_col).alias("__set"),
+            F.size(set_col).alias("__n"),
+        ),
+        "dedup.sets_frame",
+    )
     return s.filter(F.col("__n") > 0)
 
 
@@ -395,9 +396,9 @@ def jaccard_similarity_join(
     # pin the prefixes ONCE when they are big: the candidate self-join
     # otherwise plans the whole prefix pipeline (token explode + df
     # aggregate + window) on BOTH sides — two extra shuffles and a
-    # doubled corpus tokenization. Size-gated because at bench scale the
-    # eager pin job costs more than the saved recompute (_pin_if_big).
-    pref = _pin_if_big(_rarest_first_prefixes(tok, df_tab, bc, tau_num, tau_den))
+    # doubled corpus tokenization.
+    pref = _rarest_first_prefixes(tok, df_tab, bc, tau_num, tau_den)
+    pref = pin(pref, "dedup.jaccard_prefixes", gated=True)
     pa, pb = pref.alias("a"), pref.alias("b")
     cond = (
         (F.col("a.__t") == F.col("b.__t"))
@@ -444,13 +445,13 @@ def jaccard_similarity_join_ab(
     # sides' prefix computations join it, and without the checkpoint the
     # cross-table union + aggregate (a full tokenization of BOTH
     # corpora) is planned twice — once under each prefix subtree.
-    # Size-gated like the self-join prefix pin (_pin_if_big): at bench
-    # scale the blocking pin job costs more than the saved recompute.
-    df_tab = _pin_if_big(
+    df_tab = pin(
         ltok.select(*bc, "__t")
         .unionByName(rtok.select(*bc, "__t"))
         .groupBy(*bc, "__t")
-        .agg(F.count(F.lit(1)).alias("__df"))
+        .agg(F.count(F.lit(1)).alias("__df")),
+        "dedup.ab_doc_freq",
+        gated=True,
     )
     pa = _rarest_first_prefixes(ltok, df_tab, bc, tau_num, tau_den).alias("a")
     pb = _rarest_first_prefixes(rtok, df_tab, bc, tau_num, tau_den).alias("b")
@@ -748,7 +749,7 @@ def span_removal_frame(
     base = docs.select(
         F.col(id_col).alias("doc_id"), words(F.col(text_col)).alias("ws")
     )
-    base = base.localCheckpoint(eager=False)  # reused: window explode + final rewrite
+    base = pin(base, "dedup.span_words")  # reused: window explode + final rewrite
     win = base.filter(F.size("ws") >= k).select(
         "doc_id", F.posexplode(_window_hash_array(F.col("ws"), k)).alias("i0", "h")
     )
@@ -1037,7 +1038,8 @@ def containment_similarity_join(
     # pinned once — the candidate join otherwise re-plans the token
     # explode + df aggregate + prefix window under its probe side too
     # (same discipline as jaccard_similarity_join)
-    pref = _pin_if_big(_rarest_first_prefixes(tok, df_tab, [], tau_num, tau_den))
+    pref = _rarest_first_prefixes(tok, df_tab, [], tau_num, tau_den)
+    pref = pin(pref, "dedup.containment_prefixes", gated=True)
     pa, tb = pref.alias("a"), tok.alias("b")
     # a is the smaller (or equal, tie-broken by id) side by construction
     smaller = (F.col("a.__n") < F.col("b.__n")) | (
@@ -1267,13 +1269,14 @@ def minhash_dup_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.5) 
     sides); localCheckpoint materializes it once instead of re-scanning and
     re-shingling the corpus 3x — the same persist-signatures trade every
     production MinHash pipeline makes (23% faster at sf0.1 here)."""
-    s = _docs_with_shingles(spark, sf_dir).select("doc_id", "sh").localCheckpoint()
+    s = _docs_with_shingles(spark, sf_dir).select("doc_id", "sh")
+    s = pin(s, "dedup.minhash_shingles")
     # materialize the band keys ONCE: the self-join otherwise plans the
     # whole signature pipeline (shingle explode + 16-permutation min
     # aggregate) on BOTH sides — the corpus was being minhashed twice.
     # The frame is NUM_BANDS rows/doc of (id, 8-byte key): far cheaper
     # to pin than to recompute at any scale.
-    bands = minhash_bands(s, "doc_id").localCheckpoint()
+    bands = pin(minhash_bands(s, "doc_id"), "dedup.minhash_bands")
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, (F.col("a.band_key") == F.col("b.band_key")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -1400,7 +1403,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned once: the banded self-join otherwise plans the shingle +
     # sign-aggregate fingerprint pipeline on both sides (one 8-byte
     # fingerprint row per doc — cheaper to pin than recompute anywhere)
-    fp = simhash_fingerprints(_docs_with_shingles(spark, sf_dir)).localCheckpoint()
+    fp = pin(simhash_fingerprints(_docs_with_shingles(spark, sf_dir)), "dedup.simhash")
     chunk_vals = F.array(
         *[
             F.shiftright(F.col("simhash"), off).bitwiseAND(F.lit((1 << w) - 1))
@@ -1629,18 +1632,18 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     sym = edges.select(F.col("a"), F.col("b")).union(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    sym = sym.distinct().localCheckpoint()
+    sym = pin(sym.distinct(), "dedup.cc_edges")
     # the convergence probe (sum of labels) rides each checkpoint's
     # materialization as an observe() metric instead of a separate
     # agg job — one driver action per step, not two (the probe itself
     # is unchanged: the label sum decreases monotonically)
     obs0 = Observation()
-    labels = (
+    labels = pin(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .observe(obs0, F.sum("label").alias("s"))
-        .localCheckpoint()
+        .observe(obs0, F.sum("label").alias("s")),
+        "dedup.cc_init",
     )
     prev_sum = obs0.get["s"]
     for _ in range(max_iter):
@@ -1671,11 +1674,11 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
             F.col("node").alias("jnode"), F.col("label").alias("jlabel")
         )
         obs = Observation()
-        labels = (
+        labels = pin(
             prop.join(jmp, F.col("label") == F.col("jnode"))
             .select("node", F.col("jlabel").alias("label"))
-            .observe(obs, F.sum("label").alias("s"))
-            .localCheckpoint()
+            .observe(obs, F.sum("label").alias("s")),
+            "dedup.cc_round",
         )
         cur_sum = obs.get["s"]
         if cur_sum == prev_sum:
@@ -2242,7 +2245,7 @@ def near_dup_against_index(
     # + the index semi-join): materialize once instead of re-hashing the
     # batch's shingles per branch
     sets = shingle_sets(df.select(F.col(id_col).alias("__id"), text_col), "__id", text_col=text_col)
-    bands = minhash_bands(sets, "__id").localCheckpoint()
+    bands = pin(minhash_bands(sets, "__id"), "dedup.gate_bands")
     a, b = bands.alias("a"), bands.alias("b")
     intra_hits = (
         a.join(b, (F.col("a.band_key") == F.col("b.band_key")) & (F.col("b.__id") < F.col("a.__id")))

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from railgun_spark.operators.dedup import words
-from railgun_spark.session import pin_if_big
+from railgun_spark.session import pin
 from railgun_spark.suite import extra_query, query
 
 PR_ITER = 3
@@ -117,15 +117,15 @@ def pagerank_word_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode("words").alias("word"))
     )
     a, b = dw.alias("a"), dw.alias("b")
-    edges = (
+    edges = pin(  # reused every superstep; don't re-derive
         a.join(
             b,
             (F.col("a.doc_id") == F.col("b.doc_id"))
             & (F.col("a.word") != F.col("b.word")),
         )
         .select(F.col("a.word").alias("src"), F.col("b.word").alias("dst"))
-        .distinct()
-        .localCheckpoint()  # reused every superstep; don't re-derive
+        .distinct(),
+        "graph.edges",
     )
     # superstep invariants (node set, outdeg-annotated edges) are re-read
     # by every iteration; pin them only when they are BIG — the r17
@@ -134,12 +134,14 @@ def pagerank_word_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1: r18 A/B 1.92 s unpinned vs 2.01 s pinned), while at 100 TB
     # re-planning the distinct + outdeg groupBy + join per superstep is
     # two edge-set-sized exchanges of pure recompute per iteration.
-    nodes = pin_if_big(edges.select(F.col("src").alias("word")).distinct())
+    nodes = edges.select(F.col("src").alias("word")).distinct()
+    nodes = pin(nodes, "graph.nodes", gated=True)
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     n_nodes = nodes.count()  # the one driver scalar
 
     # pre-join outdeg onto edges once: each superstep is then join+groupBy
-    esrc = pin_if_big(edges.join(outdeg, "src").select("src", "dst", "outdeg"))
+    esrc = edges.join(outdeg, "src").select("src", "dst", "outdeg")
+    esrc = pin(esrc, "graph.edges_outdeg", gated=True)
     ranks = nodes.select(
         "word", F.round(F.lit(1.0 / n_nodes), PR_ROUND).alias("rank")
     )
@@ -150,17 +152,16 @@ def pagerank_word_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = (
-            nodes.join(contrib, nodes.word == contrib.dst, "left")
-            .select(
+        ranks = pin(
+            nodes.join(contrib, nodes.word == contrib.dst, "left").select(
                 "word",
                 F.round(
                     F.lit((1 - PR_DAMP) / n_nodes)
                     + F.lit(PR_DAMP) * F.coalesce("inflow", F.lit(0.0)),
                     PR_ROUND,
                 ).alias("rank"),
-            )
-            .localCheckpoint()
+            ),
+            "graph.ranks",
         )
     return (
         ranks.join(outdeg, ranks.word == outdeg.src)

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from railgun_spark.session import spread_scan
+from railgun_spark.session import pin, spread_scan
 from railgun_spark.suite import extra_query, query
 
 PHASH_BITS = 64
@@ -1335,7 +1335,7 @@ def video_offset_coarse_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair legs (and their internal n_frames/self-join reuse) otherwise
     # re-plan the Y4M synth + decode pipeline — the before-plan carried
     # 32 copies of the scan subtree
-    fh = _coarse_canary_frame_hashes(spark, sf_dir).localCheckpoint()
+    fh = pin(_coarse_canary_frame_hashes(spark, sf_dir), "phash.coarse_canary_hashes")
     exact = media_pairs(fh, VIDEO, offset_tolerant=True).select(
         "id_a", "id_b"
     ).distinct()
@@ -2015,7 +2015,7 @@ def _pinned_hashes(
     # three plan branches consume the batch's bands (both intra-batch
     # sides + the index join): materialize the hash rows once instead of
     # re-decoding per branch
-    return _hash_rows(fam.extract(df, every_n, id_col), fam).localCheckpoint()
+    return pin(_hash_rows(fam.extract(df, every_n, id_col), fam), "phash.batch_hashes")
 
 
 def media_pairs(
@@ -2051,7 +2051,7 @@ def media_pairs(
     # pin the hash rows ONCE: both self-join sides otherwise plan the
     # whole decode+hash pipeline again — one row per medium or frame is
     # strictly cheaper to pin than a second decode pass at any scale
-    rows = _hash_rows(hashes, family).localCheckpoint()
+    rows = pin(_hash_rows(hashes, family), "phash.pair_rows")
     key = "chunk_key" if offset_tolerant else "band_key"
     return _self_pairs(
         _bands(rows, family, width), key, family, budget, offset_tolerant,
@@ -2115,7 +2115,8 @@ def media_gate_with_bands(
     survivors = _gate(
         df, hashes, family, _read_seen(df.sparkSession, index_path, family),
         id_col, min_match_frac, offset_tolerant, coarse, table=False,
-    ).localCheckpoint()
+    )
+    survivors = pin(survivors, "phash.gate_survivors")
     # a semi-join against the already-materialized batch hashes, so the
     # ingest loop never decodes twice
     kept = hashes.join(survivors.select(F.col(id_col).alias("__id")), "__id", "semi")

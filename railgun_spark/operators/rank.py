@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from railgun_spark.session import pin
+
 
 def with_global_rank(
     df: DataFrame, cols: list[str], rank_col: str = "__rank", partitions: int | None = None
@@ -36,11 +38,11 @@ def with_global_rank(
 
     spark = df.sparkSession
     parts = partitions or spark.sparkContext.defaultParallelism
-    rp = (
+    rp = pin(
         df.repartitionByRange(parts, *[F.col(c) for c in cols])
         .sortWithinPartitions(*cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
+        .withColumn("__pid", F.spark_partition_id()),
+        "rank.range_partitions",
     )
     pid_counts = {r["__pid"]: r["count"] for r in rp.groupBy("__pid").count().collect()}
     offsets = {}

@@ -527,8 +527,8 @@ AGG_SALT = 16
     f"groups on (key, salt mod {AGG_SALT}) — {AGG_SALT}x the reducers, "
     "balanced; stage 2 merges the partials. count(distinct) stays exact by "
     "salting on the distinct column itself (user_id), so each (key, salt) "
-    "bucket owns disjoint users. Measured caveat (tools/skew_probe.py "
-    "--agg): Spark 4's own distinct-agg rewrite shuffles on (key, user_id) "
+    "bucket owns disjoint users. Measured caveat (SURVEY.md, \"Skew "
+    "probe\"): Spark 4's own distinct-agg rewrite shuffles on (key, user_id) "
     "first, so the direct form wins (~1.3x) here; keep this explicit "
     "pattern for non-decomposable aggregates and engines without the "
     "rewrite.",
@@ -581,7 +581,7 @@ TOPK_SALT = 16
     f"salt mod {TOPK_SALT}) — balanced reducers; stage 2 re-ranks the "
     f"<= k x {TOPK_SALT} survivors per group. Identical output to the "
     "direct window (the oracle is the direct form). Measured caveat "
-    "(tools/skew_probe.py): Spark 4 already plans filter(rank<=k) as "
+    "(SURVEY.md, \"Skew probe\"): Spark 4 already plans filter(rank<=k) as "
     "Partial+Final WindowGroupLimit — a native map-side top-k — so on "
     "this engine the direct form wins (~1.5x); keep this explicit "
     "pattern for engines without that rewrite and for non-rank window "

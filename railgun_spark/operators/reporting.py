@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from railgun_spark.operators.text import hash60, token_count
+from railgun_spark.session import pin
 from railgun_spark.suite import extra_query, query
 
 # power-of-two token-count bucket edges; a doc falls in the last bucket
@@ -187,11 +188,12 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # pinned once: the marginals and BOTH self-join sides otherwise
     # re-plan the shingle explode + distinct (4 scans in the before-plan)
-    hs = (
+    hs = pin(
         shingle_sets(_docs_scan(spark, sf_dir), "source")
         .select("source", F.explode("sh").alias("shingle"))
-        .distinct()
-    ).localCheckpoint()
+        .distinct(),
+        "reporting.source_shingles",
+    )
     marg = hs.groupBy("source").agg(F.count(F.lit(1)).alias("n_shingles"))
     a, b = hs.alias("a"), hs.alias("b")
     pairs = (

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from railgun_spark.session import local_df
+from railgun_spark.session import local_df, overlap, pin, spread_scan
 from railgun_spark.suite import extra_query, query
 
 
@@ -333,29 +333,16 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # still measures exactly the banding misses.
     import math
 
-    from railgun_spark.session import spread_scan
-
-    # spread the single-file scan: the sig (bands·bits hyperplane dots
-    # per row) and norm pin jobs below are the CPU-heavy passes (§2.5)
-    emb = spread_scan(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", to_double(F.col("embedding")).alias("v")
+    emb, emb_n = _unit_embeddings(spark, sf_dir)
+    # pinned: sig feeds both band-filter join sides (16 ints/vector);
+    # its bands·bits hyperplane dots per row are a CPU-heavy pass too
+    sig = pin(
+        emb.select(
+            "vec_id",
+            lsh_bands_col(F.col("v"), NEAR_DUP_BANDS, NEAR_DUP_BAND_BITS).alias("sig"),
         ),
-        heavy=True,
+        "similarity.near_dup_sig",
     )
-    # pinned: sig feeds both band-filter join sides (16 ints/vector)
-    sig = emb.select(
-        "vec_id",
-        lsh_bands_col(F.col("v"), NEAR_DUP_BANDS, NEAR_DUP_BAND_BITS).alias("sig"),
-    ).localCheckpoint()
-    # pin the normalized vectors ONCE: the count, both block-matmul
-    # replication sides and both verify-join sides otherwise each
-    # re-plan the scan + norm pass (12 scans in the r17 before-plan)
-    emb_n = emb.select(
-        "vec_id", F.sqrt(dot(F.col("v"), F.col("v"))).alias("nrm"), "v"
-    ).select(
-        "vec_id", F.transform("v", lambda x: x / F.col("nrm")).alias("vn")
-    ).localCheckpoint()
     n = emb_n.count()
     n_blocks = max(1, math.ceil(n / EXACT_BLOCK_ROWS))
     cand = exact_cosine_candidate_pairs(emb_n, NEAR_DUP_COS, n_blocks)
@@ -481,22 +468,7 @@ def exact_cosine_candidate_pairs(
 def embedding_neardup_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    from railgun_spark.session import spread_scan
-
-    # spread the single-file scan before the norm pin job (§2.5)
-    emb = spread_scan(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", to_double(F.col("embedding")).alias("v")
-        ),
-        heavy=True,
-    )
-    # pinned once — see embedding_near_dup_pairs (count + block matmul
-    # + both verify sides otherwise re-plan the scan + norm pass)
-    emb_n = emb.select(
-        "vec_id", F.sqrt(dot(F.col("v"), F.col("v"))).alias("nrm"), "v"
-    ).select(
-        "vec_id", F.transform("v", lambda x: x / F.col("nrm")).alias("vn")
-    ).localCheckpoint()
+    emb_n = _unit_embeddings(spark, sf_dir)[1]
     n = emb_n.count()
     n_blocks = max(1, math.ceil(n / EXACT_BLOCK_ROWS))
     cand = exact_cosine_candidate_pairs(emb_n, NEAR_DUP_COS, n_blocks)
@@ -672,6 +644,25 @@ def _embeddings(spark: SparkSession, sf_dir: str, col: str = "v",
         "vec_id", *(["label"] if label else []),
         to_double(F.col("embedding")).alias(col),
     )
+
+
+def _unit_rows(df: DataFrame, vec: str, out: str, *keys: str) -> DataFrame:
+    """(keys..., out) with `out` = `vec` / ||vec||: the norm is computed
+    once per row as its own column, never inside the per-element lambda."""
+    nrm = F.sqrt(dot(F.col(vec), F.col(vec))).alias("nrm")
+    return df.select(*keys, nrm, vec).select(
+        *keys, F.transform(vec, lambda x: x / F.col("nrm")).alias(out)
+    )
+
+
+def _unit_embeddings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(emb, emb_n): the embeddings scan (vec_id, v) spread across the
+    cores (§2.5: the norm and signature passes are CPU-heavy) and its
+    unit vectors (vec_id, vn), pinned once — the count, both block-matmul
+    replication sides and both verify-join sides otherwise each re-plan
+    the scan + norm pass (12 scans in the r17 before-plan)."""
+    emb = spread_scan(_embeddings(spark, sf_dir, label=False), heavy=True)
+    return emb, pin(_unit_rows(emb, "v", "vn", "vec_id"), "similarity.unit_embeddings")
 
 
 def _lit_vec(values) -> Column:
@@ -1153,8 +1144,6 @@ def _semdedup_oracle() -> str:
     tags=("similarity", "dedup"),
 )
 def semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from railgun_spark.session import spread_scan
-
     emb = _embeddings(spark, sf_dir, "e", label=False)
     init_rows = emb.filter(F.col("vec_id") < SEMDEDUP_K).orderBy("vec_id").collect()
     c0 = {int(r["vec_id"]): list(r["e"]) for r in init_rows}
@@ -1175,18 +1164,10 @@ def _pairs_within_clusters(a: DataFrame) -> DataFrame:
     product, computed once via the named column (sim in both filter and
     project was evaluated twice) — 19.5 s -> ~3 s at sf0.1, oracle
     mirrored to the identical expression shape."""
-    an = a.select(
-        "cluster",
-        "vec_id",
-        F.sqrt(dot(F.col("e"), F.col("e"))).alias("nrm"),
-        "e",
-    ).select(
-        "cluster",
-        "vec_id",
-        F.transform("e", lambda x: x / F.col("nrm")).alias("en"),
-    ).localCheckpoint()  # pin: both join sides read this frame — without it
-    # the cluster assignment (K distance evaluations per row) executes
-    # twice, and that, not the pair dots, dominates the plan
+    # pin: both join sides read this frame — without it the cluster
+    # assignment (K distance evaluations per row) executes twice, and
+    # that, not the pair dots, dominates the plan
+    an = pin(_unit_rows(a, "e", "en", "cluster", "vec_id"), "similarity.cluster_units")
     x = an.select("cluster", F.col("vec_id").alias("vec_a"), F.col("en").alias("ena"))
     y = an.select("cluster", F.col("vec_id").alias("vec_b"), F.col("en").alias("enb"))
     return (
@@ -1339,24 +1320,9 @@ def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    from railgun_spark.session import spread_scan
-
-    # spread the single-file scan before the norm pin job (§2.5)
-    emb = spread_scan(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", to_double(F.col("embedding")).alias("v")
-        ),
-        heavy=True,
-    )
-    # emb_n pinned once — the count, the block-matmul replication and
-    # both verify sides otherwise re-plan the scan + norm pass (sig is
-    # left lazy: its two cheap map-side uses don't repay a checkpoint
-    # job — measured neutral-to-negative at sf0.1)
-    emb_n = emb.select(
-        "vec_id", F.sqrt(dot(F.col("v"), F.col("v"))).alias("nrm"), "v"
-    ).select(
-        "vec_id", F.transform("v", lambda x: x / F.col("nrm")).alias("vn")
-    ).localCheckpoint()
+    emb, emb_n = _unit_embeddings(spark, sf_dir)
+    # sig is left unpinned: its two cheap map-side uses don't repay a
+    # checkpoint job — measured neutral-to-negative at sf0.1
     sig = emb.select(
         "vec_id",
         lsh_bands_col(F.col("v"), NEAR_DUP_BANDS, NEAR_DUP_BAND_BITS).alias("sig"),
@@ -1712,7 +1678,7 @@ def _training_sample(emb: DataFrame, target: int) -> DataFrame:
         emb = emb.filter(
             F.pmod(F.xxhash64(F.col("vec_id")), F.lit(denom)) < F.lit(keep)
         )
-    return emb.localCheckpoint()
+    return pin(emb, "similarity.training_sample")
 
 
 def _train_frame(emb: DataFrame, width: int, sample: int | None) -> DataFrame:
@@ -1815,8 +1781,6 @@ def _read_quantizer(spark: SparkSession, index_path: str, pq: bool) -> tuple:
     None, encoding 'raw'/'residual' or None) of a stored index. The
     three K-bounded PQ reads are independent collects, overlapped
     (guide-§2.6) instead of three sequential driver round trips."""
-    from railgun_spark.session import overlap
-
     def rows(name: str) -> list:
         return spark.read.parquet(f"{index_path}/{name}").collect()
 
@@ -1972,8 +1936,6 @@ def build_index(
     FAISS-refine / DiskANN pattern) for a search's `rerank`."""
     from pyspark.sql import Observation
 
-    from railgun_spark.session import overlap
-
     if codebooks is not None and not spec.pq:
         raise ValueError("codebooks apply to IVF-PQ specs (m > 0) only")
     spark = emb.sparkSession
@@ -2116,7 +2078,7 @@ def search_index(
     else:
         # the LUTs are computed per query, before the probe explode
         probes = _probed_queries(queries, cents, nprobe, _lut_cols(F.col("v"), books))
-    probes = probes.localCheckpoint()
+    probes = pin(probes, "similarity.probes")
     # static partition pruning: the union of probed cids is bounded by k
     # (tiny), so one driver-side distinct keeps the scan pruned even
     # without runtime DPP
@@ -2145,13 +2107,13 @@ def search_index(
             f"rerank={rerank} needs raw vectors: build the index with "
             f"store_raw=True (no raw/ under {index_path!r})"
         )
-    shortlist = (
+    # materialized once: the id collect below and the refine join must
+    # not re-run the whole ADC leg
+    shortlist = pin(
         _ranked(scored, "adc_dist", rerank, rank="arnk")
         .join(queries.select("qid", F.col("v").alias("qv")), "qid")
-        .select("qid", "vec_id", "label", "cid", "qv")
-        # materialized once: the id collect below and the refine join
-        # must not re-run the whole ADC leg
-        .localCheckpoint()
+        .select("qid", "vec_id", "label", "cid", "qv"),
+        "similarity.rerank_shortlist",
     )
     # shortlist-shaped refine read: the survivors' vec_ids (<= queries x
     # rerank) are pushed into the raw scan as In filters, which prune
@@ -2215,9 +2177,8 @@ def append_to_index(new_vecs: DataFrame, index_path: str, pq: bool = False) -> i
     lock, token = _ivf_append_guard(spark, index_path, pq)
     try:
         cents, books, encoding = _read_quantizer(spark, index_path, pq)
-        assigned = new_vecs.select(
-            "vec_id", "label", "v", _assign_cid(F.col("v"), cents).alias("cid")
-        ).localCheckpoint()
+        cid = _assign_cid(F.col("v"), cents).alias("cid")
+        assigned = pin(new_vecs.select("vec_id", "label", "v", cid), "similarity.append_assigned")
         _write_lists(
             _coded(assigned, cents, books, encoding == "residual"),
             f"{index_path}/vecs", "append",
@@ -2408,9 +2369,12 @@ def _index_gate(spark: SparkSession, sf_dir: str, spec: IVFSpec) -> DataFrame:
     ).select(F.col("vec_id").alias("qid"), "v")
     with tempfile.TemporaryDirectory(prefix="ivf_gate_") as d:
         build_index(emb, d, spec, exclude_ids=IVF_INDEX_QUERY_IDS)
-        return search_index(
-            spark, queries, d, pq=spec.pq, nprobe=spec.nprobe, rerank=spec.rerank
-        ).orderBy("qid", "rnk").localCheckpoint()
+        return pin(
+            search_index(
+                spark, queries, d, pq=spec.pq, nprobe=spec.nprobe, rerank=spec.rerank
+            ).orderBy("qid", "rnk"),
+            "similarity.index_gate_rows",
+        )
 
 
 IVF_INDEX = IVFSpec()
@@ -2614,7 +2578,7 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> int:
         # a store_raw index folds its refine store in the same pass —
         # both layouts accrete the same at-least-once duplicates
         for live in ([vecs, raw] if os.path.isdir(raw) else [vecs]):
-            distinct = spark.read.parquet(live).distinct().localCheckpoint()
+            distinct = pin(spark.read.parquet(live).distinct(), "similarity.compact_rows")
             if n is None:
                 n = distinct.count()
 

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from railgun_spark.operators.dedup import words
+from railgun_spark.session import pin
 from railgun_spark.suite import extra_query, query
 
 
@@ -611,10 +612,10 @@ def stratified_sample_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def word_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_scan(spark, sf_dir)
-    dw = docs.select(
-        "doc_id",
-        F.explode(words(F.col("text"))).alias("word"),
-    ).distinct().localCheckpoint()
+    dw = pin(
+        docs.select("doc_id", F.explode(words(F.col("text"))).alias("word")).distinct(),
+        "text.doc_words",
+    )
     # pinned once: the scalar count, the marginals and BOTH self-join
     # sides otherwise re-plan the word explode + distinct (4 scans)
     n_docs = dw.select("doc_id").distinct().count()  # driver scalar
@@ -858,10 +859,9 @@ def bpe_train(
     # checkpoint only the symbol frame: vocab feeds it exactly once, so a
     # second pinned copy of the corpus aggregate would just hold executor
     # storage for the whole loop
-    symbols = (
-        _word_counts(spark, sf_dir)
-        .select(F.split("w", "").alias("sym"), "c")
-        .localCheckpoint()
+    symbols = pin(
+        _word_counts(spark, sf_dir).select(F.split("w", "").alias("sym"), "c"),
+        "text.bpe_symbols",
     )
 
     return _bpe_merge_loop(symbols, n_merges)
@@ -913,9 +913,10 @@ def _bpe_merge_loop(symbols: DataFrame, n_merges: int) -> list[tuple[str, str]]:
             break
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
-        symbols = symbols.select(
-            merge_symbols_col("sym", a, b).alias("sym"), "c"
-        ).localCheckpoint()
+        symbols = pin(
+            symbols.select(merge_symbols_col("sym", a, b).alias("sym"), "c"),
+            "text.bpe_merge",
+        )
     return merges
 
 
@@ -1043,7 +1044,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the vocab aggregate: the token total is sum(cw) over THIS frame
     # (exact integer — no third corpus scan), and the join below reads the
     # pinned copy instead of re-running the corpus explode
-    vocab = posts.groupBy("w").agg(F.count(F.lit(1)).alias("cw")).localCheckpoint()
+    vocab = pin(posts.groupBy("w").agg(F.count(F.lit(1)).alias("cw")), "text.vocab")
     total = vocab.agg(F.sum("cw")).first()[0]
     nll_num = F.sum(F.col("c") * -F.log(F.col("cw") * F.lit(1.0) / F.lit(total)))
     return (
@@ -1167,7 +1168,7 @@ def train_quality_classifier(
     — deterministic given the input."""
     spark = docs.sparkSession
     ws = words(F.col(text_col))
-    base = (
+    base = pin(
         docs.filter(F.size(ws) > 0)
         .select(
             F.col(id_col).alias("__id"),
@@ -1182,8 +1183,8 @@ def train_quality_classifier(
             (F.lit(1.0) / F.col("__n")).alias("__x"),
         )
         .groupBy("__id", "__y", "__b")
-        .agg(F.sum("__x").alias("__x"))
-        .localCheckpoint()  # reused every iteration; lineage must not grow
+        .agg(F.sum("__x").alias("__x")),
+        "text.lr_features",  # reused every iteration; lineage must not grow
     )
     n_docs = base.select("__id").distinct().count()
     weights = [0.0] * n_buckets

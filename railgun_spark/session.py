@@ -137,26 +137,46 @@ def spread_scan(df, heavy: bool = False, min_bytes: int = 32 << 20):
     return df.repartition(target)
 
 
-def pin_if_big(df, min_bytes: int = 64 << 20):
-    """Size-gated localCheckpoint for frames consumed more than once
-    (self-join sides, iterative-loop invariants).
+# pin(..., gated=True) skips frames Catalyst estimates under this size
+PIN_MIN_BYTES = 64 << 20
 
-    Pinning trades a blocking materialization job now for not planning —
-    and executing — the frame's whole subtree once per consumer. That
-    trade flips with size: at 100 TB the subtree is a corpus pass and
-    recomputing it per consumer dwarfs the pin write, but at bench scale
-    the eager pin job costs more than the saved recompute (r17 driver:
-    dedup_ngram_jaccard x0.74, dedup_containment_exact x0.69,
-    pagerank_word_graph x0.80 from unconditional pins; r18 A/B at
-    sf0.1/local[32], 7 iters: no-pin 5.13 s vs eager-pin 5.73 s vs
-    lazy-pin 5.99 s on the two prefix queries — the lazy form loses even
-    more to the double-compute race between the join's two map stages).
-    Catalyst's unknown-stats default (8 EiB) counts as big, the safe
-    direction at scale. Same gating idea as spread_scan above."""
-    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if est < min_bytes:
-        return df
-    return df.localCheckpoint()
+
+def pin(df, site: str, *, gated: bool = False):
+    """The engine's one pin: materialize a frame consumed more than once
+    (self-join sides, loop state, values several actions must agree on)
+    by an eager checkpoint whose jobs are described ``pin:<site>``, then
+    restore the caller's ``spark.job.description`` (or its absence). ``site`` is a
+    dotted name unique to the call site, e.g. ``"dedup.sets_frame"``.
+
+    Pinning trades a blocking job now for not planning — and executing —
+    the frame's subtree once per consumer. That trade flips with size: at
+    100 TB the subtree is a corpus pass and recomputing it per consumer
+    dwarfs the pin write, but at bench scale the pin job can cost more
+    than the saved recompute (r17 bench: dedup_ngram_jaccard x0.74,
+    dedup_containment_exact x0.69, pagerank_word_graph x0.80 from
+    unconditional pins; r18 A/B at sf0.1/local[32], 7 iters: no-pin
+    5.13 s vs eager 5.73 s vs lazy 5.99 s on the two prefix queries). So
+    ``gated=True`` pins only at an estimate of ``PIN_MIN_BYTES`` or more
+    and otherwise returns ``df`` itself, running no job; Catalyst's
+    unknown-stats default (8 EiB) counts as big, the safe direction at
+    scale. The default pins always: frames far cheaper to store than to
+    recompute at any scale, and loop state whose lineage must not grow.
+    There is no lazy form (materialized inside the first consumer job):
+    at its last two sites it won no row against eager in every pair of a
+    same-window A/B (sf0.1, 4 cores, 4 pairs), and gating those sites
+    lost 1.2-1.8x on the prefix joins. A site's policy changes only with
+    a same-window A/B."""
+    if gated:
+        est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        if est < PIN_MIN_BYTES:
+            return df
+    sc = df.sparkSession.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", f"pin:{site}")
+    try:
+        return df.localCheckpoint()
+    finally:
+        sc.setLocalProperty("spark.job.description", prior)
 
 
 def overlap(spark: SparkSession, *thunks):

@@ -28,6 +28,7 @@ from railgun_spark.operators.dedup import (
     shingle_pool,
     shingle_sets,
 )
+from railgun_spark.session import pin
 from railgun_spark.streaming.ingest import _drain_availablenow
 
 
@@ -117,9 +118,8 @@ def stream_decontaminate_availablenow(
     # materialize the eval pool ONCE: without this, every micro-batch
     # re-executes the whole scan/shingle/explode/distinct subtree before
     # broadcasting — "computed once" must mean the work, not just the plan
-    pool = shingle_pool(
-        shingle_sets(static_docs.filter(F.col("doc_id") % EVAL_MOD == 0))
-    ).localCheckpoint()
+    ev_docs = static_docs.filter(F.col("doc_id") % EVAL_MOD == 0)
+    pool = pin(shingle_pool(shingle_sets(ev_docs)), "decontam.eval_pool")
 
     def flags_of(batch_df: DataFrame) -> DataFrame:
         tr = shingle_sets(batch_df.filter(F.col("doc_id") % EVAL_MOD != 0), "doc_id")
@@ -155,9 +155,8 @@ def stream_neardup_decontaminate_availablenow(
     _refuse_fresh_checkpoint_over_used_sink(checkpoint_dir, flags_sink)
     static_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # pinned eval side: hashed shingle sets, materialized once
-    ev = shingle_sets(
-        static_docs.filter(F.col("doc_id") % EVAL_MOD == 0), "doc_id", hashed=True
-    ).localCheckpoint()
+    ev_docs = static_docs.filter(F.col("doc_id") % EVAL_MOD == 0)
+    ev = pin(shingle_sets(ev_docs, "doc_id", hashed=True), "decontam.eval_sets")
 
     def flags_of(batch_df: DataFrame) -> DataFrame:
         tr = shingle_sets(

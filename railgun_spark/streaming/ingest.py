@@ -31,6 +31,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession
 
 from railgun_spark.operators.dedup import append_to_index, dedup_against_index
+from railgun_spark.session import pin
 
 if TYPE_CHECKING:
     from railgun_spark.operators.phash import SignatureFamily
@@ -184,18 +185,18 @@ def ingest_batch(
                 f"{text_col!r} is BINARY (only the exact content-hash "
                 "gate is binary-safe)"
             )
-    survivors = dedup_against_index(
-        batch_df, index_path, text_col=text_col, id_col=id_col
-    ).localCheckpoint()
+    survivors = dedup_against_index(batch_df, index_path, text_col=text_col, id_col=id_col)
+    survivors = pin(survivors, "ingest.exact_survivors")
     if span_index_path is not None:
         flagged = span_dup_against_index(
             survivors, span_index_path, text_col=text_col, id_col=id_col
         ).select(id_col)
-        survivors = survivors.join(flagged, id_col, "left_anti").localCheckpoint()
+        survivors = pin(survivors.join(flagged, id_col, "left_anti"), "ingest.span_survivors")
     if minhash_index_path is not None:
         survivors = near_dup_against_index(
             survivors, minhash_index_path, text_col=text_col, id_col=id_col
-        ).localCheckpoint()
+        )
+        survivors = pin(survivors, "ingest.minhash_survivors")
     n = _write_sink(survivors.drop("__h"), sink_path, batch_id)
     if n > 0:
         append_to_index(survivors, index_path)
@@ -233,7 +234,8 @@ def ingest_embeddings_batch(
     d = dim if dim is not None else EMB_DIM
     survivors = embedding_dedup_against_index(
         batch_df, index_path, vec_col=vec_col, id_col=id_col, dim=d
-    ).localCheckpoint()
+    )
+    survivors = pin(survivors, "ingest.embedding_survivors")
     n = _write_sink(survivors, sink_path, batch_id)
     if n > 0:
         append_embedding_bands_to_index(

@@ -110,7 +110,7 @@ def main() -> int:
         ingest_batch,
         ingest_embeddings_batch,
     )
-    from tools.sf1_probe import SHIFT, _build_sf1
+    from tools.sf1_all import SHIFT, _build_sf1
 
     global INDEX_SIZES, BATCH_SIZES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
